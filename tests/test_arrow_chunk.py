@@ -1,6 +1,10 @@
 """Arrow-native chunk path: round-trips + wire compatibility with the
 pandas path (identical blob format, interchangeable decode)."""
 
+import datetime as dt
+import hashlib
+from decimal import Decimal
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
@@ -71,30 +75,201 @@ def test_int_with_nulls():
     assert out.to_pylist() == vals.to_pylist()
 
 
-def test_wire_compat_pandas_encodes_arrow_decodes():
-    s = pd.Series(["x%d" % (i % 7) for i in range(1000)])
-    blob, stats = chunk.encode_chunk(s, "string")
-    arr, dtype = arrow_chunk.decode_arrow_column(blob)
-    assert dtype == "string"
-    assert arr.to_pylist() == s.tolist()
+# --- golden chunk pins ------------------------------------------------------
+# One chunk per codec/dtype shape, encoded UNCOMPRESSED so the pin fixes
+# the chunk wire (header, levels, codec payload) and not a compression
+# library's output.  Each pin is (codec, sha256 of the blob bytes,
+# recorded canonical sha256).  A changed pin is a wire or sha-format
+# change: old tables would stop decoding or verifying.
+
+
+def _paths():
+    return [
+        None if i % 7 == 3 else f"src/mod_{i // 40:02d}/file_{i:04d}.py"
+        for i in range(600)
+    ]
+
+
+GOLDEN_INPUTS = {
+    "string_nulls_plain": lambda: (pa.array(_paths()), "string", "PLAIN"),
+    "string_nulls_dict": lambda: (pa.array(_paths()), "string", "DICT_RLE"),
+    "string_nulls_fsst": lambda: (pa.array(_paths()), "string", "FSST"),
+    "string_nulls_incr": lambda: (pa.array(_paths()), "string", "INCREMENTAL"),
+    "binary_flba": lambda: (
+        pa.array(
+            [hashlib.md5(b"%d" % i).digest() for i in range(300)], type=pa.binary()
+        ),
+        "binary", "auto",
+    ),
+    "int64_nulls_auto": lambda: (
+        pa.array(
+            [None if i % 11 == 0 else (i * 7919) % 1000 for i in range(2000)],
+            type=pa.int64(),
+        ),
+        "int64", "auto",
+    ),
+    "int64_nulls_rle": lambda: (
+        pa.array(
+            [None if i % 13 == 0 else i // 50 for i in range(2000)], type=pa.int64()
+        ),
+        "int64", "RLE",
+    ),
+    "float64_bss": lambda: (
+        pa.array(
+            [100.0 + (i % 37) * 0.015625 - (i % 5) * 0.5 for i in range(1000)],
+            type=pa.float64(),
+        ),
+        "float64", "BYTE_STREAM_SPLIT",
+    ),
+    "bool": lambda: (
+        pa.array(
+            [None if i % 9 == 0 else i % 3 == 0 for i in range(500)], type=pa.bool_()
+        ),
+        "bool", "auto",
+    ),
+    "timestamp_us": lambda: (
+        pa.array(
+            [
+                None if i % 17 == 0 else 1_700_000_000_000_000 + i * 60_000_001
+                for i in range(800)
+            ],
+            type=pa.timestamp("us"),
+        ),
+        "timestamp_us", "auto",
+    ),
+    "date": lambda: (
+        pa.array(
+            [
+                None if i % 19 == 0 else dt.date(1995, 1, 1) + dt.timedelta(days=i)
+                for i in range(400)
+            ],
+            type=pa.date32(),
+        ),
+        "date", "auto",
+    ),
+    "decimal_12_2": lambda: (
+        pa.array(
+            [
+                None if i % 23 == 0 else Decimal(i * 1234567 % 10**9) / 100
+                for i in range(600)
+            ],
+            type=pa.decimal128(12, 2),
+        ),
+        "decimal(12,2)", "auto",
+    ),
+    "list_int64": lambda: (
+        pa.array(
+            [
+                None if i % 10 == 4
+                else [None if (i + j) % 6 == 0 else i * j for j in range(i % 5)]
+                for i in range(400)
+            ],
+            type=pa.list_(pa.int64()),
+        ),
+        "list_int64", "auto",
+    ),
+    "list_list_string": lambda: (
+        pa.array(
+            [
+                None if i % 8 == 5
+                else [
+                    [f"tok{(i * k + m) % 30}" for m in range(k % 3)]
+                    for k in range(i % 4)
+                ]
+                for i in range(300)
+            ],
+            type=pa.list_(pa.list_(pa.string())),
+        ),
+        "list_list_string", "auto",
+    ),
+}
+
+GOLDEN = {
+    "string_nulls_plain": (
+        "PLAIN",
+        "496469e91ac1ba256a1121ab1af96002a437d5484106967197170f3b416dfa80",
+        "f2a942ccb0dece9da9cec8d78f06de27e1ea88a17e9ea90733a44a9a3a5f70fc",
+    ),
+    "string_nulls_dict": (
+        "DICT_RLE",
+        "94afc27eab7d1bc2321e4025dd38e07847c9b7fcf6380c5db5bb255bb24a4995",
+        "f2a942ccb0dece9da9cec8d78f06de27e1ea88a17e9ea90733a44a9a3a5f70fc",
+    ),
+    "string_nulls_fsst": (
+        "FSST",
+        "10ab7934611ac0ce3e208d13ccf7e3fd85f05316542d694e71d9387781cfd2fe",
+        "f2a942ccb0dece9da9cec8d78f06de27e1ea88a17e9ea90733a44a9a3a5f70fc",
+    ),
+    "string_nulls_incr": (
+        "INCREMENTAL",
+        "df80a3374905e8e0724c43f60744140b8df726927b3a106770fc1e6c17ed58bc",
+        "f2a942ccb0dece9da9cec8d78f06de27e1ea88a17e9ea90733a44a9a3a5f70fc",
+    ),
+    "binary_flba": (
+        "FLBA",
+        "c2971b66848a2d3d438709681c40349bb0fe7577ad503533ef92dc1836305872",
+        "896d9dba9a2d3f0535f2d761cce158afaf20fa066a5890ce7f3fa17ea7a52183",
+    ),
+    "int64_nulls_auto": (
+        "FOR_BITPACK",
+        "efa60951117a70875f023d8eb34d990f20fa19ff7f0ab49c181c973b4648fd33",
+        "08bb6ecedf13ec8828241269f5f430634659ce04c4ad58e9bf66f8bee950f3be",
+    ),
+    "int64_nulls_rle": (
+        "RLE",
+        "bcb4f4b9d9929776f4844c690cfda81146c92d51a2c45b58197f1942ed6cf3b4",
+        "c0ee3ff6b1a04bf0f1baa16b0633b9da2b734499f6201ba071b15cbc1d0a778a",
+    ),
+    "float64_bss": (
+        "BYTE_STREAM_SPLIT",
+        "ce0174ff367752795b2fa452ff36035c1fca05836f2e17cc677c6650bb6ed7b1",
+        "7c2b3dbb58f22e39eb81c86c5bb9be79afd3aec1e05a09bf0f8b56e80f6b1905",
+    ),
+    "bool": (
+        "PLAIN",
+        "85930a6cdd6302fa96c17140989c5e37687ce0220ad689569d6554a8a86b4925",
+        "cf54a956b7e8a7f5c25b86f08a5688c1b1cee33bac4d56649f7557d4ff4fed61",
+    ),
+    "timestamp_us": (
+        "BYTE_STREAM_SPLIT",
+        "65154a90ecd0acc3e68f4a63c43584a3a57f76efed79541daff6dfaa50b22b9e",
+        "c368c98239ee9d5e5b6bd704d1bd4f025742641329cbbc7892746fd20cab0fbe",
+    ),
+    "date": (
+        "FOR_BITPACK",
+        "85da7e80411fb542be190846359390725e86b8ecf0e1360b9cf84b44af257c34",
+        "c93131cec134647b20142951775e752e9ba32af5a30713f71037368be566f5b8",
+    ),
+    "decimal_12_2": (
+        "BYTE_STREAM_SPLIT",
+        "1f0f28a762f672333159152857e2d92f17a6c66d36c8c00498fde1f310958f03",
+        "809566ef8b17b3133c3958f1ec8b09c72206d076d8feeefca99ef10940731565",
+    ),
+    "list_int64": (
+        "RLE",
+        "8a9037525ff6b736822e8d69ba301c6384af2f366d85c73ab9f804c718f24521",
+        "34610df39ada070a9ef3dce437e69fa93031df7f40dead2f5bef7bc6d490056c",
+    ),
+    "list_list_string": (
+        "DICT_RLE",
+        "8010da44f6f2d3d13754db37f00f01651b68757a45b785b47adaf00edbe37c4d",
+        "53d75934bc2b4936a01463792bb91bce237a21bdc03750f4ed372842ca3a6093",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(GOLDEN))
+def test_golden_chunk_pins(name):
+    arr, dtype, codec = GOLDEN_INPUTS[name]()
+    blob, stats = arrow_chunk.encode_arrow_column(
+        arr, dtype, codec=codec, compression="UNCOMPRESSED"
+    )
+    got = (stats["codec"], hashlib.sha256(blob).hexdigest(), stats["sha256"])
+    assert got == GOLDEN[name]
+    out, out_dtype = arrow_chunk.decode_arrow_column(blob)
+    assert out_dtype == dtype
+    assert out.to_pylist() == arr.to_pylist()
     assert arrow_chunk.verify_arrow(blob, stats["sha256"])
-
-
-def test_wire_compat_arrow_encodes_pandas_decodes():
-    vals = ["row %d payload" % i for i in range(1000)]
-    blob, stats = arrow_chunk.encode_arrow_column(pa.array(vals), "string", codec=FSST)
-    series, dtype = chunk.decode_chunk(blob)
-    assert dtype == "string"
-    assert series.tolist() == vals
-    assert chunk.verify_chunk(blob, stats["sha256"])
-
-
-def test_sha_identical_across_paths():
-    vals = ["abc", None, "def"] * 20
-    s = pd.Series(vals, dtype=object)
-    _, st_pd = chunk.encode_chunk(s, "string", codec=PLAIN)
-    _, st_ar = arrow_chunk.encode_arrow_column(pa.array(vals), "string", codec=PLAIN)
-    assert st_pd["sha256"] == st_ar["sha256"]
 
 
 def test_sliced_arrow_input():
