@@ -1,19 +1,20 @@
-"""Arrow-native column-chunk encode/decode.
+"""Arrow-native column-chunk encode, decode and verify: the engine's one
+chunk path.
 
-Same wire format as chunk.py (the pandas path) — blobs are
-interchangeable — but values never round-trip through Python objects:
-string columns are consumed as their Arrow buffers (one contiguous data
-buffer + an offsets vector), numeric columns as zero-copy NumPy views.
-This is the hot path behind ``pipeline.encode_columns`` /
-``decode_column`` (``df.mapInArrow``): the Arrow->pandas conversion of a
-string column materializes one PyObject per value, which costs more than
-the encoding itself and wrecks multi-worker scaling via allocator
-pressure; reading the buffers directly removes that entirely.
+``encode_arrow_column`` turns one Arrow column chunk into a blob plus
+its manifest stats (codec, sizes, canonical sha256, bloom);
+``decode_arrow_column`` and ``verify_arrow`` read it back.  The blob
+header and the dtype ids are defined in ``chunk``, which also owns the
+numeric codecs and their selector; this module owns the string side.
+Values never round-trip through Python objects: string columns are
+consumed as their Arrow buffers (one contiguous data buffer + an offsets
+vector, a ``StrBlock``), numeric columns as zero-copy NumPy views.  This
+is the hot path behind ``pipeline.encode_columns`` and the decode and
+verify jobs (``df.mapInArrow``).
 
-Citations: same operator semantics as chunk.py
-(/root/reference/lib/writer.js:424-477 encodeColumnChunk,
-/root/reference/lib/reader.js:237-262 readColumnChunk, DataPageV2 layout
-/root/reference/lib/writer.js:355-419).
+Citations: parquetjs ``encodeColumnChunk`` (lib/writer.js:424-477),
+``readColumnChunk`` (lib/reader.js:237-262), DataPageV2 layout
+(lib/writer.js:355-419).
 """
 
 from __future__ import annotations
@@ -24,26 +25,20 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from . import chunk as chunklib
 from .chunk import (
-    DTYPE_NAMES,
-    MAGIC,
     PROBE_FSST_BYTES,
     PROBE_TRAIN_BYTES,
     SAMPLE_BYTES,
     SAMPLE_VALUES,
-    SEL_CACHE_USES,
     _PTYPE,
-    dtype_id,
 )
 from .codecs import (
-    CODEC_IDS,
-    CODEC_NAMES,
     DICT_RLE,
     FLBA,
     FSST,
     INCR,
     PLAIN,
-    RLE,
     bloom as bloomlib,
     compress as comp,
     for_bp,
@@ -279,8 +274,64 @@ def _decode_incr_block(buf: memoryview, n: int) -> StrBlock:
     return StrBlock(payload, offsets)
 
 
+def _encode_string_block(
+    block: StrBlock, codec: str, fsst_state: dict | None, dtype: str
+) -> bytes:
+    if codec == PLAIN:
+        return _str_stream(block)
+    if codec == FLBA:
+        return _encode_flba_block(block)
+    if codec == DICT_RLE:
+        return _encode_dict_block(block)
+    if codec == FSST:
+        return _encode_fsst_block(block, fsst_state)
+    if codec == INCR:
+        return _encode_incr_block(block)
+    raise ValueError(f"codec {codec} unsupported for {dtype}")
+
+
+def _decode_string_block(values_raw, nn: int, codec: str, dtype: str) -> StrBlock:
+    if codec == PLAIN:
+        return _str_stream_decode(memoryview(values_raw), nn)
+    if codec == FLBA:
+        return _decode_flba_block(memoryview(values_raw), nn)
+    if codec == DICT_RLE:
+        return _decode_dict_block(memoryview(values_raw), nn)
+    if codec == FSST:
+        return _decode_fsst_block(memoryview(values_raw), nn)
+    if codec == INCR:
+        return _decode_incr_block(memoryview(values_raw), nn)
+    raise ValueError(f"codec {codec} unsupported for {dtype}")
+
+
+def _encode_leaf(values, dtype: str, codec: str, fsst_state, profile: str):
+    """Select (when ``codec`` is "auto") and encode the non-null values of
+    one leaf column -> (codec, values section, content bytes, selector
+    info).  ``values`` is a StrBlock for string/binary, else an ndarray."""
+    sel_info: dict = {}
+    if dtype in ("string", "binary"):
+        if codec == "auto":
+            codec, sel_info = _select_string_codec(values, fsst_state, profile)
+        raw = _encode_string_block(values, codec, fsst_state, dtype)
+        return codec, raw, values.total, sel_info
+    if codec == "auto":
+        codec, sel_info = chunklib.select_codec(values, dtype, fsst_state, profile)
+    raw = chunklib._encode_values(values, dtype, codec)
+    content = (len(values) + 7) // 8 if dtype == "bool" else int(np.asarray(values).nbytes)
+    return codec, raw, content, sel_info
+
+
+def _decode_leaf(values_raw, nn: int, dtype: str, codec: str):
+    """Inverse of ``_encode_leaf``: StrBlock for string/binary, else an
+    ndarray of the ``nn`` non-null values."""
+    if dtype in ("string", "binary"):
+        return _decode_string_block(values_raw, nn, codec, dtype)
+    return chunklib._decode_values(memoryview(values_raw), nn, dtype, codec)
+
+
 # --------------------------------------------------------------------------
-# selector over StrBlock (same policy as chunk.select_codec)
+# string codec selector over StrBlock (the numeric half is
+# chunk.select_codec; both share its sample bounds and decision cache)
 # --------------------------------------------------------------------------
 
 
@@ -291,36 +342,25 @@ def _select_string_codec(
     info: dict = {}
     if n == 0:
         return PLAIN, info
-    # decision cache: one column's chunks within a task are near-i.i.d.,
-    # so re-measuring plain-vs-fsst on every chunk wastes ~15% of encode
-    # CPU; re-evaluate every SEL_CACHE_USES chunks to bound drift.  A
-    # cached FLBA pick requires uniform widths in THIS chunk too —
-    # re-validate before reuse (one variable-length value would crash
-    # the encode otherwise).
-    if fsst_state is not None and "sel" in fsst_state:
-        sel = fsst_state["sel"]
-        ok = fsst_state.get("sel_uses", 0) < SEL_CACHE_USES
-        if ok and sel == FLBA and n:
-            ls = block.lens
-            ok = bool((ls == ls[0]).all())
-        if ok:
-            fsst_state["sel_uses"] = fsst_state.get("sel_uses", 0) + 1
-            return sel, {"cached": True}
-        del fsst_state["sel"]
-    total = block.total
     lens = block.lens
-    uniform = bool(n) and bool((lens == lens[0]).all())
+    sel = chunklib.cached_selection(fsst_state, lens=lens)
+    if sel is not None:
+        return sel, {"cached": True}
+    total = block.total
+    uniform = bool((lens == lens[0]).all())
     # sample bounded by VALUES and BYTES: a 4096-value sample of long
     # documents is MBs, and the pc.dictionary_encode cardinality probe
     # over it costs more than the chunk encode itself (the FSST/INCR
     # probes below were always byte-capped; the dict probe was not).
     # Long-value columns probe ~SAMPLE_BYTES worth of values instead —
     # cardinality ratios at that size are as decisive, and short-string
-    # columns (where dict actually wins) never hit the byte cap.
+    # columns (where dict actually wins) never hit the byte cap.  The
+    # sample ends at the first value that reaches SAMPLE_BYTES, so the
+    # probe reads at most SAMPLE_BYTES plus one value.
     k = min(n, SAMPLE_VALUES)
     rel = block.offsets - block.offsets[0]
     if rel[k] > SAMPLE_BYTES:
-        k = min(k, max(64, int(np.searchsorted(rel, SAMPLE_BYTES))))
+        k = min(k, int(np.searchsorted(rel, SAMPLE_BYTES)))
     sample = block.slice_values(k)
     arr = sample.to_pa(binary=True)
     denc = pc.dictionary_encode(arr)
@@ -355,10 +395,14 @@ def _select_string_codec(
         if len(concat) >= 256:
             # probe-quality table (PROBE_TRAIN_BYTES) for the measured
             # comparison; the real FSST encoder trains full-quality on
-            # demand if FSST wins — see chunk.PROBE_TRAIN_BYTES rationale
+            # demand if FSST wins — see chunk.PROBE_TRAIN_BYTES rationale.
+            # An empty table (training on incompressible bytes) is a
+            # table, not a miss: reuse it rather than retrain per chunk.
             table = None
             if fsst_state is not None:
-                table = fsst_state.get("table") or fsst_state.get("probe_table")
+                table = fsst_state.get("table")
+                if table is None:
+                    table = fsst_state.get("probe_table")
             if table is None:
                 table = fsst.train(concat[:PROBE_TRAIN_BYTES])
                 if fsst_state is not None:
@@ -402,12 +446,8 @@ def _select_string_codec(
             if cands[INCR] > 0.92 * cands[PLAIN]:
                 cands.pop(INCR)
     info.update(cardinality=card, runs=runs, sizes=cands)
-    from .chunk import _pick
-
-    choice = _pick(cands, total, profile)
-    if fsst_state is not None:
-        fsst_state["sel"] = choice
-        fsst_state["sel_uses"] = 0
+    choice = chunklib._pick(cands, total, profile)
+    chunklib.cache_selection(fsst_state, choice)
     return choice, info
 
 
@@ -416,20 +456,32 @@ def _select_string_codec(
 # --------------------------------------------------------------------------
 
 
+def _split_nulls(arr: pa.Array):
+    """-> (the non-null values as one Array, bool validity ndarray)."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if not arr.null_count:
+        return arr, np.ones(len(arr), dtype=bool)
+    return arr.drop_null(), pc.is_valid(arr).to_numpy(zero_copy_only=False)
+
+
+def _with_nulls(dense: pa.Array, valid: np.ndarray) -> pa.Array:
+    """Inverse of ``_split_nulls``: spread the dense values over the rows
+    ``valid`` marks; the other rows are null."""
+    if valid.all():
+        return dense
+    idx = np.full(len(valid), -1, dtype=np.int64)
+    idx[valid] = np.arange(len(dense))
+    return dense.take(pa.array(idx, mask=~valid))
+
+
 def _arrow_to_values(arr: pa.Array, dtype: str):
     """Return (values, valid) where values is StrBlock for strings/binary
     and an np array otherwise; valid is a bool ndarray."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
     if pa.types.is_null(arr.type):
         # void column (NullType source): all definition levels, no values
         arr = arr.cast(pa.string())
-    if arr.null_count:
-        valid = pc.is_valid(arr).to_numpy(zero_copy_only=False)
-        nn = arr.drop_null()
-    else:
-        valid = np.ones(len(arr), dtype=bool)
-        nn = arr
+    nn, valid = _split_nulls(arr)
     if dtype in ("string", "binary"):
         return _strblock_from_pa(nn), valid
     if dtype == "timestamp_us":
@@ -449,8 +501,6 @@ def _arrow_to_values(arr: pa.Array, dtype: str):
     if dtype == "date":
         np_vals = nn.to_numpy(zero_copy_only=False)  # datetime64[D]
         return np_vals.astype("datetime64[D]").view(np.int64).astype(np.int32), valid
-    if dtype == "bool":
-        return nn.to_numpy(zero_copy_only=False), valid
     return nn.to_numpy(zero_copy_only=False), valid
 
 
@@ -488,13 +538,7 @@ def _values_to_arrow(values, valid: np.ndarray, dtype: str) -> pa.Array:
         dense = block.to_pa(binary=(dtype == "binary"))
         if dtype == "string":
             dense = dense.cast(pa.large_utf8()) if dense.type != pa.large_utf8() else dense
-        if not has_nulls:
-            out = dense
-        else:
-            # scatter non-null values into a nullable array via take
-            idx = np.full(n, -1, dtype=np.int64)
-            idx[valid] = np.arange(block.n)
-            out = dense.take(pa.array(idx, mask=mask))
+        out = _with_nulls(dense, valid)
         return out.cast(pa.string() if dtype == "string" else pa.binary())
     if dtype == "timestamp_us":
         full = np.zeros(n, dtype=np.int64)
@@ -520,35 +564,39 @@ def _values_to_arrow(values, valid: np.ndarray, dtype: str) -> pa.Array:
 
 
 # --------------------------------------------------------------------------
-# canonical sha256 — identical definition to chunk.canonical_sha256
+# canonical sha256 — the per-row bit-identity invariant (BASELINE.json:15)
 # --------------------------------------------------------------------------
 
 
-def _sha_update_strings(h, block: StrBlock) -> None:
-    """Canonical string feed: payload ++ '|' ++ int64-LE lengths — the
-    same information as the interleaved PLAIN stream but fed without
-    materializing it (the old _plain_stream scatter cost ~5 ms per
-    4096-value chunk, ~20% of string-chunk encode)."""
-    h.update(block.concat_bytes())
-    h.update(b"|")
-    h.update(np.ascontiguousarray(block.lens, dtype="<i8").tobytes())
-
-
-def _canonical_sha256_block(values, valid: np.ndarray, dtype: str) -> str:
-    h = hashlib.sha256()
+def _sha_update_values(h, values, dtype: str) -> None:
+    """Canonical feed of the non-null values.  Strings: payload ++ '|' ++
+    int64-LE lengths — the same information as the interleaved PLAIN
+    stream, fed without materializing it.  Numerics: their PLAIN LE
+    bytes; bools: PLAIN bit-packed."""
     if dtype in ("string", "binary"):
-        _sha_update_strings(h, values)
+        h.update(values.concat_bytes())
+        h.update(b"|")
+        h.update(np.ascontiguousarray(values.lens, dtype="<i8").tobytes())
     elif dtype == "bool":
         h.update(plain.encode_boolean(np.asarray(values)))
     else:
         h.update(plain.encode_numeric(_PTYPE[dtype], np.asarray(values)))
+
+
+def _valid_bits(valid: np.ndarray) -> bytes:
+    return np.packbits(valid.view(np.uint8), bitorder="little").tobytes()
+
+
+def _canonical_sha256_block(values, valid: np.ndarray, dtype: str) -> str:
+    h = hashlib.sha256()
+    _sha_update_values(h, values, dtype)
     h.update(b"|")
-    h.update(np.packbits(valid.view(np.uint8), bitorder="little").tobytes())
+    h.update(_valid_bits(valid))
     return h.hexdigest()
 
 
 # --------------------------------------------------------------------------
-# public: encode/decode one arrow column chunk (wire-compatible w/ chunk.py)
+# list and decimal columns
 # --------------------------------------------------------------------------
 
 
@@ -557,16 +605,7 @@ def _split_list(arr: pa.Array):
     incl. element nulls, row validity) — the repetition-level pivot:
     r-levels collapse to per-row counts at each nesting level
     (/root/reference/lib/shred.js:75-135 semantics)."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if arr.null_count:
-        valid = pc.is_valid(arr).to_numpy(zero_copy_only=False)
-        nn = arr.drop_null()
-    else:
-        valid = np.ones(len(arr), dtype=bool)
-        nn = arr
-    if isinstance(nn, pa.ChunkedArray):
-        nn = nn.combine_chunks()
+    nn, valid = _split_nulls(arr)
     if len(nn) == 0 or nn.buffers()[1] is None:
         # pyarrow SEGFAULTS flattening a list array whose offsets buffer
         # is absent — IPC delivers such arrays for empty children (e.g.
@@ -598,18 +637,13 @@ def _canonical_sha256_list(
     lens: np.ndarray, elem_values, elem_valid: np.ndarray, valid, elem_dtype
 ) -> str:
     h = hashlib.sha256()
-    if elem_dtype in ("string", "binary"):
-        _sha_update_strings(h, elem_values)
-    elif elem_dtype == "bool":
-        h.update(plain.encode_boolean(np.asarray(elem_values)))
-    else:
-        h.update(plain.encode_numeric(_PTYPE[elem_dtype], np.asarray(elem_values)))
+    _sha_update_values(h, elem_values, elem_dtype)
     h.update(b"|")
     h.update(lens.astype("<i8").tobytes())
     h.update(b"|")
-    h.update(np.packbits(elem_valid.view(np.uint8), bitorder="little").tobytes())
+    h.update(_valid_bits(elem_valid))
     h.update(b"|")
-    h.update(np.packbits(valid.view(np.uint8), bitorder="little").tobytes())
+    h.update(_valid_bits(valid))
     return h.hexdigest()
 
 
@@ -620,8 +654,24 @@ def _canonical_sha256_nested(
     h.update(b"|")
     h.update(lens.astype("<i8").tobytes())
     h.update(b"|")
-    h.update(np.packbits(valid.view(np.uint8), bitorder="little").tobytes())
+    h.update(_valid_bits(valid))
     return h.hexdigest()
+
+
+def _list_from_lens(lens: np.ndarray, child: pa.Array, valid: np.ndarray) -> pa.Array:
+    """Rebuild a ListArray from per-row counts of the non-null rows, the
+    flat child and the row validity."""
+    if int(lens.sum()) >= 2**31:
+        # int32 ListArray offsets would silently wrap (unreachable at the
+        # default 4096-row chunking; guards callers passing huge
+        # chunk_rows with wide arrays)
+        raise ValueError(
+            "list chunk flattens to >= 2^31 elements; reduce chunk_rows"
+        )
+    offsets = np.zeros(len(lens) + 1, dtype=np.int32)
+    np.cumsum(lens, out=offsets[1:])
+    dense = pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), child)
+    return _with_nulls(dense, valid)
 
 
 def _encode_nested_list_column(
@@ -667,19 +717,7 @@ def _decode_nested_list_column(
     pos = 4 + lens_len
     inner_len = int.from_bytes(bytes(mv[pos : pos + 4]), "little")
     child, child_dtype = decode_arrow_column(mv[pos + 4 : pos + 4 + inner_len])
-    if int(lens.sum()) >= 2**31:
-        raise ValueError(
-            "list chunk flattens to >= 2^31 elements; reduce chunk_rows"
-        )
-    offsets = np.zeros(nn + 1, dtype=np.int32)
-    np.cumsum(lens, out=offsets[1:])
-    dense = pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), child)
-    dtype = f"list_{child_dtype}"
-    if valid.all():
-        return dense, dtype
-    idx = np.full(len(valid), -1, dtype=np.int64)
-    idx[valid] = np.arange(nn)
-    return dense.take(pa.array(idx, mask=~valid)), dtype
+    return _list_from_lens(lens, child, valid), f"list_{child_dtype}"
 
 
 def _encode_list_column(
@@ -693,40 +731,9 @@ def _encode_list_column(
     if dtype[len("list_") :].startswith("list_"):
         return _encode_nested_list_column(arr, dtype, codec, fsst_state, profile)
     lens, elem_values, elem_valid, valid, elem_dtype = _list_parts(arr, dtype)
-    sel_info: dict = {}
-    if elem_dtype == "bool":
-        from . import chunk as chunklib
-
-        codec = PLAIN if codec == "auto" else codec
-        elem_raw = chunklib._encode_values(
-            np.asarray(elem_values), "bool", codec, None, fsst_state
-        )
-        content = (len(elem_values) + 7) // 8
-    elif elem_dtype in ("string", "binary"):
-        if codec == "auto":
-            codec, sel_info = _select_string_codec(elem_values, fsst_state, profile)
-        if codec == PLAIN:
-            elem_raw = _str_stream(elem_values)
-        elif codec == FLBA:
-            elem_raw = _encode_flba_block(elem_values)
-        elif codec == DICT_RLE:
-            elem_raw = _encode_dict_block(elem_values)
-        elif codec == FSST:
-            elem_raw = _encode_fsst_block(elem_values, fsst_state)
-        elif codec == INCR:
-            elem_raw = _encode_incr_block(elem_values)
-        else:
-            raise ValueError(f"codec {codec} unsupported for {dtype}")
-        content = elem_values.total
-    else:
-        from . import chunk as chunklib
-
-        if codec == "auto":
-            codec, sel_info = chunklib.select_codec(
-                elem_values, elem_dtype, fsst_state, profile
-            )
-        elem_raw = chunklib._encode_values(elem_values, elem_dtype, codec, None, fsst_state)
-        content = int(np.asarray(elem_values).nbytes)
+    codec, elem_raw, content, sel_info = _encode_leaf(
+        elem_values, elem_dtype, codec, fsst_state, profile
+    )
     lens_enc = for_bp.encode(lens)
     if elem_valid.all():
         ev_enc = b""
@@ -758,59 +765,18 @@ def _decode_list_column(
         ).astype(bool)
     else:
         elem_valid = np.ones(n_elems, dtype=bool)
-    elem_mv = mv[pos + 4 + ev_len :]
-    n_vals = int(elem_valid.sum())
     elem_dtype = dtype[len("list_") :]
-    if elem_dtype in ("string", "binary"):
-        if codec == PLAIN:
-            elems = _str_stream_decode(elem_mv, n_vals)
-        elif codec == FLBA:
-            elems = _decode_flba_block(elem_mv, n_vals)
-        elif codec == DICT_RLE:
-            elems = _decode_dict_block(elem_mv, n_vals)
-        elif codec == FSST:
-            elems = _decode_fsst_block(elem_mv, n_vals)
-        elif codec == INCR:
-            elems = _decode_incr_block(elem_mv, n_vals)
-        else:
-            raise ValueError(f"codec {codec} unsupported for {dtype}")
-        child = _values_to_arrow(elems, elem_valid, elem_dtype)
-    else:
-        from . import chunk as chunklib
-
-        vals = chunklib._decode_values(elem_mv, n_vals, elem_dtype, codec)
-        child = _values_to_arrow(np.asarray(vals), elem_valid, elem_dtype)
-    if int(lens.sum()) >= 2**31:
-        # int32 ListArray offsets would silently wrap (unreachable at the
-        # default 4096-row chunking; guards callers passing huge
-        # chunk_rows with wide arrays)
-        raise ValueError(
-            "list chunk flattens to >= 2^31 elements; reduce chunk_rows"
-        )
-    offsets = np.zeros(nn + 1, dtype=np.int32)
-    np.cumsum(lens, out=offsets[1:])
-    dense = pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), child)
-    n = len(valid)
-    if valid.all():
-        return dense
-    idx = np.full(n, -1, dtype=np.int64)
-    idx[valid] = np.arange(nn)
-    return dense.take(pa.array(idx, mask=~valid))
+    elems = _decode_leaf(
+        mv[pos + 4 + ev_len :], int(elem_valid.sum()), elem_dtype, codec
+    )
+    child = _values_to_arrow(elems, elem_valid, elem_dtype)
+    return _list_from_lens(lens, child, valid)
 
 
 def _decimal_parts(arr: pa.Array):
     """decimal128 arrow array -> (unscaled int64 of non-nulls, valid).
     p <= 18 guarantees the unscaled value fits the low 8 bytes."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if arr.null_count:
-        valid = pc.is_valid(arr).to_numpy(zero_copy_only=False)
-        nn = arr.drop_null()
-    else:
-        valid = np.ones(len(arr), dtype=bool)
-        nn = arr
-    if isinstance(nn, pa.ChunkedArray):
-        nn = nn.combine_chunks()
+    nn, valid = _split_nulls(arr)
     raw = np.frombuffer(nn.buffers()[1], dtype="<i8")
     # 16-byte little-endian int128 per value: even lanes = low 8 bytes
     vals = raw[nn.offset * 2 :][: 2 * len(nn)][0::2].copy()
@@ -825,30 +791,23 @@ def _decimal_to_arrow(vals: np.ndarray, valid: np.ndarray, p: int, sc: int) -> p
     dense = pa.Array.from_buffers(
         pa.decimal128(p, sc), nn, [None, pa.py_buffer(pairs.tobytes())]
     )
-    if valid.all():
-        return dense
-    idx = np.full(len(valid), -1, dtype=np.int64)
-    idx[valid] = np.arange(nn)
-    return dense.take(pa.array(idx, mask=~valid))
+    return _with_nulls(dense, valid)
 
 
 def _encode_decimal_column(
     arr, dtype, codec, compression, fsst_state, profile="default"
 ):
-    from . import chunk as chunklib
-
     p, sc = (int(x) for x in dtype[len("decimal(") : -1].split(","))
     vals, valid = _decimal_parts(arr)
     n = len(valid)
     n_nulls = int(n - valid.sum())
-    sel_info: dict = {}
-    if codec == "auto":
-        codec, sel_info = chunklib.select_codec(vals, "int64", fsst_state, profile)
-    payload = chunklib._encode_values(vals, "int64", codec, None, fsst_state)
+    codec, payload, content, sel_info = _encode_leaf(
+        vals, "int64", codec, fsst_state, profile
+    )
     values_raw = bytes([p, sc]) + payload
     return _assemble_blob(
         dtype, codec, compression, n, n_nulls, valid, values_raw,
-        8 * len(vals), _canonical_sha256_block(vals, valid, "int64"), sel_info,
+        content, _canonical_sha256_block(vals, valid, "int64"), sel_info,
     )
 
 
@@ -921,7 +880,6 @@ def encode_arrow_column(
     values, valid = _arrow_to_values(arr, dtype)
     n = len(valid)
     n_nulls = int(n - valid.sum())
-    sel_info: dict = {}
 
     # per-chunk bloom for equality pruning (scan_eq); manifest metadata,
     # never part of the wire blob or the canonical sha
@@ -935,34 +893,9 @@ def encode_arrow_column(
             hashes = bloomlib.hash_ints(np.asarray(values, dtype=np.int64))
         bloom_bits = bloomlib.build_from_hashes(hashes).tolist()
 
-    if dtype in ("string", "binary"):
-        if codec == "auto":
-            codec, sel_info = _select_string_codec(values, fsst_state, profile)
-        if codec == PLAIN:
-            values_raw = _str_stream(values)
-        elif codec == FLBA:
-            values_raw = _encode_flba_block(values)
-        elif codec == DICT_RLE:
-            values_raw = _encode_dict_block(values)
-        elif codec == FSST:
-            values_raw = _encode_fsst_block(values, fsst_state)
-        elif codec == INCR:
-            values_raw = _encode_incr_block(values)
-        else:
-            raise ValueError(f"codec {codec} unsupported for {dtype}")
-        content_bytes = values.total
-    else:
-        from . import chunk as chunklib
-
-        if codec == "auto":
-            codec, sel_info = chunklib.select_codec(
-                values, dtype, fsst_state, profile
-            )
-        values_raw = chunklib._encode_values(values, dtype, codec, None, fsst_state)
-        content_bytes = (
-            (len(values) + 7) // 8 if dtype == "bool" else int(np.asarray(values).nbytes)
-        )
-
+    codec, values_raw, content_bytes, sel_info = _encode_leaf(
+        values, dtype, codec, fsst_state, profile
+    )
     return _assemble_blob(
         dtype, codec, compression, n, n_nulls, valid, values_raw,
         content_bytes, _canonical_sha256_block(values, valid, dtype), sel_info,
@@ -985,18 +918,10 @@ def _assemble_blob(
         flags |= 1
         levels = rle.encode(valid.astype(np.uint64), 1, disable_envelope=True)
 
-    blob = b"".join(
-        (
-            MAGIC,
-            bytes([dtype_id(dtype), CODEC_IDS[codec], comp.comp_id(compression), flags]),
-            n.to_bytes(4, "little"),
-            n_nulls.to_bytes(4, "little"),
-            len(levels).to_bytes(4, "little"),
-            len(values_comp).to_bytes(4, "little"),
-            levels,
-            values_comp,
-        )
+    header = chunklib.pack_header(
+        dtype, codec, compression, flags, n, n_nulls, len(levels), len(values_comp)
     )
+    blob = b"".join((header, levels, values_comp))
     stats = {
         "codec": codec,
         "compression": compression,
@@ -1011,21 +936,13 @@ def _assemble_blob(
     return blob, stats
 
 
-
 def _parse_blob(blob: bytes | memoryview):
     """Shared header parse: -> (dtype, codec, valid, values_raw, nn)."""
     mv = memoryview(blob)
-    if bytes(mv[:4]) != MAGIC:
-        raise ValueError("bad chunk magic")
-    dtype = DTYPE_NAMES[mv[4]]
-    codec = CODEC_NAMES[mv[5]]
-    compression = comp.comp_name(mv[6])
-    flags = mv[7]
-    n = int.from_bytes(bytes(mv[8:12]), "little")
-    n_nulls = int.from_bytes(bytes(mv[12:16]), "little")
-    levels_len = int.from_bytes(bytes(mv[16:20]), "little")
-    values_len = int.from_bytes(bytes(mv[20:24]), "little")
-    pos = 24
+    (
+        dtype, codec, compression, flags, n, n_nulls, levels_len, values_len,
+    ) = chunklib.parse_header(mv)
+    pos = chunklib._HEADER.size
     if flags & 1:
         valid = rle.decode(mv[pos : pos + levels_len], n, 1, disable_envelope=True).astype(bool)
     else:
@@ -1037,27 +954,11 @@ def _parse_blob(blob: bytes | memoryview):
     return dtype, codec, valid, values_raw, n - n_nulls
 
 
-def _decode_string_block(values_raw, nn: int, codec: str, dtype: str) -> StrBlock:
-    if codec == PLAIN:
-        return _str_stream_decode(memoryview(values_raw), nn)
-    if codec == FLBA:
-        return _decode_flba_block(memoryview(values_raw), nn)
-    if codec == DICT_RLE:
-        return _decode_dict_block(memoryview(values_raw), nn)
-    if codec == FSST:
-        return _decode_fsst_block(memoryview(values_raw), nn)
-    if codec == INCR:
-        return _decode_incr_block(memoryview(values_raw), nn)
-    raise ValueError(f"codec {codec} unsupported for {dtype}")
-
-
 def decode_arrow_column(blob: bytes | memoryview) -> tuple[pa.Array, str]:
     dtype, codec, valid, values_raw, nn = _parse_blob(blob)
     if dtype == "decimal":
-        from . import chunk as chunklib
-
         p, sc = values_raw[0], values_raw[1]
-        vals = chunklib._decode_values(memoryview(values_raw)[2:], nn, "int64", codec)
+        vals = _decode_leaf(memoryview(values_raw)[2:], nn, "int64", codec)
         return (
             _decimal_to_arrow(np.asarray(vals, dtype=np.int64), valid, p, sc),
             f"decimal({p},{sc})",
@@ -1066,13 +967,7 @@ def decode_arrow_column(blob: bytes | memoryview) -> tuple[pa.Array, str]:
         return _decode_nested_list_column(values_raw, nn, valid)
     if dtype.startswith("list_"):
         return _decode_list_column(values_raw, nn, dtype, codec, valid), dtype
-    if dtype in ("string", "binary"):
-        block = _decode_string_block(values_raw, nn, codec, dtype)
-        return _values_to_arrow(block, valid, dtype), dtype
-    from . import chunk as chunklib
-
-    vals = chunklib._decode_values(memoryview(values_raw), nn, dtype, codec)
-    return _values_to_arrow(vals, valid, dtype), dtype
+    return _values_to_arrow(_decode_leaf(values_raw, nn, dtype, codec), valid, dtype), dtype
 
 
 def arrow_canonical_sha(arr: pa.Array, dtype: str) -> str:
@@ -1109,14 +1004,7 @@ def verify_arrow(blob: bytes, expected_sha: str) -> bool:
         if dtype == "decimal" or dtype.startswith("list_"):
             arr, full_dtype = decode_arrow_column(blob)
             return arrow_canonical_sha(arr, full_dtype) == expected_sha
-        if dtype in ("string", "binary"):
-            values = _decode_string_block(values_raw, nn, codec, dtype)
-        else:
-            from . import chunk as chunklib
-
-            values = chunklib._decode_values(
-                memoryview(values_raw), nn, dtype, codec
-            )
+        values = _decode_leaf(values_raw, nn, dtype, codec)
         return _canonical_sha256_block(values, valid, dtype) == expected_sha
     except Exception:
         return False

@@ -1,57 +1,64 @@
-"""Column-chunk encode/decode — the analogue of the reference's
-``encodeColumnChunk``/``readColumnChunk``
-(/root/reference/lib/writer.js:424-477, /root/reference/lib/reader.js:237-262),
-with DataPageV2 layout semantics: values compressed, levels raw
-(/root/reference/lib/writer.js:355-419).
+"""Chunk wire constants and the numeric half of the column-chunk encoder.
 
-Chunk blob layout (our page format, version 1):
+A chunk is one column's values for one row group, encoded into a blob
+(the analogue of parquetjs ``encodeColumnChunk``/``readColumnChunk``,
+lib/writer.js:424-477 and lib/reader.js:237-262, with DataPageV2
+semantics: values compressed, levels raw).  ``arrow_chunk`` builds and
+reads blobs from Arrow arrays and owns the string codecs.  This module
+holds what both sides of the wire agree on, and the numeric codecs:
+
+* the blob header (``pack_header``/``parse_header``) and the logical
+  dtype ids;
+* ``codec_supports``, the static codec/dtype compatibility table;
+* the value-section dispatch for numeric, temporal and bool values
+  (``_encode_values``/``_decode_values``);
+* the numeric codec selector (``select_codec``) and what it shares with
+  the string selector: sample bounds, the per-column decision cache and
+  the read-cost profile.
+
+Chunk blob layout (version 1), little-endian:
 
   0..3   magic  b"PCH1"
-  4      dtype id   (logical column dtype)
-  5      codec id   (value encoding)
+  4      dtype id   (logical column dtype, DTYPE_IDS)
+  5      codec id   (value encoding, codecs.CODEC_IDS)
   6      compression id (applied to the values section only, like
-         DataPageV2 — /root/reference/lib/writer.js:392-395)
+         DataPageV2 — parquetjs lib/writer.js:392-395)
   7      flags: bit0 = has nulls
-  8..11  u32 LE n_values (incl. nulls)
-  12..15 u32 LE n_nulls
-  16..19 u32 LE len(levels)   — definition levels as RLE bitWidth=1,
-         no envelope (degenerate Dremel: dLevelMax=1, SURVEY.md §1.3;
-         level semantics of /root/reference/lib/writer.js:369-390)
-  20..23 u32 LE len(values_compressed)
+  8..11  u32 n_values (incl. nulls)
+  12..15 u32 n_nulls
+  16..19 u32 len(levels)   — definition levels as RLE bitWidth=1, no
+         envelope (degenerate Dremel: dLevelMax=1, SURVEY.md §1.3)
+  20..23 u32 len(values_compressed)
   levels bytes ++ values bytes
 
 Null handling is Parquet's: the values section stores non-null values
-only; the levels rebuild the mask (/root/reference/lib/shred.js:100-114).
+only; the levels rebuild the mask (parquetjs lib/shred.js:100-114).
 """
 
 from __future__ import annotations
 
-import hashlib
+import struct
 
 import numpy as np
-import pandas as pd
 
 from .codecs import (
     BSS,
     CODEC_IDS,
-    INCR,
-    INT96,
     CODEC_NAMES,
     DICT_RLE,
     FLBA,
     FOR_BITPACK,
     FSST,
+    INCR,
+    INT96,
     PLAIN,
     RLE,
     bss,
     compress as comp,
     dictionary,
     for_bp,
-    fsst,
-    incr,
     plain,
     rle,
-    strstream,
 )
 from .codecs.util import bit_width
 
@@ -119,6 +126,37 @@ def dtype_id(dtype: str) -> int:
         return DTYPE_IDS["list_nested"]
     return DTYPE_IDS[dtype]
 
+
+_HEADER = struct.Struct("<4s4B4I")
+
+
+def pack_header(
+    dtype: str, codec: str, compression: str, flags: int,
+    n: int, n_nulls: int, levels_len: int, values_len: int,
+) -> bytes:
+    """The 24-byte blob header (layout in the module docstring)."""
+    return _HEADER.pack(
+        MAGIC, dtype_id(dtype), CODEC_IDS[codec], comp.comp_id(compression),
+        flags, n, n_nulls, levels_len, values_len,
+    )
+
+
+def parse_header(mv: memoryview):
+    """Blob header -> (dtype, codec, compression, flags, n, n_nulls,
+    levels_len, values_len).  ``dtype`` is the header's dtype name:
+    decimals read as "decimal" and nested lists as "list_nested", their
+    parameters travel in the values section."""
+    if bytes(mv[:4]) != MAGIC:
+        raise ValueError("bad chunk magic")
+    if len(mv) < _HEADER.size:
+        raise ValueError("truncated chunk header")
+    _, d, c, z, flags, n, n_nulls, levels_len, values_len = _HEADER.unpack_from(mv)
+    return (
+        DTYPE_NAMES[d], CODEC_NAMES[c], comp.comp_name(z), flags,
+        n, n_nulls, levels_len, values_len,
+    )
+
+
 _INT_LIKE = {
     "int64", "int32", "date", "timestamp_us", "interval_dt", "time_ns", "bool",
 }
@@ -137,7 +175,8 @@ def codec_supports(codec: str, dtype: str) -> bool:
     """Static codec/dtype compatibility — used by the CLI to reject a
     type-incompatible forced --codec with a clean exit 2 before the job
     starts, instead of a raw executor traceback mid-encode.  Mirrors
-    the ``_encode_values`` dispatch: list dtypes check their leaf
+    the ``_encode_values`` and ``arrow_chunk._encode_string_block``
+    dispatch: list dtypes check their leaf
     element, decimals ride the int64 unscaled path.  Data-dependent
     constraints (RLE non-negativity, FLBA equal lengths) are not
     static and still raise at encode time."""
@@ -220,152 +259,49 @@ SEL_CACHE_USES = 16  # chunks per task re-using one selector decision
 
 
 # --------------------------------------------------------------------------
-# dtype normalization: pandas series -> (non-null work array, validity mask)
+# selector decision cache, shared by the numeric and string selectors
 # --------------------------------------------------------------------------
 
 
-def series_to_values(series: pd.Series, dtype: str):
-    """Return (values, valid_mask) where values holds only non-null entries:
-    int-like -> np int64/int32 array, floats -> np array,
-    string/binary -> list[bytes]."""
-    valid = ~pd.isna(series).to_numpy()
-    nn = series[valid] if not valid.all() else series
-    if dtype == "string":
-        vals = [v.encode("utf-8") for v in nn.astype(object).tolist()]
-    elif dtype == "binary":
-        vals = [bytes(v) for v in nn.tolist()]
-    elif dtype == "timestamp_us":
-        arr = pd.to_datetime(nn).to_numpy()
-        vals = arr.astype("datetime64[us]").view(np.int64)
-    elif dtype == "interval_dt":
-        arr = pd.to_timedelta(nn).to_numpy()
-        vals = arr.astype("timedelta64[us]").view(np.int64)
-    elif dtype == "time_ns":
-        # datetime.time objects -> nanos since midnight (convenience
-        # path only; the pipeline's arrow path reads the int64 buffer)
-        vals = np.fromiter(
-            (
-                ((t.hour * 60 + t.minute) * 60 + t.second) * 10**9
-                + t.microsecond * 1000
-                for t in nn
-            ),
-            dtype=np.int64,
-            count=len(nn),
-        )
-    elif dtype == "date":
-        arr = pd.to_datetime(nn).to_numpy()
-        vals = arr.astype("datetime64[D]").view(np.int64).astype(np.int32)
-    elif dtype == "bool":
-        vals = nn.to_numpy(dtype=bool)
-    elif dtype in ("int64", "int32"):
-        vals = nn.to_numpy(dtype=dtype)
-    elif dtype in ("float64", "float32"):
-        vals = nn.to_numpy(dtype=dtype)
-    else:
-        raise ValueError(f"unsupported dtype: {dtype}")
-    return vals, valid
+def _rle_fits(vmin: int, vmax: int) -> bool:
+    """RLE's data precondition: non-negative values of at most 32 bits."""
+    return vmin >= 0 and bit_width(vmax) <= 32
 
 
-def values_to_series(values, valid: np.ndarray, dtype: str) -> pd.Series:
-    """Inverse of series_to_values (materialization, shred.js:157 analogue)."""
-    n = len(valid)
-    if dtype == "string":
-        out = np.empty(n, dtype=object)
-        out[valid] = [v.decode("utf-8") for v in values]
-        out[~valid] = None
-        return pd.Series(out, dtype=object)
-    if dtype == "binary":
-        out = np.empty(n, dtype=object)
-        out[valid] = list(values)
-        out[~valid] = None
-        return pd.Series(out, dtype=object)
-    if dtype == "timestamp_us":
-        out = np.full(n, np.datetime64("NaT", "us"))
-        out[valid] = np.asarray(values, dtype=np.int64).view("datetime64[us]")
-        return pd.Series(out)
-    if dtype == "interval_dt":
-        out = np.full(n, np.timedelta64("NaT", "us"))
-        out[valid] = np.asarray(values, dtype=np.int64).view("timedelta64[us]")
-        return pd.Series(out)
-    if dtype == "time_ns":
-        import datetime as _dt
+def cached_selection(fsst_state: dict | None, ints=None, lens=None) -> str | None:
+    """The column's cached codec decision if this chunk may reuse it.
 
-        vals64 = np.asarray(values, dtype=np.int64)
-        if len(vals64) and int((vals64 % 1000).max()) != 0:
-            # datetime.time carries micros only — refuse to silently
-            # drop sub-microsecond precision (the arrow path preserves
-            # full nanos; use decode_arrow_column for such data)
-            raise ValueError(
-                "time_ns values carry sub-microsecond precision that "
-                "datetime.time cannot represent; decode via the arrow "
-                "path instead"
-            )
-        out = np.empty(n, dtype=object)
-        out[valid] = [
-            _dt.time(
-                int(v // 3_600_000_000_000) % 24,
-                int(v // 60_000_000_000) % 60,
-                int(v // 1_000_000_000) % 60,
-                int(v % 1_000_000_000) // 1000,
-            )
-            for v in vals64
-        ]
-        out[~valid] = None
-        return pd.Series(out, dtype=object)
-    if dtype == "date":
-        out = np.full(n, np.datetime64("NaT", "D"))
-        out[valid] = np.asarray(values, dtype=np.int64).astype("datetime64[D]")
-        return pd.Series(out.astype("datetime64[s]"))
-    if not valid.all():
-        if dtype in ("int64", "int32"):
-            # masked IntegerArray: no float round-trip (2^53 precision trap)
-            data = np.zeros(n, dtype=dtype)
-            data[valid] = np.asarray(values, dtype=dtype)
-            return pd.Series(pd.arrays.IntegerArray(data, mask=~valid))
-        if dtype == "bool":
-            data = np.zeros(n, dtype=bool)
-            data[valid] = np.asarray(values, dtype=bool)
-            return pd.Series(pd.arrays.BooleanArray(data, mask=~valid))
-        out = np.full(n, np.nan, dtype=dtype)
-        out[valid] = np.asarray(values, dtype=dtype)
-        return pd.Series(out)
-    arr = np.asarray(values)
-    if dtype == "bool":
-        return pd.Series(arr.astype(bool))
-    return pd.Series(arr.astype(dtype))
+    One column's chunks within a task are near-i.i.d., so re-measuring
+    every chunk wastes encode CPU; a decision is reused for
+    SEL_CACHE_USES chunks, then measured again to bound drift.  Two
+    picks carry a data precondition that a later chunk may break, and
+    are re-validated on this chunk's values first (a valid input must
+    not crash the encode): RLE on ``ints``, FLBA's uniform widths on
+    ``lens``.  A stale or invalid decision is dropped."""
+    if fsst_state is None or "sel" not in fsst_state:
+        return None
+    sel = fsst_state["sel"]
+    ok = fsst_state["sel_uses"] < SEL_CACHE_USES
+    if ok and sel == RLE:
+        ok = _rle_fits(int(ints.min()), int(ints.max()))
+    elif ok and sel == FLBA:
+        ok = bool((lens == lens[0]).all())
+    if not ok:
+        del fsst_state["sel"]
+        return None
+    fsst_state["sel_uses"] += 1
+    return sel
+
+
+def cache_selection(fsst_state: dict | None, choice: str) -> None:
+    if fsst_state is not None:
+        fsst_state["sel"] = choice
+        fsst_state["sel_uses"] = 0
 
 
 # --------------------------------------------------------------------------
-# canonical sha256 — the per-row bit-identity invariant (BASELINE.json:15)
-# --------------------------------------------------------------------------
-
-
-def canonical_sha256(values, valid: np.ndarray, dtype: str) -> str:
-    """sha256 over the non-null values ++ validity bitmap.  Strings feed
-    payload ++ '|' ++ int64-LE lengths (same information as the
-    interleaved PLAIN stream, fed without materializing it); numerics
-    feed their PLAIN LE bytes.  Must stay byte-identical to
-    arrow_chunk's definition — test_arrow_chunk pins pandas==arrow."""
-    h = hashlib.sha256()
-    if dtype in ("string", "binary"):
-        h.update(b"".join(values))
-        h.update(b"|")
-        h.update(
-            np.fromiter(
-                (len(v) for v in values), dtype="<i8", count=len(values)
-            ).tobytes()
-        )
-    elif dtype == "bool":
-        h.update(plain.encode_boolean(np.asarray(values)))
-    else:
-        h.update(plain.encode_numeric(_PTYPE[dtype], np.asarray(values)))
-    h.update(b"|")
-    h.update(np.packbits(valid.view(np.uint8), bitorder="little").tobytes())
-    return h.hexdigest()
-
-
-# --------------------------------------------------------------------------
-# value-section encoders per codec
+# value-section codecs for numeric, temporal and bool values (string and
+# binary values are StrBlocks, encoded in arrow_chunk)
 # --------------------------------------------------------------------------
 
 
@@ -417,404 +353,97 @@ def _decode_int_values(buf: memoryview, n: int, dtype: str, codec: str):
     raise ValueError(f"codec {codec} unsupported for {dtype}")
 
 
-def _encode_fsst_strings(
-    vals: list[bytes],
-    table: list[bytes] | None,
-    fsst_state: dict | None = None,
-) -> bytes:
-    concat = b"".join(vals)
-    if table is None:
-        table = fsst.train(concat[:SAMPLE_BYTES])
-        if fsst_state is not None:
-            fsst_state["table"] = table
-    lens = np.fromiter((len(v) for v in vals), dtype=np.int64, count=len(vals))
-    lens_enc = for_bp.encode(lens)
-    payload = fsst.compress(concat, table)
-    return (
-        len(lens_enc).to_bytes(4, "little")
-        + lens_enc
-        + fsst.serialize_table(table)
-        + payload
-    )
-
-
-def _decode_fsst_strings(buf: memoryview, n: int) -> list[bytes]:
-    lens_len = int.from_bytes(bytes(buf[:4]), "little")
-    lens = for_bp.decode(buf[4 : 4 + lens_len], n)
-    table, consumed = fsst.deserialize_table(buf[4 + lens_len :])
-    concat = fsst.decompress(bytes(buf[4 + lens_len + consumed :]), table)
-    offs = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    return [concat[offs[i] : offs[i + 1]] for i in range(n)]
-
-
-def _encode_values(vals, dtype: str, codec: str, fsst_table=None, fsst_state=None) -> bytes:
+def _encode_values(vals, dtype: str, codec: str) -> bytes:
     if dtype in _INT_LIKE:
         return _encode_int_values(np.asarray(vals), dtype, codec)
-    if dtype in ("float64", "float32"):
-        if codec == PLAIN:
-            return plain.encode_numeric(_PTYPE[dtype], np.asarray(vals))
-        if codec == DICT_RLE:
-            return dictionary.encode(np.asarray(vals), _PTYPE[dtype])
-        if codec == BSS:
-            dt = np.float64 if dtype == "float64" else np.float32
-            return bss.encode(np.asarray(vals, dtype=dt))
-        raise ValueError(f"codec {codec} unsupported for {dtype}")
-    # string / binary
     if codec == PLAIN:
-        return strstream.encode_byte_arrays(vals)
-    if codec == FLBA:
-        width = len(vals[0]) if len(vals) else 0
-        return width.to_bytes(4, "little") + plain.encode_fixed_len_byte_array(
-            list(vals), width
-        )
+        return plain.encode_numeric(_PTYPE[dtype], np.asarray(vals))
     if codec == DICT_RLE:
-        return dictionary.encode(vals, "BYTE_ARRAY")
-    if codec == FSST:
-        return _encode_fsst_strings(vals, fsst_table, fsst_state)
-    if codec == INCR:
-        return incr.encode(list(vals))
+        return dictionary.encode(np.asarray(vals), _PTYPE[dtype])
+    if codec == BSS:
+        dt = np.float64 if dtype == "float64" else np.float32
+        return bss.encode(np.asarray(vals, dtype=dt))
     raise ValueError(f"codec {codec} unsupported for {dtype}")
 
 
 def _decode_values(buf: memoryview, n: int, dtype: str, codec: str):
     if dtype in _INT_LIKE:
         return _decode_int_values(buf, n, dtype, codec)
-    if dtype in ("float64", "float32"):
-        if codec == PLAIN:
-            return plain.decode_numeric(_PTYPE[dtype], buf, n)
-        if codec == DICT_RLE:
-            return dictionary.decode(buf, n, _PTYPE[dtype])
-        if codec == BSS:
-            return bss.decode(buf, n, np.float64 if dtype == "float64" else np.float32)
-        raise ValueError(f"codec {codec} unsupported for {dtype}")
     if codec == PLAIN:
-        return strstream.decode_byte_arrays(buf, n)
-    if codec == FLBA:
-        width = int.from_bytes(bytes(buf[:4]), "little")
-        return plain.decode_fixed_len_byte_array(memoryview(buf)[4:], n, width)
+        return plain.decode_numeric(_PTYPE[dtype], buf, n)
     if codec == DICT_RLE:
-        return list(dictionary.decode(buf, n, "BYTE_ARRAY"))
-    if codec == FSST:
-        return _decode_fsst_strings(buf, n)
-    if codec == INCR:
-        return incr.decode(buf, n)
+        return dictionary.decode(buf, n, _PTYPE[dtype])
+    if codec == BSS:
+        return bss.decode(buf, n, np.float64 if dtype == "float64" else np.float32)
     raise ValueError(f"codec {codec} unsupported for {dtype}")
 
 
 # --------------------------------------------------------------------------
-# codec auto-selector (SURVEY.md §7.1 step 3): sampled cardinality /
-# run-length / symbol-frequency statistics -> cheapest codec per chunk.
-# This replaces the reference's static per-schema declaration
-# (/root/reference/lib/schema.js:129-135) with a runtime decision.
+# numeric codec auto-selector (SURVEY.md §7.1 step 3): sampled
+# cardinality / run-length statistics, then a measured post-compression
+# comparison -> cheapest codec per chunk.  This replaces the reference's
+# static per-schema declaration (parquetjs lib/schema.js:129-135) with a
+# runtime decision.  arrow_chunk._select_string_codec is its string half.
 # --------------------------------------------------------------------------
 
 
 def select_codec(
     vals, dtype: str, fsst_state: dict | None = None, profile: str = "default"
 ) -> tuple[str, dict]:
-    """Return (codec_name, selector_stats).
+    """Return (codec_name, selector_stats) for the non-null values of a
+    numeric, temporal or bool chunk.
 
-    ``fsst_state`` is an optional cross-chunk cache (one per task+column):
-    a trained symbol table is reused for sizing and encoding instead of
-    retraining per chunk — training cost amortizes over the partition.
+    ``fsst_state`` is the optional per-task, per-column state dict that
+    holds the decision cache (``cached_selection``).
     ``profile="read_optimized"`` folds the measured decode-cost model
     into the choice (see DECODE_MBPS above); the default stays size-only."""
     n = len(vals)
     info: dict = {"n_sampled": min(n, SAMPLE_VALUES)}
-    if n == 0:
+    if n == 0 or dtype == "bool":
         return PLAIN, info
-    if dtype in (
-        "float64", "float32", "int64", "int32", "date", "timestamp_us",
-        "interval_dt", "time_ns",
-    ):
-        # decision cache: same policy as the string path below — numeric
-        # chunks of one column within a task are near-i.i.d., so the
-        # measured selection below amortizes to ~0.  A cached RLE pick
-        # carries a data precondition (non-negative, <=32-bit) that a
-        # later chunk may violate — re-validate before reuse or a valid
-        # input crashes the encode (e.g. first chunks all-positive, next
-        # chunk contains -1).
-        if fsst_state is not None and "sel" in fsst_state:
-            sel = fsst_state["sel"]
-            ok = fsst_state.get("sel_uses", 0) < SEL_CACHE_USES
-            if ok and sel == RLE and n:
-                a = np.asarray(vals)
-                ok = int(a.min()) >= 0 and bit_width(int(a.max())) <= 32
-            if ok:
-                fsst_state["sel_uses"] = fsst_state.get("sel_uses", 0) + 1
-                return sel, {"cached": True}
-            del fsst_state["sel"]
-        arr = np.asarray(vals)
-        sample = arr[:SAMPLE_VALUES]
-        ds = dictionary.stats(sample, _PTYPE[dtype])
-        scale = n / len(sample)
-        width = arr.dtype.itemsize
-        raw_cands = {
-            PLAIN: len(sample) * width,
-            DICT_RLE: int(ds["est_size"]),
-        }
-        # BSS is size-neutral raw (same n*width bytes as PLAIN) — its
-        # win is post-compression only, so it always enters the
-        # measured z-comparison below rather than the analytic cut.
-        # Floats AND int-likes: byte planes of sorted timestamps or
-        # zipf ints compress ~16% past FOR/PLAIN (measured), and the
-        # comparison rejects it where they don't
-        raw_cands[BSS] = len(sample) * width
-        rle_ok = False
-        if dtype != "float64" and dtype != "float32":
-            vmin, vmax = int(arr.min()), int(arr.max())
-            raw_cands[FOR_BITPACK] = for_bp.estimated_size(len(sample), vmin, vmax)
-            rle_ok = vmin >= 0 and bit_width(vmax) <= 32
-            if rle_ok:
-                runs = ds["runs"]
-                raw_cands[RLE] = int(runs * (2 + (bit_width(vmax) + 7) // 8)) + 1
-        # The analytic sizes rank pre-compression, but blocks get zlib'd
-        # afterwards and codecs respond to it very differently (PLAIN on
-        # zipf ints often beats DICT post-zlib).  Measure post-zlib on the
-        # sample for every candidate within 3x of the analytic best; the
-        # decision cache bounds the cost to ~1 measurement per 16 chunks.
-        best_raw = min(raw_cands.values())
-        cands: dict[str, int] = {}
-        for c, est in raw_cands.items():
-            if est > 3 * best_raw + 64:
-                cands[c] = int(est * scale)
-                continue
-            try:
-                enc = _encode_int_values(sample, dtype, c) if dtype in _INT_LIKE \
-                    else _encode_values(sample, dtype, c)
-            except ValueError:
-                continue
-            z_len = comp.size_estimate(enc)
-            cands[c] = int(min(len(enc), z_len + 16) * scale)
-        info.update(cardinality=ds["cardinality"], runs=ds["runs"], sizes=cands)
-        choice = _pick(cands, len(arr) * width, profile)
-        if fsst_state is not None:
-            fsst_state["sel"] = choice
-            fsst_state["sel_uses"] = 0
-        return choice, info
-    if dtype == "bool":
-        return PLAIN, info
-    # strings / binary: measure on a byte sample
-    # (decision cache: same policy as arrow_chunk._select_string_codec).
-    # A cached FLBA pick requires uniform value widths — re-validate, a
-    # later chunk with one variable-length value would crash the encode.
-    if fsst_state is not None and "sel" in fsst_state:
-        sel = fsst_state["sel"]
-        ok = fsst_state.get("sel_uses", 0) < SEL_CACHE_USES
-        if ok and sel == FLBA and n:
-            ls = np.fromiter((len(v) for v in vals), dtype=np.int64, count=n)
-            ok = bool((ls == ls[0]).all())
-        if ok:
-            fsst_state["sel_uses"] = fsst_state.get("sel_uses", 0) + 1
-            return sel, {"cached": True}
-        del fsst_state["sel"]
-    lens = np.fromiter((len(v) for v in vals), dtype=np.int64, count=n)
-    total = int(lens.sum())
-    sample_vals = vals[: max(1, min(n, SAMPLE_VALUES))]
-    ds = dictionary.stats(sample_vals, "BYTE_ARRAY")
-    scale = n / len(sample_vals)
-    plain_post_z = False
-    cands = {PLAIN: total + n, DICT_RLE: int(ds["est_size"] * scale)}
-    if n and (lens == lens[0]).all():
-        # uniform widths (hashes, fixed ids) -> FLBA, raw concat + u32
-        cands[FLBA] = total + 4
-    # FSST candidacy measured on a bounded sample (SURVEY.md §7.3).
-    # Candidate sizes are estimated POST block-compression — comparing raw
-    # encodings would make FSST look dominant even where zlib-on-PLAIN
-    # ends up the same size at half the CPU.
-    # Evaluate FSST unless dictionary is *clearly* winning (same rule as
-    # arrow_chunk._select_string_codec): low cardinality alone is no
-    # reason to skip when the uniques carry most of the bytes.
-    if total > 0 and cands[DICT_RLE] > 0.35 * cands[PLAIN]:
-        concat = b"".join(sample_vals)[:SAMPLE_BYTES]
-        if len(concat) >= 256:
-            table = None
-            if fsst_state is not None:
-                table = fsst_state.get("table") or fsst_state.get("probe_table")
-            if table is None:
-                table = fsst.train(concat[:PROBE_TRAIN_BYTES])
-                if fsst_state is not None:
-                    fsst_state["probe_table"] = table
-            plain_z = comp.size_estimate(concat) / len(concat)
-            probe_slice = concat[:PROBE_FSST_BYTES]
-            fsst_payload = fsst.compress(probe_slice, table)
-            fsst_z = min(
-                len(fsst_payload), comp.size_estimate(fsst_payload)
-            ) / len(probe_slice)
-            cands[PLAIN] = int(plain_z * total) + n
-            cands[FSST] = int(fsst_z * total) + 2 * len(table) + n + 16
-            info["fsst_ratio"] = round(fsst_z, 4)
-            info["plain_zlib_ratio"] = round(plain_z, 4)
-            # FSST costs ~2x the CPU of PLAIN+zlib: require a >10% size win
-            if cands[FSST] > 0.9 * cands[PLAIN]:
-                cands.pop(FSST)
-            plain_post_z = True
-    # INCREMENTAL candidacy (same policy as arrow_chunk's selector):
-    # cheap adjacent-lcp probe, then measured post-compression compare;
-    # decode is the slowest string path so demand a >8% win.
-    if total > 0 and n >= 2:
-        head = sample_vals[:65]
-        lens_h = np.fromiter((len(v) for v in head), dtype=np.int64, count=len(head))
-        offs_h = np.zeros(len(head) + 1, dtype=np.int64)
-        np.cumsum(lens_h, out=offs_h[1:])
-        probe = incr.mean_lcp_probe(offs_h, b"".join(head))
-        if probe >= 8.0:
-            # bound the measured candidate to ~SAMPLE_BYTES of values,
-            # same cap as the FSST probe above (long-document samples
-            # would otherwise cost more to measure than to encode)
-            acc, k = 0, 0
-            for v in sample_vals:
-                acc += len(v)
-                k += 1
-                if acc >= SAMPLE_BYTES:
-                    break
-            sub_vals = sample_vals[: max(2, k)]
-            enc_i = incr.encode(list(sub_vals))
-            stot = int(sum(len(v) for v in sub_vals))
-            incr_z = min(len(enc_i), comp.size_estimate(enc_i)) / max(1, stot)
-            if not plain_post_z:
-                concat_p = b"".join(sample_vals)[:SAMPLE_BYTES]
-                if len(concat_p):
-                    pz = comp.size_estimate(concat_p) / len(concat_p)
-                    cands[PLAIN] = int(pz * total) + n
-                    plain_post_z = True
-            info["mean_lcp"] = round(probe, 1)
-            cands[INCR] = int(incr_z * total) + n
-            if cands[INCR] > 0.92 * cands[PLAIN]:
-                cands.pop(INCR)
-    info.update(cardinality=ds["cardinality"], runs=ds["runs"], sizes=cands)
-    choice = _pick(cands, total, profile)
-    if fsst_state is not None:
-        fsst_state["sel"] = choice
-        fsst_state["sel_uses"] = 0
-    return choice, info
-
-
-# --------------------------------------------------------------------------
-# public chunk API
-# --------------------------------------------------------------------------
-
-
-def encode_chunk(
-    series: pd.Series,
-    dtype: str,
-    codec: str = "auto",
-    compression: str = "auto",
-    fsst_state: dict | None = None,
-) -> tuple[bytes, dict]:
-    if dtype.startswith("list_") or dtype.startswith("decimal("):
-        # repeated fields + decimals: delegate to the Arrow path (the
-        # wire format is defined once there); lazy import avoids a cycle
-        import pyarrow as pa
-
-        from . import arrow_chunk
-
-        arr = pa.array(series.tolist(), type=arrow_chunk.pa_type_of(dtype))
-        return arrow_chunk.encode_arrow_column(
-            arr, dtype, codec=codec, compression=compression, fsst_state=fsst_state
-        )
-    vals, valid = series_to_values(series, dtype)
-    n = len(valid)
-    n_nulls = int(n - valid.sum())
-    sel_info: dict = {}
-    if codec == "auto":
-        codec, sel_info = select_codec(vals, dtype, fsst_state)
-
-    fsst_table = None if fsst_state is None else fsst_state.get("table")
-    values_raw = _encode_values(vals, dtype, codec, fsst_table, fsst_state)
-
-    if compression == "auto":
-        compression, values_comp = comp.auto_compress(values_raw)
-    else:
-        values_comp = comp.compress(compression, values_raw)
-
-    levels = b""
-    flags = 0
-    if n_nulls:
-        flags |= 1
-        levels = rle.encode(
-            valid.astype(np.uint64), 1, disable_envelope=True
-        )
-
-    blob = b"".join(
-        (
-            MAGIC,
-            bytes(
-                [
-                    DTYPE_IDS[dtype],
-                    CODEC_IDS[codec],
-                    comp.comp_id(compression),
-                    flags,
-                ]
-            ),
-            n.to_bytes(4, "little"),
-            n_nulls.to_bytes(4, "little"),
-            len(levels).to_bytes(4, "little"),
-            len(values_comp).to_bytes(4, "little"),
-            levels,
-            values_comp,
-        )
-    )
-
-    if dtype in ("string", "binary"):
-        content_bytes = int(sum(len(v) for v in vals))
-    elif dtype == "bool":
-        content_bytes = (len(vals) + 7) // 8
-    else:
-        content_bytes = int(np.asarray(vals).nbytes)
-
-    stats = {
-        "codec": codec,
-        "compression": compression,
-        "n": n,
-        "n_nulls": n_nulls,
-        "content_bytes": content_bytes,
-        "encoded_bytes": len(blob),
-        "sha256": canonical_sha256(vals, valid, dtype),
-        "selector": sel_info,
+    arr = np.asarray(vals)
+    sel = cached_selection(fsst_state, ints=arr)
+    if sel is not None:
+        return sel, {"cached": True}
+    sample = arr[:SAMPLE_VALUES]
+    ds = dictionary.stats(sample, _PTYPE[dtype])
+    scale = n / len(sample)
+    width = arr.dtype.itemsize
+    raw_cands = {
+        PLAIN: len(sample) * width,
+        DICT_RLE: int(ds["est_size"]),
     }
-    return blob, stats
-
-
-def decode_chunk(blob: bytes | memoryview) -> tuple[pd.Series, str]:
-    mv = memoryview(blob)
-    if bytes(mv[:4]) != MAGIC:
-        raise ValueError("bad chunk magic")
-    if DTYPE_NAMES[mv[4]].startswith("list_") or DTYPE_NAMES[mv[4]] == "decimal":
-        from . import arrow_chunk
-
-        arr, dtype = arrow_chunk.decode_arrow_column(blob)
-        return pd.Series(arr.to_pylist(), dtype=object), dtype
-    dtype = DTYPE_NAMES[mv[4]]
-    codec = CODEC_NAMES[mv[5]]
-    compression = comp.comp_name(mv[6])
-    flags = mv[7]
-    n = int.from_bytes(bytes(mv[8:12]), "little")
-    n_nulls = int.from_bytes(bytes(mv[12:16]), "little")
-    levels_len = int.from_bytes(bytes(mv[16:20]), "little")
-    values_len = int.from_bytes(bytes(mv[20:24]), "little")
-    pos = 24
-    if flags & 1:
-        valid = (
-            rle.decode(mv[pos : pos + levels_len], n, 1, disable_envelope=True)
-            .astype(bool)
-        )
-    else:
-        valid = np.ones(n, dtype=bool)
-    pos += levels_len
-    values_raw = comp.decompress(compression, mv[pos : pos + values_len])
-    vals = _decode_values(memoryview(values_raw), n - n_nulls, dtype, codec)
-    return values_to_series(vals, valid, dtype), dtype
-
-
-def verify_chunk(blob: bytes, expected_sha: str) -> bool:
-    """Decode and re-hash — the bit-identity check (BASELINE.json:15)."""
-    hdr_dtype = DTYPE_NAMES[memoryview(blob)[4]]
-    if hdr_dtype.startswith("list_") or hdr_dtype == "decimal":
-        from . import arrow_chunk
-
-        return arrow_chunk.verify_arrow(blob, expected_sha)
-    series, dtype = decode_chunk(blob)
-    vals, valid = series_to_values(series, dtype)
-    return canonical_sha256(vals, valid, dtype) == expected_sha
+    # BSS is size-neutral raw (same n*width bytes as PLAIN) — its
+    # win is post-compression only, so it always enters the
+    # measured z-comparison below rather than the analytic cut.
+    # Floats AND int-likes: byte planes of sorted timestamps or
+    # zipf ints compress ~16% past FOR/PLAIN (measured), and the
+    # comparison rejects it where they don't
+    raw_cands[BSS] = len(sample) * width
+    if dtype in _INT_LIKE:
+        vmin, vmax = int(arr.min()), int(arr.max())
+        raw_cands[FOR_BITPACK] = for_bp.estimated_size(len(sample), vmin, vmax)
+        if _rle_fits(vmin, vmax):
+            runs = ds["runs"]
+            raw_cands[RLE] = int(runs * (2 + (bit_width(vmax) + 7) // 8)) + 1
+    # The analytic sizes rank pre-compression, but blocks get zlib'd
+    # afterwards and codecs respond to it very differently (PLAIN on
+    # zipf ints often beats DICT post-zlib).  Measure post-zlib on the
+    # sample for every candidate within 3x of the analytic best; the
+    # decision cache bounds the cost to ~1 measurement per 16 chunks.
+    best_raw = min(raw_cands.values())
+    cands: dict[str, int] = {}
+    for c, est in raw_cands.items():
+        if est > 3 * best_raw + 64:
+            cands[c] = int(est * scale)
+            continue
+        try:
+            enc = _encode_values(sample, dtype, c)
+        except ValueError:
+            continue
+        z_len = comp.size_estimate(enc)
+        cands[c] = int(min(len(enc), z_len + 16) * scale)
+    info.update(cardinality=ds["cardinality"], runs=ds["runs"], sizes=cands)
+    choice = _pick(cands, len(arr) * width, profile)
+    cache_selection(fsst_state, choice)
+    return choice, info

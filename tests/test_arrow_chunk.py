@@ -1,5 +1,5 @@
-"""Arrow-native chunk path: round-trips + wire compatibility with the
-pandas path (identical blob format, interchangeable decode)."""
+"""Arrow-native chunk path: round-trips, sha verification and golden
+pins of the chunk wire."""
 
 import datetime as dt
 import hashlib
@@ -10,7 +10,7 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
-from parquetjs_spark import arrow_chunk, chunk
+from parquetjs_spark import arrow_chunk
 from parquetjs_spark.codecs import DICT_RLE, FSST, PLAIN
 
 
@@ -272,6 +272,14 @@ def test_golden_chunk_pins(name):
     assert arrow_chunk.verify_arrow(blob, stats["sha256"])
 
 
+def test_truncated_header_is_a_clean_error():
+    blob, stats = arrow_chunk.encode_arrow_column(pa.array([1, 2, 3]), "int64")
+    for cut in (2, 10, 23):
+        with pytest.raises(ValueError, match="magic|truncated"):
+            arrow_chunk.decode_arrow_column(blob[:cut])
+        assert not arrow_chunk.verify_arrow(blob[:cut], stats["sha256"])
+
+
 def test_sliced_arrow_input():
     base = pa.array(["padpad"] * 10 + ["v%d" % i for i in range(500)])
     sliced = base.slice(10, 400)
@@ -345,29 +353,26 @@ def test_time_ns_roundtrip():
     assert dtype == "time_ns"
     assert out.to_pylist() == vals.to_pylist()
     assert arrow_chunk.verify_arrow(blob, stats["sha256"])
-    # pandas convenience path agrees
-    import pandas as pd
-
-    s = pd.Series([dt.time(1, 2, 3, 4), None, dt.time(23, 0)], dtype=object)
-    blob2, st2 = chunk.encode_chunk(s, "time_ns")
-    out2, dt2 = chunk.decode_chunk(blob2)
+    # datetime.time rows with micros round-trip to the same objects
+    times = [dt.time(1, 2, 3, 4), None, dt.time(23, 0)]
+    blob2, st2 = arrow_chunk.encode_arrow_column(
+        pa.array(times, type=pa.time64("ns")), "time_ns"
+    )
+    out2, dt2 = arrow_chunk.decode_arrow_column(blob2)
     assert dt2 == "time_ns"
-    assert out2.tolist() == [dt.time(1, 2, 3, 4), None, dt.time(23, 0)]
-    assert chunk.verify_chunk(blob2, st2["sha256"])
+    assert out2.to_pylist() == times
+    assert arrow_chunk.verify_arrow(blob2, st2["sha256"])
 
 
-def test_time_ns_pandas_path_refuses_sub_microsecond():
-    """datetime.time carries micros only — the pandas decode path must
-    refuse (not silently truncate) genuine nanosecond values; the arrow
-    path preserves them."""
+def test_time_ns_keeps_sub_microsecond():
+    """Genuine nanosecond values (below datetime.time's micro
+    resolution) decode exactly, not truncated."""
     vals = pa.array(
         np.array([12_345_678_901], dtype=np.int64), type=pa.time64("ns")
     )
     blob, _ = arrow_chunk.encode_arrow_column(vals, "time_ns")
-    out, _ = arrow_chunk.decode_arrow_column(blob)  # arrow path: exact
+    out, _ = arrow_chunk.decode_arrow_column(blob)
     assert out.cast(pa.int64()).to_pylist() == [12_345_678_901]
-    with pytest.raises(ValueError, match="sub-microsecond"):
-        chunk.decode_chunk(blob)
 
 
 def test_int64_extremes_and_float_specials_roundtrip():

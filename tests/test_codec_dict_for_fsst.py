@@ -191,13 +191,16 @@ class TestReadOptimizedProfile:
 
     def test_decode_cost_table_pinned(self):
         from parquetjs_spark.chunk import DECODE_MBPS, READ_IO_MBPS
-        from parquetjs_spark.codecs import FSST, INCR, PLAIN
+        from parquetjs_spark.codecs import CODEC_IDS, FSST, INCR, PLAIN
 
         # relative ordering is the contract: INCR is the slowest string
         # decode, FSST next, PLAIN vectorized-fast; IO bandwidth models
         # a cold scan
         assert DECODE_MBPS[INCR] < DECODE_MBPS[FSST] < DECODE_MBPS[PLAIN]
         assert READ_IO_MBPS < DECODE_MBPS[PLAIN]
+        # every codec the selector can name has a decode cost, or the
+        # read_optimized profile raises KeyError on it
+        assert set(DECODE_MBPS) == set(CODEC_IDS)
 
     @staticmethod
     def _sorted_path_block():
@@ -256,3 +259,44 @@ class TestReadOptimizedProfile:
         # materially larger encoding
         assert ri["sizes"][r] <= 1.01 * di["sizes"][d]
         assert r in ("RLE", "FOR_BITPACK")
+
+
+class TestStringSelectorProbes:
+    """Bounds and reuse of the string selector's sampled probes."""
+
+    def test_dict_probe_reads_at_most_sample_bytes_plus_one_value(self, monkeypatch):
+        import pyarrow.compute as pc
+
+        from parquetjs_spark.arrow_chunk import StrBlock, _select_string_codec
+        from parquetjs_spark.chunk import SAMPLE_BYTES
+
+        mb = 1 << 20
+        vals = [bytes([65 + i]) * mb for i in range(8)]
+        offs = np.arange(len(vals) + 1, dtype=np.int64) * mb
+        block = StrBlock(b"".join(vals), offs)
+        probed = []
+        real = pc.dictionary_encode
+
+        def spy(arr, *a, **kw):
+            probed.append(sum(len(v) for v in arr.to_pylist()))
+            return real(arr, *a, **kw)
+
+        monkeypatch.setattr(pc, "dictionary_encode", spy)
+        _select_string_codec(block, None)
+        assert probed and max(probed) <= SAMPLE_BYTES + mb
+
+    def test_empty_fsst_table_is_reused_not_retrained(self, monkeypatch):
+        from parquetjs_spark.arrow_chunk import StrBlock, _select_string_codec
+
+        rng = np.random.default_rng(3)
+        vals = [bytes(rng.integers(0, 256, 40, dtype=np.uint8)) + b"%d" % i
+                for i in range(2000)]
+        lens = np.fromiter((len(v) for v in vals), np.int64, count=len(vals))
+        offs = np.zeros(len(vals) + 1, np.int64)
+        np.cumsum(lens, out=offs[1:])
+        block = StrBlock(b"".join(vals), offs)
+        trained = []
+        monkeypatch.setattr(fsst, "train", lambda data: trained.append(1) or [])
+        for state in ({"table": []}, {"probe_table": []}):
+            _select_string_codec(block, state)
+        assert trained == []

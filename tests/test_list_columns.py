@@ -11,7 +11,7 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
-from parquetjs_spark import arrow_chunk, chunk as chunklib
+from parquetjs_spark import arrow_chunk
 
 
 def rt_arrow(values, pa_elem, dtype, codec="auto"):
@@ -69,12 +69,10 @@ def test_list_null_elements_roundtrip():
 
 
 def test_list_pandas_path_delegates():
+    """List rows given as Python objects (a pandas object column)."""
     s = pd.Series([[1, 2], None, [3]], dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "list_int64")
-    out, dtype = chunklib.decode_chunk(blob)
-    assert dtype == "list_int64"
-    assert out.tolist() == [[1, 2], None, [3]]
-    assert chunklib.verify_chunk(blob, stats["sha256"])
+    got, _ = rt_arrow(s.tolist(), pa.int64(), "list_int64")
+    assert got == [[1, 2], None, [3]]
 
 
 def test_list_spark_pipeline_embeddings(spark):
@@ -147,12 +145,10 @@ def test_nested_list_token_embeddings_shape():
 
 
 def test_nested_list_pandas_path_delegates():
+    """Nested list rows given as Python objects (a pandas object column)."""
     s = pd.Series([[[1, 2], [3]], None, [[], [4]]], dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "list_list_int64")
-    out, dtype = chunklib.decode_chunk(blob)
-    assert dtype == "list_list_int64"
-    assert out.tolist() == [[[1, 2], [3]], None, [[], [4]]]
-    assert chunklib.verify_chunk(blob, stats["sha256"])
+    got, _ = rt_nested(s.tolist(), "list_list_int64")
+    assert got == [[[1, 2], [3]], None, [[], [4]]]
 
 
 def test_nested_list_spark_pipeline(spark):

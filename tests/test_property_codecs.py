@@ -10,11 +10,11 @@ and the FSST 64-byte parse grid.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
-from parquetjs_spark import chunk as chunklib
-from parquetjs_spark.codecs import dictionary, for_bp, fsst, plain, rle
+from parquetjs_spark import arrow_chunk
+from parquetjs_spark.codecs import dictionary, for_bp, fsst, incr, plain, rle
 
 FAST = settings(max_examples=40, deadline=None)
 
@@ -75,6 +75,16 @@ def test_fsst_parse_grid_boundaries(pad_ff, n):
 # --- chunk-level (codec auto-selection + nulls + compression) ---------------
 
 
+def chunk_roundtrip(values, dtype: str, **kw) -> list:
+    """Encode a list of Python values as one chunk, check its sha, decode."""
+    arr = pa.array(values, type=arrow_chunk.pa_type_of(dtype))
+    blob, stats = arrow_chunk.encode_arrow_column(arr, dtype, **kw)
+    out, out_dtype = arrow_chunk.decode_arrow_column(blob)
+    assert out_dtype == dtype
+    assert arrow_chunk.verify_arrow(blob, stats["sha256"])
+    return out.to_pylist()
+
+
 @FAST
 @given(
     st.lists(
@@ -84,13 +94,7 @@ def test_fsst_parse_grid_boundaries(pad_ff, n):
     )
 )
 def test_chunk_int64_auto_roundtrip(values):
-    s = pd.Series(values, dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "int64")
-    out, dtype = chunklib.decode_chunk(blob)
-    assert dtype == "int64"
-    got = [None if pd.isna(v) else int(v) for v in out.tolist()]
-    assert got == values
-    assert chunklib.verify_chunk(blob, stats["sha256"])
+    assert chunk_roundtrip(values, "int64") == values
 
 
 @FAST
@@ -102,13 +106,7 @@ def test_chunk_int64_auto_roundtrip(values):
     )
 )
 def test_chunk_string_auto_roundtrip(values):
-    s = pd.Series(values, dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "string")
-    out, dtype = chunklib.decode_chunk(blob)
-    assert dtype == "string"
-    got = [None if v is None else v for v in out.where(out.notna(), None).tolist()]
-    assert got == values
-    assert chunklib.verify_chunk(blob, stats["sha256"])
+    assert chunk_roundtrip(values, "string") == values
 
 
 @FAST
@@ -123,12 +121,7 @@ def test_chunk_string_auto_roundtrip(values):
     )
 )
 def test_chunk_list_int64_auto_roundtrip(values):
-    s = pd.Series(values, dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "list_int64")
-    out, dtype = chunklib.decode_chunk(blob)
-    assert dtype == "list_int64"
-    assert out.tolist() == values
-    assert chunklib.verify_chunk(blob, stats["sha256"])
+    assert chunk_roundtrip(values, "list_int64") == values
 
 
 # --- FOR+bitpack / dictionary ------------------------------------------------
@@ -149,6 +142,54 @@ def test_dictionary_roundtrip_bytes(values):
     buf = dictionary.encode(values, "BYTE_ARRAY")
     out = dictionary.decode(memoryview(buf), len(values), "BYTE_ARRAY")
     assert list(out) == values
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.one_of(st.sampled_from([b"", b"a", b"ab", b"abc"]), st.binary(max_size=30)),
+        max_size=200,
+    ),
+    st.booleans(),
+)
+def test_string_block_codecs_match_list_codecs(values, do_sort):
+    """The StrBlock encoders write the same bytes as the list-of-bytes
+    reference codecs (DICT_RLE, INCREMENTAL)."""
+    if do_sort:
+        values = sorted(values)
+    block = arrow_chunk._strblock_from_pa(pa.array(values, type=pa.binary()))
+    assert arrow_chunk._encode_dict_block(block) == dictionary.encode(
+        values, "BYTE_ARRAY"
+    )
+    assert arrow_chunk._encode_incr_block(block) == incr.encode(values)
+
+
+# chunk shapes that flip the selector's cached decision: RLE-friendly
+# ints then negative / wide ones; uniform-width bytes (FLBA) then
+# variable-length ones
+_INT_CHUNKS = st.one_of(
+    st.integers(1, 8).map(lambda k: np.repeat(np.arange(k), 300).tolist()),
+    st.lists(st.integers(-(2**40), 2**40), min_size=1, max_size=300),
+)
+_BYTES_CHUNKS = st.one_of(
+    st.lists(st.binary(min_size=16, max_size=16), min_size=1, max_size=300),
+    st.lists(st.binary(max_size=30), min_size=1, max_size=300),
+)
+
+
+@FAST
+@given(st.data())
+def test_shared_selector_state_across_mixed_chunks(data):
+    """One column's selector state carried through a run of chunks whose
+    shapes break a cached RLE or FLBA decision: every chunk, scalar or
+    list elements, still round-trips and verifies."""
+    dtype = data.draw(st.sampled_from(["int64", "list_int64", "binary", "list_binary"]))
+    shapes = _INT_CHUNKS if "int" in dtype else _BYTES_CHUNKS
+    state: dict = {}
+    for vals in data.draw(st.lists(shapes, min_size=2, max_size=20)):
+        if dtype.startswith("list_"):
+            vals = [vals[i : i + 3] for i in range(0, len(vals), 3)]
+        assert chunk_roundtrip(vals, dtype, fsst_state=state) == vals
 
 
 # --- round-2 features: element nulls, decimal, arrow chunk ------------------
@@ -222,13 +263,7 @@ def test_list_string_element_nulls_roundtrip(values):
     )
 )
 def test_decimal_chunk_roundtrip(values):
-    s = pd.Series(values, dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "decimal(12,2)")
-    out, dtype = chunklib.decode_chunk(blob)
-    assert dtype == "decimal(12,2)"
-    got = [None if v is None else v for v in out.tolist()]
-    assert got == values
-    assert chunklib.verify_chunk(blob, stats["sha256"])
+    assert chunk_roundtrip(values, "decimal(12,2)") == values
 
 
 @FAST
@@ -237,12 +272,7 @@ def test_decimal_chunk_roundtrip(values):
 def test_flba_chunk_roundtrip(values):
     from parquetjs_spark.codecs import FLBA
 
-    s = pd.Series(values, dtype=object)
-    blob, stats = chunklib.encode_chunk(s, "binary", codec=FLBA)
-    out, dtype = chunklib.decode_chunk(blob)
-    got = [None if v is None else bytes(v) for v in out.tolist()]
-    assert got == values
-    assert chunklib.verify_chunk(blob, stats["sha256"])
+    assert chunk_roundtrip(values, "binary", codec=FLBA) == values
 
 
 @FAST

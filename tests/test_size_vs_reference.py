@@ -10,19 +10,21 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
-from parquetjs_spark import chunk as chunklib, reference_model as ref
+from parquetjs_spark import arrow_chunk, reference_model as ref
 from parquetjs_spark.sources.synthetic import source_code_pdf
 
 
 def our_total(series: pd.Series, dtype: str) -> int:
     """Auto-encode in reference-sized row groups; total blob bytes
     (chunk headers + levels + payload all included)."""
+    arr = pa.Array.from_pandas(series, type=arrow_chunk.pa_type_of(dtype))
     total = 0
-    for lo in range(0, len(series), ref.ROW_GROUP_SIZE):
-        blob, _ = chunklib.encode_chunk(
-            series.iloc[lo : lo + ref.ROW_GROUP_SIZE].reset_index(drop=True), dtype
+    for lo in range(0, len(arr), ref.ROW_GROUP_SIZE):
+        blob, _ = arrow_chunk.encode_arrow_column(
+            arr.slice(lo, ref.ROW_GROUP_SIZE), dtype
         )
         total += len(blob)
     return total
