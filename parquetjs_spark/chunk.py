@@ -145,16 +145,27 @@ def parse_header(mv: memoryview):
     """Blob header -> (dtype, codec, compression, flags, n, n_nulls,
     levels_len, values_len).  ``dtype`` is the header's dtype name:
     decimals read as "decimal" and nested lists as "list_nested", their
-    parameters travel in the values section."""
+    parameters travel in the values section.  ``mv`` must be the whole
+    blob: a header that disagrees with it raises ValueError."""
     if bytes(mv[:4]) != MAGIC:
         raise ValueError("bad chunk magic")
     if len(mv) < _HEADER.size:
         raise ValueError("truncated chunk header")
     _, d, c, z, flags, n, n_nulls, levels_len, values_len = _HEADER.unpack_from(mv)
-    return (
-        DTYPE_NAMES[d], CODEC_NAMES[c], comp.comp_name(z), flags,
-        n, n_nulls, levels_len, values_len,
-    )
+    if _HEADER.size + levels_len + values_len != len(mv):
+        raise ValueError(
+            f"chunk section lengths {levels_len} + {values_len} do not "
+            f"match the {len(mv)}-byte blob"
+        )
+    if n_nulls > n:
+        raise ValueError(f"chunk n_nulls {n_nulls} exceeds n {n}")
+    try:
+        names = DTYPE_NAMES[d], CODEC_NAMES[c], comp.comp_name(z)
+    except KeyError:
+        raise ValueError(
+            f"unknown chunk dtype/codec/compression id {d}/{c}/{z}"
+        ) from None
+    return (*names, flags, n, n_nulls, levels_len, values_len)
 
 
 _INT_LIKE = {

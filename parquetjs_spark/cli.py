@@ -393,9 +393,8 @@ def _reject_in_place(args) -> bool:
 
 
 def _write_rewritten(spark, args, blobs, out_df) -> int | None:
-    """Shared tail of compact/delete/update: preserve the input's
-    --partition-by-column layout (auto-detected, flag overrides),
-    cache so the blobs and manifest writes share one execution, carry
+    """Shared tail of compact/delete/update/append: preserve the input's
+    --partition-by-column layout (auto-detected, flag overrides), carry
     the user KV metadata, and surface executor-side failures as the
     exit-2 contract.  Returns None on failure (error already printed),
     else the output-manifest DataFrame (callers aggregate it once —
@@ -408,19 +407,16 @@ def _write_rewritten(spark, args, blobs, out_df) -> int | None:
     part_by_col = (
         getattr(args, "partition_by_column", False) or "/column=" in first_file
     )
-    out = out_df.cache()
     try:
         meta = pipeline.read_metadata(spark, args.input)
         pipeline.write_encoded(
-            out, args.output, mode="overwrite", metadata=meta,
+            out_df, args.output, mode="overwrite", metadata=meta,
             partition_by_column=part_by_col,
         )
         return pipeline.read_manifest(spark, args.output)
     except PySparkException as e:
         print(f"error: {args.cmd} failed during rewrite: {e}", file=sys.stderr)
         return None
-    finally:
-        out.unpersist()
 
 
 def cmd_append(args) -> int:

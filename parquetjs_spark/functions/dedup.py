@@ -76,6 +76,10 @@ def _list_i64_parts(col) -> tuple[np.ndarray, np.ndarray]:
 
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
+    if col.null_count:
+        # list_value_length gives a null row no length: its int64 cast
+        # would be an arbitrary number and misalign every later row
+        raise ValueError(f"{col.null_count} null list row(s); expected none")
     if len(col) == 0:
         return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
     lens = pc.list_value_length(col).to_numpy(zero_copy_only=False).astype(np.int64)

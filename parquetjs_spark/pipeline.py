@@ -26,6 +26,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark import TaskContext
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -512,32 +513,6 @@ _LOGICAL_TO_PA: dict[str, pa.DataType] = {
 # --------------------------------------------------------------------------
 
 
-def _batch_slices(
-    batches: Iterable[pd.DataFrame], chunk_rows: int
-) -> Iterator[pd.DataFrame]:
-    """Re-chunk a stream of pandas batches into ~chunk_rows slices without
-    concatenating the whole partition (bounded memory at any scale)."""
-    pending: list[pd.DataFrame] = []
-    pending_rows = 0
-    for pdf in batches:
-        pos = 0
-        n = len(pdf)
-        while pos < n:
-            take = min(chunk_rows - pending_rows, n - pos)
-            pending.append(pdf.iloc[pos : pos + take])
-            pending_rows += take
-            pos += take
-            if pending_rows >= chunk_rows:
-                yield pd.concat(pending, ignore_index=True) if len(
-                    pending
-                ) > 1 else pending[0].reset_index(drop=True)
-                pending, pending_rows = [], 0
-    if pending_rows:
-        yield pd.concat(pending, ignore_index=True) if len(pending) > 1 else pending[
-            0
-        ].reset_index(drop=True)
-
-
 def _arrow_batch_slices(
     batches: Iterable[pa.RecordBatch], chunk_rows: int
 ) -> Iterator[pa.RecordBatch]:
@@ -608,13 +583,22 @@ def pretrain_fsst_tables(
     return tables
 
 
-# manifest fields copied verbatim from an encode's stats dict — shared
-# by the first-pass encode and compact's re-encode so the two row
-# builders cannot drift when a field is added
-_STATS_ROW_FIELDS = (
-    "codec", "compression", "n", "n_nulls", "content_bytes",
-    "encoded_bytes", "sha256", "bloom",
-)
+def _encode_chunk(arr: pa.Array, dtype: str, **encode_kw) -> dict:
+    """Encode one chunk -> the blob-row fields the encode decides:
+    codec, sizes, sha256, bloom, zone map, wall_ms and data.  The
+    first-pass encode and every rewrite (delete, update, compact) build
+    their rows from it, so they cannot drift when a field is added."""
+    t0 = time.perf_counter()
+    blob, stats = arrow_chunk.encode_arrow_column(arr, dtype, **encode_kw)
+    fields = {
+        f: stats.get(f)
+        for f in ("codec", "compression", "n", "n_nulls", "content_bytes",
+                  "encoded_bytes", "sha256", "bloom")
+    }
+    fields["stat_min"], fields["stat_max"] = arrow_chunk._column_stats(arr, dtype)
+    fields["wall_ms"] = (time.perf_counter() - t0) * 1000.0
+    fields["data"] = blob
+    return fields
 
 
 def encode_columns(
@@ -668,8 +652,7 @@ def encode_columns(
         for rb in _arrow_batch_slices(batches, chunk_rows):
             rows: dict[str, list] = {f.name: [] for f in BLOB_SCHEMA.fields}
             for ci, c in enumerate(cols):
-                t0 = time.perf_counter()
-                blob, stats = arrow_chunk.encode_arrow_column(
+                fields = _encode_chunk(
                     rb.column(c),
                     dtypes[c],
                     codec=codec,
@@ -677,20 +660,13 @@ def encode_columns(
                     fsst_state=fsst_states[c],
                     profile=profile,
                 )
-                smin, smax = arrow_chunk._column_stats(rb.column(c), dtypes[c])
-                stats["stat_min"], stats["stat_max"] = smin, smax
-                wall_ms = (time.perf_counter() - t0) * 1000.0
                 rows["part_id"].append(part_id)
                 rows["chunk_seq"].append(seq)
                 rows["column"].append(pretty[c])
                 rows["col_idx"].append(ci)
                 rows["dtype"].append(dtypes[c])
-                for f_ in _STATS_ROW_FIELDS:
-                    rows[f_].append(stats.get(f_))
-                rows["stat_min"].append(stats.get("stat_min"))
-                rows["stat_max"].append(stats.get("stat_max"))
-                rows["wall_ms"].append(wall_ms)
-                rows["data"].append(blob)
+                for f_, v in fields.items():
+                    rows[f_].append(v)
             seq += 1
             yield pa.RecordBatch.from_pydict(rows, schema=_BLOB_PA_SCHEMA)
 
@@ -1610,21 +1586,12 @@ def _delete_rewrite_group(key, pdf, *, specs, codec, compression):
     keep_pa = pa.array(keep_mask)
     rows = []
     for _, r in pdf.iterrows():
-        t0 = time.perf_counter()
         arr, dtype = arrs[r["column"]]
-        kept = arr.filter(keep_pa)
-        blob, stats = arrow_chunk.encode_arrow_column(
-            kept, dtype, codec=codec, compression=compression,
+        fields = _encode_chunk(
+            arr.filter(keep_pa), dtype, codec=codec, compression=compression,
             fsst_state={},
         )
-        smin, smax = arrow_chunk._column_stats(kept, dtype)
-        row = r.copy()
-        for f_ in _STATS_ROW_FIELDS:
-            row[f_] = stats.get(f_)
-        row["stat_min"], row["stat_max"] = smin, smax
-        row["wall_ms"] = (time.perf_counter() - t0) * 1000.0
-        row["data"] = blob
-        rows.append(row)
+        rows.append(pd.Series({**r, **fields}))
     return pd.DataFrame(rows)
 
 
@@ -1687,7 +1654,6 @@ def update_where(
         mask_pa = pa.array(match)
         rows = []
         for _, r in sub.iterrows():
-            t0 = time.perf_counter()
             arr, dtype = arrs[r["column"]]
             try:
                 scalar = pa.scalar(assignments[r["column"]], type=arr.type)
@@ -1696,19 +1662,11 @@ def update_where(
                     f"update_where: value for {r['column']!r} incompatible "
                     f"with {arr.type}: {e}"
                 ) from e
-            updated = pc.if_else(mask_pa, scalar, arr)
-            blob, stats = arrow_chunk.encode_arrow_column(
-                updated, dtype, codec=codec, compression=compression,
-                fsst_state={},
+            fields = _encode_chunk(
+                pc.if_else(mask_pa, scalar, arr), dtype, codec=codec,
+                compression=compression, fsst_state={},
             )
-            smin, smax = arrow_chunk._column_stats(updated, dtype)
-            row = r.copy()
-            for f_ in _STATS_ROW_FIELDS:
-                row[f_] = stats.get(f_)
-            row["stat_min"], row["stat_max"] = smin, smax
-            row["wall_ms"] = (time.perf_counter() - t0) * 1000.0
-            row["data"] = blob
-            rows.append(row)
+            rows.append(pd.Series({**r, **fields}))
         return pd.DataFrame(rows)
 
     rewritten = rewrite_in.groupBy("part_id", "chunk_seq").applyInPandas(
@@ -1782,25 +1740,16 @@ def compact_chunks(
             if len(b) == 1:
                 rows.append(first)
                 continue
-            t0 = time.perf_counter()
             arrs = []
             dtype = str(first["dtype"])
             for i in b:
                 arr_i, dtype = arrow_chunk.decode_arrow_column(pdf["data"].iloc[i])
                 arrs.append(arr_i)
-            merged = pa.concat_arrays(arrs)
-            blob, stats = arrow_chunk.encode_arrow_column(
-                merged, dtype, codec=codec, compression=compression,
-                fsst_state={},
+            fields = _encode_chunk(
+                pa.concat_arrays(arrs), dtype, codec=codec,
+                compression=compression, fsst_state={},
             )
-            smin, smax = arrow_chunk._column_stats(merged, dtype)
-            row = first.copy()
-            for f_ in _STATS_ROW_FIELDS:
-                row[f_] = stats.get(f_)
-            row["stat_min"], row["stat_max"] = smin, smax
-            row["wall_ms"] = (time.perf_counter() - t0) * 1000.0
-            row["data"] = blob
-            rows.append(row)
+            rows.append(pd.Series({**first, **fields}))
         return pd.DataFrame(rows)
 
     compacted = todo.groupBy("part_id", "column").applyInPandas(
@@ -1906,6 +1855,14 @@ def salted_repartition(
     return df.repartition(num_partitions, F.col(key), salt)
 
 
+def _blob_files(reader, blobs_dir: str) -> set[str]:
+    """The data files under ``blobs_dir``: a file listing, no data read."""
+    try:
+        return set(reader.parquet(blobs_dir).inputFiles())
+    except AnalysisException:  # no blobs/ yet: the first append
+        return set()
+
+
 def write_encoded(
     blob_df: DataFrame,
     path: str,
@@ -1913,11 +1870,20 @@ def write_encoded(
     metadata: dict[str, str] | None = None,
     partition_by_column: bool = False,
 ) -> None:
-    """Persist blobs + a pure-metadata manifest (lineage) table.
+    """Persist blobs + a pure-metadata manifest (lineage) table.  This
+    is the one writer of ``blobs/``, ``manifest/`` and ``meta/``.
 
-    The manifest is the footer analogue (/root/reference/lib/writer.js:520-569)
-    but queryable: per-chunk codec, sizes, sha256, timing.  ``metadata``
-    is user key/value footer metadata (``setMetadata``,
+    ``blob_df`` is evaluated once: the blobs are written, and the
+    manifest is then read back from the files that write produced, with
+    ``data`` pruned, so Parquet reads only their metadata column chunks.
+    The manifest is therefore a projection of the bytes on disk, the
+    footer analogue (parquetjs lib/writer.js:520-569) but
+    queryable: per-chunk codec, sizes, sha256, timing.  In append mode
+    only the files this write added are read back (a listing taken
+    before and after the write), so a streaming micro-batch costs
+    O(batch), not O(table).
+
+    ``metadata`` is user key/value footer metadata (``setMetadata``,
     /root/reference/lib/writer.js:147-149), stored as its own tiny
     table.
 
@@ -1930,17 +1896,31 @@ def write_encoded(
     per task; prefer it when k (columns) is small relative to the
     desired file count."""
     spark = blob_df.sparkSession
+    blobs_dir = f"{path}/blobs"
+    # basePath keeps a partition_by_column layout's `column` field when
+    # individual files are read back; the schema skips footer inference
+    reader = spark.read.schema(blob_df.schema).option("basePath", blobs_dir)
     # an append must not lose the first run's user KV: carry existing
     # rows forward, new values winning per key (read BEFORE the blob
     # write so a same-session overwrite can't read its own output)
     kv: dict[str, str] = {}
+    before: set[str] = set()
     if mode == "append":
         kv.update(read_metadata(spark, path))
+        before = _blob_files(reader, blobs_dir)
     wr = blob_df.write.mode(mode)
     if partition_by_column:
         wr = wr.partitionBy("column")
-    wr.parquet(f"{path}/blobs")
-    blob_df.select(*MANIFEST_COLUMNS).write.mode(mode).parquet(f"{path}/manifest")
+    wr.parquet(blobs_dir)
+    if mode != "append":
+        written = reader.parquet(blobs_dir)
+    elif added := sorted(_blob_files(reader, blobs_dir) - before):
+        written = reader.parquet(*added)
+    else:
+        # an empty append may add no file; limit(0) plans to an empty
+        # relation, so the manifest write never re-runs the encode
+        written = blob_df.limit(0)
+    written.select(*MANIFEST_COLUMNS).write.mode(mode).parquet(f"{path}/manifest")
     # the manifest on disk just changed — a cached (col_idx, dtype) map
     # for this path is now stale and would silently drive decode with
     # the OLD schema after an overwrite-recast; drop it
@@ -1952,9 +1932,9 @@ def write_encoded(
     kv[_SHA_FORMAT_KEY] = str(SHA_FORMAT_VERSION)
     for k, v in (metadata or {}).items():
         kv[str(k)] = str(v)
-    mdf = spark.createDataFrame(
-        list(kv.items()), "key string, value string"
-    )
+    # built from Arrow: a list of tuples would launch a Python-worker
+    # job just to ship these few rows to the JVM
+    mdf = spark.createDataFrame(pa.table({"key": list(kv), "value": list(kv.values())}))
     # KV table itself is always overwrite: a resume (mode="append")
     # must not stack duplicate rows — semantics are last-write-wins
     mdf.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
@@ -1965,7 +1945,9 @@ def read_metadata(spark: SparkSession, path: str) -> dict[str, str]:
     Reserved ``parquetjs_spark.*`` keys are engine-internal and
     stripped (see read_sha_format)."""
     try:
-        rows = spark.read.parquet(f"{path}/meta").collect()
+        rows = spark.read.schema("key string, value string").parquet(
+            f"{path}/meta"
+        ).collect()
     except Exception:
         return {}
     return {

@@ -2,9 +2,10 @@
 (/root/reference/lib/writer.js:259-288: rows in -> encoded bytes out,
 back-pressure via the stream) re-expressed as Structured Streaming with
 ``foreachBatch``: each micro-batch runs the same vectorized encode stage
-and appends blobs+manifest; checkpointing gives exactly-once appends,
-which composes with the manifest anti-join resume (the stream IS the
-checkpointed writer the reference's Transform stream approximates).
+and appends through ``pipeline.write_encoded``; checkpointing gives
+exactly-once appends, which composes with the manifest anti-join resume
+(the stream IS the checkpointed writer the reference's Transform stream
+approximates).
 """
 
 from __future__ import annotations
@@ -25,8 +26,10 @@ def encode_stream(
 ) -> StreamingQuery:
     """Start a streaming encode of `stream_df` (a readStream DataFrame).
 
-    Each micro-batch: encode -> append blobs + manifest.  batch_id is
-    folded into part_id space by offsetting chunk_seq, so chunk identity
+    Each micro-batch: encode -> ``pipeline.write_encoded(mode="append")``,
+    which writes the batch's blobs once and appends the manifest read
+    back from just the files it added, so a batch costs O(batch).
+    batch_id is folded into chunk_seq space, so chunk identity
     (part_id, chunk_seq, column) stays unique across batches."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -38,31 +41,7 @@ def encode_stream(
             "chunk_seq",
             (F.lit(int(batch_id)) * F.lit(1 << 32) + F.col("chunk_seq")).cast("long"),
         )
-        # one encode per batch: without the persist, the blobs write AND
-        # the manifest projection each re-ran the whole encode stage
-        # (2x the batch's encode CPU + source read, every micro-batch).
-        # Scoped to this batch and released before return — not a
-        # library-owned cache.
-        blobs = blobs.persist()
-        try:
-            blobs.write.mode("append").parquet(f"{output_path}/blobs")
-            blobs.select(*pipeline.MANIFEST_COLUMNS).write.mode("append").parquet(
-                f"{output_path}/manifest"
-            )
-        finally:
-            blobs.unpersist()
-        # every batch mutates the manifest; a driver-side metadata
-        # cache entry from a mid-stream read would go stale otherwise
-        pipeline._META_CACHE.pop(output_path, None)
-        # sha-format marker, same as write_encoded: without it a
-        # streamed table would read as "old hash format" to verify.
-        # Overwritten every batch (one tiny file) so a checkpoint
-        # restart that skips batch 0 still lands it.
-        spark = batch_df.sparkSession
-        spark.createDataFrame(
-            [(pipeline._SHA_FORMAT_KEY, str(pipeline.SHA_FORMAT_VERSION))],
-            "key string, value string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{output_path}/meta")
+        pipeline.write_encoded(blobs, output_path, mode="append")
 
     writer = (
         stream_df.writeStream.foreachBatch(process_batch)

@@ -3,6 +3,7 @@ pins of the chunk wire."""
 
 import datetime as dt
 import hashlib
+import struct
 from decimal import Decimal
 
 import numpy as np
@@ -10,7 +11,7 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
-from parquetjs_spark import arrow_chunk
+from parquetjs_spark import arrow_chunk, chunk
 from parquetjs_spark.codecs import DICT_RLE, FSST, PLAIN
 
 
@@ -280,6 +281,49 @@ def test_truncated_header_is_a_clean_error():
         assert not arrow_chunk.verify_arrow(blob[:cut], stats["sha256"])
 
 
+def test_header_disagreeing_with_blob_is_a_clean_error():
+    """The header must describe the blob it heads.  An inflated
+    values_len used to be cut back by the section slice, so the blob
+    still decoded and verified ok."""
+    arr, dtype, codec = GOLDEN_INPUTS["string_nulls_plain"]()
+    blob, stats = arrow_chunk.encode_arrow_column(
+        arr, dtype, codec=codec, compression="UNCOMPRESSED"
+    )
+
+    def patched(fmt, offset, value):
+        out = bytearray(blob)
+        struct.pack_into(fmt, out, offset, value)
+        return bytes(out)
+
+    values_len = struct.unpack_from("<I", blob, 20)[0]
+    n = struct.unpack_from("<I", blob, 8)[0]
+    for bad, reason in (
+        (patched("<I", 20, values_len + 7), "section lengths"),
+        (blob + b"\0", "section lengths"),
+        (patched("<I", 12, n + 1), "n_nulls"),
+        (patched("B", 4, 255), "unknown"),  # dtype id
+        (patched("B", 5, 255), "unknown"),  # codec id
+        (patched("B", 6, 255), "unknown"),  # compression id
+    ):
+        assert not arrow_chunk.verify_arrow(bad, stats["sha256"]), reason
+        with pytest.raises(ValueError, match=reason):
+            arrow_chunk.decode_arrow_column(bad)
+
+    # a nested list embeds a whole inner blob: it too heads exactly its
+    # own bytes (the outer values section ends where the inner blob does)
+    arr, dtype, codec = GOLDEN_INPUTS["list_list_string"]()
+    blob, _ = arrow_chunk.encode_arrow_column(
+        arr, dtype, codec=codec, compression="UNCOMPRESSED"
+    )
+    mv = memoryview(blob)
+    levels_len = chunk.parse_header(mv)[6]
+    values = mv[24 + levels_len :]
+    pos = 4 + int.from_bytes(values[:4], "little")
+    inner = values[pos + 4 :]
+    assert len(inner) == int.from_bytes(values[pos : pos + 4], "little")
+    assert chunk.parse_header(inner)[0] == "list_string"
+
+
 def test_sliced_arrow_input():
     base = pa.array(["padpad"] * 10 + ["v%d" % i for i in range(500)])
     sliced = base.slice(10, 400)
@@ -384,7 +428,7 @@ def test_int64_extremes_and_float_specials_roundtrip():
 
     import pyarrow as pa
 
-    from parquetjs_spark import arrow_chunk
+    from parquetjs_spark import arrow_chunk, chunk
 
     for vals in (
         [-2**63, 2**63 - 1, 0, None, 42],

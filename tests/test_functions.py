@@ -103,6 +103,20 @@ def test_no_per_value_python_hash_left():
     assert "for b in s.encode" not in src
 
 
+def test_list_i64_parts_rejects_null_row():
+    """A null list row has no length: it must fail loudly, not yield
+    an undefined int64 length that shifts every later row's slice."""
+    import pyarrow as pa
+
+    ok = pa.array([[1, 2], [], [3]], type=pa.list_(pa.int64()))
+    lens, flat = dedup._list_i64_parts(ok)
+    assert lens.tolist() == [2, 0, 1] and flat.tolist() == [1, 2, 3]
+    with pytest.raises(ValueError, match="null list row"):
+        dedup._list_i64_parts(
+            pa.array([[1, 2], None, [3]], type=pa.list_(pa.int64()))
+        )
+
+
 def test_embedding_near_dup_cap(spark):
     rows = [(i, [1.0, 0.0, 0.0, 0.0], 0) for i in range(50)]
     df = spark.createDataFrame(

@@ -542,6 +542,37 @@ def test_write_encoded_partitioned_by_column(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.parametrize("partition_by_column", [False, True])
+def test_manifest_is_blob_table_without_data(
+    spark, tmp_path, assert_manifest_is_blobs, partition_by_column
+):
+    """write_encoded encodes once: the manifest is read back from the
+    blob files it wrote, never produced by a second encode."""
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
+    out = str(tmp_path / "enc")
+    pipeline.write_encoded(
+        pipeline.encode_columns(df.repartition(3), chunk_rows=200), out,
+        partition_by_column=partition_by_column,
+    )
+    assert assert_manifest_is_blobs(out) > 6
+
+
+def test_append_manifest_reads_back_only_the_added_files(
+    spark, tmp_path, assert_manifest_is_blobs
+):
+    """An append adds manifest rows for its own blob files only: the
+    first write's rows are neither re-read nor duplicated."""
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
+    out = str(tmp_path / "enc")
+    pipeline.write_encoded(pipeline.encode_columns(df, chunk_rows=200), out)
+    first = assert_manifest_is_blobs(out)
+    pipeline.write_encoded(
+        pipeline.encode_columns(df.limit(300), chunk_rows=200), out,
+        mode="append",
+    )
+    assert assert_manifest_is_blobs(out) == first + 4
+
+
 def test_time_roundtrip_spark(spark):
     """Spark 4 TimeType end-to-end through the mapInArrow pipeline
     (TIME is config-gated in this Spark build)."""

@@ -40,6 +40,29 @@ def test_stream_encode_roundtrip(tmp_path, spark):
     )
 
 
+def test_stream_manifest_is_blob_table_without_data(
+    tmp_path, spark, assert_manifest_is_blobs
+):
+    """Each micro-batch appends through write_encoded: after two
+    batches on a growing input directory the manifest still equals the
+    blob table without data, with no row duplicated or missing."""
+    src_dir, out_dir, ck_dir = (str(tmp_path / d) for d in ("in", "out", "ck"))
+    df = load_table(spark, SF, "events").select("event_type", "value")
+    halves = df.randomSplit([0.5, 0.5], seed=7)
+    rows = 0
+    for half in halves:
+        half.write.mode("append").parquet(src_dir)
+        rows += half.count()
+        stream = spark.readStream.schema(df.schema).parquet(src_dir)
+        encode_stream(
+            stream, out_dir, ck_dir, chunk_rows=256, trigger_once=True
+        ).awaitTermination(120)
+        assert assert_manifest_is_blobs(out_dir) > 0
+    manifest = pipeline.read_manifest(spark, out_dir)
+    got = manifest.where(F.col("column") == "value").agg(F.sum("n")).first()[0]
+    assert got == rows
+
+
 def test_stream_decode_follows_encode(tmp_path, spark):
     """encode_stream -> decode_stream pipe: chunks appended by the
     encode stream are decoded exactly once to value rows."""
