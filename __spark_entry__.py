@@ -351,8 +351,8 @@ def _q_scan_table_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     range AND equality on different columns intersect their kept
     row-group sets via metadata-only semi-joins — zone maps for the
     range, zone maps + blooms for the equality — before one decode +
-    exact residuals.  (Upgraded from the single-range scan_table row;
-    scan_table itself stays pytest-covered.)"""
+    exact residuals.  (A single-range scan is the same call with one
+    range and no equality.)"""
     from parquetjs_spark import pipeline
 
     df = (

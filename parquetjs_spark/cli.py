@@ -214,35 +214,19 @@ def cmd_decode_table(args) -> int:
 
 
 def cmd_scan(args) -> int:
-    from pyspark.sql import functions as F
-
     from parquetjs_spark import pipeline
 
     spark = _spark(args)
     blobs = pipeline.read_encoded(spark, args.input)
-    lo = args.min if args.min is not None else None
-    hi = args.max if args.max is not None else None
-    # dtype from the manifest (pure-metadata scan), same as cmd_decode
-    drow = (
-        pipeline.read_manifest(spark, args.input)
-        .where(F.col("column") == args.column)
-        .select("dtype")
-        .limit(1)
-        .collect()
-    )
-    if not drow:
-        print(f"error: no chunks for column {args.column}", file=sys.stderr)
-        return 2
-    dtype = drow[0]["dtype"]
+    # dtype and literals resolve exactly as in `where`: a bad literal
+    # exits 2 before any scan job runs
+    dtype = _manifest_dtypes(spark, pipeline, args.input)(args.column)
     if args.eq is not None:
-        # point lookup: bloom + zone-map pruned (scan_eq); int columns
-        # take int literals, date/timestamp take ISO strings (scan_eq
-        # normalizes), everything else probes as strings
-        val = args.eq
-        if dtype in ("int64", "int32"):
-            val = int(val)
+        val = _typed_literal(dtype, args.eq)
         out = pipeline.scan_eq(blobs, args.column, val, dtype=dtype)
     else:
+        lo = None if args.min is None else _typed_literal(dtype, args.min)
+        hi = None if args.max is None else _typed_literal(dtype, args.max)
         out = pipeline.scan_column(blobs, args.column, lo=lo, hi=hi, dtype=dtype)
     out.write.mode("overwrite").parquet(args.output)
     print(json.dumps({"rows": spark.read.parquet(args.output).count()}))
@@ -253,7 +237,10 @@ def _typed_literal(dtype: str, raw: str):
     """CLI string literal -> typed value for the scan predicates, with
     validation: a bound that cannot represent the column dtype errors
     out (exit 2) instead of casting to null and silently matching
-    nothing (round-4 ADVICE)."""
+    nothing (round-4 ADVICE).  Temporal and decimal strings go through
+    the pipeline's one literal coercion."""
+    from parquetjs_spark import pipeline
+
     try:
         if dtype in ("int64", "int32"):
             return int(raw)
@@ -263,26 +250,13 @@ def _typed_literal(dtype: str, raw: str):
             if raw.lower() in ("true", "false", "1", "0"):
                 return raw.lower() in ("true", "1")
             raise ValueError(raw)
-        if dtype == "date" or dtype.startswith("timestamp"):
-            import datetime as _dt
-
-            # ISO parse check only; the scan normalizes the string.
-            # Accept a trailing 'Z' on any interpreter: Python < 3.11
-            # fromisoformat rejects it even though it's the most common
-            # UTC suffix in the wild
-            if dtype == "date":
-                _dt.date.fromisoformat(raw)
-            else:
-                probe = raw[:-1] + "+00:00" if raw.endswith(("Z", "z")) else raw
-                _dt.datetime.fromisoformat(probe)
-            return raw
+        return pipeline._coerce_literal(raw, dtype)
     except ValueError:
         print(
             f"error: literal {raw!r} does not parse as {dtype}",
             file=sys.stderr,
         )
         raise SystemExit(2)
-    return raw
 
 
 def _parse_predicates(args, dtype_of):

@@ -736,22 +736,8 @@ def decode_table(
     chunks never leave the scan (Catalyst pushes the IN filter down to
     the blob parquet).
     """
-    if "col_idx" not in blob_df.columns:
-        # blob table written before col_idx existed: fall back to
-        # lexicographic column order (decode still bit-identical)
-        blob_df = blob_df.withColumn("col_idx", F.lit(None).cast("int"))
     if meta_rows is None:
-        meta = _cached_meta(blob_df)
-        if meta is not None:
-            # manifest answered — zero jobs on the blob table
-            meta_rows = [
-                {"column": c, "col_idx": ci, "dtype": dt}
-                for c, (ci, dt) in meta.items()
-            ]
-        else:
-            meta_rows = (
-                blob_df.select("column", "col_idx", "dtype").distinct().collect()
-            )  # tiny: one row per column, never proportional to data
+        meta_rows = _meta_rows_for(blob_df)
     if not meta_rows:
         raise ValueError("blob table has no chunks")
     meta_rows = sorted(
@@ -1000,37 +986,166 @@ def _zonemap_filter(rows: DataFrame, styp: T.DataType, lo=None, hi=None) -> Data
     return rows
 
 
-def scan_column(
+def _bloom_probe_filter(pred_rows: DataFrame, dtype: str, value) -> DataFrame:
+    """Keep chunks whose bloom COULD contain ``value`` (a typed literal
+    from _predicate_specs): every probed bit must be set (null bloom
+    conservatively kept).  Probing hashes the LOGICAL value exactly as
+    the encoder did — days / micros for date / timestamp; bit positions
+    derive from each chunk's own filter size (h & (64*len(bloom) - 1))
+    so different-sized blooms mix freely.  Pure-JVM metadata filter —
+    element_at + bitwiseAND — before any blob bytes move."""
+    import datetime as _dt
+
+    from .codecs import bloom as bloomlib
+
+    if dtype not in bloomlib.BLOOMABLE:
+        return pred_rows
+    if dtype == "date":
+        value = (value - _dt.date(1970, 1, 1)).days
+    elif dtype == "timestamp_us":
+        value = (value - _dt.datetime(1970, 1, 1)) // _dt.timedelta(microseconds=1)
+    for hj in bloomlib.probe_hashes(value, dtype):
+        # SQL expr because pyspark's shiftleft() rejects a Column
+        # shift amount; hj is a driver-computed literal
+        pos = f"({hj}L & (size(bloom) * 64 - 1))"
+        pred_rows = pred_rows.where(
+            F.expr(
+                "bloom IS NULL OR ("
+                f"element_at(bloom, int(shiftright({pos}, 6)) + 1) "
+                f"& shiftleft(1L, int({pos} & 63))"
+                ") != 0"
+            )
+        )
+    return pred_rows
+
+
+def _coerce_literal(value, dtype: str):
+    """The one literal coercion (predicates, SET values, CLI checks):
+    for date/timestamp columns, ISO strings (a trailing 'Z' included,
+    which Python < 3.11 fromisoformat rejects), native objects and the
+    raw logical ints (days / micros) become python date/datetime;
+    tz-aware values normalize to UTC wall-clock, so the bloom probe
+    hashes the micros the encoder stored and the residual compares the
+    same instant.  Decimal strings and floats become Decimal.  Anything
+    else passes through; a malformed string raises ValueError."""
+    import datetime as _dt
+    import decimal
+
+    epoch = _dt.datetime(1970, 1, 1)
+    if dtype == "date":
+        if isinstance(value, str):
+            value = _dt.date.fromisoformat(value)
+        elif isinstance(value, _dt.datetime):
+            value = value.date()
+        elif isinstance(value, int):
+            value = epoch.date() + _dt.timedelta(days=value)
+    elif dtype == "timestamp_us":
+        if isinstance(value, str):
+            if value.endswith(("Z", "z")):
+                value = value[:-1] + "+00:00"
+            value = _dt.datetime.fromisoformat(value)
+        elif isinstance(value, int):
+            value = epoch + _dt.timedelta(microseconds=value)
+        elif not isinstance(value, _dt.datetime) and isinstance(value, _dt.date):
+            value = _dt.datetime.combine(value, _dt.time())
+        if isinstance(value, _dt.datetime) and value.tzinfo is not None:
+            value = value.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    elif dtype.startswith("decimal(") and isinstance(value, (str, float)):
+        try:
+            value = decimal.Decimal(str(value))
+        except decimal.InvalidOperation:
+            raise ValueError(f"not a decimal: {value!r}") from None
+    return value
+
+
+def _typed_value(column: str, value, dtype: str):
+    """``value`` coerced and converted to the column's Arrow type, as
+    the python object Spark literals and the DML mask both take.  A
+    literal the type cannot hold (or an int column literal that would
+    truncate) raises ValueError naming the column, on the driver."""
+    try:
+        coerced = _coerce_literal(value, dtype)
+        typed = pa.scalar(coerced, type=_pa_type_of(dtype)).as_py()
+        if dtype in ("int64", "int32") and typed != coerced:
+            raise ValueError("not an integer")
+    except (ValueError, TypeError, OverflowError) as e:
+        raise ValueError(
+            f"literal {value!r} for column {column!r} does not convert to "
+            f"{dtype}: {e}"
+        ) from None
+    return typed
+
+
+def _predicate_specs(
     blob_df: DataFrame,
-    column: str,
-    lo=None,
-    hi=None,
+    ranges: dict[str, tuple] | None = None,
+    eqs: dict | None = None,
     dtype: str | None = None,
-    out_name: str | None = None,
-) -> DataFrame:
-    """Stat-pruned range scan: zone maps over the manifest's per-chunk
-    min/max (the Statistics struct Parquet defines,
-    /root/reference/parquet.thrift:201-214 — declared by the reference,
-    never written by its writer).  Chunks whose [stat_min, stat_max]
-    cannot intersect [lo, hi] are eliminated by a Catalyst filter on the
-    blob table BEFORE any decode work or blob bytes move; a residual row
-    filter then exacts the predicate.  At 100 TB this is the difference
-    between decoding every chunk and touching only the ones a
-    range-predicate query needs (clustered/sorted data prunes hardest —
-    same math as Parquet row-group skipping)."""
-    out_name = out_name or column
-    blob_df = _ensure_stat_cols(blob_df)
-    rows = blob_df.where(F.col("column") == column)
-    dtype = _resolve_dtype(rows, column, dtype, meta_src=blob_df)
+) -> list[tuple]:
+    """The one predicate spec: the ``ranges`` (column -> (lo, hi),
+    either bound may be None) / ``eqs`` (column -> value, None = IS
+    NULL) conjunction as validated (column, kind, typed value, dtype)
+    tuples, kind in range/eq/isnull (a range's value is (lo, hi)).
+    Each dtype resolves once (``dtype`` is the single-column callers'
+    hint) and each literal converts once, so a bad literal fails here
+    before any Spark job runs."""
+    ranges = dict(ranges or {})
+    eqs = dict(eqs or {})
+    if not ranges and not eqs:
+        raise ValueError("need at least one predicate")
+    overlap = set(ranges) & set(eqs)
+    if overlap:
+        raise ValueError(f"column in both ranges and eqs: {sorted(overlap)}")
+    preds = [(c, "range", tuple(b)) for c, b in ranges.items()] + [
+        (c, "isnull" if v is None else "eq", v) for c, v in eqs.items()
+    ]
+    specs = []
+    for col, kind, value in preds:
+        rows = blob_df.where(F.col("column") == col)
+        dt = _resolve_dtype(rows, col, dtype, meta_src=blob_df)
+        if kind == "range":
+            value = tuple(
+                None if v is None else _typed_value(col, v, dt) for v in value
+            )
+        elif kind == "eq":
+            value = _typed_value(col, value, dt)
+        specs.append((col, kind, value, dt))
+    return specs
+
+
+def _kept_chunks(blob_df: DataFrame, spec: tuple) -> DataFrame:
+    """The one chunk rule: the chunk rows of ``spec``'s column that may
+    hold a matching row — range -> zone maps; eq -> zone maps + bloom;
+    isnull -> the n_nulls stat (the null-count slice of Parquet's
+    Statistics struct, /root/reference/parquet.thrift:201-214, which
+    the reference declares but never writes).  Metadata-only Catalyst
+    filters; chunks without stats are conservatively kept."""
+    column, kind, value, dtype = spec
+    rows = _ensure_stat_cols(blob_df, bloom=True).where(F.col("column") == column)
+    if kind == "isnull":
+        return rows.where(F.col("n_nulls").isNull() | (F.col("n_nulls") > 0))
+    lo, hi = value if kind == "range" else (value, value)
+    rows = _zonemap_filter(rows, spark_type_of(dtype), lo, hi)
+    return _bloom_probe_filter(rows, dtype, value) if kind == "eq" else rows
+
+
+def _residual(spec: tuple, name: str | None = None):
+    """The one residual: ``spec`` as the exact row predicate over the
+    decoded column ``name`` (default: the spec's column)."""
+    column, kind, value, dtype = spec
+    vcol = F.col(f"`{name or column}`")
+    if kind == "isnull":
+        return vcol.isNull()
     styp = spark_type_of(dtype)
-    rows = _zonemap_filter(rows, styp, lo, hi)
-    out = decode_column(rows, column, out_name=out_name, dtype=dtype)
-    vcol = F.col(f"`{out_name}`")
+    if kind == "eq":
+        return vcol == F.lit(value).cast(styp)
+    lo, hi = value
+    pred = F.lit(True)
     if lo is not None:
-        out = out.where(vcol >= F.lit(lo).cast(styp))
+        pred = pred & (vcol >= F.lit(lo).cast(styp))
     if hi is not None:
-        out = out.where(vcol <= F.lit(hi).cast(styp))
-    return out
+        pred = pred & (vcol <= F.lit(hi).cast(styp))
+    return pred
 
 
 def _meta_rows_for(blob_df: DataFrame) -> list:
@@ -1050,141 +1165,66 @@ def _meta_rows_for(blob_df: DataFrame) -> list:
     return blob_df.select("column", "col_idx", "dtype").distinct().collect()
 
 
-def _keepset_join(
-    blob_df: DataFrame, keep: DataFrame, max_broadcast_groups: int | None
+_ROW_GROUP = ["part_id", "chunk_seq"]
+
+# a keep-set of at most this many row groups collects to the driver and
+# joins as a broadcast local relation: the per-predicate semi-join DAG
+# runs exactly once and no blob bytes shuffle.  A larger one (an
+# unselective predicate over a huge table) stays a plain join that AQE
+# plans — broadcasting ~all row groups could OOM the driver.
+_KEEPSET_COLLECT_ROWS = 100_000
+
+
+def _predicate_keepset(blob_df: DataFrame, specs: list) -> DataFrame:
+    """The one keep-set join side for scans and DML: the (part_id,
+    chunk_seq) row groups that every spec's chunk rule keeps
+    (successive metadata-only semi-joins, manifest-sized), taken to the
+    driver as one Arrow batch when it fits and broadcast, else left as
+    the lazy keep-set.  Callers semi-join (scan, DML rewrite side) or
+    anti-join (DML pass-through side) the blob table against it."""
+    keep = None
+    for spec in specs:
+        ks = _kept_chunks(blob_df, spec).select(*_ROW_GROUP).distinct()
+        keep = ks if keep is None else keep.join(ks, on=_ROW_GROUP, how="left_semi")
+    probe = keep.limit(_KEEPSET_COLLECT_ROWS + 1).toArrow()
+    if probe.num_rows <= _KEEPSET_COLLECT_ROWS:
+        return F.broadcast(blob_df.sparkSession.createDataFrame(probe))
+    return keep
+
+
+def _scan_one(
+    blob_df: DataFrame, spec: tuple, out_name: str | None = None
 ) -> DataFrame:
-    """Semi-join the blob table against the kept (part_id, chunk_seq)
-    set.  Selective predicates keep a tiny set — broadcast it.  An
-    UNSELECTIVE predicate over 100 TB keeps ~all row groups (~25 M
-    pairs, hundreds of MB): broadcasting that would OOM the driver, so
-    above the threshold fall back to a plain semi-join and let AQE pick
-    the strategy at runtime.  Counting the keep-set is one job over the
-    COLUMN-PRUNED blob scan (ids + stats + bloom only — Parquet never
-    reads the data column for it), i.e. manifest-sized bytes.  The
-    guaranteed-broadcast selective path matters at scale: an AQE-decided
-    shuffle join would shuffle-write the blob side once before the
-    runtime broadcast conversion kicks in.  ``None`` skips the guard
-    (and its count job) and always broadcasts."""
-    if max_broadcast_groups is not None:
-        n_keep = keep.count()
-        if n_keep > max_broadcast_groups:
-            return blob_df.join(
-                keep, on=["part_id", "chunk_seq"], how="left_semi"
-            )
-    return blob_df.join(
-        F.broadcast(keep), on=["part_id", "chunk_seq"], how="left_semi"
+    """Decode only the kept chunks of the predicate column, then apply
+    the residual — the single-column scan behind scan_column and
+    scan_eq(columns=None)."""
+    column, _, _, dtype = spec
+    out = decode_column(
+        _kept_chunks(blob_df, spec), column, out_name=out_name, dtype=dtype
     )
+    return out.where(_residual(spec, out_name))
 
 
-def scan_table(
+def scan_column(
     blob_df: DataFrame,
-    predicate_column: str,
+    column: str,
     lo=None,
     hi=None,
-    columns: list[str] | None = None,
-    pred_dtype: str | None = None,
-    max_broadcast_groups: int | None = 2_000_000,
+    dtype: str | None = None,
+    out_name: str | None = None,
 ) -> DataFrame:
-    """Row-group-pruned table scan: zone maps on ``predicate_column``
-    select the (part_id, chunk_seq) row groups that can satisfy
-    lo <= value <= hi; only those groups' chunks are decoded
-    (decode_table) and the residual predicate filters rows.  The
-    pruning join is a broadcast semi-join on row-group identity when
-    the keep-set is small (the common, selective case), falling back to
-    a shuffle semi-join above ``max_broadcast_groups`` — see
-    _keepset_join.  Pass ``max_broadcast_groups=None`` to skip the
-    guard count and always broadcast (callers that know selectivity)."""
-    blob_df = _ensure_stat_cols(blob_df)
-    pred_rows = blob_df.where(F.col("column") == predicate_column)
-    pred_dtype = _resolve_dtype(
-        pred_rows, predicate_column, pred_dtype, meta_src=blob_df
-    )
-    styp = spark_type_of(pred_dtype)
-    pred_rows = _zonemap_filter(pred_rows, styp, lo, hi)
-    keep = pred_rows.select("part_id", "chunk_seq").distinct()
-    pruned = _keepset_join(blob_df, keep, max_broadcast_groups)
-    want = columns
-    if want is not None and predicate_column not in want:
-        want = list(want) + [predicate_column]  # needed for the residual
-    meta_rows = _meta_rows_for(blob_df)
-    out = decode_table(pruned, want, meta_rows=meta_rows)
-    vcol = F.col(f"`{predicate_column}`")
-    if lo is not None:
-        out = out.where(vcol >= F.lit(lo).cast(styp))
-    if hi is not None:
-        out = out.where(vcol <= F.lit(hi).cast(styp))
-    if want is not columns and columns is not None:
-        out = out.select(*[F.col(f"`{c}`") for c in columns])
-    return out
-
-
-def _normalize_eq_literal(dtype: str, value):
-    """Normalize date/timestamp equality literals BOTH ways: the Spark
-    predicate needs a typed literal (Spark forbids INT -> DATE/TIMESTAMP
-    casts) while the bloom probe needs the logical int the encoder
-    hashed (days / micros).  Accepts native objects, ISO strings, or the
-    raw logical ints; tz-aware datetimes (incl. ISO strings with an
-    offset) normalize to UTC wall-clock so the probe hashes the SAME
-    micros the residual predicate compares.  Returns (value, probe_val)."""
-    import datetime as _dt
-
-    probe_val = value
-    if dtype == "date":
-        if isinstance(value, str):
-            value = _dt.date.fromisoformat(value)
-        if isinstance(value, _dt.datetime):
-            value = value.date()
-        if isinstance(value, _dt.date):
-            probe_val = (value - _dt.date(1970, 1, 1)).days
-        else:
-            probe_val = int(value)
-            value = _dt.date(1970, 1, 1) + _dt.timedelta(days=probe_val)
-    elif dtype == "timestamp_us":
-        if isinstance(value, str):
-            # Python < 3.11 fromisoformat rejects a trailing 'Z'
-            if value.endswith(("Z", "z")):
-                value = value[:-1] + "+00:00"
-            value = _dt.datetime.fromisoformat(value)
-        if isinstance(value, _dt.datetime):
-            if value.tzinfo is not None:
-                value = value.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            probe_val = (
-                value - _dt.datetime(1970, 1, 1)
-            ) // _dt.timedelta(microseconds=1)
-        else:
-            probe_val = int(value)
-            value = _dt.datetime(1970, 1, 1) + _dt.timedelta(
-                microseconds=probe_val
-            )
-    return value, probe_val
-
-
-def _bloom_probe_filter(pred_rows: DataFrame, dtype: str, probe_val) -> DataFrame:
-    """Keep chunks whose bloom COULD contain probe_val: every probed bit
-    must be set (null bloom conservatively kept).  Probing hashes the
-    LOGICAL value exactly as the encoder did; bit positions derive from
-    each chunk's own filter size (h & (64*len(bloom) - 1)) so
-    different-sized blooms mix freely.  Pure-JVM metadata filter —
-    element_at + bitwiseAND — before any blob bytes move."""
-    from .codecs import bloom as bloomlib
-
-    if dtype not in bloomlib.BLOOMABLE or not isinstance(
-        probe_val, (int, str, bytes)
-    ):
-        return pred_rows
-    for hj in bloomlib.probe_hashes(probe_val, dtype):
-        # SQL expr because pyspark's shiftleft() rejects a Column
-        # shift amount; hj is a driver-computed literal
-        pos = f"({hj}L & (size(bloom) * 64 - 1))"
-        pred_rows = pred_rows.where(
-            F.expr(
-                "bloom IS NULL OR ("
-                f"element_at(bloom, int(shiftright({pos}, 6)) + 1) "
-                f"& shiftleft(1L, int({pos} & 63))"
-                ") != 0"
-            )
-        )
-    return pred_rows
+    """Stat-pruned range scan: zone maps over the manifest's per-chunk
+    min/max (the Statistics struct Parquet defines,
+    /root/reference/parquet.thrift:201-214 — declared by the reference,
+    never written by its writer).  Chunks whose [stat_min, stat_max]
+    cannot intersect [lo, hi] are eliminated by a Catalyst filter on the
+    blob table BEFORE any decode work or blob bytes move; a residual row
+    filter then exacts the predicate.  At 100 TB this is the difference
+    between decoding every chunk and touching only the ones a
+    range-predicate query needs (clustered/sorted data prunes hardest —
+    same math as Parquet row-group skipping)."""
+    (spec,) = _predicate_specs(blob_df, ranges={column: (lo, hi)}, dtype=dtype)
+    return _scan_one(blob_df, spec, out_name)
 
 
 def scan_eq(
@@ -1193,7 +1233,6 @@ def scan_eq(
     value,
     columns: list[str] | None = None,
     dtype: str | None = None,
-    max_broadcast_groups: int | None = 2_000_000,
 ) -> DataFrame:
     """Bloom + zone-map pruned equality scan (point lookup).
 
@@ -1206,102 +1245,18 @@ def scan_eq(
     clustered; the residual filter exacts the predicate.  On unsorted
     data this is the pruning that zone maps cannot give (a random chunk
     spans nearly the full key range, but its bloom rejects all but
-    ~2^-10 of foreign point probes per hash).
+    ~2^-10 of foreign point probes per hash).  ``value=None`` is an
+    IS NULL lookup pruned by the n_nulls stat.
 
-    ``columns=None`` decodes just the predicate column; pass a list to
-    reassemble whole row groups (scan_table-style broadcast semi-join).
-    Chunks without a bloom (old tables, unbloomable dtypes) stay
+    ``columns=None`` decodes just the predicate column (``dtype`` skips
+    its resolution); a list reassembles whole row groups and is exactly
+    ``scan_table_where(eqs={column: value}, columns=columns)``.  Chunks
+    without a bloom (old tables, unbloomable dtypes) stay
     conservatively unpruned."""
-    blob_df = _ensure_stat_cols(blob_df, bloom=True)
-    pred_rows = blob_df.where(F.col("column") == column)
-    dtype = _resolve_dtype(pred_rows, column, dtype, meta_src=blob_df)
-    styp = spark_type_of(dtype)
-    if value is None:
-        # IS NULL lookup: the manifest's n_nulls stat prunes every
-        # all-present chunk before any blob moves (the null-count slice
-        # of Parquet's Statistics struct, realized)
-        pred_rows = pred_rows.where(
-            F.col("n_nulls").isNull() | (F.col("n_nulls") > 0)
-        )
-        residual = F.col(f"`{column}`").isNull()
-    else:
-        value, probe_val = _normalize_eq_literal(dtype, value)
-        vlit = F.lit(value).cast(styp)
-        # zone maps: min <= value <= max (null stats conservatively kept)
-        pred_rows = _zonemap_filter(pred_rows, styp, lo=value, hi=value)
-        pred_rows = _bloom_probe_filter(pred_rows, dtype, probe_val)
-        residual = F.col(f"`{column}`") == vlit
-    if columns is None:
-        out = decode_column(pred_rows, column, dtype=dtype)
-        return out.where(residual)
-    keep = pred_rows.select("part_id", "chunk_seq").distinct()
-    want = list(columns) if column in columns else list(columns) + [column]
-    pruned = _keepset_join(blob_df, keep, max_broadcast_groups)
-    meta_rows = _meta_rows_for(blob_df)
-    out = decode_table(pruned, want, meta_rows=meta_rows).where(residual)
-    return out.select(*[F.col(f"`{c}`") for c in columns])
-
-
-def _predicate_keepset(
-    blob_df: DataFrame,
-    ranges: dict[str, tuple] | None,
-    eqs: dict | None,
-):
-    """Shared metadata walk behind scan_table_where and delete_where:
-    validates the predicate conjunction, intersects each predicate's
-    zone-map/bloom/n_nulls kept row groups (metadata-only semi-joins),
-    and returns (blob_df_with_stats, keep_df, specs) where specs is a
-    list of (column, kind, value, spark_type) residual predicates with
-    kind in ge/le/eq/isnull — callers apply them exactly, Spark-side or
-    NumPy-side."""
-    ranges = dict(ranges or {})
-    eqs = dict(eqs or {})
-    if not ranges and not eqs:
-        raise ValueError("need at least one predicate")
-    overlap = set(ranges) & set(eqs)
-    if overlap:
-        raise ValueError(f"column in both ranges and eqs: {sorted(overlap)}")
-    blob_df = _ensure_stat_cols(blob_df, bloom=True)
-    specs = []  # (column, kind, value, spark_type)
-    keep = None
-    for col, (lo, hi) in ranges.items():
-        rows = blob_df.where(F.col("column") == col)
-        dtype = _resolve_dtype(rows, col, None, meta_src=blob_df)
-        styp = spark_type_of(dtype)
-        # ISO-string temporal bounds coerce ONCE here, driver-side:
-        # Spark lit() and the DML numpy mask then see the same typed
-        # value (and a bad literal fails before any job starts)
-        lo = _coerce_temporal_value(lo, dtype) if lo is not None else None
-        hi = _coerce_temporal_value(hi, dtype) if hi is not None else None
-        rows = _zonemap_filter(rows, styp, lo, hi)
-        ks = rows.select("part_id", "chunk_seq").distinct()
-        keep = ks if keep is None else keep.join(
-            ks, on=["part_id", "chunk_seq"], how="left_semi"
-        )
-        if lo is not None:
-            specs.append((col, "ge", lo, styp))
-        if hi is not None:
-            specs.append((col, "le", hi, styp))
-    for col, value in eqs.items():
-        rows = blob_df.where(F.col("column") == col)
-        dtype = _resolve_dtype(rows, col, None, meta_src=blob_df)
-        styp = spark_type_of(dtype)
-        if value is None:
-            # IS NULL predicate: n_nulls stat prunes all-present chunks
-            rows = rows.where(
-                F.col("n_nulls").isNull() | (F.col("n_nulls") > 0)
-            )
-            specs.append((col, "isnull", None, styp))
-        else:
-            value, probe_val = _normalize_eq_literal(dtype, value)
-            rows = _zonemap_filter(rows, styp, lo=value, hi=value)
-            rows = _bloom_probe_filter(rows, dtype, probe_val)
-            specs.append((col, "eq", value, styp))
-        ks = rows.select("part_id", "chunk_seq").distinct()
-        keep = ks if keep is None else keep.join(
-            ks, on=["part_id", "chunk_seq"], how="left_semi"
-        )
-    return blob_df, keep, specs
+    if columns is not None:
+        return scan_table_where(blob_df, eqs={column: value}, columns=columns)
+    (spec,) = _predicate_specs(blob_df, eqs={column: value}, dtype=dtype)
+    return _scan_one(blob_df, spec)
 
 
 def scan_table_where(
@@ -1309,43 +1264,34 @@ def scan_table_where(
     ranges: dict[str, tuple] | None = None,
     eqs: dict | None = None,
     columns: list[str] | None = None,
-    max_broadcast_groups: int | None = 2_000_000,
 ) -> DataFrame:
     """Compound-predicate pruned scan — the ``WHERE a BETWEEN x AND y
     AND b = v AND ...`` shape a real user writes, pruned ONCE across all
     predicates instead of per-scan.
 
     ``ranges`` maps column -> (lo, hi) (either bound may be None);
-    ``eqs`` maps column -> value (zone maps + blooms).  The keep-set is
-    the INTERSECTION of each predicate's kept row groups — successive
-    metadata-only semi-joins, manifest-sized, evaluated before any blob
-    bytes move — then the surviving groups are decoded once and every
-    residual predicate is applied exactly.  Conjunction prunes
-    multiplicatively: at 100 TB a date range keeping 2% of groups and a
-    key bloom keeping 0.1% leaves ~0.002% of chunks to decode, which
-    neither scan_table nor scan_eq alone can reach."""
-    blob_df, keep, specs = _predicate_keepset(blob_df, ranges, eqs)
-    residuals = []  # (column, Column predicate)
-    for col, kind, value, styp in specs:
-        vcol = F.col(f"`{col}`")
-        if kind == "ge":
-            residuals.append((col, vcol >= F.lit(value).cast(styp)))
-        elif kind == "le":
-            residuals.append((col, vcol <= F.lit(value).cast(styp)))
-        elif kind == "eq":
-            residuals.append((col, vcol == F.lit(value).cast(styp)))
-        else:  # isnull
-            residuals.append((col, vcol.isNull()))
-    pruned = _keepset_join(blob_df, keep, max_broadcast_groups)
-    pred_cols = list(dict.fromkeys(c for c, _ in residuals))
+    ``eqs`` maps column -> value (zone maps + blooms; None = IS NULL).
+    A literal the column's type cannot hold raises ValueError before
+    any job runs.  The keep-set is the INTERSECTION of each predicate's
+    kept row groups — metadata-only semi-joins, manifest-sized — and a
+    selective one is collected once and broadcast (_predicate_keepset);
+    the surviving groups are decoded once and every residual predicate
+    is applied exactly.  Conjunction prunes multiplicatively: at 100 TB
+    a date range keeping 2% of groups and a key bloom keeping 0.1%
+    leaves ~0.002% of chunks to decode.  ``columns`` projects the
+    output (predicate columns are decoded for the residuals either
+    way)."""
+    specs = _predicate_specs(blob_df, ranges, eqs)
+    keep = _predicate_keepset(blob_df, specs)
+    pruned = blob_df.join(keep, on=_ROW_GROUP, how="left_semi")
     want = columns
     if want is not None:
+        pred_cols = dict.fromkeys(c for c, _, _, _ in specs)
         want = list(want) + [c for c in pred_cols if c not in want]
-    meta_rows = _meta_rows_for(blob_df)
-    out = decode_table(pruned, want, meta_rows=meta_rows)
-    for _, pred in residuals:
-        out = out.where(pred)
-    if columns is not None and want is not columns:
+    out = decode_table(pruned, want, meta_rows=_meta_rows_for(blob_df))
+    for spec in specs:
+        out = out.where(_residual(spec))
+    if columns is not None:
         out = out.select(*[F.col(f"`{c}`") for c in columns])
     return out
 
@@ -1356,165 +1302,81 @@ def scan_stats(
     eqs: dict | None = None,
 ) -> DataFrame:
     """Pruning observability: for each predicate, how many chunks the
-    zone maps / blooms keep vs total — the number that tells you whether
-    your layout is working (clustered data prunes ranges hard; blooms
-    prune point probes even on random arrival) BEFORE you pay for a
-    scan.  Pure metadata aggregation; returns one row per predicate
-    (column, kind, chunks_total, chunks_kept)."""
-    ranges = dict(ranges or {})
-    eqs = dict(eqs or {})
-    if not ranges and not eqs:
-        raise ValueError("scan_stats needs at least one predicate")
-    blob_df = _ensure_stat_cols(blob_df, bloom=True)
-    spark = blob_df.sparkSession
-    out_rows = []
-    for col, (lo, hi) in ranges.items():
-        rows = blob_df.where(F.col("column") == col)
-        dtype = _resolve_dtype(rows, col, None, meta_src=blob_df)
-        styp = spark_type_of(dtype)
-        total = rows.count()
-        kept = _zonemap_filter(rows, styp, lo, hi).count()
-        out_rows.append((col, "range", total, kept))
-    for col, value in eqs.items():
-        rows = blob_df.where(F.col("column") == col)
-        dtype = _resolve_dtype(rows, col, None, meta_src=blob_df)
-        styp = spark_type_of(dtype)
-        total = rows.count()
-        if value is None:
-            kept = rows.where(
-                F.col("n_nulls").isNull() | (F.col("n_nulls") > 0)
-            ).count()
-        else:
-            value, probe_val = _normalize_eq_literal(dtype, value)
-            pr = _zonemap_filter(rows, styp, lo=value, hi=value)
-            kept = _bloom_probe_filter(pr, dtype, probe_val).count()
-        out_rows.append((col, "eq", total, kept))
-    return spark.createDataFrame(
-        out_rows,
-        "column string, kind string, chunks_total long, chunks_kept long",
+    zone maps / blooms / n_nulls keep vs total — the number that tells
+    you whether your layout is working (clustered data prunes ranges
+    hard; blooms prune point probes even on random arrival) BEFORE you
+    pay for a scan.  Pure metadata counts through the same chunk rule
+    the scans use; returns one row per predicate (column, kind,
+    chunks_total, chunks_kept), kind "range" or "eq" (IS NULL included)."""
+    specs = _predicate_specs(blob_df, ranges, eqs)
+    total = [blob_df.where(F.col("column") == s[0]).count() for s in specs]
+    kept = [_kept_chunks(blob_df, s).count() for s in specs]
+    return blob_df.sparkSession.createDataFrame(
+        pa.table({
+            "column": [s[0] for s in specs],
+            "kind": ["range" if s[1] == "range" else "eq" for s in specs],
+            "chunks_total": pa.array(total, pa.int64()),
+            "chunks_kept": pa.array(kept, pa.int64()),
+        })
     )
 
 
-def _coerce_temporal_value(value, dtype: str):
-    """ISO-string literal -> python temporal for date/timestamp
-    columns (pa.scalar cannot convert str to date32/timestamp); other
-    dtypes/values pass through untouched."""
-    import datetime as _dt
+def _compare(nn: pa.Array, op: str, value) -> np.ndarray:
+    """One exact comparison of a null-free decoded array against a typed
+    literal, in the column's own Arrow type (ADVICE r6 high: the old
+    to_pandas() turned a NULLABLE int64 column into float64, so values
+    above 2^53 compared inexactly and DML mutated non-matching rows).
+    Float NaN is valid data and orders LARGEST, as in Spark/DuckDB:
+    NaN >= anything, anything <= NaN, NaN == only NaN."""
+    import pyarrow.compute as pc
 
-    if not isinstance(value, str):
-        return value
-    if dtype == "date":
-        return _dt.date.fromisoformat(value)
-    if dtype.startswith("timestamp"):
-        probe = value[:-1] + "+00:00" if value.endswith(("Z", "z")) else value
-        dt = _dt.datetime.fromisoformat(probe)
-        if dt.tzinfo is not None:
-            dt = dt.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return dt
-    return value
+    fn = {"ge": pc.greater_equal, "le": pc.less_equal, "eq": pc.equal}[op]
+    cmp = fn(nn, pa.scalar(value, type=nn.type)).fill_null(False)
+    mm = cmp.to_numpy(zero_copy_only=False).astype(bool)
+    if pa.types.is_floating(nn.type):
+        # IEEE comparisons made every NaN compare false — patch them to
+        # engine semantics
+        nans = pc.is_nan(nn).to_numpy(zero_copy_only=False)
+        vnan = value != value
+        if op == "ge":
+            mm[nans] = True
+        elif op == "le":
+            if vnan:
+                mm[:] = True
+            else:
+                mm[nans] = False
+        else:
+            mm[nans] = vnan
+    return mm
 
 
 def _match_mask(arrs: dict, specs: list, n: int) -> np.ndarray:
     """Exact residual-conjunction mask over decoded columns, matching
-    the Spark residual semantics scan_table_where applies:
-
-      * NULL never matches a comparison (only isnull) — validity comes
-        from the arrow bitmap, NOT pandas notna(), which would conflate
-        float NaN with NULL;
-      * float NaN is valid data and orders LARGEST (Spark/DuckDB
-        ordering): NaN >= anything, NaN == only NaN;
-      * temporal literals were already coerced driver-side
-        (_predicate_keepset / _coerce_temporal_value), so values here
-        are typed python objects, never raw ISO strings."""
-    import pyarrow.compute as pc
-
+    the Spark residual semantics of _residual: NULL never matches a
+    comparison (only isnull) — validity comes from the arrow bitmap,
+    NOT pandas notna(), which would conflate float NaN with NULL.
+    Literals are typed values from _predicate_specs, so the comparison
+    scalar always converts to the column type."""
     match = np.ones(n, dtype=bool)
-    for c, kind, value, styp in specs:
+    for c, kind, value, _ in specs:
         arr = arrs[c][0]
         valid = arr.is_valid().to_numpy(zero_copy_only=False)
-        m = np.zeros(n, dtype=bool)
         if kind == "isnull":
-            m = ~valid
+            match &= ~valid
+            continue
+        nn = arr.drop_null() if arr.null_count else arr
+        if kind == "range":
+            ops = (("ge", value[0]), ("le", value[1]))
         else:
-            # typed comparison on the arrow array itself (ADVICE r6
-            # high): the previous arr.to_pandas() converted a NULLABLE
-            # int64 column to float64, so values > 2^53 compared
-            # inexactly and delete_where/update_where mutated
-            # NON-matching rows.  pa.scalar(value, arr.type) keeps the
-            # comparison in the column's exact type, matching Spark's
-            # residual semantics bit for bit.
-            nn = arr.drop_null() if arr.null_count else arr
-            try:
-                scalar = pa.scalar(value, type=nn.type)
-            except (pa.ArrowInvalid, pa.ArrowTypeError):
-                scalar = pa.scalar(value)
-                nn = nn.cast(scalar.type)
-            if kind == "ge":
-                cmp = pc.greater_equal(nn, scalar)
-            elif kind == "le":
-                cmp = pc.less_equal(nn, scalar)
-            else:
-                cmp = pc.equal(nn, scalar)
-            mm = cmp.to_numpy(zero_copy_only=False)
-            # arrow comparisons yield null for NaN operands only when the
-            # values themselves are null — NaN compares are well-defined
-            # (false); fill any residual nulls as non-matching
-            if cmp.null_count:
-                mm = np.where(pc.is_valid(cmp).to_numpy(zero_copy_only=False), mm, False)
-            mm = mm.astype(bool)
-            if isinstance(styp, (T.FloatType, T.DoubleType)):
-                # Spark/DuckDB order NaN LARGEST; IEEE comparisons above
-                # made every NaN compare false — patch them to engine
-                # semantics (same special-casing as before, now applied
-                # to exact float NaN only)
-                nans = pc.is_nan(nn).to_numpy(zero_copy_only=False)
-                vnan = isinstance(value, float) and value != value
-                if kind == "ge":
-                    mm[nans] = True  # NaN >= anything (NaN largest)
-                elif kind == "le":
-                    if vnan:
-                        mm[:] = True  # anything <= NaN, incl. NaN
-                    else:
-                        mm[nans] = False
-                else:
-                    mm[nans] = vnan  # NaN == only NaN
-            m[valid] = mm
+            ops = (("eq", value),)
+        mm = np.ones(len(nn), dtype=bool)
+        for op, v in ops:
+            if v is not None:
+                mm &= _compare(nn, op, v)
+        m = np.zeros(n, dtype=bool)
+        m[valid] = mm
         match &= m
     return match
-
-
-# below this, a keep-set collects to the driver and re-broadcasts as a
-# LocalRelation (the per-predicate semi-join DAG then runs exactly
-# once); between this and max_broadcast_groups it stays a broadcast
-# JVM-side plan (DAG evaluated per join, but never shuffled)
-_KEEPSET_COLLECT_ROWS = 100_000
-
-
-def _split_by_keepset(
-    blob_df: DataFrame, keep: DataFrame, max_broadcast_groups: int | None
-):
-    """(untouched, affected) split of the blob table around the
-    metadata keep-set.  Same contract as _keepset_join:
-    ``max_broadcast_groups=None`` skips the guard and always
-    broadcasts.  Small keep-sets additionally collect to the driver so
-    the keep DAG is evaluated once total instead of once per join."""
-    on = ["part_id", "chunk_seq"]
-    if max_broadcast_groups is None:
-        kj = F.broadcast(keep)
-    else:
-        probe = keep.limit(_KEEPSET_COLLECT_ROWS + 1).collect()
-        if len(probe) <= _KEEPSET_COLLECT_ROWS:
-            kj = F.broadcast(
-                blob_df.sparkSession.createDataFrame(probe, keep.schema)
-            )
-        elif keep.count() <= max_broadcast_groups:
-            kj = F.broadcast(keep)
-        else:
-            kj = keep
-    return (
-        blob_df.join(kj, on=on, how="left_anti"),
-        blob_df.join(kj, on=on, how="left_semi"),
-    )
 
 
 def delete_where(
@@ -1523,7 +1385,6 @@ def delete_where(
     eqs: dict | None = None,
     codec: str = "auto",
     compression: str = "auto",
-    max_broadcast_groups: int | None = 2_000_000,
 ) -> DataFrame:
     """DELETE rows matching the predicate conjunction — merge-on-write
     DML over immutable chunks.
@@ -1536,13 +1397,18 @@ def delete_where(
     chunk_seq) row alignment survives for decode_table).  A group whose
     rows all match disappears entirely — consistently across columns.
     At 100 TB a selective predicate rewrites the same ~fraction of
-    chunks a scan would read, not the table."""
+    chunks a scan would read, not the table.  Predicates and literals
+    validate as in scan_table_where (ValueError before any job)."""
     have = {r["column"] for r in _meta_rows_for(blob_df)}
     missing = sorted((set(ranges or {}) | set(eqs or {})) - have)
     if missing:
         raise ValueError(f"delete_where: predicate column(s) {missing} not in table")
-    blob_df, keep, specs = _predicate_keepset(blob_df, ranges, eqs)
-    untouched, affected = _split_by_keepset(blob_df, keep, max_broadcast_groups)
+    # rewritten chunks carry stats + bloom: old tables gain the columns
+    blob_df = _ensure_stat_cols(blob_df, bloom=True)
+    specs = _predicate_specs(blob_df, ranges, eqs)
+    keep = _predicate_keepset(blob_df, specs)
+    untouched = blob_df.join(keep, on=_ROW_GROUP, how="left_anti")
+    affected = blob_df.join(keep, on=_ROW_GROUP, how="left_semi")
     out_schema = blob_df.schema
 
     import functools
@@ -1602,7 +1468,6 @@ def update_where(
     eqs: dict | None = None,
     codec: str = "auto",
     compression: str = "auto",
-    max_broadcast_groups: int | None = 2_000_000,
 ) -> DataFrame:
     """Merge-on-write UPDATE: ``SET col = literal`` (or NULL) on rows
     matching the predicate conjunction — the redaction/scrub shape a
@@ -1611,7 +1476,9 @@ def update_where(
     Cheaper than DELETE: row counts never change, so only the SET
     columns of possibly-affected row groups re-encode — every other
     column of every group, and every group the metadata walk proves
-    unaffected, passes through with its blob bytes untouched."""
+    unaffected, passes through with its blob bytes untouched.
+    Predicates, literals and SET values validate as in
+    scan_table_where (ValueError before any job)."""
     if not assignments:
         raise ValueError("update_where needs at least one assignment")
     meta_rows = _meta_rows_for(blob_df)
@@ -1621,18 +1488,21 @@ def update_where(
     )
     if missing:
         raise ValueError(f"update_where: column(s) {missing} not in table")
-    # temporal assignments from the CLI arrive as ISO strings: coerce
-    # eagerly (driver-side) so a bad literal fails here, not inside an
-    # executor mid-write
+    # SET values (ISO strings from the CLI included) convert on the
+    # driver, so a bad literal fails here, not in an executor mid-write
     dtype_of = {r["column"]: r["dtype"] for r in meta_rows}
     assignments = {
-        c: _coerce_temporal_value(v, dtype_of[c]) for c, v in assignments.items()
+        c: None if v is None else _typed_value(c, v, dtype_of[c])
+        for c, v in assignments.items()
     }
-    blob_df, keep, specs = _predicate_keepset(blob_df, ranges, eqs)
+    blob_df = _ensure_stat_cols(blob_df, bloom=True)
+    specs = _predicate_specs(blob_df, ranges, eqs)
     set_cols = sorted(assignments)
     pred_cols = sorted({c for c, _, _, _ in specs})
     group_cols = sorted(set(set_cols) | set(pred_cols))
-    untouched, in_keep = _split_by_keepset(blob_df, keep, max_broadcast_groups)
+    keep = _predicate_keepset(blob_df, specs)
+    untouched = blob_df.join(keep, on=_ROW_GROUP, how="left_anti")
+    in_keep = blob_df.join(keep, on=_ROW_GROUP, how="left_semi")
     passthrough = untouched.unionByName(
         in_keep.where(~F.col("column").isin(set_cols))
     )
@@ -1655,13 +1525,7 @@ def update_where(
         rows = []
         for _, r in sub.iterrows():
             arr, dtype = arrs[r["column"]]
-            try:
-                scalar = pa.scalar(assignments[r["column"]], type=arr.type)
-            except (pa.ArrowInvalid, pa.ArrowTypeError) as e:
-                raise ValueError(
-                    f"update_where: value for {r['column']!r} incompatible "
-                    f"with {arr.type}: {e}"
-                ) from e
+            scalar = pa.scalar(assignments[r["column"]], type=arr.type)
             fields = _encode_chunk(
                 pc.if_else(mask_pa, scalar, arr), dtype, codec=codec,
                 compression=compression, fsst_state={},

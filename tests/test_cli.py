@@ -108,6 +108,20 @@ def test_where_bad_literal_errors(encoded_events, tmp_path):
     assert e.value.code == 2
 
 
+@pytest.mark.parametrize(
+    "literal", [["--min", "abc"], ["--eq", "abc"], ["--eq", "1.5"]]
+)
+def test_scan_bad_literal_errors(encoded_events, tmp_path, literal):
+    """`scan` validates its literal like `where`: exit 2, not a raw
+    Spark cast error or a Python traceback."""
+    with pytest.raises(SystemExit) as e:
+        cli.main([
+            "scan", "--input", encoded_events, "--column", "rid",
+            *literal, "--output", str(tmp_path / "o"),
+        ])
+    assert e.value.code == 2
+
+
 def test_where_is_null_scan(encoded_events, tmp_path, capsys):
     out = str(tmp_path / "nulls")
     rc = cli.main([

@@ -440,7 +440,7 @@ def test_scan_table_row_group_pruning(spark):
     )
     blobs = pipeline.encode_columns(df, chunk_rows=512).cache()
     try:
-        out = pipeline.scan_table(blobs, "l_orderkey", lo=100, hi=400)
+        out = pipeline.scan_table_where(blobs, ranges={"l_orderkey": (100, 400)})
         assert set(out.columns) == {"l_orderkey", "l_quantity", "l_returnflag"}
         got = sorted(map(repr, out.collect()))
         want = sorted(
@@ -448,8 +448,8 @@ def test_scan_table_row_group_pruning(spark):
         )
         assert got == want and len(got) > 0
         # projection without the predicate column still filters correctly
-        proj = pipeline.scan_table(
-            blobs, "l_orderkey", lo=100, hi=400, columns=["l_returnflag"]
+        proj = pipeline.scan_table_where(
+            blobs, ranges={"l_orderkey": (100, 400)}, columns=["l_returnflag"]
         )
         assert proj.columns == ["l_returnflag"]
         assert proj.count() == len(got)
@@ -682,9 +682,9 @@ def test_scan_eq_tz_aware_timestamp(spark):
         blobs.unpersist()
 
 
-def test_keepset_broadcast_guard(spark):
+def test_keepset_broadcast_guard(spark, monkeypatch):
     """Selective scans broadcast the kept row-group set (guaranteed —
-    no shuffle-write of blob bytes); above max_broadcast_groups the
+    no shuffle-write of blob bytes); above _KEEPSET_COLLECT_ROWS the
     guard falls back to a plain semi-join (AQE picks the strategy), so
     an unselective predicate can never OOM the driver on a 'pruning'
     broadcast.  Results are identical either way."""
@@ -701,19 +701,15 @@ def test_keepset_broadcast_guard(spark):
         return buf.getvalue()
 
     try:
-        sel = pipeline.scan_table(
-            blobs, "l_orderkey", lo=100, hi=400, columns=["l_quantity"]
+        sel = pipeline.scan_table_where(
+            blobs, ranges={"l_orderkey": (100, 400)}, columns=["l_quantity"]
         )
         # the selective path carries an explicit broadcast HINT —
         # guaranteed broadcast regardless of size estimates
         assert "ResolvedHint" in plan_of(sel)
-        fallback = pipeline.scan_table(
-            blobs,
-            "l_orderkey",
-            lo=100,
-            hi=400,
-            columns=["l_quantity"],
-            max_broadcast_groups=0,
+        monkeypatch.setattr(pipeline, "_KEEPSET_COLLECT_ROWS", 0)
+        fallback = pipeline.scan_table_where(
+            blobs, ranges={"l_orderkey": (100, 400)}, columns=["l_quantity"]
         )
         # above the guard: NO forced hint (Catalyst/AQE may still pick
         # broadcast at this tiny scale from its own size estimate —
@@ -738,9 +734,7 @@ def test_manifest_first_dtype_no_probe_jobs(tmp_path, spark):
     try:
         dec = pipeline.decode_column(blobs, "r_name")
         tab = pipeline.decode_table(blobs)
-        eq = pipeline.scan_eq(
-            blobs, "r_regionkey", 1, max_broadcast_groups=None
-        )
+        eq = pipeline.scan_eq(blobs, "r_regionkey", 1)
         jobs = sc.statusTracker().getJobIdsForGroup("probe_guard")
         assert list(jobs) == [], f"plan building ran jobs: {jobs}"
     finally:
@@ -749,6 +743,37 @@ def test_manifest_first_dtype_no_probe_jobs(tmp_path, spark):
     assert dec.count() == df.count()
     assert tab.count() == df.count()
     assert eq.count() == 1
+
+
+def test_bad_literal_raises_before_any_job(tmp_path, spark):
+    """A literal the column type cannot hold fails on the driver with a
+    ValueError naming the column and the literal — for scans, DELETE
+    and UPDATE (SET values too) — before any Spark job runs, instead
+    of casting to null or failing inside an executor."""
+    df = load_table(spark, SF, "region")
+    pipeline.write_encoded(pipeline.encode_columns(df), str(tmp_path / "t"))
+    sc = spark.sparkContext
+    blobs = pipeline.read_encoded(spark, str(tmp_path / "t"))
+    calls = [
+        lambda: pipeline.scan_table_where(blobs, eqs={"r_regionkey": "abc"}),
+        lambda: pipeline.scan_eq(blobs, "r_regionkey", "abc", columns=["r_name"]),
+        lambda: pipeline.delete_where(blobs, eqs={"r_regionkey": "abc"}),
+        lambda: pipeline.update_where(
+            blobs, {"r_name": "x"}, ranges={"r_regionkey": ("abc", None)}
+        ),
+        lambda: pipeline.update_where(
+            blobs, {"r_regionkey": "abc"}, eqs={"r_name": "ASIA"}
+        ),
+    ]
+    sc.setJobGroup("literal_guard", "a bad literal must not run jobs")
+    try:
+        for call in calls:
+            with pytest.raises(ValueError, match=r"'abc'.*'r_regionkey'"):
+                call()
+        jobs = sc.statusTracker().getJobIdsForGroup("literal_guard")
+        assert list(jobs) == [], f"a bad literal ran jobs: {jobs}"
+    finally:
+        sc.setJobGroup(None, None)
 
 
 def test_sha_format_marker(tmp_path, spark):
@@ -774,8 +799,6 @@ def test_clustered_layout_prunes_harder(spark):
     zone maps cover narrow key ranges and a range scan decodes far fewer
     chunks than the same scan over random-arrival layout — with
     identical results."""
-    from pyspark.sql import types as T
-
     base = (
         load_table(spark, SF, "lineitem")
         .select("l_orderkey")
@@ -788,12 +811,10 @@ def test_clustered_layout_prunes_harder(spark):
     ).cache()
 
     def kept_chunks(blobs):
-        rows = pipeline._ensure_stat_cols(blobs).where(
-            F.col("column") == "l_orderkey"
-        )
-        return pipeline._zonemap_filter(
-            rows, T.LongType(), lo=lo, hi=hi
-        ).count()
+        (row,) = pipeline.scan_stats(
+            blobs, ranges={"l_orderkey": (lo, hi)}
+        ).collect()
+        return row["chunks_kept"]
 
     try:
         total = blobs_un.where(F.col("column") == "l_orderkey").count()
@@ -1039,34 +1060,73 @@ def test_scan_stats_observability(spark):
 
 
 def test_scan_randomized_consistency(spark):
-    """Seeded randomized probes over an int column with negatives and
-    boundary values: scan_eq / scan_column / scan_table_where always
-    equal the plain DataFrame filter (bloom false-negatives would show
-    here as missing rows)."""
+    """Seeded randomized probes over an int column with negatives,
+    boundary values and NULLs: scan_eq (both paths) / scan_column /
+    scan_table_where always equal the plain filter (bloom
+    false-negatives would show here as missing rows), scan_stats keeps
+    at least every chunk holding a match, and delete_where through the
+    same predicate removes exactly the matching rows."""
     import numpy as np
 
+    from parquetjs_spark import arrow_chunk
+
     rng = np.random.default_rng(11)
-    vals = rng.integers(-500, 500, size=4000).tolist()
+    # every 37th k is NULL: IS NULL finds exactly those, no comparison does
+    vals = [
+        None if i % 37 == 5 else int(v)
+        for i, v in enumerate(rng.integers(-500, 500, size=4000))
+    ]
+    present = [v for v in vals if v is not None]
     df = spark.createDataFrame(
-        [(i, int(v)) for i, v in enumerate(vals)], "rid long, k long"
+        list(enumerate(vals)), "rid long, k long"
     ).repartition(4)
     blobs = pipeline.encode_columns(df, chunk_rows=256).cache()
+    total = len(vals)
+    k_chunks = [
+        arrow_chunk.decode_arrow_column(bytes(r["data"]))[0].to_pylist()
+        for r in blobs.where(F.col("column") == "k").select("data").collect()
+    ]
+
+    def check(ranges, eqs, want, match, delete=False):
+        stats = pipeline.scan_stats(blobs, ranges=ranges, eqs=eqs).collect()
+        holding = sum(1 for c in k_chunks if any(map(match, c)))
+        assert stats[0]["chunks_kept"] >= holding, (ranges, eqs)
+        got = pipeline.scan_table_where(
+            blobs, ranges=ranges, eqs=eqs, columns=["rid"]
+        ).count()
+        assert got == want, (ranges, eqs)
+        if delete:
+            out = pipeline.delete_where(blobs, ranges=ranges, eqs=eqs)
+            left = pipeline.decode_table(out, ["rid"]).count()
+            assert left == total - want, (ranges, eqs)
+
     try:
-        lo_all, hi_all = min(vals), max(vals)
+        lo_all, hi_all = min(present), max(present)
         probes = [lo_all, hi_all, 0, -1, 1, 9999, -9999] + [
-            int(x) for x in rng.choice(vals, 5)
+            int(x) for x in rng.choice(present, 5)
         ]
-        for p in probes:
+        for i, p in enumerate(probes):
             want = vals.count(p)
             assert pipeline.scan_eq(blobs, "k", p).count() == want, p
-        for lo, hi in [(-500, 500), (0, 0), (-50, 49), (600, 700), (hi_all, hi_all)]:
-            want = sum(1 for v in vals if lo <= v <= hi)
+            got = pipeline.scan_eq(blobs, "k", p, columns=["rid"]).count()
+            assert got == want, p
+            check(None, {"k": p}, want, lambda v, p=p: v == p, delete=i < 3)
+        for i, (lo, hi) in enumerate(
+            [(-500, 500), (0, 0), (-50, 49), (600, 700), (hi_all, hi_all)]
+        ):
+            want = sum(1 for v in present if lo <= v <= hi)
             got = pipeline.scan_column(blobs, "k", lo=lo, hi=hi).count()
             assert got == want, (lo, hi)
-            got2 = pipeline.scan_table_where(
-                blobs, ranges={"k": (lo, hi)}, columns=["rid"]
-            ).count()
-            assert got2 == want, (lo, hi)
+            check(
+                {"k": (lo, hi)}, None, want,
+                lambda v, lo=lo, hi=hi: v is not None and lo <= v <= hi,
+                delete=i < 2,
+            )
+        n_null = vals.count(None)
+        assert pipeline.scan_eq(blobs, "k", None).count() == n_null > 0
+        got = pipeline.scan_eq(blobs, "k", None, columns=["rid"]).count()
+        assert got == n_null
+        check(None, {"k": None}, n_null, lambda v: v is None, delete=True)
     finally:
         blobs.unpersist()
 
