@@ -110,8 +110,8 @@ def _q_scan_eq_partkey(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filtered point lookup (the bloom filters Parquet declares
     but the reference never writes, /root/reference/parquet.thrift:359-361):
     per-chunk blooms in the manifest prune chunks of the UNSORTED
-    l_partkey column via a pure-JVM bit-test before any decode; zone
-    maps cannot prune here (every chunk spans most of the key range)."""
+    l_partkey column on the driver before any decode; zone maps
+    cannot prune here (every chunk spans most of the key range)."""
     from parquetjs_spark import pipeline
 
     df = _load(spark, sf_dir, "lineitem").select("l_partkey")
@@ -349,9 +349,9 @@ def _q_scan_orderkey_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_scan_table_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compound-predicate pruned scan (scan_table_where, round 4):
     range AND equality on different columns intersect their kept
-    row-group sets via metadata-only semi-joins — zone maps for the
-    range, zone maps + blooms for the equality — before one decode +
-    exact residuals.  (A single-range scan is the same call with one
+    row-group sets on the driver — zone maps for the range, zone maps
+    + blooms for the equality — and the scan reads only those row
+    groups, before one decode + exact residuals.  (A single-range scan is the same call with one
     range and no equality.)"""
     from parquetjs_spark import pipeline
 

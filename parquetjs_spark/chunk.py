@@ -23,7 +23,7 @@ Chunk blob layout (version 1), little-endian:
   5      codec id   (value encoding, codecs.CODEC_IDS)
   6      compression id (applied to the values section only, like
          DataPageV2 — parquetjs lib/writer.js:392-395)
-  7      flags: bit0 = has nulls
+  7      flags: bit0 = has nulls (set iff n_nulls > 0; no other bit)
   8..11  u32 n_values (incl. nulls)
   12..15 u32 n_nulls
   16..19 u32 len(levels)   — definition levels as RLE bitWidth=1, no
@@ -159,6 +159,12 @@ def parse_header(mv: memoryview):
         )
     if n_nulls > n:
         raise ValueError(f"chunk n_nulls {n_nulls} exceeds n {n}")
+    if flags & ~1:
+        raise ValueError(f"unknown chunk flags {flags:#x}")
+    if bool(flags & 1) != (n_nulls > 0):
+        raise ValueError(f"chunk has-nulls flag {flags & 1} disagrees with n_nulls {n_nulls}")
+    if levels_len and not flags & 1:
+        raise ValueError(f"chunk has {levels_len} level bytes but no has-nulls flag")
     try:
         names = DTYPE_NAMES[d], CODEC_NAMES[c], comp.comp_name(z)
     except KeyError:

@@ -322,13 +322,9 @@ def _parse_predicates(args, dtype_of):
 
 
 def _manifest_dtypes(spark, pipeline, path):
-    dtypes = {
-        r["column"]: r["dtype"]
-        for r in pipeline.read_manifest(spark, path)
-        .select("column", "dtype")
-        .distinct()
-        .collect()
-    }
+    # the pipeline's manifest cache: no Spark job for a local table, and
+    # the scan that follows reads the same cached manifest
+    dtypes = {c: dt for c, (_, dt) in pipeline._manifest_meta(spark, path)[0].items()}
 
     def dtype_of(col: str) -> str:
         if col not in dtypes:

@@ -6,8 +6,8 @@ writes them (/root/reference/parquet.thrift:359-361 is literally
 per-column-chunk bloom sized at ~10 bits per DISTINCT value
 (power-of-two, clamped to [1024, 65536] bits ~= [128 B, 8 KB]), stored
 as ``array<long>`` in the blob/manifest table, so an equality predicate
-prunes chunks with a pure-JVM metadata filter (``pipeline.scan_eq``)
-before any blob bytes move — the point-lookup complement to the
+prunes chunks on the driver from the manifest (``pipeline.scan_eq``,
+``might_contain_rows``) before any blob bytes move — the point-lookup complement to the
 zone-map range pruning.  At 10 bits/value with 4 probes the false-
 positive rate is ~1%; dictionary-ish chunks (few distincts) pay only
 the 128 B floor.
@@ -17,11 +17,10 @@ predicate); false negatives cannot happen — every non-null value's
 hash is inserted.
 
 The filter size travels implicitly as the array length, so the probe
-expression derives bit positions from ``size(bloom) * 64`` per row —
-chunks of different sizes mix freely in one table.  Positions use
-``h & (m-1)`` (m is a power of two), which is identical for the
-unsigned build-side hash and the signed two's-complement literal the
-JVM sees.
+derives bit positions from ``len(bloom) * 64`` per row — chunks of
+different sizes mix freely in one table.  Positions use ``h & (m-1)``
+(m is a power of two), which is identical for the unsigned build-side
+hash and the signed two's-complement probe hash.
 
 Hashing is fully vectorized (no per-value Python): int-likes go through
 a splitmix64 finalizer; strings/binary hash (first 8 bytes, last 8
@@ -140,7 +139,7 @@ def build_from_hashes(h: np.ndarray) -> np.ndarray:
 def probe_hashes(value, dtype: str) -> list[int]:
     """-> NUM_HASHES signed-int64 probe hashes for a literal.  The
     consumer derives positions per chunk as ``h & (m-1)`` where
-    m = 64 * len(bloom) — identical low bits for the signed JVM literal
+    m = 64 * len(bloom) — identical low bits for the signed probe hash
     and the unsigned build-side hash."""
     h = np.uint64(hash_scalar(value, dtype))
     with np.errstate(over="ignore"):
@@ -154,13 +153,32 @@ def probe_hashes(value, dtype: str) -> list[int]:
     return out
 
 
-def might_contain(bloom_words, value, dtype: str) -> bool:
-    """Python-side membership test (used by tests; scan_eq does the same
-    per-row in JVM expressions)."""
-    arr = np.asarray(bloom_words, dtype=np.int64).view(np.uint64)
-    m = np.uint64(len(arr) * 64)
+def might_contain_rows(blooms, value, dtype: str) -> np.ndarray:
+    """Probe one literal against a list<int64> Arrow array of blooms,
+    one per chunk, vectorized over the list offsets -> bool per row,
+    False where the bloom proves the chunk cannot hold ``value``.  A
+    null or empty bloom keeps its chunk."""
+    import pyarrow as pa
+
+    if isinstance(blooms, pa.ChunkedArray):
+        blooms = blooms.combine_chunks()
+    offs = blooms.offsets.to_numpy().astype(np.int64)
+    sizes = np.diff(offs)
+    keep = ~blooms.is_valid().to_numpy(zero_copy_only=False) | (sizes == 0)
+    rows = np.flatnonzero(~keep)
+    words = blooms.values.to_numpy(zero_copy_only=False).astype(np.int64).view(np.uint64)
+    mask, hit = (sizes[rows] * 64 - 1).astype(np.uint64), np.ones(len(rows), dtype=bool)
     for hj in probe_hashes(value, dtype):
-        pos = np.uint64(hj & (2**64 - 1)) & (m - np.uint64(1))
-        if not arr[int(pos >> np.uint64(6))] & (np.uint64(1) << (pos & np.uint64(63))):
-            return False
-    return True
+        pos = np.uint64(hj & (2**64 - 1)) & mask
+        w = words[offs[rows] + (pos >> np.uint64(6)).astype(np.int64)]
+        hit &= ((w >> (pos & np.uint64(63))) & np.uint64(1)).astype(bool)
+    keep[rows] = hit
+    return keep
+
+
+def might_contain(bloom_words, value, dtype: str) -> bool:
+    """Single-bloom form of might_contain_rows."""
+    import pyarrow as pa
+
+    words = pa.array([np.asarray(bloom_words, dtype=np.int64)], pa.list_(pa.int64()))
+    return bool(might_contain_rows(words, value, dtype)[0])

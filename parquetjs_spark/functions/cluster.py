@@ -213,6 +213,16 @@ def zorder_key(
     )
 
 
+def _partition_sql(bounds: list[int], lo: int, hi: int) -> str:
+    """The z-key's partition id in [lo, hi]: a SQL binary search over
+    the sorted ``bounds``, partition i holding (bounds[i-1], bounds[i]]."""
+    if lo == hi:
+        return str(lo)
+    mid = (lo + hi) // 2
+    return (f"IF(`{ZKEY}` <= {bounds[mid]}, {_partition_sql(bounds, lo, mid)}, "
+            f"{_partition_sql(bounds, mid + 1, hi)})")
+
+
 def zorder_sort(
     df: DataFrame,
     cols: list[str],
@@ -220,15 +230,19 @@ def zorder_sort(
     stats: dict[str, tuple] | None = None,
     partitions: int | None = None,
 ) -> DataFrame:
-    """Globally z-order the table: range-repartition on the Morton key
+    """Globally z-order the table: range-partition on the Morton key
     (contiguous key ranges per partition — the encoder's chunk zone
     maps inherit the clustering) and sort within partitions.  One
     shuffle, same cost class as any global sort; at 100 TB this is the
     layout job you run once per ingest, after which every multi-column
-    range scan prunes at the chunk level."""
+    range scan prunes at the chunk level.
+
+    The range bounds are key quantiles (one aggregate), not the range
+    exchange's sample, which is seeded by the RDD id: the layout
+    depends on the data, not on the session's history."""
     keyed = zorder_key(df, cols, bits=bits, stats=stats)
-    if partitions:
-        keyed = keyed.repartitionByRange(partitions, ZKEY)
-    else:
-        keyed = keyed.repartitionByRange(ZKEY)
-    return keyed.sortWithinPartitions(ZKEY).drop(ZKEY)
+    n = partitions or int(keyed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    qs = keyed.approxQuantile(ZKEY, [i / n for i in range(1, n)], 0.001)
+    bounds = sorted({int(q) for q in qs})
+    pid = F.expr(_partition_sql(bounds, 0, len(bounds)))
+    return keyed.repartitionById(n, pid).sortWithinPartitions(ZKEY).drop(ZKEY)

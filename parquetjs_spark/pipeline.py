@@ -25,9 +25,10 @@ from typing import Iterable, Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from . import arrow_chunk, chunk as chunklib
@@ -414,8 +415,6 @@ def _node_flat_names(node) -> list[str]:
 
 
 def _assemble_node(node, decoded: dict, pa_types: dict) -> pa.Array:
-    import pyarrow.compute as pc
-
     if node[0] == "leaf":
         arr = decoded[node[1]]
         want = pa_types[node[1]]
@@ -692,8 +691,7 @@ def decode_column(
     the analogue of the reference's getCursor(columnList)
     (/root/reference/lib/reader.js:132-144, :227-229)."""
     out_name = out_name or column
-    rows = blob_df.where(F.col("column") == column).select("data", "dtype")
-    dtype = _resolve_dtype(rows, column, dtype, meta_src=blob_df)
+    dtype = _resolve_dtype(blob_df, column, dtype)
     out_schema = T.StructType(
         [T.StructField(out_name, out_type or spark_type_of(dtype))]
     )
@@ -711,7 +709,8 @@ def decode_column(
                     arr = arr.cast(pa_type)
                 yield pa.RecordBatch.from_arrays([arr], names=[out_name])
 
-    return rows.select("data").mapInArrow(decode_fn, schema=out_schema)
+    rows = blob_df.where(F.col("column") == column).select("data")
+    return rows.mapInArrow(decode_fn, schema=out_schema)
 
 
 def decode_table(
@@ -876,66 +875,62 @@ def roundtrip_table(
     return decode_table(blobs, cols)
 
 
-def _ensure_stat_cols(blob_df: DataFrame, bloom: bool = False) -> DataFrame:
+def _ensure_stat_cols(blob_df: DataFrame) -> DataFrame:
     """Backfill pruning-metadata columns for blob tables written before
     they existed (null = conservatively unprunable)."""
     src = blob_df
-    for stat_col in ("stat_min", "stat_max"):
-        if stat_col not in blob_df.columns:
-            blob_df = blob_df.withColumn(stat_col, F.lit(None).cast("string"))
-    if bloom and "bloom" not in blob_df.columns:
-        blob_df = blob_df.withColumn("bloom", F.lit(None).cast("array<long>"))
+    backfill = (("stat_min", "string"), ("stat_max", "string"), ("bloom", "array<long>"))
+    for name, typ in backfill:
+        if name not in blob_df.columns:
+            blob_df = blob_df.withColumn(name, F.lit(None).cast(typ))
     if blob_df is not src and hasattr(src, "_pjs_meta_path"):
         blob_df._pjs_meta_path = src._pjs_meta_path
     return blob_df
 
 
-# per-table {column: (col_idx, dtype)} read once from the manifest —
-# pure metadata, so scan/decode library calls need ZERO probe jobs on
-# the blob table when it came from read_encoded (judge round-3 item #6)
-_META_CACHE: dict[str, dict[str, tuple[int | None, str]]] = {}
+# the manifest is read onto the driver only up to this many chunk rows
+# (a 100 TB table's manifest is ~25 M rows); above it, column metadata
+# comes from one distinct job and lookups apply no row-group filter
+_MANIFEST_DRIVER_ROWS = 2_000_000
+_CHUNK_META = ["part_id", "chunk_seq", "column", "n_nulls", "stat_min", "stat_max", "bloom"]
+
+# per-table manifest, read once onto the driver with pyarrow — the
+# footer analogue (parquetjs lib/reader.js:264-282 readFooter): path ->
+# ({column: (col_idx, dtype)}, chunk metadata table or None above the
+# cap).  Tables from read_encoded resolve dtypes and prune row groups
+# from it with ZERO Spark jobs; read_encoded and write_encoded evict.
+_MANIFEST_CACHE: dict[str, tuple[dict, pa.Table | None]] = {}
 
 
-def _manifest_meta(
-    spark: SparkSession, path: str
-) -> dict[str, tuple[int | None, str]]:
-    if path in _META_CACHE:
-        return _META_CACHE[path]
-    cols = None
+def _manifest_meta(spark: SparkSession, path: str) -> tuple[dict, pa.Table | None]:
+    """The _MANIFEST_CACHE entry of the table at ``path``, read once."""
+    if path in _MANIFEST_CACHE:
+        return _MANIFEST_CACHE[path]
+    table = None
     try:
         import pyarrow.dataset as pads
 
-        ds = pads.dataset(f"{path}/manifest", format="parquet")
-        # driver-side read is the zero-job fast path, but a 100 TB
-        # table's manifest is ~25 M rows — above a size cap fall through
-        # to the distributed distinct instead of pulling it all here
-        if sum(f.count_rows() for f in ds.get_fragments()) > 2_000_000:
-            raise RuntimeError("manifest too large for driver-side read")
-        names = [
-            c for c in ("column", "col_idx", "dtype") if c in ds.schema.names
-        ]
-        tbl = ds.to_table(columns=names)
-        cols = {n: tbl[n].to_pylist() for n in names}
+        # the blob schema fills a field an old table's files lack with
+        # nulls (null = conservatively unprunable)
+        ds = pads.dataset(f"{path}/manifest", format="parquet", schema=_BLOB_PA_SCHEMA)
+        if ds.count_rows() <= _MANIFEST_DRIVER_ROWS:
+            table = ds.to_table(columns=_CHUNK_META + ["col_idx", "dtype"])
     except Exception:
-        # non-local filesystem pyarrow can't reach: one tiny Spark job
-        # over the manifest (never the blob table)
-        mdf = spark.read.parquet(f"{path}/manifest")
-        names = [c for c in ("column", "col_idx", "dtype") if c in mdf.columns]
-        rows = mdf.select(*names).distinct().collect()
-        cols = {n: [r[n] for r in rows] for n in names}
-    idx = cols.get("col_idx", [None] * len(cols["column"]))
-    meta = {
-        c: (i, d)
-        for c, i, d in zip(cols["column"], idx, cols["dtype"])
-    }
-    _META_CACHE[path] = meta
-    return meta
+        pass  # a filesystem pyarrow cannot reach: Spark reads it below
+    if table is not None:
+        rows = table.group_by(["column", "col_idx", "dtype"]).aggregate([]).to_pylist()
+    else:  # one tiny Spark job over the manifest (never the blob table)
+        rows = _meta_rows_for(spark.read.parquet(f"{path}/manifest"))
+    meta = {r["column"]: (r["col_idx"], r["dtype"]) for r in rows}
+    _MANIFEST_CACHE[path] = (meta, table)
+    return meta, table
 
 
-def _cached_meta(blob_df: DataFrame) -> dict[str, tuple[int | None, str]] | None:
-    """Manifest metadata for a df returned by read_encoded; None when the
-    df has been transformed (the attribute deliberately does not survive
-    user filters — a filtered table may hold fewer columns)."""
+def _cached_meta(blob_df: DataFrame) -> tuple[dict, pa.Table | None] | None:
+    """The manifest cache entry of a df returned by read_encoded; None
+    when the df has been transformed (the attribute deliberately does
+    not survive user filters — a filtered table may hold fewer
+    columns or row groups)."""
     path = getattr(blob_df, "_pjs_meta_path", None)
     if path is None:
         return None
@@ -945,12 +940,21 @@ def _cached_meta(blob_df: DataFrame) -> dict[str, tuple[int | None, str]] | None
         return None
 
 
-def _resolve_dtype(
-    rows: DataFrame,
-    column: str,
-    dtype: str | None,
-    meta_src: DataFrame | None = None,
-) -> str:
+def _chunk_meta(blob_df: DataFrame, columns: list[str]) -> pa.Table | None:
+    """The one metadata source for pruning: the chunk rows of
+    ``columns`` as an Arrow table on the driver — from the manifest
+    cache (no job) for a table from read_encoded, else one job with
+    ``data`` pruned; None above _MANIFEST_DRIVER_ROWS rows."""
+    want = sorted(set(columns))
+    tbl = (_cached_meta(blob_df) or (None, None))[1]
+    if tbl is not None:
+        return tbl.filter(pc.is_in(tbl["column"], pa.array(want, pa.string())))
+    rows = _ensure_stat_cols(blob_df).where(F.col("column").isin(want))
+    tbl = rows.select(*_CHUNK_META).limit(_MANIFEST_DRIVER_ROWS + 1).toArrow()
+    return tbl if tbl.num_rows <= _MANIFEST_DRIVER_ROWS else None
+
+
+def _resolve_dtype(blob_df: DataFrame, column: str, dtype: str | None) -> str:
     """dtype is constant per column; callers that know it (manifest in
     hand, or the CLI's resolver) pass it and skip the probe.  When the
     table came from read_encoded, the manifest cache answers with no
@@ -958,65 +962,15 @@ def _resolve_dtype(
     limit-1 probe."""
     if dtype is not None:
         return dtype
-    if meta_src is not None:
-        meta = _cached_meta(meta_src)
-        if meta is not None:
-            if column not in meta:
-                raise ValueError(f"no chunks for column {column}")
-            return meta[column][1]
-    drow = rows.select("dtype").limit(1).collect()
+    cached = _cached_meta(blob_df)
+    if cached is not None:
+        if column not in cached[0]:
+            raise ValueError(f"no chunks for column {column!r}: not in table")
+        return cached[0][column][1]
+    drow = blob_df.where(F.col("column") == column).select("dtype").limit(1).collect()
     if not drow:
-        raise ValueError(f"no chunks for column {column}")
+        raise ValueError(f"no chunks for column {column!r}: not in table")
     return drow[0][0]
-
-
-def _zonemap_filter(rows: DataFrame, styp: T.DataType, lo=None, hi=None) -> DataFrame:
-    """Keep chunks whose [stat_min, stat_max] can intersect [lo, hi];
-    chunks without stats (nulls) are conservatively kept."""
-    if lo is not None:
-        rows = rows.where(
-            F.col("stat_max").isNull()
-            | (F.col("stat_max").cast(styp) >= F.lit(lo).cast(styp))
-        )
-    if hi is not None:
-        rows = rows.where(
-            F.col("stat_min").isNull()
-            | (F.col("stat_min").cast(styp) <= F.lit(hi).cast(styp))
-        )
-    return rows
-
-
-def _bloom_probe_filter(pred_rows: DataFrame, dtype: str, value) -> DataFrame:
-    """Keep chunks whose bloom COULD contain ``value`` (a typed literal
-    from _predicate_specs): every probed bit must be set (null bloom
-    conservatively kept).  Probing hashes the LOGICAL value exactly as
-    the encoder did — days / micros for date / timestamp; bit positions
-    derive from each chunk's own filter size (h & (64*len(bloom) - 1))
-    so different-sized blooms mix freely.  Pure-JVM metadata filter —
-    element_at + bitwiseAND — before any blob bytes move."""
-    import datetime as _dt
-
-    from .codecs import bloom as bloomlib
-
-    if dtype not in bloomlib.BLOOMABLE:
-        return pred_rows
-    if dtype == "date":
-        value = (value - _dt.date(1970, 1, 1)).days
-    elif dtype == "timestamp_us":
-        value = (value - _dt.datetime(1970, 1, 1)) // _dt.timedelta(microseconds=1)
-    for hj in bloomlib.probe_hashes(value, dtype):
-        # SQL expr because pyspark's shiftleft() rejects a Column
-        # shift amount; hj is a driver-computed literal
-        pos = f"({hj}L & (size(bloom) * 64 - 1))"
-        pred_rows = pred_rows.where(
-            F.expr(
-                "bloom IS NULL OR ("
-                f"element_at(bloom, int(shiftright({pos}, 6)) + 1) "
-                f"& shiftleft(1L, int({pos} & 63))"
-                ") != 0"
-            )
-        )
-    return pred_rows
 
 
 def _coerce_literal(value, dtype: str):
@@ -1101,8 +1055,7 @@ def _predicate_specs(
     ]
     specs = []
     for col, kind, value in preds:
-        rows = blob_df.where(F.col("column") == col)
-        dt = _resolve_dtype(rows, col, dtype, meta_src=blob_df)
+        dt = _resolve_dtype(blob_df, col, dtype)
         if kind == "range":
             value = tuple(
                 None if v is None else _typed_value(col, v, dt) for v in value
@@ -1113,20 +1066,43 @@ def _predicate_specs(
     return specs
 
 
-def _kept_chunks(blob_df: DataFrame, spec: tuple) -> DataFrame:
-    """The one chunk rule: the chunk rows of ``spec``'s column that may
-    hold a matching row — range -> zone maps; eq -> zone maps + bloom;
-    isnull -> the n_nulls stat (the null-count slice of Parquet's
-    Statistics struct, /root/reference/parquet.thrift:201-214, which
-    the reference declares but never writes).  Metadata-only Catalyst
-    filters; chunks without stats are conservatively kept."""
+def _typed_stats(stats, column: str, dtype: str) -> pa.Array:
+    """A stat_min / stat_max column in the Arrow type _typed_value gives
+    literals, so a stat and a literal compare in one type; a stat the
+    vectorized cast rejects (a UTC offset) goes through _typed_value."""
+    typ = _pa_type_of(dtype)
+    try:
+        return pc.cast(stats, typ)
+    except pa.ArrowInvalid:
+        vals = stats.to_pylist()
+        return pa.array([v if v is None else _typed_value(column, v, dtype) for v in vals], typ)
+
+
+def _kept_chunks(meta: pa.Table, spec: tuple) -> pa.Table:
+    """The one chunk rule, in Arrow over _chunk_meta's table: the chunk
+    rows of ``spec``'s column that may hold a matching row — range ->
+    zone maps; eq -> zone maps, then bloom (probing the LOGICAL value:
+    days / micros for date / timestamp); isnull -> the n_nulls stat
+    (Parquet's Statistics null_count, /root/reference/parquet.thrift:
+    201-214).  A null stat or a null bloom keeps the chunk."""
+    from .codecs import bloom as bloomlib
+
     column, kind, value, dtype = spec
-    rows = _ensure_stat_cols(blob_df, bloom=True).where(F.col("column") == column)
+    rows = meta.filter(pc.equal(meta["column"], column))
     if kind == "isnull":
-        return rows.where(F.col("n_nulls").isNull() | (F.col("n_nulls") > 0))
+        return rows.filter(pc.fill_null(pc.greater(rows["n_nulls"], 0), True))
     lo, hi = value if kind == "range" else (value, value)
-    rows = _zonemap_filter(rows, spark_type_of(dtype), lo, hi)
-    return _bloom_probe_filter(rows, dtype, value) if kind == "eq" else rows
+    keep = np.ones(rows.num_rows, dtype=bool)
+    for stat, op, bound in (("stat_max", "ge", lo), ("stat_min", "le", hi)):
+        if bound is not None:
+            typed = _typed_stats(rows[stat], column, dtype)
+            unknown = typed.is_null().to_numpy(zero_copy_only=False)
+            keep &= unknown | _compare(typed, op, bound)
+    if kind == "eq" and dtype in bloomlib.BLOOMABLE:
+        if dtype in ("date", "timestamp_us"):
+            value = pa.scalar(value, _pa_type_of(dtype)).value
+        keep &= bloomlib.might_contain_rows(rows["bloom"], value, dtype)
+    return rows.filter(pa.array(keep))
 
 
 def _residual(spec: tuple, name: str | None = None):
@@ -1154,42 +1130,48 @@ def _meta_rows_for(blob_df: DataFrame) -> list:
     UNPRUNED table.  Scan paths pass this into decode_table so an
     empty pruned result still decodes to an empty, correctly-typed
     DataFrame instead of 'blob table has no chunks'."""
-    meta = _cached_meta(blob_df)
-    if meta is not None:
+    cached = _cached_meta(blob_df)
+    if cached is not None:
         return [
             {"column": c, "col_idx": ci, "dtype": dt}
-            for c, (ci, dt) in meta.items()
+            for c, (ci, dt) in cached[0].items()
         ]
     if "col_idx" not in blob_df.columns:  # pre-col_idx blob table
         blob_df = blob_df.withColumn("col_idx", F.lit(None).cast("int"))
     return blob_df.select("column", "col_idx", "dtype").distinct().collect()
 
 
-_ROW_GROUP = ["part_id", "chunk_seq"]
-
-# a keep-set of at most this many row groups collects to the driver and
-# joins as a broadcast local relation: the per-predicate semi-join DAG
-# runs exactly once and no blob bytes shuffle.  A larger one (an
-# unselective predicate over a huge table) stays a plain join that AQE
-# plans — broadcasting ~all row groups could OOM the driver.
+# at most this many kept row groups become the literal keep-set filter;
+# above it (an unselective predicate over a huge table) scans and DML
+# apply no row-group filter, which stays exact (the residual and the
+# DML mask are exact) and keeps the plan and driver memory bounded
 _KEEPSET_COLLECT_ROWS = 100_000
 
 
-def _predicate_keepset(blob_df: DataFrame, specs: list) -> DataFrame:
-    """The one keep-set join side for scans and DML: the (part_id,
-    chunk_seq) row groups that every spec's chunk rule keeps
-    (successive metadata-only semi-joins, manifest-sized), taken to the
-    driver as one Arrow batch when it fits and broadcast, else left as
-    the lazy keep-set.  Callers semi-join (scan, DML rewrite side) or
-    anti-join (DML pass-through side) the blob table against it."""
+def _predicate_keepset(blob_df: DataFrame, specs: list) -> Column:
+    """The one keep-set for scans and DML, decided on the driver: the row
+    groups every spec's chunk rule keeps, as the literal Column
+    ``part_id IN (...) AND (part_id, chunk_seq) IN (...)``; the
+    ``part_id IN`` half pushes down to Parquet, skipping other encode
+    tasks' files by footer stats.  Scans ``where(keep)``; DML rewrites
+    ``where(keep)``, passes ``where(~keep)`` through.  ``lit(True)`` (no
+    row-group filter) without driver metadata or above
+    _KEEPSET_COLLECT_ROWS groups."""
+    meta = _chunk_meta(blob_df, [s[0] for s in specs])
+    if meta is None:
+        return F.lit(True)
     keep = None
     for spec in specs:
-        ks = _kept_chunks(blob_df, spec).select(*_ROW_GROUP).distinct()
-        keep = ks if keep is None else keep.join(ks, on=_ROW_GROUP, how="left_semi")
-    probe = keep.limit(_KEEPSET_COLLECT_ROWS + 1).toArrow()
-    if probe.num_rows <= _KEEPSET_COLLECT_ROWS:
-        return F.broadcast(blob_df.sparkSession.createDataFrame(probe))
-    return keep
+        k = _kept_chunks(meta, spec)
+        groups = set(zip(k["part_id"].to_pylist(), k["chunk_seq"].to_pylist()))
+        keep = groups if keep is None else keep & groups
+    if len(keep) > _KEEPSET_COLLECT_ROWS:
+        return F.lit(True)
+    if not keep:
+        return F.lit(False)
+    parts = ", ".join(map(str, sorted({p for p, _ in keep})))
+    pairs = ", ".join(f"({p}, {c}L)" for p, c in sorted(keep))
+    return F.expr(f"part_id IN ({parts}) AND (part_id, chunk_seq) IN ({pairs})")
 
 
 def _scan_one(
@@ -1199,9 +1181,8 @@ def _scan_one(
     the residual — the single-column scan behind scan_column and
     scan_eq(columns=None)."""
     column, _, _, dtype = spec
-    out = decode_column(
-        _kept_chunks(blob_df, spec), column, out_name=out_name, dtype=dtype
-    )
+    kept = blob_df.where(_predicate_keepset(blob_df, [spec]))
+    out = decode_column(kept, column, out_name=out_name, dtype=dtype)
     return out.where(_residual(spec, out_name))
 
 
@@ -1217,12 +1198,14 @@ def scan_column(
     min/max (the Statistics struct Parquet defines,
     /root/reference/parquet.thrift:201-214 — declared by the reference,
     never written by its writer).  Chunks whose [stat_min, stat_max]
-    cannot intersect [lo, hi] are eliminated by a Catalyst filter on the
-    blob table BEFORE any decode work or blob bytes move; a residual row
-    filter then exacts the predicate.  At 100 TB this is the difference
-    between decoding every chunk and touching only the ones a
-    range-predicate query needs (clustered/sorted data prunes hardest —
-    same math as Parquet row-group skipping)."""
+    cannot intersect [lo, hi] are eliminated on the driver, and the
+    kept row groups reach the blob scan as a literal filter BEFORE any
+    decode work or blob bytes move; a residual row filter then exacts
+    the predicate.  At 100 TB this is the difference between decoding
+    every chunk and touching only the ones a range-predicate query
+    needs (clustered/sorted data prunes hardest — same math as Parquet
+    row-group skipping).  A blob DataFrame not from read_encoded pays
+    one metadata job up front: cache the frame, or write it first."""
     (spec,) = _predicate_specs(blob_df, ranges={column: (lo, hi)}, dtype=dtype)
     return _scan_one(blob_df, spec, out_name)
 
@@ -1239,20 +1222,22 @@ def scan_eq(
     Parquet declares bloom filters / index pages; the reference never
     writes them (/root/reference/parquet.thrift:359-361 is a TODO).
     Here every chunk of a bloomable column carries a 1024-bit bloom in
-    the manifest, so ``col = value`` eliminates chunks with a pure-JVM
-    metadata filter — element_at + bitwiseAND over the probed words —
-    BEFORE any blob moves; zone maps prune on top when the data is
-    clustered; the residual filter exacts the predicate.  On unsorted
-    data this is the pruning that zone maps cannot give (a random chunk
-    spans nearly the full key range, but its bloom rejects all but
-    ~2^-10 of foreign point probes per hash).  ``value=None`` is an
+    the manifest, so ``col = value`` eliminates chunks on the driver
+    (zone maps, then the bloom) and the blob scan reads only the kept
+    row groups, through a literal filter: one Spark job on a table from
+    read_encoded.  The residual filter exacts the predicate.  On
+    unsorted data this is the pruning that zone maps cannot give (a
+    random chunk spans nearly the full key range, but its bloom rejects
+    all but ~2^-10 of foreign point probes per hash).  ``value=None`` is an
     IS NULL lookup pruned by the n_nulls stat.
 
     ``columns=None`` decodes just the predicate column (``dtype`` skips
     its resolution); a list reassembles whole row groups and is exactly
     ``scan_table_where(eqs={column: value}, columns=columns)``.  Chunks
     without a bloom (old tables, unbloomable dtypes) stay
-    conservatively unpruned."""
+    conservatively unpruned.  A blob DataFrame not from read_encoded
+    pays one metadata job up front (columns=None too): cache the frame,
+    or write it first."""
     if columns is not None:
         return scan_table_where(blob_df, eqs={column: value}, columns=columns)
     (spec,) = _predicate_specs(blob_df, eqs={column: value}, dtype=dtype)
@@ -1273,17 +1258,17 @@ def scan_table_where(
     ``eqs`` maps column -> value (zone maps + blooms; None = IS NULL).
     A literal the column's type cannot hold raises ValueError before
     any job runs.  The keep-set is the INTERSECTION of each predicate's
-    kept row groups — metadata-only semi-joins, manifest-sized — and a
-    selective one is collected once and broadcast (_predicate_keepset);
-    the surviving groups are decoded once and every residual predicate
-    is applied exactly.  Conjunction prunes multiplicatively: at 100 TB
-    a date range keeping 2% of groups and a key bloom keeping 0.1%
-    leaves ~0.002% of chunks to decode.  ``columns`` projects the
+    kept row groups, decided on the driver from the chunk metadata and
+    handed to the blob scan as a literal filter (_predicate_keepset) —
+    no join; the surviving groups are decoded once and every residual
+    predicate is applied exactly.  Conjunction prunes multiplicatively:
+    at 100 TB a date range keeping 2% of groups and a key bloom keeping
+    0.1% leaves ~0.002% of chunks to decode.  ``columns`` projects the
     output (predicate columns are decoded for the residuals either
-    way)."""
+    way).  As for scan_eq, a blob DataFrame not from read_encoded pays
+    one metadata job up front."""
     specs = _predicate_specs(blob_df, ranges, eqs)
-    keep = _predicate_keepset(blob_df, specs)
-    pruned = blob_df.join(keep, on=_ROW_GROUP, how="left_semi")
+    pruned = blob_df.where(_predicate_keepset(blob_df, specs))
     want = columns
     if want is not None:
         pred_cols = dict.fromkeys(c for c, _, _, _ in specs)
@@ -1306,11 +1291,15 @@ def scan_stats(
     you whether your layout is working (clustered data prunes ranges
     hard; blooms prune point probes even on random arrival) BEFORE you
     pay for a scan.  Pure metadata counts through the same chunk rule
-    the scans use; returns one row per predicate (column, kind,
+    the scans use, in Arrow on the driver: no Spark job on a table from
+    read_encoded.  Returns one row per predicate (column, kind,
     chunks_total, chunks_kept), kind "range" or "eq" (IS NULL included)."""
     specs = _predicate_specs(blob_df, ranges, eqs)
-    total = [blob_df.where(F.col("column") == s[0]).count() for s in specs]
-    kept = [_kept_chunks(blob_df, s).count() for s in specs]
+    meta = _chunk_meta(blob_df, [s[0] for s in specs])
+    if meta is None:
+        raise ValueError(f"scan_stats: over {_MANIFEST_DRIVER_ROWS} chunks to count")
+    total = [meta.filter(pc.equal(meta["column"], s[0])).num_rows for s in specs]
+    kept = [_kept_chunks(meta, s).num_rows for s in specs]
     return blob_df.sparkSession.createDataFrame(
         pa.table({
             "column": [s[0] for s in specs],
@@ -1321,28 +1310,25 @@ def scan_stats(
     )
 
 
-def _compare(nn: pa.Array, op: str, value) -> np.ndarray:
-    """One exact comparison of a null-free decoded array against a typed
-    literal, in the column's own Arrow type (ADVICE r6 high: the old
-    to_pandas() turned a NULLABLE int64 column into float64, so values
-    above 2^53 compared inexactly and DML mutated non-matching rows).
-    Float NaN is valid data and orders LARGEST, as in Spark/DuckDB:
-    NaN >= anything, anything <= NaN, NaN == only NaN."""
-    import pyarrow.compute as pc
-
+def _compare(arr, op: str, value) -> np.ndarray:
+    """One exact comparison of a decoded array (or a typed stat column)
+    against a typed literal, in the column's own Arrow type, so int64
+    above 2^53 compares exactly.  NULL compares False.  Float NaN is
+    valid data and orders LARGEST, as in Spark/DuckDB: NaN >= anything,
+    anything <= NaN, NaN == only NaN."""
     fn = {"ge": pc.greater_equal, "le": pc.less_equal, "eq": pc.equal}[op]
-    cmp = fn(nn, pa.scalar(value, type=nn.type)).fill_null(False)
+    cmp = fn(arr, pa.scalar(value, type=arr.type)).fill_null(False)
     mm = cmp.to_numpy(zero_copy_only=False).astype(bool)
-    if pa.types.is_floating(nn.type):
+    if pa.types.is_floating(arr.type):
         # IEEE comparisons made every NaN compare false — patch them to
         # engine semantics
-        nans = pc.is_nan(nn).to_numpy(zero_copy_only=False)
+        nans = pc.is_nan(arr).fill_null(False).to_numpy(zero_copy_only=False)
         vnan = value != value
         if op == "ge":
             mm[nans] = True
         elif op == "le":
             if vnan:
-                mm[:] = True
+                mm = arr.is_valid().to_numpy(zero_copy_only=False).astype(bool)
             else:
                 mm[nans] = False
         else:
@@ -1360,22 +1346,13 @@ def _match_mask(arrs: dict, specs: list, n: int) -> np.ndarray:
     match = np.ones(n, dtype=bool)
     for c, kind, value, _ in specs:
         arr = arrs[c][0]
-        valid = arr.is_valid().to_numpy(zero_copy_only=False)
         if kind == "isnull":
-            match &= ~valid
+            match &= ~arr.is_valid().to_numpy(zero_copy_only=False).astype(bool)
             continue
-        nn = arr.drop_null() if arr.null_count else arr
-        if kind == "range":
-            ops = (("ge", value[0]), ("le", value[1]))
-        else:
-            ops = (("eq", value),)
-        mm = np.ones(len(nn), dtype=bool)
+        ops = (("ge", value[0]), ("le", value[1])) if kind == "range" else (("eq", value),)
         for op, v in ops:
             if v is not None:
-                mm &= _compare(nn, op, v)
-        m = np.zeros(n, dtype=bool)
-        m[valid] = mm
-        match &= m
+                match &= _compare(arr, op, v)
     return match
 
 
@@ -1399,16 +1376,12 @@ def delete_where(
     At 100 TB a selective predicate rewrites the same ~fraction of
     chunks a scan would read, not the table.  Predicates and literals
     validate as in scan_table_where (ValueError before any job)."""
-    have = {r["column"] for r in _meta_rows_for(blob_df)}
-    missing = sorted((set(ranges or {}) | set(eqs or {})) - have)
-    if missing:
-        raise ValueError(f"delete_where: predicate column(s) {missing} not in table")
     # rewritten chunks carry stats + bloom: old tables gain the columns
-    blob_df = _ensure_stat_cols(blob_df, bloom=True)
+    blob_df = _ensure_stat_cols(blob_df)
     specs = _predicate_specs(blob_df, ranges, eqs)
     keep = _predicate_keepset(blob_df, specs)
-    untouched = blob_df.join(keep, on=_ROW_GROUP, how="left_anti")
-    affected = blob_df.join(keep, on=_ROW_GROUP, how="left_semi")
+    untouched = blob_df.where(~keep)
+    affected = blob_df.where(keep)
     out_schema = blob_df.schema
 
     import functools
@@ -1481,28 +1454,24 @@ def update_where(
     scan_table_where (ValueError before any job)."""
     if not assignments:
         raise ValueError("update_where needs at least one assignment")
-    meta_rows = _meta_rows_for(blob_df)
-    have = {r["column"] for r in meta_rows}
-    missing = sorted(
-        (set(assignments) | set(ranges or {}) | set(eqs or {})) - have
-    )
+    dtype_of = {r["column"]: r["dtype"] for r in _meta_rows_for(blob_df)}
+    missing = sorted((set(assignments) | set(ranges or {}) | set(eqs or {})) - set(dtype_of))
     if missing:
         raise ValueError(f"update_where: column(s) {missing} not in table")
     # SET values (ISO strings from the CLI included) convert on the
     # driver, so a bad literal fails here, not in an executor mid-write
-    dtype_of = {r["column"]: r["dtype"] for r in meta_rows}
     assignments = {
         c: None if v is None else _typed_value(c, v, dtype_of[c])
         for c, v in assignments.items()
     }
-    blob_df = _ensure_stat_cols(blob_df, bloom=True)
+    blob_df = _ensure_stat_cols(blob_df)
     specs = _predicate_specs(blob_df, ranges, eqs)
     set_cols = sorted(assignments)
     pred_cols = sorted({c for c, _, _, _ in specs})
     group_cols = sorted(set(set_cols) | set(pred_cols))
     keep = _predicate_keepset(blob_df, specs)
-    untouched = blob_df.join(keep, on=_ROW_GROUP, how="left_anti")
-    in_keep = blob_df.join(keep, on=_ROW_GROUP, how="left_semi")
+    untouched = blob_df.where(~keep)
+    in_keep = blob_df.where(keep)
     passthrough = untouched.unionByName(
         in_keep.where(~F.col("column").isin(set_cols))
     )
@@ -1510,8 +1479,6 @@ def update_where(
     out_schema = blob_df.schema
 
     def rewrite_group(key, pdf):
-        import pyarrow.compute as pc
-
         arrs: dict[str, tuple] = {}
         for _, r in pdf.iterrows():
             arr, dtype = arrow_chunk.decode_arrow_column(r["data"])
@@ -1788,7 +1755,7 @@ def write_encoded(
     # the manifest on disk just changed — a cached (col_idx, dtype) map
     # for this path is now stale and would silently drive decode with
     # the OLD schema after an overwrite-recast; drop it
-    _META_CACHE.pop(path, None)
+    _MANIFEST_CACHE.pop(path, None)
     # reserved keys ride the same KV table as user metadata; the sha
     # format marker lets verify distinguish "canonical sha definition
     # changed since this table was written" from real corruption
@@ -1839,8 +1806,10 @@ def read_sha_format(spark: SparkSession, path: str) -> int:
 
 def read_encoded(spark: SparkSession, path: str) -> DataFrame:
     df = spark.read.parquet(f"{path}/blobs")
-    # remember the manifest sibling: scan/decode resolve dtypes from it
-    # with zero probe jobs on the blob table (see _manifest_meta)
+    # remember the manifest sibling: scan/decode resolve dtypes and
+    # prune from it with zero jobs on the blob table (_manifest_meta),
+    # as it is on disk now
+    _MANIFEST_CACHE.pop(path, None)
     df._pjs_meta_path = path
     return df
 
@@ -1860,14 +1829,9 @@ def union_encoded(a: DataFrame, b: DataFrame) -> DataFrame:
     key = ["column", "col_idx", "dtype"]
     if "col_idx" not in a.columns or "col_idx" not in b.columns:
         key = ["column", "dtype"]  # pre-col_idx blob tables
-    meta_a = {
-        tuple(r[k] for k in key)
-        for r in a.select(*key).distinct().collect()
-    }
-    meta_b = {
-        tuple(r[k] for k in key)
-        for r in b.select(*key).distinct().collect()
-    }
+    meta_a, meta_b = (
+        {tuple(r[k] for k in key) for r in _meta_rows_for(t)} for t in (a, b)
+    )
     if meta_a != meta_b:
         raise ValueError(
             f"union_encoded: column/col_idx/dtype sets differ: "
@@ -1902,7 +1866,7 @@ def drop_columns(blob_df: DataFrame, columns: list[str]) -> DataFrame:
     column drops with its whole subtree (leaves + validity chunks)."""
     for c in columns:
         _check_plain_name("drop_columns", c)
-    have = {r["column"] for r in blob_df.select("column").distinct().collect()}
+    have = {r["column"] for r in _meta_rows_for(blob_df)}
     tops = {_top_name(c) for c in have}
     missing = [c for c in columns if c not in tops]
     if missing:
@@ -1922,7 +1886,7 @@ def rename_column(blob_df: DataFrame, old: str, new: str) -> DataFrame:
     and 'meta@def' -> 'info@def')."""
     _check_plain_name("rename_column", old)
     _check_plain_name("rename_column", new)
-    have = {r["column"] for r in blob_df.select("column").distinct().collect()}
+    have = {r["column"] for r in _meta_rows_for(blob_df)}
     tops = {_top_name(c) for c in have}
     if old not in tops:
         raise ValueError(f"rename_column: {old!r} not in table")

@@ -324,6 +324,38 @@ def test_header_disagreeing_with_blob_is_a_clean_error():
     assert chunk.parse_header(inner)[0] == "list_string"
 
 
+def test_header_flags_must_match_the_nulls():
+    """bit0 (has nulls) is the only header flag; the encoder sets it iff
+    n_nulls > 0, and only then writes definition levels.  Any other
+    flags byte used to be ignored."""
+    arr, dtype, codec = GOLDEN_INPUTS["string_nulls_plain"]()
+    nulls, nulls_stats = arrow_chunk.encode_arrow_column(
+        arr, dtype, codec=codec, compression="UNCOMPRESSED"
+    )
+    dense, dense_stats = arrow_chunk.encode_arrow_column(pa.array([1, 2, 3]), "int64")
+    assert nulls[7] == 1 and dense[7] == 0
+
+    def patched(blob, flags, n_nulls=None):
+        out = bytearray(blob)
+        out[7] = flags
+        if n_nulls is not None:
+            struct.pack_into("<I", out, 12, n_nulls)
+        return bytes(out)
+
+    for bad, sha, reason in (
+        (patched(nulls, 0b11), nulls_stats["sha256"], "unknown chunk flags"),
+        (patched(dense, 0x80), dense_stats["sha256"], "unknown chunk flags"),
+        (patched(dense, 1), dense_stats["sha256"], "disagrees with n_nulls"),
+        (patched(nulls, 0), nulls_stats["sha256"], "disagrees with n_nulls"),
+        (patched(nulls, 0, n_nulls=0), nulls_stats["sha256"], "level bytes"),
+    ):
+        with pytest.raises(ValueError, match=reason):
+            chunk.parse_header(memoryview(bad))
+        with pytest.raises(ValueError, match=reason):
+            arrow_chunk.decode_arrow_column(bad)
+        assert not arrow_chunk.verify_arrow(bad, sha), reason
+
+
 def test_sliced_arrow_input():
     base = pa.array(["padpad"] * 10 + ["v%d" % i for i in range(500)])
     sliced = base.slice(10, 400)

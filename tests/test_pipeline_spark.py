@@ -3,6 +3,9 @@ round-trip (/root/reference/test/integration.js:202-261) re-expressed
 over testdata + the synthetic source-code table, with sha256
 bit-identity (BASELINE.json:15)."""
 
+import datetime
+import decimal
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -683,11 +686,12 @@ def test_scan_eq_tz_aware_timestamp(spark):
 
 
 def test_keepset_broadcast_guard(spark, monkeypatch):
-    """Selective scans broadcast the kept row-group set (guaranteed —
-    no shuffle-write of blob bytes); above _KEEPSET_COLLECT_ROWS the
-    guard falls back to a plain semi-join (AQE picks the strategy), so
-    an unselective predicate can never OOM the driver on a 'pruning'
-    broadcast.  Results are identical either way."""
+    """Selective scans prune on the driver and hand the kept row groups
+    to the blob scan as a literal filter — no join, so no blob bytes
+    shuffle for the keep-set; above _KEEPSET_COLLECT_ROWS kept groups
+    the plan carries no row-group filter at all, so an unselective
+    predicate can never blow up the plan or the driver.  Results are
+    identical either way (the residual is exact)."""
     import contextlib
     import io
 
@@ -704,22 +708,100 @@ def test_keepset_broadcast_guard(spark, monkeypatch):
         sel = pipeline.scan_table_where(
             blobs, ranges={"l_orderkey": (100, 400)}, columns=["l_quantity"]
         )
-        # the selective path carries an explicit broadcast HINT —
-        # guaranteed broadcast regardless of size estimates
-        assert "ResolvedHint" in plan_of(sel)
+        plan = plan_of(sel)
+        assert "Join" not in plan
+        assert "named_struct(part_id" in plan  # the row-group filter
         monkeypatch.setattr(pipeline, "_KEEPSET_COLLECT_ROWS", 0)
         fallback = pipeline.scan_table_where(
             blobs, ranges={"l_orderkey": (100, 400)}, columns=["l_quantity"]
         )
-        # above the guard: NO forced hint (Catalyst/AQE may still pick
-        # broadcast at this tiny scale from its own size estimate —
-        # the point is the driver is never FORCED to collect the set)
-        assert "ResolvedHint" not in plan_of(fallback)
+        plan = plan_of(fallback)
+        assert "Join" not in plan
+        assert "named_struct(part_id" not in plan
         assert sorted(r[0] for r in sel.collect()) == sorted(
             r[0] for r in fallback.collect()
         )
     finally:
         blobs.unpersist()
+
+
+def _jobs_of(spark, group, fn):
+    """(fn's result, ids of the Spark jobs it ran), read after the
+    listener bus has drained, so a late job cannot slip past."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lookup_runs_one_job(tmp_path, spark):
+    """On a table from read_encoded, pruning is decided on the driver
+    from the manifest: a scan_eq with columns is exactly one Spark job,
+    scan_stats runs none, and building DELETE / UPDATE plans runs none.
+    AQE is off for the count, as in the benchmark session (AQE runs each
+    shuffle stage as a job of its own)."""
+    df = load_table(spark, SF, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_quantity"
+    )
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df.repartition(4), chunk_rows=512), path)
+    blobs = pipeline.read_encoded(spark, path)
+    want = df.where(F.col("l_partkey") == 50).count()
+    assert want > 0
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        rows, jobs = _jobs_of(
+            spark, "lookup",
+            lambda: pipeline.scan_eq(
+                blobs, "l_partkey", 50, columns=["l_quantity"]
+            ).collect(),
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert len(rows) == want
+    assert len(jobs) == 1, jobs
+    stats, jobs = _jobs_of(
+        spark, "stats",
+        lambda: pipeline.scan_stats(blobs, eqs={"l_partkey": 50}).collect(),
+    )
+    assert jobs == []
+    assert 1 <= stats[0]["chunks_kept"] <= stats[0]["chunks_total"]
+    _, jobs = _jobs_of(
+        spark, "dml",
+        lambda: (
+            pipeline.delete_where(blobs, eqs={"l_partkey": 50}),
+            pipeline.update_where(blobs, {"l_quantity": 1.0}, eqs={"l_partkey": 50}),
+        ),
+    )
+    assert jobs == []
+
+
+def test_schema_ops_read_the_manifest(tmp_path, spark):
+    """drop_columns, rename_column and the CLI's dtype resolver read the
+    column set from the manifest of a read_encoded table: no Spark job
+    (each used to run its own distinct job)."""
+    from parquetjs_spark import cli
+
+    df = load_table(spark, SF, "region")
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df), path)
+    blobs = pipeline.read_encoded(spark, path)
+    (dropped, renamed, dtype), jobs = _jobs_of(
+        spark, "schema_ops",
+        lambda: (
+            pipeline.drop_columns(blobs, ["r_name"]),
+            pipeline.rename_column(blobs, "r_name", "name"),
+            cli._manifest_dtypes(spark, pipeline, path)("r_regionkey"),
+        ),
+    )
+    assert jobs == []
+    assert dtype == pipeline.logical_dtype(df.schema["r_regionkey"].dataType)
+    assert pipeline.decode_table(dropped).columns == ["r_regionkey"]
+    assert pipeline.decode_table(renamed).columns == ["r_regionkey", "name"]
 
 
 def test_manifest_first_dtype_no_probe_jobs(tmp_path, spark):
@@ -1059,38 +1141,96 @@ def test_scan_stats_observability(spark):
         blobs.unpersist()
 
 
-def test_scan_randomized_consistency(spark):
-    """Seeded randomized probes over an int column with negatives,
-    boundary values and NULLs: scan_eq (both paths) / scan_column /
-    scan_table_where always equal the plain filter (bloom
-    false-negatives would show here as missing rows), scan_stats keeps
-    at least every chunk holding a match, and delete_where through the
-    same predicate removes exactly the matching rows."""
+_RANDOMIZED_K = {
+    # dtype: (Spark type k is created as, Spark type it is cast to,
+    # int -> k value)
+    "int64": ("long", "long", int),
+    "int32": ("int", "int", int),
+    "float64": ("double", "double", lambda v: v / 4),
+    "date": (
+        "date", "date",
+        lambda v: datetime.date(2000, 1, 1) + datetime.timedelta(days=v),
+    ),
+    # TimestampType: its stats carry a UTC offset
+    "timestamp_us": (
+        "timestamp_ntz", "timestamp",
+        lambda v: datetime.datetime(2000, 1, 1)
+        + datetime.timedelta(seconds=v, microseconds=v % 7),
+    ),
+    "decimal(10,2)": (
+        "decimal(10,2)", "decimal(10,2)", lambda v: decimal.Decimal(v).scaleb(-2)
+    ),
+    # longer than the string stats cap: truncated min, no max
+    "string": ("string", "string", lambda v: "x" * 70 + f"{v + 10000:05d}"),
+}
+
+
+def _brute_count(arr, ranges, eqs) -> int:
+    """Rows of ``arr`` matching the one-predicate ``ranges``/``eqs``,
+    by pyarrow compute (NaN compares false, as Spark's does against a
+    finite literal)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if eqs:
+        (v,) = eqs.values()
+        m = arr.is_null() if v is None else pc.equal(arr, pa.scalar(v, arr.type))
+    else:
+        ((lo, hi),) = ranges.values()
+        m = pc.and_(
+            pc.greater_equal(arr, pa.scalar(lo, arr.type)),
+            pc.less_equal(arr, pa.scalar(hi, arr.type)),
+        )
+    return int(pc.sum(pc.fill_null(m, False).cast("int64")).as_py() or 0)
+
+
+@pytest.mark.parametrize("dtype", list(_RANDOMIZED_K))
+def test_scan_randomized_consistency(spark, dtype):
+    """Seeded randomized probes over a column with negatives, boundary
+    values and NULLs (NaN rows too for float64), per dtype: scan_eq
+    (both paths) / scan_column / scan_table_where always equal a
+    pyarrow brute force (bloom false-negatives would show here as
+    missing rows), the chunk rule keeps every chunk holding a match
+    (scan_stats counts them), and delete_where through the same
+    predicate removes exactly the matching rows."""
     import numpy as np
+    import pyarrow as pa
 
     from parquetjs_spark import arrow_chunk
 
+    make_type, cast_type, make = _RANDOMIZED_K[dtype]
     rng = np.random.default_rng(11)
     # every 37th k is NULL: IS NULL finds exactly those, no comparison does
     vals = [
-        None if i % 37 == 5 else int(v)
+        None if i % 37 == 5 else make(int(v))
         for i, v in enumerate(rng.integers(-500, 500, size=4000))
     ]
-    present = [v for v in vals if v is not None]
+    if dtype == "float64":
+        # NaN rows: their chunks carry no zone map
+        vals = [float("nan") if i % 997 == 3 else v for i, v in enumerate(vals)]
+    present = [v for v in vals if v is not None and v == v]
     df = spark.createDataFrame(
-        list(enumerate(vals)), "rid long, k long"
-    ).repartition(4)
+        list(enumerate(vals)), f"rid long, k {make_type}"
+    ).select("rid", F.col("k").cast(cast_type).alias("k")).repartition(4)
     blobs = pipeline.encode_columns(df, chunk_rows=256).cache()
     total = len(vals)
-    k_chunks = [
-        arrow_chunk.decode_arrow_column(bytes(r["data"]))[0].to_pylist()
-        for r in blobs.where(F.col("column") == "k").select("data").collect()
-    ]
+    src = pa.array(vals, pipeline._pa_type_of(dtype))
+    k_chunks = {
+        (r["part_id"], r["chunk_seq"]): arrow_chunk.decode_arrow_column(
+            bytes(r["data"])
+        )[0]
+        for r in blobs.where(F.col("column") == "k").collect()
+    }
+    meta = pipeline._chunk_meta(blobs, ["k"])
 
-    def check(ranges, eqs, want, match, delete=False):
+    def check(ranges, eqs, want, delete=False):
+        (spec,) = pipeline._predicate_specs(blobs, ranges, eqs)
+        kept = pipeline._kept_chunks(meta, spec)
+        kept = set(zip(kept["part_id"].to_pylist(), kept["chunk_seq"].to_pylist()))
+        holding = {g for g, arr in k_chunks.items() if _brute_count(arr, ranges, eqs)}
+        assert kept >= holding, (ranges, eqs)
         stats = pipeline.scan_stats(blobs, ranges=ranges, eqs=eqs).collect()
-        holding = sum(1 for c in k_chunks if any(map(match, c)))
-        assert stats[0]["chunks_kept"] >= holding, (ranges, eqs)
+        assert stats[0]["chunks_kept"] == len(kept) >= len(holding), (ranges, eqs)
         got = pipeline.scan_table_where(
             blobs, ranges=ranges, eqs=eqs, columns=["rid"]
         ).count()
@@ -1102,31 +1242,27 @@ def test_scan_randomized_consistency(spark):
 
     try:
         lo_all, hi_all = min(present), max(present)
-        probes = [lo_all, hi_all, 0, -1, 1, 9999, -9999] + [
-            int(x) for x in rng.choice(present, 5)
-        ]
+        probes = [
+            lo_all, hi_all, make(0), make(-1), make(1), make(9999), make(-9999)
+        ] + [present[int(i)] for i in rng.choice(len(present), 5)]
         for i, p in enumerate(probes):
-            want = vals.count(p)
+            want = _brute_count(src, None, {"k": p})
             assert pipeline.scan_eq(blobs, "k", p).count() == want, p
             got = pipeline.scan_eq(blobs, "k", p, columns=["rid"]).count()
             assert got == want, p
-            check(None, {"k": p}, want, lambda v, p=p: v == p, delete=i < 3)
-        for i, (lo, hi) in enumerate(
-            [(-500, 500), (0, 0), (-50, 49), (600, 700), (hi_all, hi_all)]
-        ):
-            want = sum(1 for v in present if lo <= v <= hi)
+            check(None, {"k": p}, want, delete=i < 3)
+        bounds = [(make(lo), make(hi)) for lo, hi in
+                  [(-500, 500), (0, 0), (-50, 49), (600, 700)]]
+        for i, (lo, hi) in enumerate(bounds + [(hi_all, hi_all)]):
+            want = _brute_count(src, {"k": (lo, hi)}, None)
             got = pipeline.scan_column(blobs, "k", lo=lo, hi=hi).count()
             assert got == want, (lo, hi)
-            check(
-                {"k": (lo, hi)}, None, want,
-                lambda v, lo=lo, hi=hi: v is not None and lo <= v <= hi,
-                delete=i < 2,
-            )
+            check({"k": (lo, hi)}, None, want, delete=i < 2)
         n_null = vals.count(None)
         assert pipeline.scan_eq(blobs, "k", None).count() == n_null > 0
         got = pipeline.scan_eq(blobs, "k", None, columns=["rid"]).count()
         assert got == n_null
-        check(None, {"k": None}, n_null, lambda v: v is None, delete=True)
+        check(None, {"k": None}, n_null, delete=True)
     finally:
         blobs.unpersist()
 
@@ -1177,7 +1313,7 @@ def test_meta_cache_invalidated_on_overwrite(tmp_path, spark):
     blobs2 = pipeline.read_encoded(spark, path)
     out2 = pipeline.decode_table(blobs2)
     assert dict(out2.dtypes)["v"] == "bigint", (
-        "stale _META_CACHE served the pre-overwrite dtype"
+        "stale _MANIFEST_CACHE served the pre-overwrite dtype"
     )
     assert sorted(r["v"] for r in out2.collect()) == list(range(200))
     # renamed column set must also be served fresh
