@@ -79,15 +79,43 @@ def compress(name: str, data: bytes) -> bytes:
     return len(data).to_bytes(8, "little") + body
 
 
+def _max_raw_len(name: str, body_len: int) -> int | None:
+    """The most bytes ``body_len`` compressed bytes can decode to in
+    ``name``'s format; None where no useful bound exists (BROTLI, whose
+    commands copy megabytes from a few bits).
+      ZSTD   every block carries a 3-byte header and yields at most
+             128 KiB (the per-block bound ZSTD_decompressBound uses);
+      SNAPPY a 3-byte copy element yields at most 64 bytes, and no
+             element yields more per byte;
+      LZ4    a match yields at most 255 bytes per compressed byte."""
+    if name == ZSTD:
+        return -(-body_len // 3) * (128 << 10)
+    if name == SNAPPY:
+        return -(-body_len // 3) * 64
+    if name == LZ4:
+        return body_len * 255
+    return None
+
+
 def decompress(name: str, data) -> bytes:
-    """``data`` may be bytes or a zero-copy memoryview into the blob."""
+    """``data`` may be bytes or a zero-copy memoryview into the blob.  The
+    8-byte raw-length prefix sizes the output buffer, so a prefix beyond
+    what the body can yield raises ValueError before allocating."""
     if name == UNCOMPRESSED:
         return data
     if name == ZLIB:
         return zlib.decompress(data)
     if name == GZIP:
         return gzip.decompress(bytes(data))
+    if len(data) < 8:
+        raise ValueError(f"{name} section shorter than its 8-byte length prefix")
     raw_len = int.from_bytes(bytes(data[:8]), "little")
+    bound = _max_raw_len(name, len(data) - 8)
+    if bound is not None and raw_len > bound:
+        raise ValueError(
+            f"{name} length prefix {raw_len} exceeds the {bound} bytes a "
+            f"{len(data) - 8}-byte body can yield"
+        )
     return _pa_codec(name).decompress(data[8:], raw_len, asbytes=True)
 
 

@@ -19,8 +19,9 @@ Design for scale:
 
 from __future__ import annotations
 
+import functools
 import time
-from typing import Iterable, Iterator
+from typing import Iterable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -492,20 +493,6 @@ _BLOB_PA_SCHEMA = pa.schema(
     ]
 )
 
-_LOGICAL_TO_PA: dict[str, pa.DataType] = {
-    "int64": pa.int64(),
-    "int32": pa.int32(),
-    "float64": pa.float64(),
-    "float32": pa.float32(),
-    "bool": pa.bool_(),
-    "string": pa.string(),
-    "binary": pa.binary(),
-    "date": pa.date32(),
-    "timestamp_us": pa.timestamp("us"),
-    "interval_dt": pa.duration("us"),
-    "time_ns": pa.time64("ns"),
-}
-
 
 # --------------------------------------------------------------------------
 # encode stage
@@ -713,30 +700,26 @@ def decode_column(
     return rows.mapInArrow(decode_fn, schema=out_schema)
 
 
-def decode_table(
-    blob_df: DataFrame,
-    columns: list[str] | None = None,
-    meta_rows: list | None = None,
-    ordered: bool = False,
-) -> DataFrame:
-    """Reassemble the original multi-column DataFrame from the blob table —
-    the cursor/materializeRecords analogue
-    (/root/reference/lib/reader.js:51-67 ``ParquetCursor.next`` →
-    /root/reference/lib/shred.js:157-245 ``materializeRecords``), but
-    table-at-a-time: every column chunk of one (part_id, chunk_seq) row
-    group is decoded in a single grouped-Arrow task and zipped
-    positionally — no row-id join, no per-row Python.
+class _Layout(NamedTuple):
+    """How decode_table reassembles row groups: the requested nodes,
+    the flat chunk names they need, and the Arrow-side output schema
+    (columns holding a repeated group travel as their flat list leaves
+    and are rebuilt by a JVM expression, _rebuild_expr)."""
 
-    Scale shape: one shuffle keyed by (part_id, chunk_seq).  Keys are
-    high-entropy and each group is one row group (≤ chunk_rows rows ×
-    k compressed column blobs), so group memory is bounded regardless of
-    total table size; at 100 TB the shuffle moves compressed bytes only.
-    Column pruning: pass ``columns`` to decode a projection — pruned
-    chunks never leave the scan (Catalyst pushes the IN filter down to
-    the blob parquet).
-    """
-    if meta_rows is None:
-        meta_rows = _meta_rows_for(blob_df)
+    nodes: dict
+    flat_names: list
+    pa_types: dict
+    plan: list  # (kind, column, flat leaves or None), kind in node/flats
+    schema: T.StructType
+    ordered: bool
+
+
+_ORDER_COLS = ["__pid", "__cseq", "__ridx"]
+
+
+def _row_group_layout(
+    meta_rows: list, columns: list[str] | None, ordered: bool = False
+) -> _Layout:
     if not meta_rows:
         raise ValueError("blob table has no chunks")
     meta_rows = sorted(
@@ -771,11 +754,8 @@ def decode_table(
         else:
             pa_types[name] = _pa_type_of(dt)
 
-    # columns containing a repeated group are emitted as their flat list
-    # leaves by the arrow stage and rebuilt by a JVM expression (see
-    # _rebuild_expr) — structs without repetition assemble arrow-side
     plan: list[tuple[str, str, list[str] | None]] = []
-    inner_fields: list[T.StructField] = []
+    fields: list[T.StructField] = []
     for c in columns:
         if _has_liststruct(nodes[c]):
             fl = _node_flat_names(nodes[c])
@@ -786,79 +766,141 @@ def decode_table(
                     if name.endswith(STRUCT_DEF_SUFFIX)
                     else spark_type_of(flat_dtypes[name])
                 )
-                inner_fields.append(T.StructField(name, ft))
+                fields.append(T.StructField(name, ft))
         else:
             plan.append(("node", c, None))
-            inner_fields.append(T.StructField(c, _node_spark_type(nodes[c])))
+            fields.append(T.StructField(c, _node_spark_type(nodes[c])))
     if ordered:
         # write-order read-back (the reference cursor's iteration order):
         # each group emits its identity + row index, the final global
         # sort restores (partition, chunk, row) order.  Opt-in: the sort
         # is a full range-partition shuffle at scale.
-        inner_fields = inner_fields + [
-            T.StructField("__pid", T.IntegerType()),
-            T.StructField("__cseq", T.LongType()),
-            T.StructField("__ridx", T.LongType()),
+        fields += [
+            T.StructField(name, typ)
+            for name, typ in zip(_ORDER_COLS, (T.IntegerType(), T.LongType(), T.LongType()))
         ]
-    inner_schema = T.StructType(inner_fields)
-    out_names = [f.name for f in inner_fields]
+    return _Layout(nodes, flat_names, pa_types, plan, T.StructType(fields), ordered)
+
+
+def _assemble_row_group(group: pa.Table, layout: _Layout, specs: list | None = None) -> pa.Table:
+    """The one row-group reassembly, shared by the Spark decode (one
+    call per group inside the UDF) and the driver-local scan: decode
+    every chunk of ``group`` (rows of one (part_id, chunk_seq)) and zip
+    them positionally into ``layout.schema``.  ``specs`` is the exact
+    residual (_match_mask): the predicate columns decode first, a group
+    with no matching row decodes nothing else and yields an empty
+    table, and only matching rows are returned."""
+    blobs = dict(
+        zip(group.column("column").to_pylist(), arrow_chunk.binary_views(group.column("data")))
+    )
+    absent = [c for c in layout.flat_names if c not in blobs]
+    if absent:
+        raise ValueError(
+            f"row group missing column chunks: {absent} "
+            "(partial manifest? decode from a complete blob table)"
+        )
+    decoded: dict[str, pa.Array] = {}
+    match = None
+    if specs:
+        for c, _, _, _ in specs:
+            decoded[c] = arrow_chunk.decode_arrow_column(blobs[c])[0]
+        match = _match_mask(decoded, specs)
+        if not match.any():
+            return pa.table({})  # Spark's empty grouped-map result
+    for name in layout.flat_names:
+        if name not in decoded:
+            decoded[name] = arrow_chunk.decode_arrow_column(blobs[name])[0]
+    arrays = []
+    for kind, c, fl in layout.plan:
+        if kind == "node":
+            arrays.append(_assemble_node(layout.nodes[c], decoded, layout.pa_types))
+        else:
+            for name in fl:
+                a = decoded[name]
+                want_t = layout.pa_types[name]
+                arrays.append(a.cast(want_t) if a.type != want_t else a)
+    if layout.ordered:
+        n_rows = len(arrays[0]) if arrays else 0
+        pid = group.column("part_id")[0].as_py()
+        cseq = group.column("chunk_seq")[0].as_py()
+        arrays.append(pa.array(np.full(n_rows, pid, dtype=np.int32)))
+        arrays.append(pa.array(np.full(n_rows, cseq, dtype=np.int64)))
+        arrays.append(pa.array(np.arange(n_rows, dtype=np.int64)))
+    out = pa.Table.from_arrays(arrays, names=layout.schema.names)
+    return out if match is None or match.all() else out.filter(pa.array(match))
+
+
+def _decode_groups(blob_df: DataFrame, layout: _Layout, specs: list | None = None) -> DataFrame:
+    """``layout.schema`` rows of every row group in ``blob_df``, in Spark.
+    A layout of one flat column has one blob row per row group, so it
+    decodes narrow (mapInArrow); otherwise one shuffle keyed by
+    (part_id, chunk_seq) regroups the chunks."""
 
     def assemble(group: pa.Table) -> pa.Table:
-        names = group.column("column").to_pylist()
-        blobs = arrow_chunk.binary_views(group.column("data"))
-        decoded: dict[str, pa.Array] = {}
-        for i, name in enumerate(names):
-            arr, _ = arrow_chunk.decode_arrow_column(blobs[i])
-            decoded[name] = arr
-        absent = [c for c in flat_names if c not in decoded]
-        if absent:
-            raise ValueError(
-                f"row group missing column chunks: {absent} "
-                "(partial manifest? decode from a complete blob table)"
-            )
-        arrays = []
-        for kind, c, fl in plan:
-            if kind == "node":
-                arrays.append(_assemble_node(nodes[c], decoded, pa_types))
-            else:
-                for name in fl:
-                    a = decoded[name]
-                    want_t = pa_types[name]
-                    arrays.append(a.cast(want_t) if a.type != want_t else a)
-        if ordered:
-            n_rows = len(arrays[0]) if arrays else 0
-            pid = group.column("part_id")[0].as_py()
-            cseq = group.column("chunk_seq")[0].as_py()
-            arrays.append(pa.array(np.full(n_rows, pid, dtype=np.int32)))
-            arrays.append(pa.array(np.full(n_rows, cseq, dtype=np.int64)))
-            arrays.append(pa.array(np.arange(n_rows, dtype=np.int64)))
-        return pa.Table.from_arrays(arrays, names=out_names)
+        return _assemble_row_group(group, layout, specs)
 
-    pruned = blob_df.where(F.col("column").isin(flat_names)).select(
+    pruned = blob_df.where(F.col("column").isin(layout.flat_names)).select(
         "part_id", "chunk_seq", "column", "data"
     )
-    decoded_df = pruned.groupBy("part_id", "chunk_seq").applyInArrow(
-        assemble, schema=inner_schema
-    )
-    order_cols = ["__pid", "__cseq", "__ridx"]
-    if all(kind == "node" for kind, _, _ in plan):
-        if ordered:
-            return decoded_df.orderBy(*order_cols).drop(*order_cols)
-        return decoded_df
+    if len(layout.flat_names) == 1:
 
-    def colref(name: str):
-        return F.col(f"`{name}`")
+        def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for rb in batches:
+                for i in range(rb.num_rows):
+                    yield from assemble(pa.Table.from_batches([rb.slice(i, 1)])).to_batches()
 
-    exprs = []
-    for kind, c, _ in plan:
-        if kind == "node":
-            exprs.append(F.col(f"`{c}`"))
-        else:
-            exprs.append(_rebuild_expr(nodes[c], colref).alias(c))
-    if ordered:
-        out = decoded_df.select(*exprs, *[F.col(c) for c in order_cols])
-        return out.orderBy(*order_cols).drop(*order_cols)
-    return decoded_df.select(*exprs)
+        return pruned.mapInArrow(decode_fn, schema=layout.schema)
+    return pruned.groupBy("part_id", "chunk_seq").applyInArrow(assemble, schema=layout.schema)
+
+
+def _rebuild(decoded_df: DataFrame, layout: _Layout) -> DataFrame:
+    """The JVM half of decode: rebuild repeated-group columns from their
+    flat leaves (_rebuild_expr) and, for ``ordered``, sort by write
+    order.  Over a driver-local LocalRelation the projection folds on
+    the driver: no job."""
+    out = decoded_df
+    if any(kind == "flats" for kind, _, _ in layout.plan):
+
+        def colref(name: str):
+            return F.col(f"`{name}`")
+
+        exprs = [
+            F.col(f"`{c}`") if kind == "node" else _rebuild_expr(layout.nodes[c], colref).alias(c)
+            for kind, c, _ in layout.plan
+        ]
+        out = out.select(*exprs, *(_ORDER_COLS if layout.ordered else []))
+    if layout.ordered:
+        out = out.orderBy(*_ORDER_COLS).drop(*_ORDER_COLS)
+    return out
+
+
+def decode_table(
+    blob_df: DataFrame,
+    columns: list[str] | None = None,
+    meta_rows: list | None = None,
+    ordered: bool = False,
+) -> DataFrame:
+    """Reassemble the original multi-column DataFrame from the blob table —
+    the cursor/materializeRecords analogue
+    (/root/reference/lib/reader.js:51-67 ``ParquetCursor.next`` →
+    /root/reference/lib/shred.js:157-245 ``materializeRecords``), but
+    table-at-a-time: every column chunk of one (part_id, chunk_seq) row
+    group is decoded in a single grouped-Arrow task and zipped
+    positionally — no row-id join, no per-row Python.
+
+    Scale shape: one shuffle keyed by (part_id, chunk_seq).  Keys are
+    high-entropy and each group is one row group (≤ chunk_rows rows ×
+    k compressed column blobs), so group memory is bounded regardless of
+    total table size; at 100 TB the shuffle moves compressed bytes only.
+    Column pruning: pass ``columns`` to decode a projection — pruned
+    chunks never leave the scan (Catalyst pushes the IN filter down to
+    the blob parquet); a projection to one leaf chunk needs no
+    regrouping and decodes without the shuffle.
+    """
+    if meta_rows is None:
+        meta_rows = _meta_rows_for(blob_df)
+    layout = _row_group_layout(meta_rows, columns, ordered)
+    return _rebuild(_decode_groups(blob_df, layout), layout)
 
 
 def roundtrip_table(
@@ -892,7 +934,10 @@ def _ensure_stat_cols(blob_df: DataFrame) -> DataFrame:
 # (a 100 TB table's manifest is ~25 M rows); above it, column metadata
 # comes from one distinct job and lookups apply no row-group filter
 _MANIFEST_DRIVER_ROWS = 2_000_000
-_CHUNK_META = ["part_id", "chunk_seq", "column", "n_nulls", "stat_min", "stat_max", "bloom"]
+_CHUNK_META = [
+    "part_id", "chunk_seq", "column", "n_nulls", "encoded_bytes", "stat_min", "stat_max",
+    "bloom",
+]
 
 # per-table manifest, read once onto the driver with pyarrow — the
 # footer analogue (parquetjs lib/reader.js:264-282 readFooter): path ->
@@ -1105,25 +1150,6 @@ def _kept_chunks(meta: pa.Table, spec: tuple) -> pa.Table:
     return rows.filter(pa.array(keep))
 
 
-def _residual(spec: tuple, name: str | None = None):
-    """The one residual: ``spec`` as the exact row predicate over the
-    decoded column ``name`` (default: the spec's column)."""
-    column, kind, value, dtype = spec
-    vcol = F.col(f"`{name or column}`")
-    if kind == "isnull":
-        return vcol.isNull()
-    styp = spark_type_of(dtype)
-    if kind == "eq":
-        return vcol == F.lit(value).cast(styp)
-    lo, hi = value
-    pred = F.lit(True)
-    if lo is not None:
-        pred = pred & (vcol >= F.lit(lo).cast(styp))
-    if hi is not None:
-        pred = pred & (vcol <= F.lit(hi).cast(styp))
-    return pred
-
-
 def _meta_rows_for(blob_df: DataFrame) -> list:
     """(column, col_idx, dtype) rows for decode_table, resolved from the
     manifest cache when available, else one tiny distinct job on the
@@ -1147,25 +1173,40 @@ def _meta_rows_for(blob_df: DataFrame) -> list:
 # DML mask are exact) and keeps the plan and driver memory bounded
 _KEEPSET_COLLECT_ROWS = 100_000
 
+# a scan whose kept row groups hold at most this many encoded bytes (of
+# the columns it decodes) reads and decodes them on the driver, with no
+# Spark job; above it the decode runs in Spark.  Measured on local[4]
+# (CHANGES.md): where every kept row matches, the driver path's p50
+# meets the Spark path's at ~1.1 MB on TPC-H lineitem and above 10 MB
+# on source text; a lookup that keeps one row stays faster on the
+# driver to 4.7 MB.  At the cap the decoded row groups stay well under
+# Spark's 48 MB arrow.localRelationThreshold, so the result is a local
+# relation, and the driver holds at most ~10 MB more
+_LOCAL_SCAN_BYTES = 1 << 20
 
-def _predicate_keepset(blob_df: DataFrame, specs: list) -> Column:
-    """The one keep-set for scans and DML, decided on the driver: the row
-    groups every spec's chunk rule keeps, as the literal Column
-    ``part_id IN (...) AND (part_id, chunk_seq) IN (...)``; the
-    ``part_id IN`` half pushes down to Parquet, skipping other encode
-    tasks' files by footer stats.  Scans ``where(keep)``; DML rewrites
-    ``where(keep)``, passes ``where(~keep)`` through.  ``lit(True)`` (no
-    row-group filter) without driver metadata or above
-    _KEEPSET_COLLECT_ROWS groups."""
+
+def _kept_groups(blob_df: DataFrame, specs: list) -> set[tuple[int, int]] | None:
+    """The one keep-set for scans and DML, decided on the driver: the
+    (part_id, chunk_seq) row groups every spec's chunk rule keeps; None
+    without driver metadata."""
     meta = _chunk_meta(blob_df, [s[0] for s in specs])
     if meta is None:
-        return F.lit(True)
+        return None
     keep = None
     for spec in specs:
         k = _kept_chunks(meta, spec)
         groups = set(zip(k["part_id"].to_pylist(), k["chunk_seq"].to_pylist()))
         keep = groups if keep is None else keep & groups
-    if len(keep) > _KEEPSET_COLLECT_ROWS:
+    return keep
+
+
+def _keepset_filter(keep: set[tuple[int, int]] | None) -> Column:
+    """``keep`` as the literal Column ``part_id IN (...) AND (part_id,
+    chunk_seq) IN (...)``; the ``part_id IN`` half pushes down to
+    Parquet, skipping other encode tasks' files by footer stats.
+    ``lit(True)`` (no row-group filter) without a keep-set or above
+    _KEEPSET_COLLECT_ROWS groups."""
+    if keep is None or len(keep) > _KEEPSET_COLLECT_ROWS:
         return F.lit(True)
     if not keep:
         return F.lit(False)
@@ -1174,16 +1215,119 @@ def _predicate_keepset(blob_df: DataFrame, specs: list) -> Column:
     return F.expr(f"part_id IN ({parts}) AND (part_id, chunk_seq) IN ({pairs})")
 
 
+def _predicate_keepset(blob_df: DataFrame, specs: list) -> Column:
+    """The keep-set of ``specs`` as a row-group filter: DML rewrites
+    ``where(keep)`` and passes ``where(~keep)`` through."""
+    return _keepset_filter(_kept_groups(blob_df, specs))
+
+
+def _read_kept_blobs(path: str, keep: set, names: list[str]) -> pa.Table:
+    """The blob rows of ``names`` in the ``keep`` row groups of the table
+    at ``path``, read on the driver — the readRowGroup analogue
+    (parquetjs lib/reader.js:217-235).  Hive partitioning keeps a
+    partition_by_column layout's ``column`` readable."""
+    import pyarrow.dataset as pads
+
+    ds = pads.dataset(
+        f"{path}/blobs",
+        format="parquet",
+        partitioning=pads.partitioning(pa.schema([("column", pa.string())]), flavor="hive"),
+    )
+    parts = sorted({p for p, _ in keep})
+    seqs = sorted({c for _, c in keep})
+    rows = ds.to_table(
+        columns=["part_id", "chunk_seq", "column", "data"],
+        filter=pc.field("part_id").isin(parts)
+        & pc.field("chunk_seq").isin(seqs)
+        & pc.field("column").isin(names),
+    )
+    exact = [g in keep for g in zip(rows["part_id"].to_pylist(), rows["chunk_seq"].to_pylist())]
+    return rows.filter(pa.array(exact, pa.bool_())).sort_by(
+        [("part_id", "ascending"), ("chunk_seq", "ascending")]
+    )
+
+
+def _scan_local(
+    blob_df: DataFrame, keep: set | None, layout: _Layout, specs: list
+) -> pa.Table | None:
+    """The driver path: the kept row groups of a read_encoded table,
+    read, reassembled and filtered on the driver, as ``layout.schema``
+    rows; None (scan in Spark) without the manifest cache, above
+    _LOCAL_SCAN_BYTES kept encoded bytes, or when the blob files cannot
+    be opened or read.  A decode error propagates."""
+    meta = (_cached_meta(blob_df) or (None, None))[1]
+    if keep is None or meta is None:
+        return None
+    groups = pa.table({
+        "part_id": pa.array([p for p, _ in keep], pa.int32()),
+        "chunk_seq": pa.array([c for _, c in keep], pa.int64()),
+    })
+    chunks = meta.filter(pc.is_in(meta["column"], pa.array(layout.flat_names, pa.string())))
+    chunks = chunks.select(["part_id", "chunk_seq", "encoded_bytes"])
+    size = chunks.join(groups, ["part_id", "chunk_seq"], join_type="inner")["encoded_bytes"]
+    if size.null_count or (pc.sum(size).as_py() or 0) > _LOCAL_SCAN_BYTES:
+        return None
+    tables = []
+    if keep:
+        try:
+            rows = _read_kept_blobs(blob_df._pjs_meta_path, keep, layout.flat_names)
+        except (OSError, pa.ArrowException):
+            return None  # a filesystem pyarrow cannot reach: scan in Spark
+        pid = rows["part_id"].to_numpy()
+        seq = rows["chunk_seq"].to_numpy()
+        starts = np.flatnonzero(np.r_[True, (pid[1:] != pid[:-1]) | (seq[1:] != seq[:-1])])
+        for a, b in zip(starts, np.r_[starts[1:], len(pid)]):
+            t = _assemble_row_group(rows.slice(a, b - a), layout, specs)
+            if t.num_rows:
+                tables.append(t)
+    if not tables:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return to_arrow_schema(layout.schema).empty_table()
+    return pa.concat_tables(tables)
+
+
+def _scan(
+    blob_df: DataFrame,
+    specs: list,
+    columns: list[str] | None = None,
+    meta_rows: list | None = None,
+) -> DataFrame:
+    """The one scan behind scan_table_where, scan_eq and scan_column:
+    decode the kept row groups of ``columns`` plus the predicate columns
+    (default: every column), keep the rows matching ``specs`` exactly,
+    project ``columns``.  Kept groups under _LOCAL_SCAN_BYTES decode on
+    the driver into a LocalRelation (no job); otherwise Spark decodes
+    them, applying the same residual inside the decode UDF."""
+    want = columns
+    if want is not None:
+        pred_cols = dict.fromkeys(c for c, _, _, _ in specs)
+        want = list(want) + [c for c in pred_cols if c not in want]
+    layout = _row_group_layout(
+        meta_rows if meta_rows is not None else _meta_rows_for(blob_df), want
+    )
+    keep = _kept_groups(blob_df, specs)
+    local = _scan_local(blob_df, keep, layout, specs)
+    if local is not None:
+        decoded = blob_df.sparkSession.createDataFrame(local, schema=layout.schema)
+    else:
+        decoded = _decode_groups(blob_df.where(_keepset_filter(keep)), layout, specs)
+    out = _rebuild(decoded, layout)
+    if columns is not None:
+        out = out.select(*[F.col(f"`{c}`") for c in columns])
+    return out
+
+
 def _scan_one(
     blob_df: DataFrame, spec: tuple, out_name: str | None = None
 ) -> DataFrame:
-    """Decode only the kept chunks of the predicate column, then apply
-    the residual — the single-column scan behind scan_column and
-    scan_eq(columns=None)."""
+    """The single-column scan behind scan_column and
+    scan_eq(columns=None): _scan of the predicate column alone, named
+    ``out_name``.  The spec's dtype is the only metadata it needs."""
     column, _, _, dtype = spec
-    kept = blob_df.where(_predicate_keepset(blob_df, [spec]))
-    out = decode_column(kept, column, out_name=out_name, dtype=dtype)
-    return out.where(_residual(spec, out_name))
+    meta_rows = [{"column": column, "col_idx": 0, "dtype": dtype}]
+    out = _scan(blob_df, [spec], [column], meta_rows=meta_rows)
+    return out.toDF(out_name) if out_name else out
 
 
 def scan_column(
@@ -1198,14 +1342,15 @@ def scan_column(
     min/max (the Statistics struct Parquet defines,
     /root/reference/parquet.thrift:201-214 — declared by the reference,
     never written by its writer).  Chunks whose [stat_min, stat_max]
-    cannot intersect [lo, hi] are eliminated on the driver, and the
-    kept row groups reach the blob scan as a literal filter BEFORE any
-    decode work or blob bytes move; a residual row filter then exacts
-    the predicate.  At 100 TB this is the difference between decoding
+    cannot intersect [lo, hi] are eliminated on the driver BEFORE any
+    decode work or blob bytes move; the kept chunks are decoded and
+    filtered exactly.  At 100 TB this is the difference between decoding
     every chunk and touching only the ones a range-predicate query
     needs (clustered/sorted data prunes hardest — same math as Parquet
-    row-group skipping).  A blob DataFrame not from read_encoded pays
-    one metadata job up front: cache the frame, or write it first."""
+    row-group skipping).  As for scan_table_where, a small kept set of a
+    read_encoded table decodes on the driver with no Spark job.  A blob
+    DataFrame not from read_encoded pays one metadata job up front:
+    cache the frame, or write it first."""
     (spec,) = _predicate_specs(blob_df, ranges={column: (lo, hi)}, dtype=dtype)
     return _scan_one(blob_df, spec, out_name)
 
@@ -1223,13 +1368,15 @@ def scan_eq(
     writes them (/root/reference/parquet.thrift:359-361 is a TODO).
     Here every chunk of a bloomable column carries a 1024-bit bloom in
     the manifest, so ``col = value`` eliminates chunks on the driver
-    (zone maps, then the bloom) and the blob scan reads only the kept
-    row groups, through a literal filter: one Spark job on a table from
-    read_encoded.  The residual filter exacts the predicate.  On
-    unsorted data this is the pruning that zone maps cannot give (a
-    random chunk spans nearly the full key range, but its bloom rejects
-    all but ~2^-10 of foreign point probes per hash).  ``value=None`` is an
-    IS NULL lookup pruned by the n_nulls stat.
+    (zone maps, then the bloom) and only the kept row groups are read
+    and decoded.  On a table from read_encoded a lookup whose kept row
+    groups are small is answered on the driver like the reference's
+    client (readFooter, then readRowGroup): no Spark job.  The residual
+    filter exacts the predicate.  On unsorted data this is the pruning
+    that zone maps cannot give (a random chunk spans nearly the full key
+    range, but its bloom rejects all but ~2^-10 of foreign point probes
+    per hash).  ``value=None`` is an IS NULL lookup pruned by the
+    n_nulls stat.
 
     ``columns=None`` decodes just the predicate column (``dtype`` skips
     its resolution); a list reassembles whole row groups and is exactly
@@ -1258,27 +1405,22 @@ def scan_table_where(
     ``eqs`` maps column -> value (zone maps + blooms; None = IS NULL).
     A literal the column's type cannot hold raises ValueError before
     any job runs.  The keep-set is the INTERSECTION of each predicate's
-    kept row groups, decided on the driver from the chunk metadata and
-    handed to the blob scan as a literal filter (_predicate_keepset) —
-    no join; the surviving groups are decoded once and every residual
-    predicate is applied exactly.  Conjunction prunes multiplicatively:
-    at 100 TB a date range keeping 2% of groups and a key bloom keeping
-    0.1% leaves ~0.002% of chunks to decode.  ``columns`` projects the
-    output (predicate columns are decoded for the residuals either
-    way).  As for scan_eq, a blob DataFrame not from read_encoded pays
+    kept row groups, decided on the driver from the chunk metadata
+    (_kept_groups); the surviving groups are decoded once and every
+    residual predicate is applied exactly, in Arrow (_match_mask).
+    Conjunction prunes multiplicatively: at 100 TB a date range keeping
+    2% of groups and a key bloom keeping 0.1% leaves ~0.002% of chunks
+    to decode.  ``columns`` projects the output (predicate columns are
+    decoded for the residuals either way).
+
+    Where the kept groups of a read_encoded table hold at most
+    _LOCAL_SCAN_BYTES encoded bytes, the driver reads and decodes them
+    itself and the result is a local relation: no Spark job.  Otherwise
+    (and for a transformed or hand-built blob DataFrame) the kept groups
+    reach the blob scan as a literal filter and decode in one Spark
+    job.  As for scan_eq, a blob DataFrame not from read_encoded pays
     one metadata job up front."""
-    specs = _predicate_specs(blob_df, ranges, eqs)
-    pruned = blob_df.where(_predicate_keepset(blob_df, specs))
-    want = columns
-    if want is not None:
-        pred_cols = dict.fromkeys(c for c, _, _, _ in specs)
-        want = list(want) + [c for c in pred_cols if c not in want]
-    out = decode_table(pruned, want, meta_rows=_meta_rows_for(blob_df))
-    for spec in specs:
-        out = out.where(_residual(spec))
-    if columns is not None:
-        out = out.select(*[F.col(f"`{c}`") for c in columns])
-    return out
+    return _scan(blob_df, _predicate_specs(blob_df, ranges, eqs), columns)
 
 
 def scan_stats(
@@ -1336,16 +1478,16 @@ def _compare(arr, op: str, value) -> np.ndarray:
     return mm
 
 
-def _match_mask(arrs: dict, specs: list, n: int) -> np.ndarray:
-    """Exact residual-conjunction mask over decoded columns, matching
-    the Spark residual semantics of _residual: NULL never matches a
-    comparison (only isnull) — validity comes from the arrow bitmap,
-    NOT pandas notna(), which would conflate float NaN with NULL.
-    Literals are typed values from _predicate_specs, so the comparison
-    scalar always converts to the column type."""
-    match = np.ones(n, dtype=bool)
+def _match_mask(arrs: dict[str, pa.Array], specs: list) -> np.ndarray:
+    """The one row-level predicate: the exact ``specs`` conjunction over
+    the decoded columns ``arrs``, for scans (both paths) and DML.  NULL
+    never matches a comparison (only isnull) — validity comes from the
+    arrow bitmap, NOT pandas notna(), which would conflate float NaN
+    with NULL.  Literals are typed values from _predicate_specs, so the
+    comparison scalar always converts to the column type."""
+    match = np.ones(len(arrs[specs[0][0]]), dtype=bool)
     for c, kind, value, _ in specs:
-        arr = arrs[c][0]
+        arr = arrs[c]
         if kind == "isnull":
             match &= ~arr.is_valid().to_numpy(zero_copy_only=False).astype(bool)
             continue
@@ -1384,8 +1526,6 @@ def delete_where(
     affected = blob_df.where(keep)
     out_schema = blob_df.schema
 
-    import functools
-
     rewrite_group = functools.partial(
         _delete_rewrite_group, specs=specs, codec=codec,
         compression=compression,
@@ -1411,8 +1551,7 @@ def _delete_rewrite_group(key, pdf, *, specs, codec, compression):
         if r["column"] in pred_cols:
             arr, dtype = arrow_chunk.decode_arrow_column(r["data"])
             arrs[r["column"]] = (arr, dtype)
-    n = len(next(iter(arrs.values()))[0])
-    match = _match_mask(arrs, specs, n)
+    match = _match_mask({c: a for c, (a, _) in arrs.items()}, specs)
     if not match.any():
         return pdf  # zone map over-approximated: nothing to delete
     keep_mask = ~match
@@ -1483,8 +1622,7 @@ def update_where(
         for _, r in pdf.iterrows():
             arr, dtype = arrow_chunk.decode_arrow_column(r["data"])
             arrs[r["column"]] = (arr, dtype)
-        n = len(next(iter(arrs.values()))[0])
-        match = _match_mask(arrs, specs, n)
+        match = _match_mask({c: a for c, (a, _) in arrs.items()}, specs)
         sub = pdf[pdf["column"].isin(set_cols)]
         if not match.any():
             return sub  # over-approximated keep-set: nothing to change

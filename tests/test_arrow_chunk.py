@@ -324,6 +324,27 @@ def test_header_disagreeing_with_blob_is_a_clean_error():
     assert chunk.parse_header(inner)[0] == "list_string"
 
 
+@pytest.mark.parametrize("compression", ["ZSTD", "SNAPPY", "LZ4"])
+def test_hostile_raw_len_prefix_is_a_clean_error(compression):
+    """A compressed section's 8-byte raw-length prefix sizes the output
+    buffer.  A prefix no body of that size can decode to must raise
+    ValueError before allocating (it used to attempt the allocation:
+    MemoryError, or an OOM-killed worker)."""
+    arr = pa.array([f"row {i % 50}" for i in range(2000)])
+    blob, stats = arrow_chunk.encode_arrow_column(
+        arr, "string", codec=PLAIN, compression=compression
+    )
+    levels_len = chunk.parse_header(memoryview(blob))[6]
+    assert levels_len == 0
+    start = chunk._HEADER.size  # the values section, prefix first
+    bad = bytearray(blob)
+    bad[start : start + 8] = (2**40).to_bytes(8, "little")
+    with pytest.raises(ValueError, match="length prefix"):
+        arrow_chunk.decode_arrow_column(bytes(bad))
+    assert not arrow_chunk.verify_arrow(bytes(bad), stats["sha256"])
+    assert arrow_chunk.decode_arrow_column(blob)[0].to_pylist() == arr.to_pylist()
+
+
 def test_header_flags_must_match_the_nulls():
     """bit0 (has nulls) is the only header flag; the encoder sets it iff
     n_nulls > 0, and only then writes definition levels.  Any other

@@ -7,6 +7,7 @@ import datetime
 import decimal
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -738,12 +739,14 @@ def _jobs_of(spark, group, fn):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_lookup_runs_one_job(tmp_path, spark):
+def test_lookup_runs_no_job(tmp_path, spark, monkeypatch):
     """On a table from read_encoded, pruning is decided on the driver
-    from the manifest: a scan_eq with columns is exactly one Spark job,
-    scan_stats runs none, and building DELETE / UPDATE plans runs none.
-    AQE is off for the count, as in the benchmark session (AQE runs each
-    shuffle stage as a job of its own)."""
+    from the manifest: a scan_eq with columns whose kept row groups are
+    under _LOCAL_SCAN_BYTES decodes on the driver and runs no Spark job;
+    with the cap at 0 the same lookup is exactly one Spark job with the
+    same rows.  scan_stats runs none, and building DELETE / UPDATE plans
+    runs none.  AQE is off for the count, as in the benchmark session
+    (AQE runs each shuffle stage as a job of its own)."""
     df = load_table(spark, SF, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity"
     )
@@ -752,18 +755,28 @@ def test_lookup_runs_one_job(tmp_path, spark):
     blobs = pipeline.read_encoded(spark, path)
     want = df.where(F.col("l_partkey") == 50).count()
     assert want > 0
+    # the cap counts the kept row groups' encoded bytes of the decoded
+    # columns, not the table's
+    kept = pipeline._kept_groups(blobs, pipeline._predicate_specs(blobs, eqs={"l_partkey": 50}))
+    man = pq.read_table(f"{path}/manifest").to_pylist()
+    assert len(kept) < len({(r["part_id"], r["chunk_seq"]) for r in man})
+    kept_bytes = sum(
+        r["encoded_bytes"] for r in man
+        if (r["part_id"], r["chunk_seq"]) in kept and r["column"] in ("l_partkey", "l_quantity")
+    )
+    lookup = lambda: pipeline.scan_eq(blobs, "l_partkey", 50, columns=["l_quantity"]).collect()
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        rows, jobs = _jobs_of(
-            spark, "lookup",
-            lambda: pipeline.scan_eq(
-                blobs, "l_partkey", 50, columns=["l_quantity"]
-            ).collect(),
-        )
+        rows, jobs = _jobs_of(spark, "lookup", lookup)
+        assert len(rows) == want
+        assert jobs == []
+        for cap, n_jobs in ((0, 1), (kept_bytes, 0), (kept_bytes - 1, 1)):
+            monkeypatch.setattr(pipeline, "_LOCAL_SCAN_BYTES", cap)
+            got, jobs = _jobs_of(spark, f"lookup_cap{cap}", lookup)
+            assert len(jobs) == n_jobs, (cap, jobs)
+            assert sorted(got) == sorted(rows), cap
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert len(rows) == want
-    assert len(jobs) == 1, jobs
     stats, jobs = _jobs_of(
         spark, "stats",
         lambda: pipeline.scan_stats(blobs, eqs={"l_partkey": 50}).collect(),
@@ -778,6 +791,95 @@ def test_lookup_runs_one_job(tmp_path, spark):
         ),
     )
     assert jobs == []
+
+
+def _nested_rows():
+    """id, a struct with a nested struct (null groups included), a list
+    (null, empty and null-element lists) and a list of structs."""
+    rows = []
+    for i in range(600):
+        st = None if i % 7 == 0 else (i % 40, None if i % 3 else f"b{i}", (i / 8,))
+        li = None if i % 11 == 0 else [] if i % 5 == 0 else [i, None, -i]
+        ast = None if i % 9 == 0 else [(i, f"y{i}"), None] if i % 2 else []
+        rows.append((i, st, li, ast))
+    schema = (
+        "id long, st struct<a: long, b: string, inner: struct<c: double>>, "
+        "li array<long>, ast array<struct<x: long, y: string>>"
+    )
+    return rows, schema
+
+
+@pytest.mark.parametrize("case", ["struct", "list", "partition_by_column"])
+def test_driver_scan_matches_spark_scan(tmp_path, spark, monkeypatch, case):
+    """A read_encoded scan under _LOCAL_SCAN_BYTES reassembles its row
+    groups on the driver (no Spark job) — nested structs, lists, lists
+    of structs, and a partition_by_column layout included — into the
+    same rows and schema as the Spark path (cap at 0)."""
+    rows, schema = _nested_rows()
+    df = spark.createDataFrame(rows, schema).repartition(3)
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(
+        pipeline.encode_columns(df, chunk_rows=64), path,
+        partition_by_column=case == "partition_by_column",
+    )
+    blobs = pipeline.read_encoded(spark, path)
+    scans = {
+        "struct": [
+            lambda: pipeline.scan_table_where(blobs, eqs={"st.a": 12}, columns=["id", "st"]),
+            lambda: pipeline.scan_eq(blobs, "st.inner.c", 30.0, columns=["st"]),
+            lambda: pipeline.scan_table_where(blobs, eqs={"st.b": None}, ranges={"id": (0, 90)}),
+        ],
+        "list": [
+            lambda: pipeline.scan_eq(blobs, "id", 77, columns=["li", "ast"]),
+            lambda: pipeline.scan_table_where(blobs, ranges={"id": (100, 140)}),
+        ],
+        "partition_by_column": [
+            lambda: pipeline.scan_eq(blobs, "id", 77, columns=["st", "li"]),
+            lambda: pipeline.scan_column(blobs, "id", 10, 20, out_name="rid"),
+            lambda: pipeline.scan_eq(blobs, "st.a", None),
+        ],
+    }[case]
+    for i, scan in enumerate(scans):
+        (local, got), jobs = _jobs_of(spark, f"{case}{i}", lambda: (d := scan(), d.collect()))
+        assert jobs == [], i
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, "_LOCAL_SCAN_BYTES", 0)
+            (in_spark, want), jobs = _jobs_of(
+                spark, f"{case}{i}_spark", lambda: (d := scan(), d.collect())
+            )
+        assert jobs, i
+        assert 0 < len(got) < len(rows), i
+        assert local.schema == in_spark.schema, i
+        assert sorted(map(repr, got)) == sorted(map(repr, want)), i
+
+
+def test_driver_scan_falls_back_only_on_read_errors(tmp_path, spark, monkeypatch):
+    """Blob files the driver cannot open or read send a scan to the
+    Spark path (one job, same rows); a chunk that fails to decode on the
+    driver raises there and never silently falls back."""
+    df = load_table(spark, SF, "region")
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df), path)
+    blobs = pipeline.read_encoded(spark, path)
+    lookup = lambda: pipeline.scan_eq(blobs, "r_regionkey", 2, columns=["r_name"]).collect()
+    want, jobs = _jobs_of(spark, "read_ok", lookup)
+    assert jobs == [] and len(want) == 1
+
+    def unreadable(*args):
+        raise OSError("no such filesystem")
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "_read_kept_blobs", unreadable)
+        got, jobs = _jobs_of(spark, "read_failed", lookup)
+    assert jobs and got == want
+
+    def corrupt(blob):
+        raise ValueError("chunk n_nulls 9 exceeds n 3")
+
+    monkeypatch.setattr(pipeline.arrow_chunk, "decode_arrow_column", corrupt)
+    with pytest.raises(ValueError, match="exceeds n"):
+        _jobs_of(spark, "decode_failed", lookup)
+    assert list(spark.sparkContext.statusTracker().getJobIdsForGroup("decode_failed")) == []
 
 
 def test_schema_ops_read_the_manifest(tmp_path, spark):
@@ -1185,14 +1287,20 @@ def _brute_count(arr, ranges, eqs) -> int:
 
 
 @pytest.mark.parametrize("dtype", list(_RANDOMIZED_K))
-def test_scan_randomized_consistency(spark, dtype):
+def test_scan_randomized_consistency(tmp_path, spark, dtype):
     """Seeded randomized probes over a column with negatives, boundary
     values and NULLs (NaN rows too for float64), per dtype: scan_eq
     (both paths) / scan_column / scan_table_where always equal a
     pyarrow brute force (bloom false-negatives would show here as
     missing rows), the chunk rule keeps every chunk holding a match
     (scan_stats counts them), and delete_where through the same
-    predicate removes exactly the matching rows."""
+    predicate removes exactly the matching rows.  Every scan also runs
+    on the written table reopened with read_encoded, where it decodes
+    on the driver with no Spark job: its rows (as multisets) and schema
+    equal the Spark path's.  The timestamp case scans under a non-UTC
+    session time zone."""
+    import itertools
+
     import numpy as np
     import pyarrow as pa
 
@@ -1222,6 +1330,24 @@ def test_scan_randomized_consistency(spark, dtype):
         for r in blobs.where(F.col("column") == "k").collect()
     }
     meta = pipeline._chunk_meta(blobs, ["k"])
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(blobs, path)
+    local = pipeline.read_encoded(spark, path)
+    groups = itertools.count()
+
+    def scanned(scan) -> int:
+        """Rows of ``scan`` on the Spark path (the cached frame), after
+        checking the driver path (the reopened table) against them."""
+        want_df = scan(blobs)
+        want = want_df.collect()
+        (got_df, got), jobs = _jobs_of(
+            spark, f"local_scan{next(groups)}", lambda: (d := scan(local), d.collect())
+        )
+        assert jobs == []
+        assert got_df.schema == want_df.schema
+        # repr: NaN != NaN would fail a Row comparison
+        assert sorted(map(repr, got)) == sorted(map(repr, want))
+        return len(want)
 
     def check(ranges, eqs, want, delete=False):
         (spec,) = pipeline._predicate_specs(blobs, ranges, eqs)
@@ -1231,15 +1357,17 @@ def test_scan_randomized_consistency(spark, dtype):
         assert kept >= holding, (ranges, eqs)
         stats = pipeline.scan_stats(blobs, ranges=ranges, eqs=eqs).collect()
         assert stats[0]["chunks_kept"] == len(kept) >= len(holding), (ranges, eqs)
-        got = pipeline.scan_table_where(
-            blobs, ranges=ranges, eqs=eqs, columns=["rid"]
-        ).count()
+        got = scanned(
+            lambda t: pipeline.scan_table_where(t, ranges=ranges, eqs=eqs, columns=["rid"])
+        )
         assert got == want, (ranges, eqs)
         if delete:
             out = pipeline.delete_where(blobs, ranges=ranges, eqs=eqs)
             left = pipeline.decode_table(out, ["rid"]).count()
             assert left == total - want, (ranges, eqs)
 
+    if dtype == "timestamp_us":
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
     try:
         lo_all, hi_all = min(present), max(present)
         probes = [
@@ -1247,23 +1375,24 @@ def test_scan_randomized_consistency(spark, dtype):
         ] + [present[int(i)] for i in rng.choice(len(present), 5)]
         for i, p in enumerate(probes):
             want = _brute_count(src, None, {"k": p})
-            assert pipeline.scan_eq(blobs, "k", p).count() == want, p
-            got = pipeline.scan_eq(blobs, "k", p, columns=["rid"]).count()
+            assert scanned(lambda t: pipeline.scan_eq(t, "k", p)) == want, p
+            got = scanned(lambda t: pipeline.scan_eq(t, "k", p, columns=["rid"]))
             assert got == want, p
             check(None, {"k": p}, want, delete=i < 3)
         bounds = [(make(lo), make(hi)) for lo, hi in
                   [(-500, 500), (0, 0), (-50, 49), (600, 700)]]
         for i, (lo, hi) in enumerate(bounds + [(hi_all, hi_all)]):
             want = _brute_count(src, {"k": (lo, hi)}, None)
-            got = pipeline.scan_column(blobs, "k", lo=lo, hi=hi).count()
+            got = scanned(lambda t: pipeline.scan_column(t, "k", lo=lo, hi=hi))
             assert got == want, (lo, hi)
             check({"k": (lo, hi)}, None, want, delete=i < 2)
         n_null = vals.count(None)
-        assert pipeline.scan_eq(blobs, "k", None).count() == n_null > 0
-        got = pipeline.scan_eq(blobs, "k", None, columns=["rid"]).count()
+        assert scanned(lambda t: pipeline.scan_eq(t, "k", None)) == n_null > 0
+        got = scanned(lambda t: pipeline.scan_eq(t, "k", None, columns=["rid"]))
         assert got == n_null
         check(None, {"k": None}, n_null, delete=True)
     finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
         blobs.unpersist()
 
 
