@@ -1,10 +1,12 @@
 """Spark pipeline — encode/decode as vectorized Arrow-batched
-``mapInPandas`` stages (the execution model replacing the reference's
+``mapInArrow`` stages (the execution model replacing the reference's
 single-threaded write/read paths, SURVEY.md §3.4).
 
 Design for scale:
-  * All value work happens JVM->Arrow->NumPy inside ``mapInPandas``
-    (never per-row Python — BASELINE.json input_hint).
+  * All value work happens JVM->Arrow->NumPy inside ``mapInArrow`` /
+    ``applyInArrow`` (never per-row Python — BASELINE.json
+    input_hint); only the DML and compaction rewrites group through
+    ``applyInPandas``.
   * One encode task per partition; each task slices its Arrow batches
     into row-group-sized chunks (reference default 4096 rows,
     /root/reference/lib/writer.js:26) — chunk size bounds executor
@@ -12,6 +14,9 @@ Design for scale:
   * The blob/manifest table is the unit of lineage: one row per
     (partition, chunk, column) with codec, sizes, sha256 and timing —
     a killed job resumes by anti-joining done chunks (north rule).
+  * A write is one Spark job, the blob write; on a ``file:`` table the
+    driver commits ``manifest/`` and ``meta/`` itself, as the
+    reference's ``close`` appends the footer (write_encoded).
   * Skew from giant groups (repos) is defused by salted repartition
     before encode — deterministic salt, so chunk->manifest mapping is
     stable for resume.
@@ -20,7 +25,10 @@ Design for scale:
 from __future__ import annotations
 
 import functools
+import os
+import shutil
 import time
+import uuid
 from typing import Iterable, Iterator, NamedTuple
 
 import numpy as np
@@ -492,6 +500,10 @@ _BLOB_PA_SCHEMA = pa.schema(
         pa.field("data", pa.binary()),
     ]
 )
+# the manifest and meta/ files the driver writes: the names, types and
+# order Spark writes, so a table appended across both writers reads as one
+_MANIFEST_PA_SCHEMA = _BLOB_PA_SCHEMA.remove(_BLOB_PA_SCHEMA.get_field_index("data"))
+_KV_PA_SCHEMA = pa.schema([pa.field("key", pa.string()), pa.field("value", pa.string())])
 
 
 # --------------------------------------------------------------------------
@@ -1824,12 +1836,82 @@ def salted_repartition(
     return df.repartition(num_partitions, F.col(key), salt)
 
 
+def _local_path(spark: SparkSession, path: str) -> str | None:
+    """The local filesystem path of ``path`` when Spark resolves it to
+    the ``file:`` scheme, else None — the one rule for which tables the
+    driver writes and reads ``manifest/`` and ``meta/`` itself.  A path
+    without a scheme resolves against the session's default filesystem
+    (``fs.defaultFS``), as every Spark read and write of it does, so a
+    bare ``/data/t`` on an HDFS cluster is not local."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    scheme = jpath.toUri().getScheme()
+    if scheme is None:
+        scheme = jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(conf).getScheme()
+    if scheme != "file":
+        return None
+    return jpath.getFileSystem(conf).makeQualified(jpath).toUri().getPath()
+
+
+def _local_files(root: str) -> set[str]:
+    """The data files under the local directory ``root`` (none when it
+    does not exist), skipping the names Spark and pyarrow skip: those
+    starting with '.' or '_' (``_SUCCESS``, ``.crc`` side files,
+    ``_temporary``)."""
+    files = set()
+    for top, dirs, names in os.walk(root):
+        dirs[:] = [d for d in dirs if d[0] not in "._"]
+        files.update(os.path.join(top, n) for n in names if n[0] not in "._")
+    return files
+
+
 def _blob_files(reader, blobs_dir: str) -> set[str]:
     """The data files under ``blobs_dir``: a file listing, no data read."""
     try:
         return set(reader.parquet(blobs_dir).inputFiles())
     except AnalysisException:  # no blobs/ yet: the first append
         return set()
+
+
+def _commit_local(directory: str, mode: str, batches: Iterable, schema: pa.Schema) -> None:
+    """Write ``batches`` as one parquet file into the local ``directory``,
+    streamed: the driver holds one batch at a time.  Overwrite first
+    removes everything there, Spark's hidden ``.crc`` side files
+    included (Hadoop's local filesystem checks a file against a stale
+    ``.crc`` of the same name).  The file is written under a hidden
+    name and renamed into place, so no reader parses a partial file."""
+    import pyarrow.parquet as pq
+
+    if mode == "overwrite" and os.path.isdir(directory):
+        shutil.rmtree(directory)
+    os.makedirs(directory, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(directory, f".{name}.tmp")
+    with pq.ParquetWriter(tmp, schema) as out:
+        for batch in batches:
+            out.write_batch(batch)
+    os.replace(tmp, os.path.join(directory, name))
+
+
+def _local_manifest(local: str, files: list[str]) -> Iterator[pa.RecordBatch]:
+    """The manifest rows of the blob ``files`` of the local table at
+    ``local``, streamed batch by batch; ``data`` is not in the dataset
+    schema, so Parquet reads only the metadata column chunks.  Hive
+    partitioning keeps a partition_by_column layout's ``column``."""
+    import pyarrow.dataset as pads
+
+    ds = pads.dataset(
+        files,
+        format="parquet",
+        schema=_MANIFEST_PA_SCHEMA,
+        partitioning=pads.partitioning(pa.schema([("column", pa.string())]), flavor="hive"),
+        partition_base_dir=f"{local}/blobs",
+    )
+    return ds.to_batches(columns=MANIFEST_COLUMNS)
+
+
+_WRITE_MODES = ("overwrite", "append")
 
 
 def write_encoded(
@@ -1841,20 +1923,29 @@ def write_encoded(
 ) -> None:
     """Persist blobs + a pure-metadata manifest (lineage) table.  This
     is the one writer of ``blobs/``, ``manifest/`` and ``meta/``.
+    ``mode`` is "overwrite" or "append"; any other raises ValueError
+    before a job runs.
 
-    ``blob_df`` is evaluated once: the blobs are written, and the
-    manifest is then read back from the files that write produced, with
-    ``data`` pruned, so Parquet reads only their metadata column chunks.
-    The manifest is therefore a projection of the bytes on disk, the
-    footer analogue (parquetjs lib/writer.js:520-569) but
-    queryable: per-chunk codec, sizes, sha256, timing.  In append mode
-    only the files this write added are read back (a listing taken
-    before and after the write), so a streaming micro-batch costs
-    O(batch), not O(table).
+    ``blob_df`` is evaluated once, by the one Spark job that writes the
+    blobs.  The manifest is then read back from the files that write
+    produced, with ``data`` pruned, so Parquet reads only their
+    metadata column chunks.  The manifest is therefore a projection of
+    the bytes on disk, the footer analogue (parquetjs
+    lib/writer.js:520-569) but queryable: per-chunk codec, sizes,
+    sha256, timing.  In append mode only the files this write added are
+    read back (a listing taken before and after the write), so a
+    streaming micro-batch costs O(batch), not O(table).
 
     ``metadata`` is user key/value footer metadata (``setMetadata``,
     /root/reference/lib/writer.js:147-149), stored as its own tiny
-    table.
+    table, ``meta/``.
+
+    Where Spark resolves ``path`` to the ``file:`` scheme (_local_path),
+    the driver commits ``manifest/`` and ``meta/`` itself with pyarrow,
+    as parquetjs's ``close`` appends the footer in the same pass as the
+    row groups (lib/writer.js:116-142): the write is one Spark job.  On
+    any other scheme (``hdfs:``, ``s3a:``, ...) Spark reads the added
+    files back and writes both, two more jobs.
 
     ``partition_by_column=True`` lays the blob table out as one storage
     partition per encoded column.  decode_column/scan_* filter on
@@ -1864,7 +1955,10 @@ def write_encoded(
     The trade-off is one output file per (column, task) instead of one
     per task; prefer it when k (columns) is small relative to the
     desired file count."""
+    if mode not in _WRITE_MODES:
+        raise ValueError(f"write_encoded: mode must be one of {_WRITE_MODES}, not {mode!r}")
     spark = blob_df.sparkSession
+    local = _local_path(spark, path)
     blobs_dir = f"{path}/blobs"
     # basePath keeps a partition_by_column layout's `column` field when
     # individual files are read back; the schema skips footer inference
@@ -1876,20 +1970,29 @@ def write_encoded(
     before: set[str] = set()
     if mode == "append":
         kv.update(read_metadata(spark, path))
-        before = _blob_files(reader, blobs_dir)
+        if local is None:
+            before = _blob_files(reader, blobs_dir)
+        else:
+            before = _local_files(f"{local}/blobs")
     wr = blob_df.write.mode(mode)
     if partition_by_column:
         wr = wr.partitionBy("column")
     wr.parquet(blobs_dir)
-    if mode != "append":
-        written = reader.parquet(blobs_dir)
-    elif added := sorted(_blob_files(reader, blobs_dir) - before):
-        written = reader.parquet(*added)
+    if local is not None:
+        added = sorted(_local_files(f"{local}/blobs") - before)
+        _commit_local(
+            f"{local}/manifest", mode, _local_manifest(local, added), _MANIFEST_PA_SCHEMA
+        )
     else:
-        # an empty append may add no file; limit(0) plans to an empty
-        # relation, so the manifest write never re-runs the encode
-        written = blob_df.limit(0)
-    written.select(*MANIFEST_COLUMNS).write.mode(mode).parquet(f"{path}/manifest")
+        if mode != "append":
+            written = reader.parquet(blobs_dir)
+        elif added := sorted(_blob_files(reader, blobs_dir) - before):
+            written = reader.parquet(*added)
+        else:
+            # an empty append may add no file; limit(0) plans to an empty
+            # relation, so the manifest write never re-runs the encode
+            written = blob_df.limit(0)
+        written.select(*MANIFEST_COLUMNS).write.mode(mode).parquet(f"{path}/manifest")
     # the manifest on disk just changed — a cached (col_idx, dtype) map
     # for this path is now stale and would silently drive decode with
     # the OLD schema after an overwrite-recast; drop it
@@ -1901,28 +2004,45 @@ def write_encoded(
     kv[_SHA_FORMAT_KEY] = str(SHA_FORMAT_VERSION)
     for k, v in (metadata or {}).items():
         kv[str(k)] = str(v)
-    # built from Arrow: a list of tuples would launch a Python-worker
-    # job just to ship these few rows to the JVM
-    mdf = spark.createDataFrame(pa.table({"key": list(kv), "value": list(kv.values())}))
     # KV table itself is always overwrite: a resume (mode="append")
     # must not stack duplicate rows — semantics are last-write-wins
-    mdf.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    kv_table = pa.table({"key": list(kv), "value": list(kv.values())}, schema=_KV_PA_SCHEMA)
+    if local is not None:
+        _commit_local(f"{local}/meta", "overwrite", kv_table.to_batches(), _KV_PA_SCHEMA)
+    else:
+        # built from Arrow: a list of tuples would launch a Python-worker
+        # job just to ship these few rows to the JVM
+        mdf = spark.createDataFrame(kv_table)
+        mdf.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+
+
+def _read_kv(spark: SparkSession, path: str) -> dict[str, str]:
+    """The one reader of ``meta/``: every key/value pair, reserved keys
+    included, read on the driver for a local table.  Only a missing
+    ``meta/`` reads as {}; an unreadable one raises."""
+    local = _local_path(spark, path)
+    if local is not None:
+        import pyarrow.dataset as pads
+
+        if not os.path.isdir(f"{local}/meta"):
+            return {}
+        kv = pads.dataset(f"{local}/meta", format="parquet", schema=_KV_PA_SCHEMA).to_table()
+        return dict(zip(kv["key"].to_pylist(), kv["value"].to_pylist()))
+    try:
+        rows = spark.read.schema("key string, value string").parquet(f"{path}/meta").collect()
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return {}
+        raise
+    return {r["key"]: r["value"] for r in rows}
 
 
 def read_metadata(spark: SparkSession, path: str) -> dict[str, str]:
-    """User KV metadata written alongside the manifest; {} if none.
-    Reserved ``parquetjs_spark.*`` keys are engine-internal and
-    stripped (see read_sha_format)."""
-    try:
-        rows = spark.read.schema("key string, value string").parquet(
-            f"{path}/meta"
-        ).collect()
-    except Exception:
-        return {}
+    """User KV metadata written alongside the manifest; {} if the table
+    has no ``meta/``.  Reserved ``parquetjs_spark.*`` keys are
+    engine-internal and stripped (see read_sha_format)."""
     return {
-        r["key"]: r["value"]
-        for r in rows
-        if not r["key"].startswith("parquetjs_spark.")
+        k: v for k, v in _read_kv(spark, path).items() if not k.startswith("parquetjs_spark.")
     }
 
 
@@ -1931,15 +2051,7 @@ def read_sha_format(spark: SparkSession, path: str) -> int:
     Tables written before the marker existed (round ≤3 early) report 1;
     current is SHA_FORMAT_VERSION.  verify uses the mismatch to report
     'old hash format' instead of false corruption."""
-    try:
-        rows = (
-            spark.read.parquet(f"{path}/meta")
-            .where(F.col("key") == _SHA_FORMAT_KEY)
-            .collect()
-        )
-    except Exception:
-        return 1
-    return int(rows[0]["value"]) if rows else 1
+    return int(_read_kv(spark, path).get(_SHA_FORMAT_KEY, 1))
 
 
 def read_encoded(spark: SparkSession, path: str) -> DataFrame:

@@ -15,12 +15,20 @@ def assert_manifest_is_blobs(spark):
     """Check that an encoded table's manifest equals its blob table
     without ``data``, row for row, over every manifest field — wall_ms
     included, so a manifest built by a second encode (which re-times
-    every chunk) fails it."""
+    every chunk) fails it — and that its schema is the blob schema
+    without ``data``: the same names, types and order whichever writer
+    (Spark or the driver) committed it."""
+    from pyspark.sql import types as T
+
     from parquetjs_spark import pipeline
+
+    want = T.StructType([f for f in pipeline.BLOB_SCHEMA.fields if f.name != "data"])
 
     def check(path: str) -> int:
         cols = pipeline.MANIFEST_COLUMNS
-        man = pipeline.read_manifest(spark, path).select(*cols).collect()
+        manifest = pipeline.read_manifest(spark, path)
+        assert manifest.schema == want
+        man = manifest.select(*cols).collect()
         blobs = pipeline.read_encoded(spark, path).select(*cols).collect()
         assert sorted(map(repr, man)) == sorted(map(repr, blobs))
         return len(man)

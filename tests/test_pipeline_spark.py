@@ -3,12 +3,16 @@ round-trip (/root/reference/test/integration.js:202-261) re-expressed
 over testdata + the synthetic source-code table, with sha256
 bit-identity (BASELINE.json:15)."""
 
+import contextlib
 import datetime
 import decimal
+import os
 
 import pandas as pd
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from parquetjs_spark import pipeline
@@ -531,8 +535,6 @@ def test_scan_eq_bloom_pruned(spark):
 def test_write_encoded_partitioned_by_column(spark, tmp_path):
     """Storage-level layout: one partition dir per encoded column, so a
     single-column decode prunes the other columns' files entirely."""
-    import os
-
     df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
     blobs = pipeline.encode_columns(df)
     out = str(tmp_path / "enc")
@@ -546,35 +548,180 @@ def test_write_encoded_partitioned_by_column(spark, tmp_path):
     assert got == want
 
 
+@contextlib.contextmanager
+def _spark_writer(monkeypatch):
+    """A context in which write_encoded, read_metadata and
+    read_sha_format take the Spark path, as on a table whose path does
+    not resolve to ``file:``."""
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "_local_path", lambda spark, path: None)
+        yield
+
+
+def _both_writers(monkeypatch):
+    """(name, context) for the driver path and the Spark path."""
+    return (("driver", contextlib.nullcontext()), ("spark", _spark_writer(monkeypatch)))
+
+
 @pytest.mark.parametrize("partition_by_column", [False, True])
 def test_manifest_is_blob_table_without_data(
-    spark, tmp_path, assert_manifest_is_blobs, partition_by_column
+    spark, tmp_path, assert_manifest_is_blobs, monkeypatch, partition_by_column
 ):
     """write_encoded encodes once: the manifest is read back from the
-    blob files it wrote, never produced by a second encode."""
+    blob files it wrote, never produced by a second encode — by the
+    driver on a local table, by Spark on any other scheme."""
     df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
-    out = str(tmp_path / "enc")
-    pipeline.write_encoded(
-        pipeline.encode_columns(df.repartition(3), chunk_rows=200), out,
-        partition_by_column=partition_by_column,
-    )
-    assert assert_manifest_is_blobs(out) > 6
+    for writer, ctx in _both_writers(monkeypatch):
+        out = str(tmp_path / writer)
+        with ctx:
+            pipeline.write_encoded(
+                pipeline.encode_columns(df.repartition(3), chunk_rows=200), out,
+                partition_by_column=partition_by_column,
+            )
+        assert assert_manifest_is_blobs(out) > 6, writer
 
 
 def test_append_manifest_reads_back_only_the_added_files(
-    spark, tmp_path, assert_manifest_is_blobs
+    spark, tmp_path, assert_manifest_is_blobs, monkeypatch
 ):
     """An append adds manifest rows for its own blob files only: the
-    first write's rows are neither re-read nor duplicated."""
+    first write's rows are neither re-read nor duplicated, and an empty
+    append adds none — on the driver path and on the Spark path."""
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
+    for writer, ctx in _both_writers(monkeypatch):
+        out = str(tmp_path / writer)
+        with ctx:
+            pipeline.write_encoded(pipeline.encode_columns(df, chunk_rows=200), out)
+            first = assert_manifest_is_blobs(out)
+            pipeline.write_encoded(
+                pipeline.encode_columns(df.limit(300), chunk_rows=200), out,
+                mode="append",
+            )
+            assert assert_manifest_is_blobs(out) == first + 4, writer
+            pipeline.write_encoded(pipeline.encode_columns(df.limit(0)), out, mode="append")
+            assert assert_manifest_is_blobs(out) == first + 4, writer
+
+
+def test_append_across_writers_reads_as_one_manifest(
+    spark, tmp_path, assert_manifest_is_blobs, monkeypatch
+):
+    """A table first written through Spark (a non-``file:`` path) and
+    then appended to by the driver reads back as one manifest: the
+    driver's files carry Spark's names, types and order, so both Spark
+    and the driver's pyarrow read (_manifest_meta) take them together."""
     df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
     out = str(tmp_path / "enc")
-    pipeline.write_encoded(pipeline.encode_columns(df, chunk_rows=200), out)
+    with _spark_writer(monkeypatch):
+        pipeline.write_encoded(
+            pipeline.encode_columns(df, chunk_rows=200), out, metadata={"owner": "a"}
+        )
     first = assert_manifest_is_blobs(out)
     pipeline.write_encoded(
-        pipeline.encode_columns(df.limit(300), chunk_rows=200), out,
-        mode="append",
+        pipeline.encode_columns(df.limit(300), chunk_rows=200), out, mode="append"
     )
     assert assert_manifest_is_blobs(out) == first + 4
+    assert pipeline.read_metadata(spark, out) == {"owner": "a"}
+    meta, table = pipeline._manifest_meta(spark, out)
+    assert set(meta) == {"l_orderkey", "l_returnflag"}
+    assert table is not None and table.num_rows == first + 4
+
+
+def test_write_encoded_runs_one_job(tmp_path, spark, assert_manifest_is_blobs):
+    """On a local table the blob write is write_encoded's only Spark
+    job — overwrite, append and partition_by_column alike: the driver
+    commits manifest/ and meta/, and reads meta/ back with no job (so an
+    append, KV read included, is one job).  AQE is off, as in the
+    benchmark session (it runs each shuffle stage as a job of its own)."""
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
+    path, by_column = str(tmp_path / "t"), str(tmp_path / "by_column")
+    writes = (
+        ("overwrite", path, {}),
+        ("append", path, {"mode": "append"}),
+        ("partition_by_column", by_column, {"partition_by_column": True}),
+    )
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for name, out, kw in writes:
+            blobs = pipeline.encode_columns(df.repartition(2), chunk_rows=512)
+            _, jobs = _jobs_of(
+                spark, f"write_{name}",
+                lambda: pipeline.write_encoded(blobs, out, metadata={"k": name}, **kw),
+            )
+            assert len(jobs) == 1, (name, jobs)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    for out in (path, by_column):
+        assert assert_manifest_is_blobs(out) > 0
+    for read, want in ((pipeline.read_metadata, {"k": "append"}),
+                       (pipeline.read_sha_format, pipeline.SHA_FORMAT_VERSION)):
+        got, jobs = _jobs_of(spark, read.__name__, lambda: read(spark, path))
+        assert (got, jobs) == (want, [])
+
+
+def test_local_path_follows_the_qualified_scheme(spark, tmp_path):
+    """Which tables the driver commits is decided from the scheme Spark
+    resolves the path to, never the bare string: a path without a
+    scheme is local only while the session's default filesystem is."""
+    assert pipeline._local_path(spark, str(tmp_path)) == str(tmp_path)
+    assert pipeline._local_path(spark, f"file://{tmp_path}") == str(tmp_path)
+    assert pipeline._local_path(spark, "hdfs://nn:8020/data/t") is None
+    assert pipeline._local_path(spark, "s3a://bucket/data/t") is None
+    spark.conf.set("fs.defaultFS", "hdfs://nn:8020")
+    try:
+        assert pipeline._local_path(spark, "/data/t") is None
+        assert pipeline._local_path(spark, "file:/data/t") == "/data/t"
+    finally:
+        spark.conf.unset("fs.defaultFS")
+    assert pipeline._local_path(spark, "/data/t") == "/data/t"
+
+
+@pytest.mark.parametrize("writer,error", [("driver", pa.ArrowInvalid), ("spark", Py4JJavaError)])
+def test_unreadable_meta_raises(tmp_path, spark, monkeypatch, writer, error):
+    """Only a missing meta/ reads as no metadata ({} and sha format 1).
+    A truncated meta file raises from read_metadata and read_sha_format,
+    and an append then fails before it writes a blob, instead of
+    rewriting meta/ without the first run's keys."""
+    if writer == "spark":
+        monkeypatch.setattr(pipeline, "_local_path", lambda spark, path: None)
+    nope = str(tmp_path / "nope")
+    assert (pipeline.read_metadata(spark, nope), pipeline.read_sha_format(spark, nope)) == ({}, 1)
+    df = load_table(spark, SF, "region")
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df), path, metadata={"owner": "a"})
+    assert pipeline.read_metadata(spark, path) == {"owner": "a"}
+    [meta_file] = [
+        f"{path}/meta/{f}" for f in os.listdir(f"{path}/meta") if f.endswith(".parquet")
+        and f[0] not in "._"
+    ]
+    os.truncate(meta_file, os.path.getsize(meta_file) // 2)
+    blob_files = sorted(os.listdir(f"{path}/blobs"))
+    for read in (pipeline.read_metadata, pipeline.read_sha_format):
+        with pytest.raises(error):
+            read(spark, path)
+    with pytest.raises(error):
+        pipeline.write_encoded(pipeline.encode_columns(df), path, mode="append")
+    assert sorted(os.listdir(f"{path}/blobs")) == blob_files
+
+
+def test_write_encoded_rejects_other_modes(tmp_path, spark):
+    """"overwrite" and "append" are the only write modes: any other
+    Spark save mode raises ValueError before a job runs or a file is
+    written ("ignore" used to skip the blobs but replace meta/)."""
+    df = load_table(spark, SF, "region")
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df), path, metadata={"owner": "a"})
+    files = lambda: sorted((d, sorted(fs)) for d, _, fs in os.walk(path))
+    before = files()
+    blobs = pipeline.encode_columns(df)
+    for mode in ("ignore", "error", "errorifexists", "default"):
+        def attempt():
+            with pytest.raises(ValueError, match=repr(mode)):
+                pipeline.write_encoded(blobs, path, mode=mode, metadata={"owner": "b"})
+
+        _, jobs = _jobs_of(spark, f"mode_{mode}", attempt)
+        assert jobs == [], mode
+    assert files() == before
+    assert pipeline.read_metadata(spark, path) == {"owner": "a"}
 
 
 def test_time_roundtrip_spark(spark):
