@@ -130,9 +130,6 @@ def cmd_encode(args) -> int:
             # the stats pass inside runs a real Spark job: surface its
             # failures as the CLI's exit-2 contract, not a raw traceback
             df = _cluster.zorder_sort(df, zorder_cols, partitions=args.partitions)
-        except ValueError as e:  # unsupported column type etc.
-            print(f"error: {e}", file=sys.stderr)
-            return 2
         except PySparkException as e:
             print(f"error: --zorder stats pass failed: {e}", file=sys.stderr)
             return 2
@@ -431,11 +428,7 @@ def cmd_append(args) -> int:
     if args.partitions:
         src = src.repartition(args.partitions)
     new = pipeline.encode_columns(src, order, chunk_rows=args.chunk_rows)
-    try:
-        out = pipeline.union_encoded(blobs, new)
-    except ValueError as e:  # dtype mismatch etc.
-        print(f"error: {e}", file=sys.stderr)
-        return 2
+    out = pipeline.union_encoded(blobs, new)
     man = _write_rewritten(spark, args, blobs, out)
     if man is None:
         return 2
@@ -471,11 +464,7 @@ def cmd_delete(args) -> int:
     # ever breaks, max() at least reports a stable number
     per_col = blobs.groupBy("column").agg(F.sum("n").alias("rows")).collect()
     rows_before = max((r["rows"] for r in per_col), default=0)
-    try:
-        out = pipeline.delete_where(blobs, ranges=ranges, eqs=eqs)
-    except ValueError as e:
-        print(f"error: {e}", file=sys.stderr)
-        return 2
+    out = pipeline.delete_where(blobs, ranges=ranges, eqs=eqs)
     man = _write_rewritten(spark, args, blobs, out)
     if man is None:
         return 2
@@ -518,11 +507,7 @@ def cmd_update(args) -> int:
         assignments[col] = _typed_literal(dtype_of(col), raw)
     for col in args.set_null or []:
         assignments[col] = None
-    try:
-        out = pipeline.update_where(blobs, assignments, ranges=ranges, eqs=eqs)
-    except ValueError as e:
-        print(f"error: {e}", file=sys.stderr)
-        return 2
+    out = pipeline.update_where(blobs, assignments, ranges=ranges, eqs=eqs)
     man = _write_rewritten(spark, args, blobs, out)
     if man is None:
         return 2
@@ -811,7 +796,11 @@ def main(argv: list[str] | None = None) -> int:
     pv.set_defaults(fn=cmd_verify)
 
     args = p.parse_args(argv)
-    return args.fn(args)
+    try:
+        return args.fn(args)
+    except ValueError as e:  # the engine's input errors: a bad literal, dtype, meta/ ...
+        print(f"error: {e}", file=sys.stderr)
+        return 2
 
 
 if __name__ == "__main__":

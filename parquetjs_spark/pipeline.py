@@ -5,8 +5,8 @@ single-threaded write/read paths, SURVEY.md §3.4).
 Design for scale:
   * All value work happens JVM->Arrow->NumPy inside ``mapInArrow`` /
     ``applyInArrow`` (never per-row Python — BASELINE.json
-    input_hint); only the DML and compaction rewrites group through
-    ``applyInPandas``.
+    input_hint); delete, update and compact share one Arrow rewrite
+    stage (_rewrite_groups) and one row builder (_reencoded).
   * One encode task per partition; each task slices its Arrow batches
     into row-group-sized chunks (reference default 4096 rows,
     /root/reference/lib/writer.js:26) — chunk size bounds executor
@@ -24,7 +24,6 @@ Design for scale:
 
 from __future__ import annotations
 
-import functools
 import os
 import shutil
 import time
@@ -32,11 +31,11 @@ import uuid
 from typing import Iterable, Iterator, NamedTuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+from py4j.protocol import Py4JJavaError
 from pyspark import TaskContext
-from pyspark.errors import AnalysisException
+from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -794,6 +793,23 @@ def _row_group_layout(
     return _Layout(nodes, flat_names, pa_types, plan, T.StructType(fields), ordered)
 
 
+class _Chunks(dict):
+    """The decoded chunks of one row group, by column name.  A chunk
+    decodes on first access and at most once, so a reader that asks
+    for the predicate columns first (_match_mask) and stops when no row
+    matches never decodes the rest: the two-phase decode of VERDICT r6
+    #4, for scans and DML alike."""
+
+    def __init__(self, group: pa.Table):
+        super().__init__()
+        names = group.column("column").to_pylist()
+        self.blobs = dict(zip(names, arrow_chunk.binary_views(group.column("data"))))
+
+    def __missing__(self, name: str) -> pa.Array:
+        arr = self[name] = arrow_chunk.decode_arrow_column(self.blobs[name])[0]
+        return arr
+
+
 def _assemble_row_group(group: pa.Table, layout: _Layout, specs: list | None = None) -> pa.Table:
     """The one row-group reassembly, shared by the Spark decode (one
     call per group inside the UDF) and the driver-local scan: decode
@@ -802,26 +818,16 @@ def _assemble_row_group(group: pa.Table, layout: _Layout, specs: list | None = N
     residual (_match_mask): the predicate columns decode first, a group
     with no matching row decodes nothing else and yields an empty
     table, and only matching rows are returned."""
-    blobs = dict(
-        zip(group.column("column").to_pylist(), arrow_chunk.binary_views(group.column("data")))
-    )
-    absent = [c for c in layout.flat_names if c not in blobs]
+    decoded = _Chunks(group)
+    absent = [c for c in layout.flat_names if c not in decoded.blobs]
     if absent:
         raise ValueError(
             f"row group missing column chunks: {absent} "
             "(partial manifest? decode from a complete blob table)"
         )
-    decoded: dict[str, pa.Array] = {}
-    match = None
-    if specs:
-        for c, _, _, _ in specs:
-            decoded[c] = arrow_chunk.decode_arrow_column(blobs[c])[0]
-        match = _match_mask(decoded, specs)
-        if not match.any():
-            return pa.table({})  # Spark's empty grouped-map result
-    for name in layout.flat_names:
-        if name not in decoded:
-            decoded[name] = arrow_chunk.decode_arrow_column(blobs[name])[0]
+    match = _match_mask(decoded, specs) if specs else None
+    if match is not None and not match.any():
+        return pa.table({})  # Spark's empty grouped-map result
     arrays = []
     for kind, c, fl in layout.plan:
         if kind == "node":
@@ -1510,6 +1516,39 @@ def _match_mask(arrs: dict[str, pa.Array], specs: list) -> np.ndarray:
     return match
 
 
+def _reencoded(rows: pa.Table, arrays: list, codec: str, compression: str) -> pa.Table:
+    """The one row builder of every rewrite: ``rows`` with each field
+    _encode_chunk decides replaced by the encode of ``arrays[i]`` at the
+    row's own dtype.  part_id, chunk_seq, column, col_idx and dtype pass
+    through, and the rows keep the group's own Arrow schema."""
+    if not arrays:
+        return rows
+    encoded = [
+        _encode_chunk(a, dtype, codec=codec, compression=compression, fsst_state={})
+        for a, dtype in zip(arrays, rows.column("dtype").to_pylist())
+    ]
+    for i, field in enumerate(rows.schema):
+        if field.name in encoded[0]:
+            values = pa.array([e[field.name] for e in encoded], field.type)
+            rows = rows.set_column(i, field, values)
+    return rows
+
+
+def _rewrite_groups(blob_df: DataFrame, by: tuple, rewrite, **kw) -> DataFrame:
+    """The one rewrite stage of delete, update and compact: each ``by``
+    group of blob rows goes through ``rewrite(group, **kw)``, a
+    module-level ``pa.Table -> pa.Table`` transform (so it also runs on
+    a captured group with no Spark), and comes back in ``blob_df``'s
+    schema."""
+
+    # kw is bound in a plain annotated def: applyInArrow infers its eval
+    # type from the signature, and a functools.partial fails that (pyspark 4.1)
+    def fn(group: pa.Table) -> pa.Table:
+        return rewrite(group, **kw)
+
+    return blob_df.groupBy(*by).applyInArrow(fn, schema=blob_df.schema)
+
+
 def delete_where(
     blob_df: DataFrame,
     ranges: dict[str, tuple] | None = None,
@@ -1534,55 +1573,27 @@ def delete_where(
     blob_df = _ensure_stat_cols(blob_df)
     specs = _predicate_specs(blob_df, ranges, eqs)
     keep = _predicate_keepset(blob_df, specs)
-    untouched = blob_df.where(~keep)
-    affected = blob_df.where(keep)
-    out_schema = blob_df.schema
-
-    rewrite_group = functools.partial(
-        _delete_rewrite_group, specs=specs, codec=codec,
-        compression=compression,
+    rewritten = _rewrite_groups(
+        blob_df.where(keep), ("part_id", "chunk_seq"), _delete_rewrite_group,
+        specs=specs, codec=codec, compression=compression,
     )
-    rewritten = affected.groupBy("part_id", "chunk_seq").applyInPandas(
-        rewrite_group, schema=out_schema
-    )
-    return untouched.unionByName(rewritten)
+    return blob_df.where(~keep).unionByName(rewritten)
 
 
-def _delete_rewrite_group(key, pdf, *, specs, codec, compression):
+def _delete_rewrite_group(group: pa.Table, *, specs, codec, compression) -> pa.Table:
     """One (part_id, chunk_seq) group of delete_where.  Module-level so
     the decode-count contract is directly testable (see
-    tests/test_delete.py TestTwoPhaseDecode)."""
-    pred_cols = {c for c, _, _, _ in specs}
-    # two-phase decode (VERDICT r6 #4): decode the PREDICATE columns
-    # first and consult the exact mask before touching the rest — a
-    # zone-map/bloom false positive then costs len(pred_cols) decodes,
-    # not a full-group decode, mirroring update_where's group_cols
-    # restriction
-    arrs: dict[str, tuple] = {}
-    for _, r in pdf.iterrows():
-        if r["column"] in pred_cols:
-            arr, dtype = arrow_chunk.decode_arrow_column(r["data"])
-            arrs[r["column"]] = (arr, dtype)
-    match = _match_mask({c: a for c, (a, _) in arrs.items()}, specs)
+    tests/test_delete.py TestTwoPhaseDecode): a zone-map/bloom false
+    positive costs only the predicate columns' decodes."""
+    chunks = _Chunks(group)
+    match = _match_mask(chunks, specs)
     if not match.any():
-        return pdf  # zone map over-approximated: nothing to delete
-    keep_mask = ~match
-    if not keep_mask.any():
-        return pdf.iloc[0:0]  # whole group deleted, all columns
-    for _, r in pdf.iterrows():
-        if r["column"] not in arrs:
-            arr, dtype = arrow_chunk.decode_arrow_column(r["data"])
-            arrs[r["column"]] = (arr, dtype)
-    keep_pa = pa.array(keep_mask)
-    rows = []
-    for _, r in pdf.iterrows():
-        arr, dtype = arrs[r["column"]]
-        fields = _encode_chunk(
-            arr.filter(keep_pa), dtype, codec=codec, compression=compression,
-            fsst_state={},
-        )
-        rows.append(pd.Series({**r, **fields}))
-    return pd.DataFrame(rows)
+        return group  # zone map over-approximated: nothing to delete
+    if match.all():
+        return group.slice(0, 0)  # whole group deleted, all columns
+    keep = pa.array(~match)
+    arrays = [chunks[c].filter(keep) for c in group.column("column").to_pylist()]
+    return _reencoded(group, arrays, codec, compression)
 
 
 def update_where(
@@ -1618,42 +1629,37 @@ def update_where(
     blob_df = _ensure_stat_cols(blob_df)
     specs = _predicate_specs(blob_df, ranges, eqs)
     set_cols = sorted(assignments)
-    pred_cols = sorted({c for c, _, _, _ in specs})
-    group_cols = sorted(set(set_cols) | set(pred_cols))
+    group_cols = sorted(set(set_cols) | {c for c, _, _, _ in specs})
     keep = _predicate_keepset(blob_df, specs)
-    untouched = blob_df.where(~keep)
     in_keep = blob_df.where(keep)
-    passthrough = untouched.unionByName(
+    passthrough = blob_df.where(~keep).unionByName(
         in_keep.where(~F.col("column").isin(set_cols))
     )
-    rewrite_in = in_keep.where(F.col("column").isin(group_cols))
-    out_schema = blob_df.schema
-
-    def rewrite_group(key, pdf):
-        arrs: dict[str, tuple] = {}
-        for _, r in pdf.iterrows():
-            arr, dtype = arrow_chunk.decode_arrow_column(r["data"])
-            arrs[r["column"]] = (arr, dtype)
-        match = _match_mask({c: a for c, (a, _) in arrs.items()}, specs)
-        sub = pdf[pdf["column"].isin(set_cols)]
-        if not match.any():
-            return sub  # over-approximated keep-set: nothing to change
-        mask_pa = pa.array(match)
-        rows = []
-        for _, r in sub.iterrows():
-            arr, dtype = arrs[r["column"]]
-            scalar = pa.scalar(assignments[r["column"]], type=arr.type)
-            fields = _encode_chunk(
-                pc.if_else(mask_pa, scalar, arr), dtype, codec=codec,
-                compression=compression, fsst_state={},
-            )
-            rows.append(pd.Series({**r, **fields}))
-        return pd.DataFrame(rows)
-
-    rewritten = rewrite_in.groupBy("part_id", "chunk_seq").applyInPandas(
-        rewrite_group, schema=out_schema
+    rewritten = _rewrite_groups(
+        in_keep.where(F.col("column").isin(group_cols)), ("part_id", "chunk_seq"),
+        _update_rewrite_group, specs=specs, assignments=assignments, codec=codec,
+        compression=compression,
     )
     return passthrough.unionByName(rewritten)
+
+
+def _update_rewrite_group(
+    group: pa.Table, *, specs, assignments, codec, compression
+) -> pa.Table:
+    """One (part_id, chunk_seq) group of update_where: its predicate
+    and SET chunks in, its SET chunks out.  A false positive decodes
+    only the predicate columns and returns the SET chunks untouched."""
+    chunks = _Chunks(group)
+    match = _match_mask(chunks, specs)
+    rows = group.filter(pa.array([c in assignments for c in group.column("column").to_pylist()]))
+    if not match.any():
+        return rows  # over-approximated keep-set: nothing to change
+    mask = pa.array(match)
+    arrays = [
+        pc.if_else(mask, pa.scalar(assignments[c], type=chunks[c].type), chunks[c])
+        for c in rows.column("column").to_pylist()
+    ]
+    return _reencoded(rows, arrays, codec, compression)
 
 
 def compact_chunks(
@@ -1684,8 +1690,8 @@ def compact_chunks(
         fresh stats/sha/bloom), so verify_blobs and the scan pruning
         surfaces see no difference from a first-pass chunk.
 
-    Whole-partition columns are the applyInPandas working set — the
-    same bound the original encode task held."""
+    One column of one partition is one group of the Arrow rewrite stage
+    (_rewrite_groups) — the same bound the original encode task held."""
     geom = blob_df.select("part_id", "chunk_seq", "n").distinct()
     counts = geom.groupBy("part_id").agg(
         F.count("*").alias("n_chunks"), F.min("n").alias("min_n")
@@ -1696,47 +1702,46 @@ def compact_chunks(
     # affected is manifest-sized; broadcast keeps both joins shuffle-free
     passthrough = blob_df.join(F.broadcast(affected), "part_id", "left_anti")
     todo = blob_df.join(F.broadcast(affected), "part_id", "left_semi")
-    out_schema = blob_df.schema
-
-    def merge_group(key, pdf):
-        pdf = pdf.sort_values("chunk_seq").reset_index(drop=True)
-        ns = [int(v) for v in pdf["n"]]
-        buckets: list[list[int]] = []
-        cur: list[int] = []
-        acc = 0
-        for i, nv in enumerate(ns):
-            cur.append(i)
-            acc += nv
-            if acc >= target_rows:
-                buckets.append(cur)
-                cur, acc = [], 0
-        if cur:
-            if acc < min_rows and buckets:
-                buckets[-1].extend(cur)
-            else:
-                buckets.append(cur)
-        rows = []
-        for b in buckets:
-            first = pdf.iloc[b[0]]
-            if len(b) == 1:
-                rows.append(first)
-                continue
-            arrs = []
-            dtype = str(first["dtype"])
-            for i in b:
-                arr_i, dtype = arrow_chunk.decode_arrow_column(pdf["data"].iloc[i])
-                arrs.append(arr_i)
-            fields = _encode_chunk(
-                pa.concat_arrays(arrs), dtype, codec=codec,
-                compression=compression, fsst_state={},
-            )
-            rows.append(pd.Series({**first, **fields}))
-        return pd.DataFrame(rows)
-
-    compacted = todo.groupBy("part_id", "column").applyInPandas(
-        merge_group, schema=out_schema
+    compacted = _rewrite_groups(
+        todo, ("part_id", "column"), _compact_rewrite_group, min_rows=min_rows,
+        target_rows=target_rows, codec=codec, compression=compression,
     )
     return passthrough.unionByName(compacted)
+
+
+def _compact_rewrite_group(
+    group: pa.Table, *, min_rows, target_rows, codec, compression
+) -> pa.Table:
+    """One (part_id, column) group of compact_chunks: each bucket of 2+
+    chunks re-encodes as one chunk under its first chunk's identity; a
+    singleton bucket passes through with its blob bytes untouched."""
+    group = group.sort_by("chunk_seq")
+    buckets: list[list[int]] = []
+    cur: list[int] = []
+    acc = 0
+    for i, nv in enumerate(group.column("n").to_pylist()):
+        cur.append(i)
+        acc += nv
+        if acc >= target_rows:
+            buckets.append(cur)
+            cur, acc = [], 0
+    if cur:
+        if acc < min_rows and buckets:
+            buckets[-1].extend(cur)
+        else:
+            buckets.append(cur)
+    merged = [b for b in buckets if len(b) > 1]
+    blobs = arrow_chunk.binary_views(group.column("data"))
+    arrays = [
+        pa.concat_arrays([arrow_chunk.decode_arrow_column(blobs[i])[0] for i in b])
+        for b in merged
+    ]
+    # typed indices: take() of an empty untyped (null) array raises
+    singles = pa.array([b[0] for b in buckets if len(b) == 1], pa.int64())
+    firsts = pa.array([b[0] for b in merged], pa.int64())
+    return pa.concat_tables(
+        [group.take(singles), _reencoded(group.take(firsts), arrays, codec, compression)]
+    )
 
 
 VERIFY_SCHEMA = T.StructType(
@@ -2019,22 +2024,23 @@ def write_encoded(
 def _read_kv(spark: SparkSession, path: str) -> dict[str, str]:
     """The one reader of ``meta/``: every key/value pair, reserved keys
     included, read on the driver for a local table.  Only a missing
-    ``meta/`` reads as {}; an unreadable one raises."""
+    ``meta/`` reads as {}; an unreadable one raises ValueError, on
+    either path, with the reader's error as its cause."""
     local = _local_path(spark, path)
-    if local is not None:
-        import pyarrow.dataset as pads
-
+    try:
+        if local is None:
+            rows = spark.read.schema("key string, value string").parquet(f"{path}/meta").collect()
+            return {r["key"]: r["value"] for r in rows}
         if not os.path.isdir(f"{local}/meta"):
             return {}
+        import pyarrow.dataset as pads
+
         kv = pads.dataset(f"{local}/meta", format="parquet", schema=_KV_PA_SCHEMA).to_table()
         return dict(zip(kv["key"].to_pylist(), kv["value"].to_pylist()))
-    try:
-        rows = spark.read.schema("key string, value string").parquet(f"{path}/meta").collect()
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND":
+    except (OSError, pa.ArrowException, PySparkException, Py4JJavaError) as e:
+        if isinstance(e, AnalysisException) and e.getCondition() == "PATH_NOT_FOUND":
             return {}
-        raise
-    return {r["key"]: r["value"] for r in rows}
+        raise ValueError(f"unreadable table metadata {path}/meta ({type(e).__name__})") from e
 
 
 def read_metadata(spark: SparkSession, path: str) -> dict[str, str]:

@@ -290,3 +290,28 @@ def test_encode_zorder_flag_validation(tmp_path, spark, capsys):
                    "--cluster-by", "a"])
     assert rc == 2
     assert "conflicts" in capsys.readouterr().err
+
+
+def test_truncated_meta_exits_2(tmp_path, spark, capsys):
+    """A truncated meta file is an input error: verify, meta and a
+    rewrite (delete) print one error line and exit 2, no traceback."""
+    import os
+
+    enc = str(tmp_path / "enc")
+    df = spark.range(300).select(F.col("id").alias("rid"))
+    pipeline.write_encoded(pipeline.encode_columns(df, chunk_rows=64), enc)
+    [meta_file] = [
+        f"{enc}/meta/{f}" for f in os.listdir(f"{enc}/meta")
+        if f.endswith(".parquet") and f[0] not in "._"
+    ]
+    os.truncate(meta_file, os.path.getsize(meta_file) // 2)
+    capsys.readouterr()
+    for argv in (
+        ["verify", "--input", enc],
+        ["meta", "--input", enc],
+        ["delete", "--input", enc, "--output", str(tmp_path / "out"),
+         "--range", "rid:0..10"],
+    ):
+        assert cli.main(argv) == 2, argv
+        err = capsys.readouterr().err
+        assert err.startswith("error: ") and f"{enc}/meta" in err, argv

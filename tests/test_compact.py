@@ -84,6 +84,27 @@ class TestCompact:
         )
         assert bad == 0
 
+    def test_every_bucket_merges(self, spark, runty):
+        """target_rows=2048 puts all of [512, 512, 276] in one bucket in
+        every partition: no chunk passes through as a singleton."""
+        df, blobs = runty
+        out = pipeline.compact_chunks(blobs, min_rows=300, target_rows=2048).cache()
+        try:
+            geom = out.select("part_id", "chunk_seq", "n").distinct().collect()
+            assert sorted(r["n"] for r in geom) == [1300] * 4
+            tot = {
+                r["column"]: r["rows"]
+                for r in out.groupBy("column").agg(F.sum("n").alias("rows")).collect()
+            }
+            assert tot == {"rid": 5200, "k": 5200, "s": 5200}
+            assert pipeline.verify_blobs(out).where(~F.col("ok")).count() == 0
+            back = pipeline.decode_table(out, ["rid", "k", "s"])
+            assert sorted(map(tuple, back.collect())) == sorted(
+                map(tuple, df.collect())
+            )
+        finally:
+            out.unpersist()
+
     def test_single_chunk_partition_untouched(self, spark):
         df = spark.range(100).select(F.col("id").alias("x")).coalesce(1)
         blobs = pipeline.encode_columns(df, chunk_rows=512)

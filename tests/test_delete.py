@@ -106,6 +106,20 @@ class TestDeleteWhere:
             pipeline.delete_where(blobs, eqs={"nope": 1})
 
 
+def test_dml_and_compact_plan_through_the_arrow_stage(spark, encoded):
+    """delete, update and compact rewrite through one grouped Arrow
+    stage; no pandas UDF is left in their plans."""
+    _, blobs = encoded
+    for out in (
+        pipeline.delete_where(blobs, ranges={"rid": (1000, 1999)}),
+        pipeline.update_where(blobs, {"k": 0}, ranges={"rid": (1000, 1999)}),
+        pipeline.compact_chunks(blobs, min_rows=300, target_rows=2048),
+    ):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInArrow" in plan
+        assert "FlatMapGroupsInPandas" not in plan
+
+
 def test_cli_delete_roundtrip(tmp_path, spark, capsys):
     src = str(tmp_path / "src.parquet")
     enc = str(tmp_path / "enc")
@@ -318,11 +332,12 @@ class TestExactInt64Residual:
 
 
 class TestTwoPhaseDecode:
-    """VERDICT r6 #4: on a zone-map false positive, delete_where decodes
-    only the predicate columns of the over-approximated group (the
-    rewrite body is module-level so the decode count is observable)."""
+    """VERDICT r6 #4: on a zone-map false positive, delete_where and
+    update_where decode only the predicate columns of the
+    over-approximated group (the Arrow rewrite bodies are module-level,
+    so the decode count is observable on a captured group)."""
 
-    def _group_pdf(self, spark):
+    def _group(self, spark):
         df = (
             spark.range(1024)
             .select(
@@ -332,13 +347,9 @@ class TestTwoPhaseDecode:
             )
             .coalesce(1)
         )
-        return pipeline.encode_columns(df, chunk_rows=1024).toPandas()
+        return pipeline.encode_columns(df, chunk_rows=1024).toArrow()
 
-    def test_false_positive_group_decodes_pred_cols_only(self, spark, monkeypatch):
-        from pyspark.sql import types as T
-
-        pdf = self._group_pdf(spark)
-        assert sorted(pdf["column"]) == ["k", "rid", "s"]
+    def _count_decodes(self, monkeypatch):
         counted = {"n": 0}
         real = pipeline.arrow_chunk.decode_arrow_column
 
@@ -349,36 +360,50 @@ class TestTwoPhaseDecode:
         monkeypatch.setattr(
             pipeline.arrow_chunk, "decode_arrow_column", spy
         )
+        return counted
+
+    def _false_positive_specs(self):
+        from pyspark.sql import types as T
+
         # conjunction whose per-column keep-sets both hold the group but
         # whose exact mask matches no row: rid = 5 has k = 0, not 2
-        specs = [
+        return [
             ("k", "eq", 2, T.LongType()),
             ("rid", "eq", 5, T.LongType()),
         ]
+
+    def test_false_positive_group_decodes_pred_cols_only(self, spark, monkeypatch):
+        group = self._group(spark)
+        assert sorted(group["column"].to_pylist()) == ["k", "rid", "s"]
+        counted = self._count_decodes(monkeypatch)
         out = pipeline._delete_rewrite_group(
-            None, pdf, specs=specs, codec="auto", compression="auto"
+            group, specs=self._false_positive_specs(), codec="auto",
+            compression="auto",
         )
         # untouched pass-through, after decoding ONLY the 2 pred chunks
-        assert out is pdf
+        assert out is group
         assert counted["n"] == 2
 
     def test_real_match_still_decodes_all(self, spark, monkeypatch):
         from pyspark.sql import types as T
 
-        pdf = self._group_pdf(spark)
-        counted = {"n": 0}
-        real = pipeline.arrow_chunk.decode_arrow_column
-
-        def spy(blob):
-            counted["n"] += 1
-            return real(blob)
-
-        monkeypatch.setattr(
-            pipeline.arrow_chunk, "decode_arrow_column", spy
-        )
+        group = self._group(spark)
+        counted = self._count_decodes(monkeypatch)
         specs = [("rid", "eq", 5, T.LongType())]
         out = pipeline._delete_rewrite_group(
-            None, pdf, specs=specs, codec="auto", compression="auto"
+            group, specs=specs, codec="auto", compression="auto"
         )
         assert counted["n"] == 3  # pred chunk + the 2 remaining columns
-        assert sorted(out["n"]) == [1023, 1023, 1023]
+        assert sorted(out["n"].to_pylist()) == [1023, 1023, 1023]
+
+    def test_update_false_positive_decodes_pred_cols_only(self, spark, monkeypatch):
+        group = self._group(spark)
+        counted = self._count_decodes(monkeypatch)
+        out = pipeline._update_rewrite_group(
+            group, specs=self._false_positive_specs(), assignments={"s": "x"},
+            codec="auto", compression="auto",
+        )
+        # the SET chunk comes back as it went in, never decoded
+        assert counted["n"] == 2
+        [want] = [r for r in group.to_pylist() if r["column"] == "s"]
+        assert out.to_pylist() == [want]

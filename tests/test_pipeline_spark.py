@@ -7,6 +7,7 @@ import contextlib
 import datetime
 import decimal
 import os
+import re
 
 import pandas as pd
 import pyarrow as pa
@@ -675,12 +676,14 @@ def test_local_path_follows_the_qualified_scheme(spark, tmp_path):
     assert pipeline._local_path(spark, "/data/t") == "/data/t"
 
 
-@pytest.mark.parametrize("writer,error", [("driver", pa.ArrowInvalid), ("spark", Py4JJavaError)])
-def test_unreadable_meta_raises(tmp_path, spark, monkeypatch, writer, error):
+@pytest.mark.parametrize("writer,cause", [("driver", pa.ArrowInvalid), ("spark", Py4JJavaError)])
+def test_unreadable_meta_raises(tmp_path, spark, monkeypatch, writer, cause):
     """Only a missing meta/ reads as no metadata ({} and sha format 1).
-    A truncated meta file raises from read_metadata and read_sha_format,
-    and an append then fails before it writes a blob, instead of
-    rewriting meta/ without the first run's keys."""
+    A truncated meta file raises one ValueError naming the path, with
+    the reader's error as its cause, from read_metadata and
+    read_sha_format on both read paths, and an append then fails before
+    it writes a blob, instead of rewriting meta/ without the first
+    run's keys."""
     if writer == "spark":
         monkeypatch.setattr(pipeline, "_local_path", lambda spark, path: None)
     nope = str(tmp_path / "nope")
@@ -696,9 +699,10 @@ def test_unreadable_meta_raises(tmp_path, spark, monkeypatch, writer, error):
     os.truncate(meta_file, os.path.getsize(meta_file) // 2)
     blob_files = sorted(os.listdir(f"{path}/blobs"))
     for read in (pipeline.read_metadata, pipeline.read_sha_format):
-        with pytest.raises(error):
+        with pytest.raises(ValueError, match=re.escape(f"{path}/meta")) as e:
             read(spark, path)
-    with pytest.raises(error):
+        assert isinstance(e.value.__cause__, cause)
+    with pytest.raises(ValueError, match=re.escape(f"{path}/meta")):
         pipeline.write_encoded(pipeline.encode_columns(df), path, mode="append")
     assert sorted(os.listdir(f"{path}/blobs")) == blob_files
 
@@ -954,6 +958,41 @@ def _nested_rows():
         "li array<long>, ast array<struct<x: long, y: string>>"
     )
     return rows, schema
+
+
+@pytest.fixture(scope="module")
+def nested_blobs(spark):
+    rows, schema = _nested_rows()
+    df = spark.createDataFrame(rows, schema).repartition(3)
+    blobs = pipeline.encode_columns(df, chunk_rows=64).cache()
+    blobs.count()
+    return df, blobs
+
+
+@pytest.mark.parametrize("op", ["delete", "update", "compact"])
+def test_dml_on_nested_tables(spark, nested_blobs, op):
+    """delete, update and compact rewrite a table holding a struct
+    (with a nested struct and null groups), a list and a list of
+    structs: the decoded result equals the same operation done in Spark
+    SQL on the source, and every chunk re-verifies.  Each partition's
+    chunks are [64, 64, 64, 8] rows, so compact merges them into 2."""
+    df, blobs = nested_blobs
+    hit = F.col("id").between(100, 260)
+    out, want = {
+        "delete": lambda: (
+            pipeline.delete_where(blobs, ranges={"id": (100, 260)}), df.where(~hit)
+        ),
+        "update": lambda: (
+            pipeline.update_where(blobs, {"id": -1}, ranges={"id": (100, 260)}),
+            df.withColumn("id", F.when(hit, F.lit(-1)).otherwise(F.col("id"))),
+        ),
+        "compact": lambda: (pipeline.compact_chunks(blobs, min_rows=60, target_rows=128), df),
+    }[op]()
+    assert pipeline.verify_blobs(out).where(~F.col("ok")).count() == 0
+    got = pipeline.decode_table(out).collect()
+    assert sorted(map(repr, got)) == sorted(map(repr, want.collect()))
+    if op == "compact":
+        assert out.select("part_id", "chunk_seq").distinct().count() == 6
 
 
 @pytest.mark.parametrize("case", ["struct", "list", "partition_by_column"])
