@@ -304,18 +304,18 @@ def _decode_string_block(values_raw, nn: int, codec: str, dtype: str) -> StrBloc
     raise ValueError(f"codec {codec} unsupported for {dtype}")
 
 
-def _encode_leaf(values, dtype: str, codec: str, fsst_state, profile: str):
+def _encode_leaf(values, dtype: str, codec: str, fsst_state):
     """Select (when ``codec`` is "auto") and encode the non-null values of
     one leaf column -> (codec, values section, content bytes, selector
     info).  ``values`` is a StrBlock for string/binary, else an ndarray."""
     sel_info: dict = {}
     if dtype in ("string", "binary"):
         if codec == "auto":
-            codec, sel_info = _select_string_codec(values, fsst_state, profile)
+            codec, sel_info = _select_string_codec(values, fsst_state)
         raw = _encode_string_block(values, codec, fsst_state, dtype)
         return codec, raw, values.total, sel_info
     if codec == "auto":
-        codec, sel_info = chunklib.select_codec(values, dtype, fsst_state, profile)
+        codec, sel_info = chunklib.select_codec(values, dtype, fsst_state)
     raw = chunklib._encode_values(values, dtype, codec)
     content = (len(values) + 7) // 8 if dtype == "bool" else int(np.asarray(values).nbytes)
     return codec, raw, content, sel_info
@@ -335,9 +335,7 @@ def _decode_leaf(values_raw, nn: int, dtype: str, codec: str):
 # --------------------------------------------------------------------------
 
 
-def _select_string_codec(
-    block: StrBlock, fsst_state: dict | None, profile: str = "default"
-) -> tuple[str, dict]:
+def _select_string_codec(block: StrBlock, fsst_state: dict | None) -> tuple[str, dict]:
     n = block.n
     info: dict = {}
     if n == 0:
@@ -446,7 +444,7 @@ def _select_string_codec(
             if cands[INCR] > 0.92 * cands[PLAIN]:
                 cands.pop(INCR)
     info.update(cardinality=card, runs=runs, sizes=cands)
-    choice = chunklib._pick(cands, total, profile)
+    choice = min(cands, key=cands.get)
     chunklib.cache_selection(fsst_state, choice)
     return choice, info
 
@@ -674,10 +672,7 @@ def _list_from_lens(lens: np.ndarray, child: pa.Array, valid: np.ndarray) -> pa.
     return _with_nulls(dense, valid)
 
 
-def _encode_nested_list_column(
-    arr: pa.Array, dtype: str, codec: str, fsst_state: dict | None,
-    profile: str = "default",
-):
+def _encode_nested_list_column(arr: pa.Array, dtype: str, codec: str, fsst_state: dict | None):
     """Multi-level repetition (rLevelMax > 1 — the reference's
     nested-repeated shred recursion, /root/reference/lib/shred.js:75-135):
     each list level peels one count stream off and recurses on the
@@ -691,7 +686,7 @@ def _encode_nested_list_column(
     elem_dtype = dtype[len("list_") :]
     inner_blob, inner_stats = encode_arrow_column(
         flat, elem_dtype, codec=codec, compression="UNCOMPRESSED",
-        fsst_state=fsst_state, profile=profile,
+        fsst_state=fsst_state,
     )
     lens_enc = for_bp.encode(lens)
     values_raw = (
@@ -720,19 +715,16 @@ def _decode_nested_list_column(
     return _list_from_lens(lens, child, valid), f"list_{child_dtype}"
 
 
-def _encode_list_column(
-    arr: pa.Array, dtype: str, codec: str, fsst_state: dict | None,
-    profile: str = "default",
-):
+def _encode_list_column(arr: pa.Array, dtype: str, codec: str, fsst_state: dict | None):
     """Payload: u32 lens_len ++ FOR-encoded per-row counts ++
     u32 evalid_len ++ element-validity RLE (w=1; len 0 = no element
     nulls) ++ flattened NON-NULL elements under a scalar codec
     (recorded in the chunk codec byte)."""
     if dtype[len("list_") :].startswith("list_"):
-        return _encode_nested_list_column(arr, dtype, codec, fsst_state, profile)
+        return _encode_nested_list_column(arr, dtype, codec, fsst_state)
     lens, elem_values, elem_valid, valid, elem_dtype = _list_parts(arr, dtype)
     codec, elem_raw, content, sel_info = _encode_leaf(
-        elem_values, elem_dtype, codec, fsst_state, profile
+        elem_values, elem_dtype, codec, fsst_state
     )
     lens_enc = for_bp.encode(lens)
     if elem_valid.all():
@@ -794,16 +786,12 @@ def _decimal_to_arrow(vals: np.ndarray, valid: np.ndarray, p: int, sc: int) -> p
     return _with_nulls(dense, valid)
 
 
-def _encode_decimal_column(
-    arr, dtype, codec, compression, fsst_state, profile="default"
-):
+def _encode_decimal_column(arr, dtype, codec, compression, fsst_state):
     p, sc = (int(x) for x in dtype[len("decimal(") : -1].split(","))
     vals, valid = _decimal_parts(arr)
     n = len(valid)
     n_nulls = int(n - valid.sum())
-    codec, payload, content, sel_info = _encode_leaf(
-        vals, "int64", codec, fsst_state, profile
-    )
+    codec, payload, content, sel_info = _encode_leaf(vals, "int64", codec, fsst_state)
     values_raw = bytes([p, sc]) + payload
     return _assemble_blob(
         dtype, codec, compression, n, n_nulls, valid, values_raw,
@@ -861,15 +849,12 @@ def encode_arrow_column(
     codec: str = "auto",
     compression: str = "auto",
     fsst_state: dict | None = None,
-    profile: str = "default",
 ) -> tuple[bytes, dict]:
     if dtype.startswith("decimal("):
-        return _encode_decimal_column(
-            arr, dtype, codec, compression, fsst_state, profile
-        )
+        return _encode_decimal_column(arr, dtype, codec, compression, fsst_state)
     if dtype.startswith("list_"):
         values_raw, valid, codec, content_bytes, sha, sel_info = _encode_list_column(
-            arr, dtype, codec, fsst_state, profile
+            arr, dtype, codec, fsst_state
         )
         n = len(valid)
         n_nulls = int(n - valid.sum())
@@ -893,9 +878,7 @@ def encode_arrow_column(
             hashes = bloomlib.hash_ints(np.asarray(values, dtype=np.int64))
         bloom_bits = bloomlib.build_from_hashes(hashes).tolist()
 
-    codec, values_raw, content_bytes, sel_info = _encode_leaf(
-        values, dtype, codec, fsst_state, profile
-    )
+    codec, values_raw, content_bytes, sel_info = _encode_leaf(values, dtype, codec, fsst_state)
     return _assemble_blob(
         dtype, codec, compression, n, n_nulls, valid, values_raw,
         content_bytes, _canonical_sha256_block(values, valid, dtype), sel_info,

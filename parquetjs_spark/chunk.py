@@ -13,8 +13,7 @@ holds what both sides of the wire agree on, and the numeric codecs:
 * the value-section dispatch for numeric, temporal and bool values
   (``_encode_values``/``_decode_values``);
 * the numeric codec selector (``select_codec``) and what it shares with
-  the string selector: sample bounds, the per-column decision cache and
-  the read-cost profile.
+  the string selector: sample bounds and the per-column decision cache.
 
 Chunk blob layout (version 1), little-endian:
 
@@ -210,51 +209,6 @@ def codec_supports(codec: str, dtype: str) -> bool:
     return codec in (PLAIN, FLBA, DICT_RLE, FSST, INCR)
 
 
-# --------------------------------------------------------------------------
-# decode-cost model for the read-optimized selector profile (VERDICT r6
-# #3).  The default profile optimizes SIZE only; for a write-once-read-
-# many corpus that can pick a codec whose decode is 50x slower than the
-# bytes it saves are worth.  ``profile="read_optimized"`` scores each
-# measured candidate as estimated READ cost per content byte:
-#
-#     cost = size / READ_IO_MBPS  +  content / DECODE_MBPS[codec]
-#
-# DECODE_MBPS are single-thread decode throughputs measured on this
-# host's representative 4096-value chunks (tests/test_codec_dict_for_fsst
-# pins the table and the selection consequences); READ_IO_MBPS models a
-# cold per-core scan bandwidth — conservative for object storage.  Under
-# this profile INCR (55 MB/s decode) and FSST (~120 MB/s) must buy
-# enormous size wins to be picked, while PLAIN/FLBA (GB/s) and the
-# numeric codecs are effectively free.
-# --------------------------------------------------------------------------
-
-READ_IO_MBPS = 200.0
-DECODE_MBPS = {
-    PLAIN: 3000.0,
-    FLBA: 3000.0,
-    DICT_RLE: 800.0,
-    FSST: 120.0,
-    INCR: 55.0,
-    FOR_BITPACK: 2000.0,
-    RLE: 1500.0,
-    BSS: 3000.0,
-    INT96: 2000.0,
-}
-
-
-def _pick(cands: dict[str, int], content_bytes: int, profile: str) -> str:
-    """Choose among measured candidate sizes; read_optimized folds the
-    decode-cost model in, the default stays pure-size (selection
-    behavior unchanged)."""
-    if profile != "read_optimized" or content_bytes <= 0:
-        return min(cands, key=cands.get)
-    return min(
-        cands,
-        key=lambda c: cands[c] / READ_IO_MBPS
-        + content_bytes / DECODE_MBPS[c],
-    )
-
-
 SAMPLE_VALUES = 4096  # selector cardinality/run sample
 # selector FSST-vs-zlib measurement sample: must be >> zlib's 32 KB
 # window or PLAIN+zlib looks artificially strong (measured on the
@@ -263,13 +217,13 @@ SAMPLE_VALUES = 4096  # selector cardinality/run sample
 # amortized by the per-column selector decision cache (SEL_CACHE_USES).
 SAMPLE_BYTES = 1 << 19
 # FSST selector-probe bounds: the PROBE table trains on a small slice
-# (training cost is ~linear in sample bytes and was the dominant
-# per-task cost of string encode once pretraining left the auto path;
-# a probe-quality table reads ~3-10% pessimistic for FSST, a bias
-# AGAINST the slow-decode codec) and the probe compresses a mid-size
-# slice (the symbol-table ratio has no compression window to fill, so
-# unlike the PLAIN+zstd side it converges at ~128 KB).  If FSST WINS,
-# the actual encoder trains a full-quality table from SAMPLE_BYTES.
+# (training cost is ~linear in sample bytes and dominates the per-task
+# cost of string encode; a probe-quality table reads ~3-10% pessimistic
+# for FSST, a bias AGAINST the slow-decode codec) and the probe
+# compresses a mid-size slice (the symbol-table ratio has no
+# compression window to fill, so unlike the PLAIN+zstd side it
+# converges at ~128 KB).  If FSST WINS, the actual encoder trains a
+# full-quality table from SAMPLE_BYTES.
 PROBE_TRAIN_BYTES = 8192
 PROBE_FSST_BYTES = 1 << 17
 SEL_CACHE_USES = 16  # chunks per task re-using one selector decision
@@ -404,16 +358,13 @@ def _decode_values(buf: memoryview, n: int, dtype: str, codec: str):
 # --------------------------------------------------------------------------
 
 
-def select_codec(
-    vals, dtype: str, fsst_state: dict | None = None, profile: str = "default"
-) -> tuple[str, dict]:
+def select_codec(vals, dtype: str, fsst_state: dict | None = None) -> tuple[str, dict]:
     """Return (codec_name, selector_stats) for the non-null values of a
     numeric, temporal or bool chunk.
 
     ``fsst_state`` is the optional per-task, per-column state dict that
-    holds the decision cache (``cached_selection``).
-    ``profile="read_optimized"`` folds the measured decode-cost model
-    into the choice (see DECODE_MBPS above); the default stays size-only."""
+    holds the decision cache (``cached_selection``).  The smallest
+    measured candidate wins."""
     n = len(vals)
     info: dict = {"n_sampled": min(n, SAMPLE_VALUES)}
     if n == 0 or dtype == "bool":
@@ -461,6 +412,6 @@ def select_codec(
         z_len = comp.size_estimate(enc)
         cands[c] = int(min(len(enc), z_len + 16) * scale)
     info.update(cardinality=ds["cardinality"], runs=ds["runs"], sizes=cands)
-    choice = _pick(cands, len(arr) * width, profile)
+    choice = min(cands, key=cands.get)
     cache_selection(fsst_state, choice)
     return choice, info

@@ -143,7 +143,7 @@ def cmd_encode(args) -> int:
         df = df.repartition(args.partitions)
 
     enc_kw = {"chunk_rows": args.chunk_rows, "codec": args.codec,
-              "compression": args.compression, "profile": args.profile}
+              "compression": args.compression}
     if args.resume_from:
         # resume: drop chunks already committed in a previous run's manifest
         done = pipeline.read_manifest(spark, args.resume_from)
@@ -321,7 +321,10 @@ def _parse_predicates(args, dtype_of):
 def _manifest_dtypes(spark, pipeline, path):
     # the pipeline's manifest cache: no Spark job for a local table, and
     # the scan that follows reads the same cached manifest
-    dtypes = {c: dt for c, (_, dt) in pipeline._manifest_meta(spark, path)[0].items()}
+    meta = pipeline._manifest_meta(spark, path)
+    if meta is None:
+        raise ValueError(f"no table manifest at {path}/manifest")
+    dtypes = {c: dt for c, (_, dt) in meta[0].items()}
 
     def dtype_of(col: str) -> str:
         if col not in dtypes:
@@ -638,14 +641,6 @@ def main(argv: list[str] | None = None) -> int:
         default="auto",
         help="force block compression (UNCOMPRESSED/ZLIB/GZIP/SNAPPY/"
         "ZSTD/LZ4/BROTLI); default: measured per chunk",
-    )
-    pe.add_argument(
-        "--profile",
-        default="default",
-        choices=["default", "read_optimized"],
-        help="selector profile: 'read_optimized' weighs each codec's "
-        "measured decode cost alongside its size, for "
-        "write-once-read-many tables (default: size only)",
     )
     pe.add_argument("--partitions", type=int, default=None)
     pe.add_argument("--salt-key", default=None, help="skewed key column to salt on")

@@ -39,7 +39,7 @@ from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from . import arrow_chunk, chunk as chunklib
+from . import arrow_chunk
 
 DEFAULT_CHUNK_ROWS = 4096  # /root/reference/lib/writer.js:26
 
@@ -540,46 +540,6 @@ def _arrow_batch_slices(
             yield tbl.to_batches(max_chunksize=pending_rows)[0]
 
 
-def pretrain_fsst_tables(
-    df: DataFrame, cols: list[str], dtypes: dict[str, str], sample_rows: int = 256
-) -> dict[str, list[bytes]]:
-    """Train one FSST symbol table per string column, driver-side, from a
-    small deterministic sample scattered across the WHOLE table: the
-    ``sample_rows`` rows with the smallest content hash (xxhash64 over
-    the string columns).  TakeOrderedAndProject keeps that cheap — a
-    k-row heap per partition, never a full sort — and the choice is a
-    pure function of content: byte-deterministic, independent of
-    partitioning, parallelism, AND row order (the old ``limit()`` read
-    the first partition's head, letting one unrepresentative repo own
-    the symbol table for a heterogeneous corpus — judge round-4 #6).
-    The table ships to every task in the UDF closure — one training for
-    the whole job instead of one per partition."""
-    from .codecs import fsst as fsstlib
-
-    str_cols = [c for c in cols if dtypes[c] in ("string", "binary")]
-    if not str_cols:
-        return {}
-    # backtick-quote: flattened struct leaves carry dotted names
-    sel = df.select(*[F.col(f"`{c}`").alias(c) for c in str_cols])
-    hcols = [F.col(f"`{c}`") for c in str_cols]
-    sample = (
-        sel.orderBy(F.xxhash64(*hcols), *hcols)
-        .limit(sample_rows)
-        .collect()
-    )
-    tables: dict[str, list[bytes]] = {}
-    for c in str_cols:
-        vals = [
-            r[c].encode("utf-8") if isinstance(r[c], str) else bytes(r[c] or b"")
-            for r in sample
-            if r[c] is not None
-        ]
-        concat = b"".join(vals)[: chunklib.SAMPLE_BYTES]
-        if len(concat) >= 256:
-            tables[c] = fsstlib.train(concat)
-    return tables
-
-
 def _encode_chunk(arr: pa.Array, dtype: str, **encode_kw) -> dict:
     """Encode one chunk -> the blob-row fields the encode decides:
     codec, sizes, sha256, bloom, zone map, wall_ms and data.  The
@@ -604,8 +564,6 @@ def encode_columns(
     chunk_rows: int = DEFAULT_CHUNK_ROWS,
     codec: str = "auto",
     compression: str = "auto",
-    fsst_tables: dict[str, list[bytes]] | None = None,
-    profile: str = "default",
 ) -> DataFrame:
     """Encode the given columns into the blob/manifest DataFrame.
 
@@ -613,39 +571,20 @@ def encode_columns(
     Parquet column chunk + its ColumnMetaData
     (/root/reference/lib/writer.js:424-477), as a queryable table.
 
-    ``profile="read_optimized"`` makes the auto-selector weigh each
-    candidate's measured DECODE cost alongside its size
-    (chunk.DECODE_MBPS): write-once-read-many tables then avoid codecs
-    whose decode is far slower than the bytes they save (VERDICT r6 #3).
-    The default profile selects by size alone, as before.
+    ``codec="auto"`` picks the smallest measured candidate per chunk;
+    any other codec is forced on every chunk.  A task trains one FSST
+    symbol table per column, from the first chunk it encodes with FSST,
+    and reuses it for the rest of its chunks.
     """
     cols = columns or df.columns
     df, cols, dtypes, pretty = flatten_struct_columns(df, cols)
-    if fsst_tables is None and codec == "FSST":
-        # forced FSST: symbol-table quality directly sets output size, so
-        # pay one content-deterministic pretraining pass (round-4 fix).
-        # Under codec="auto" the measured post-compression comparison
-        # guards quality per chunk BY CONSTRUCTION — a task-local table
-        # that compresses poorly simply loses the selection to PLAIN
-        # post-zstd, so a bad sample can never degrade the output, and
-        # the pretraining pass (a second full read of every string byte
-        # of the table — at 100 TB, a second 100 TB scan) buys nothing:
-        # measured round 7 on the bench corpus, pretrained vs per-task
-        # tables select identical codecs and identical sizes on every
-        # string column.  Callers wanting one global table under auto
-        # still pass fsst_tables=pretrain_fsst_tables(...) explicitly.
-        fsst_tables = pretrain_fsst_tables(df, cols, dtypes)
 
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
         seq = 0
-        # per-column FSST state: pre-trained (broadcast) tables if present,
-        # else trained on first use and reused across the task's chunks
-        fsst_states: dict[str, dict] = {
-            c: ({"table": fsst_tables[c]} if fsst_tables and c in fsst_tables else {})
-            for c in cols
-        }
+        # per-column selector state: the decision cache and FSST tables
+        fsst_states: dict[str, dict] = {c: {} for c in cols}
         for rb in _arrow_batch_slices(batches, chunk_rows):
             rows: dict[str, list] = {f.name: [] for f in BLOB_SCHEMA.fields}
             for ci, c in enumerate(cols):
@@ -655,7 +594,6 @@ def encode_columns(
                     codec=codec,
                     compression=compression,
                     fsst_state=fsst_states[c],
-                    profile=profile,
                 )
                 rows["part_id"].append(part_id)
                 rows["chunk_seq"].append(seq)
@@ -962,45 +900,46 @@ _CHUNK_META = [
 # ({column: (col_idx, dtype)}, chunk metadata table or None above the
 # cap).  Tables from read_encoded resolve dtypes and prune row groups
 # from it with ZERO Spark jobs; read_encoded and write_encoded evict.
-_MANIFEST_CACHE: dict[str, tuple[dict, pa.Table | None]] = {}
+_MANIFEST_CACHE: dict[str, tuple[dict, pa.Table | None] | None] = {}
 
 
-def _manifest_meta(spark: SparkSession, path: str) -> tuple[dict, pa.Table | None]:
-    """The _MANIFEST_CACHE entry of the table at ``path``, read once."""
+def _manifest_meta(spark: SparkSession, path: str) -> tuple[dict, pa.Table | None] | None:
+    """The _MANIFEST_CACHE entry of the table at ``path``, read once
+    (_read_table_dir): with pyarrow on the driver for a local table up
+    to _MANIFEST_DRIVER_ROWS rows, else with one tiny Spark job over the
+    manifest (never the blob table).  None when the table has no
+    ``manifest/``."""
     if path in _MANIFEST_CACHE:
         return _MANIFEST_CACHE[path]
-    table = None
-    try:
+
+    def entry(rows, table=None):
+        return {r["column"]: (r["col_idx"], r["dtype"]) for r in rows}, table
+
+    def spark_read(uri):
+        return entry(_meta_rows_for(spark.read.parquet(uri)))
+
+    def driver_read(local):
         import pyarrow.dataset as pads
 
         # the blob schema fills a field an old table's files lack with
         # nulls (null = conservatively unprunable)
-        ds = pads.dataset(f"{path}/manifest", format="parquet", schema=_BLOB_PA_SCHEMA)
-        if ds.count_rows() <= _MANIFEST_DRIVER_ROWS:
-            table = ds.to_table(columns=_CHUNK_META + ["col_idx", "dtype"])
-    except Exception:
-        pass  # a filesystem pyarrow cannot reach: Spark reads it below
-    if table is not None:
-        rows = table.group_by(["column", "col_idx", "dtype"]).aggregate([]).to_pylist()
-    else:  # one tiny Spark job over the manifest (never the blob table)
-        rows = _meta_rows_for(spark.read.parquet(f"{path}/manifest"))
-    meta = {r["column"]: (r["col_idx"], r["dtype"]) for r in rows}
-    _MANIFEST_CACHE[path] = (meta, table)
-    return meta, table
+        ds = pads.dataset(local, format="parquet", schema=_BLOB_PA_SCHEMA)
+        if ds.count_rows() > _MANIFEST_DRIVER_ROWS:
+            return spark_read(f"{path}/manifest")
+        table = ds.to_table(columns=_CHUNK_META + ["col_idx", "dtype"])
+        return entry(table.group_by(["column", "col_idx", "dtype"]).aggregate([]).to_pylist(), table)
+
+    _MANIFEST_CACHE[path] = _read_table_dir(spark, path, "manifest", driver_read, spark_read, None)
+    return _MANIFEST_CACHE[path]
 
 
 def _cached_meta(blob_df: DataFrame) -> tuple[dict, pa.Table | None] | None:
     """The manifest cache entry of a df returned by read_encoded; None
     when the df has been transformed (the attribute deliberately does
     not survive user filters — a filtered table may hold fewer
-    columns or row groups)."""
+    columns or row groups) or the table has no ``manifest/``."""
     path = getattr(blob_df, "_pjs_meta_path", None)
-    if path is None:
-        return None
-    try:
-        return _manifest_meta(blob_df.sparkSession, path)
-    except Exception:
-        return None
+    return None if path is None else _manifest_meta(blob_df.sparkSession, path)
 
 
 def _chunk_meta(blob_df: DataFrame, columns: list[str]) -> pa.Table | None:
@@ -2021,26 +1960,42 @@ def write_encoded(
         mdf.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
-def _read_kv(spark: SparkSession, path: str) -> dict[str, str]:
-    """The one reader of ``meta/``: every key/value pair, reserved keys
-    included, read on the driver for a local table.  Only a missing
-    ``meta/`` reads as {}; an unreadable one raises ValueError, on
-    either path, with the reader's error as its cause."""
+def _read_table_dir(spark: SparkSession, path: str, name: str, driver_read, spark_read, missing):
+    """The one rule for reading the table's ``name`` directory
+    (``manifest/`` or ``meta/``): ``driver_read(local dir)`` on the
+    driver for a local table (_local_path), else ``spark_read(uri)``.
+    Only a missing directory reads as ``missing``; an unreadable one
+    raises ValueError, on either path, with the reader's error as its
+    cause."""
     local = _local_path(spark, path)
     try:
         if local is None:
-            rows = spark.read.schema("key string, value string").parquet(f"{path}/meta").collect()
-            return {r["key"]: r["value"] for r in rows}
-        if not os.path.isdir(f"{local}/meta"):
-            return {}
-        import pyarrow.dataset as pads
-
-        kv = pads.dataset(f"{local}/meta", format="parquet", schema=_KV_PA_SCHEMA).to_table()
-        return dict(zip(kv["key"].to_pylist(), kv["value"].to_pylist()))
+            return spark_read(f"{path}/{name}")
+        if not os.path.isdir(f"{local}/{name}"):
+            return missing
+        return driver_read(f"{local}/{name}")
     except (OSError, pa.ArrowException, PySparkException, Py4JJavaError) as e:
         if isinstance(e, AnalysisException) and e.getCondition() == "PATH_NOT_FOUND":
-            return {}
-        raise ValueError(f"unreadable table metadata {path}/meta ({type(e).__name__})") from e
+            return missing
+        raise ValueError(f"unreadable table {name} {path}/{name} ({type(e).__name__})") from e
+
+
+def _read_kv(spark: SparkSession, path: str) -> dict[str, str]:
+    """The one reader of ``meta/``: every key/value pair, reserved keys
+    included, read on the driver for a local table; {} without
+    ``meta/`` (_read_table_dir)."""
+
+    def spark_read(uri):
+        rows = spark.read.schema("key string, value string").parquet(uri).collect()
+        return {r["key"]: r["value"] for r in rows}
+
+    def driver_read(local):
+        import pyarrow.dataset as pads
+
+        kv = pads.dataset(local, format="parquet", schema=_KV_PA_SCHEMA).to_table()
+        return dict(zip(kv["key"].to_pylist(), kv["value"].to_pylist()))
+
+    return _read_table_dir(spark, path, "meta", driver_read, spark_read, {})
 
 
 def read_metadata(spark: SparkSession, path: str) -> dict[str, str]:

@@ -315,3 +315,24 @@ def test_truncated_meta_exits_2(tmp_path, spark, capsys):
         assert cli.main(argv) == 2, argv
         err = capsys.readouterr().err
         assert err.startswith("error: ") and f"{enc}/meta" in err, argv
+
+
+def test_truncated_manifest_exits_2(tmp_path, spark, capsys):
+    """A truncated manifest file is an input error too: `where` prints
+    one error line naming the manifest and exits 2, no traceback."""
+    import os
+
+    enc = str(tmp_path / "enc")
+    df = spark.range(300).select(F.col("id").alias("rid"), (F.col("id") % 7).alias("g"))
+    pipeline.write_encoded(pipeline.encode_columns(df, chunk_rows=64), enc)
+    [manifest_file] = [
+        f"{enc}/manifest/{f}" for f in os.listdir(f"{enc}/manifest")
+        if f.endswith(".parquet") and f[0] not in "._"
+    ]
+    os.truncate(manifest_file, os.path.getsize(manifest_file) // 2)
+    capsys.readouterr()
+    argv = ["where", "--input", enc, "--eq", "rid=5", "--columns", "g",
+            "--output", str(tmp_path / "out")]
+    assert cli.main(argv) == 2
+    err = capsys.readouterr().err
+    assert err.startswith("error: ") and f"{enc}/manifest" in err

@@ -182,85 +182,6 @@ def test_fsst_overlap_pin_check_and_fallback_agree():
     assert fast == slow == text
 
 
-class TestReadOptimizedProfile:
-    """VERDICT r6 #3: decode-cost-aware selection.  The default profile
-    selects by measured size alone (unchanged behavior); the
-    read_optimized profile folds the pinned per-codec decode-throughput
-    table into the choice, so a codec whose decode is 50x slower than
-    PLAIN must buy a commensurate size win to be picked."""
-
-    def test_decode_cost_table_pinned(self):
-        from parquetjs_spark.chunk import DECODE_MBPS, READ_IO_MBPS
-        from parquetjs_spark.codecs import CODEC_IDS, FSST, INCR, PLAIN
-
-        # relative ordering is the contract: INCR is the slowest string
-        # decode, FSST next, PLAIN vectorized-fast; IO bandwidth models
-        # a cold scan
-        assert DECODE_MBPS[INCR] < DECODE_MBPS[FSST] < DECODE_MBPS[PLAIN]
-        assert READ_IO_MBPS < DECODE_MBPS[PLAIN]
-        # every codec the selector can name has a decode cost, or the
-        # read_optimized profile raises KeyError on it
-        assert set(DECODE_MBPS) == set(CODEC_IDS)
-
-    @staticmethod
-    def _sorted_path_block():
-        from parquetjs_spark.arrow_chunk import StrBlock
-
-        vals = sorted(
-            f"src/main/java/module{i % 16}/pkg{i % 5}/Class{i:05d}.java".encode()
-            for i in range(4096)
-        )
-        data = b"".join(vals)
-        lens = np.fromiter((len(v) for v in vals), np.int64, count=len(vals))
-        offs = np.zeros(len(vals) + 1, np.int64)
-        np.cumsum(lens, out=offs[1:])
-        return StrBlock(data, offs)
-
-    def test_incr_wins_default_rejected_read_optimized(self):
-        from parquetjs_spark.arrow_chunk import _select_string_codec
-        from parquetjs_spark.codecs import INCR
-
-        block = self._sorted_path_block()
-        choice_default, info = _select_string_codec(block, None)
-        assert choice_default == INCR  # front-coded paths: big size win
-        choice_read, info_r = _select_string_codec(
-            block, None, profile="read_optimized"
-        )
-        assert choice_read != INCR  # 55 MB/s decode never pays at read time
-
-    def test_default_profile_selection_unchanged(self):
-        # explicit "default" and the implicit default agree on both a
-        # prefix-structured and an ordinary low-cardinality column
-        from parquetjs_spark.arrow_chunk import StrBlock, _select_string_codec
-
-        block = self._sorted_path_block()
-        assert (
-            _select_string_codec(block, None)[0]
-            == _select_string_codec(block, None, profile="default")[0]
-        )
-        vals = [b"A", b"B", b"C"] * 1000
-        data = b"".join(vals)
-        offs = np.arange(len(vals) + 1, dtype=np.int64)
-        low = StrBlock(data, offs)
-        assert (
-            _select_string_codec(low, None)[0]
-            == _select_string_codec(low, None, profile="default")[0]
-        )
-
-    def test_numeric_selector_accepts_profile(self):
-        from parquetjs_spark import chunk as chunklib
-
-        vals = np.arange(4096, dtype=np.int64)
-        d, di = chunklib.select_codec(vals, "int64")
-        r, ri = chunklib.select_codec(vals, "int64", profile="read_optimized")
-        # numeric decoders are all GB/s-class: the profile may only move
-        # between near-tied compact codecs (here RLE 6147 B vs
-        # FOR_BITPACK 6153 B — it picks the faster decoder), never to a
-        # materially larger encoding
-        assert ri["sizes"][r] <= 1.01 * di["sizes"][d]
-        assert r in ("RLE", "FOR_BITPACK")
-
-
 class TestStringSelectorProbes:
     """Bounds and reuse of the string selector's sampled probes."""
 

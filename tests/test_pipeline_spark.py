@@ -8,6 +8,7 @@ import datetime
 import decimal
 import os
 import re
+import shutil
 
 import pandas as pd
 import pyarrow as pa
@@ -628,31 +629,40 @@ def test_append_across_writers_reads_as_one_manifest(
 
 
 def test_write_encoded_runs_one_job(tmp_path, spark, assert_manifest_is_blobs):
-    """On a local table the blob write is write_encoded's only Spark
-    job — overwrite, append and partition_by_column alike: the driver
+    """On a local table the blob write is the only Spark job of
+    encode_columns + write_encoded — overwrite, append,
+    partition_by_column and a forced-FSST encode alike: the driver
     commits manifest/ and meta/, and reads meta/ back with no job (so an
-    append, KV read included, is one job).  AQE is off, as in the
-    benchmark session (it runs each shuffle stage as a job of its own)."""
-    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
+    append, KV read included, is one job), and each task trains its own
+    FSST tables.  AQE is off, as in the benchmark session (it runs each
+    shuffle stage as a job of its own)."""
+    lineitem = load_table(spark, SF, "lineitem")
+    df = lineitem.select("l_orderkey", "l_returnflag")
     path, by_column = str(tmp_path / "t"), str(tmp_path / "by_column")
+    fsst = str(tmp_path / "fsst")
     writes = (
-        ("overwrite", path, {}),
-        ("append", path, {"mode": "append"}),
-        ("partition_by_column", by_column, {"partition_by_column": True}),
+        ("overwrite", df, path, {}, {}),
+        ("append", df, path, {"mode": "append"}, {}),
+        ("partition_by_column", df, by_column, {"partition_by_column": True}, {}),
+        ("fsst", lineitem.select("l_returnflag", "l_linestatus"), fsst, {}, {"codec": "FSST"}),
     )
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        for name, out, kw in writes:
-            blobs = pipeline.encode_columns(df.repartition(2), chunk_rows=512)
+        for name, src, out, kw, enc in writes:
             _, jobs = _jobs_of(
                 spark, f"write_{name}",
-                lambda: pipeline.write_encoded(blobs, out, metadata={"k": name}, **kw),
+                lambda: pipeline.write_encoded(
+                    pipeline.encode_columns(src.repartition(2), chunk_rows=512, **enc),
+                    out, metadata={"k": name}, **kw,
+                ),
             )
             assert len(jobs) == 1, (name, jobs)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-    for out in (path, by_column):
+    for out in (path, by_column, fsst):
         assert assert_manifest_is_blobs(out) > 0
+    codecs = pq.read_table(f"{fsst}/manifest", columns=["codec"])["codec"]
+    assert set(codecs.to_pylist()) == {"FSST"}
     for read, want in ((pipeline.read_metadata, {"k": "append"}),
                        (pipeline.read_sha_format, pipeline.SHA_FORMAT_VERSION)):
         got, jobs = _jobs_of(spark, read.__name__, lambda: read(spark, path))
@@ -705,6 +715,44 @@ def test_unreadable_meta_raises(tmp_path, spark, monkeypatch, writer, cause):
     with pytest.raises(ValueError, match=re.escape(f"{path}/meta")):
         pipeline.write_encoded(pipeline.encode_columns(df), path, mode="append")
     assert sorted(os.listdir(f"{path}/blobs")) == blob_files
+
+
+@pytest.mark.parametrize("reader,cause", [("driver", pa.ArrowInvalid), ("spark", Py4JJavaError)])
+def test_unreadable_manifest_raises(tmp_path, spark, monkeypatch, reader, cause):
+    """Only a missing manifest/ reads as no driver metadata: the scan
+    takes the blob table's path and finds the same rows.  A truncated
+    manifest raises one ValueError naming the path, with the reader's
+    error as its cause, from a lookup, a table decode and scan_stats on
+    both read paths."""
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
+    key = df.first()["l_orderkey"]
+    path = str(tmp_path / "t")
+    if reader == "spark":
+        monkeypatch.setattr(pipeline, "_local_path", lambda spark, path: None)
+    pipeline.write_encoded(pipeline.encode_columns(df, chunk_rows=512), path)
+    manifest = [
+        f"{path}/manifest/{f}" for f in os.listdir(f"{path}/manifest")
+        if f.endswith(".parquet") and f[0] not in "._"
+    ]
+    lookup = lambda blobs: pipeline.scan_eq(
+        blobs, "l_orderkey", key, columns=["l_partkey"]
+    ).collect()
+    want = sorted(lookup(pipeline.read_encoded(spark, path)))
+    assert want
+    for f in manifest:
+        os.truncate(f, os.path.getsize(f) // 2)
+    for read in (
+        lookup,
+        lambda blobs: pipeline.decode_table(blobs).count(),
+        lambda blobs: pipeline.scan_stats(blobs, eqs={"l_orderkey": key}).collect(),
+    ):
+        with pytest.raises(ValueError, match=re.escape(f"{path}/manifest")) as e:
+            read(pipeline.read_encoded(spark, path))
+        assert isinstance(e.value.__cause__, cause)
+    shutil.rmtree(f"{path}/manifest")
+    blobs = pipeline.read_encoded(spark, path)
+    assert pipeline._manifest_meta(spark, path) is None
+    assert sorted(lookup(blobs)) == want
 
 
 def test_write_encoded_rejects_other_modes(tmp_path, spark):
@@ -1660,39 +1708,6 @@ def test_append_preserves_user_metadata(tmp_path, spark):
         pipeline.encode_columns(df), path, metadata={"fresh": "y"}
     )
     assert pipeline.read_metadata(spark, path) == {"fresh": "y"}
-
-
-def test_fsst_pretrain_sample_is_content_determined(spark):
-    """The FSST pretrain sample must be a pure function of table CONTENT
-    — not row order, partitioning, or parallelism (judge round-4 #6: a
-    head-of-first-partition sample let one unrepresentative repo own
-    the symbol table).  Trained tables must be byte-identical when the
-    same rows arrive reversed or repartitioned, and must differ from a
-    table trained on the head slice alone."""
-    texts = [
-        ("alpha beta gamma delta epsilon %d " % i) * 6 for i in range(400)
-    ] + [
-        ("zulu yankee xray whiskey victor %d " % i) * 6 for i in range(400)
-    ]
-    rows = [(i, t) for i, t in enumerate(texts)]
-    fwd = spark.createDataFrame(rows, "rid long, s string").coalesce(1)
-    rev = spark.createDataFrame(rows[::-1], "rid long, s string").coalesce(1)
-    wide = spark.createDataFrame(rows, "rid long, s string").repartition(8)
-    dt = {"s": "string"}
-    t_fwd = pipeline.pretrain_fsst_tables(fwd, ["s"], dt)
-    t_rev = pipeline.pretrain_fsst_tables(rev, ["s"], dt)
-    t_wide = pipeline.pretrain_fsst_tables(wide, ["s"], dt)
-    assert t_fwd == t_rev == t_wide
-    assert "s" in t_fwd
-    # the head-only sample (what the old code effectively trained on)
-    # sees only the alpha-block vocabulary -> different symbol table
-    head_only = spark.createDataFrame(rows[:256], "rid long, s string")
-    t_head = pipeline.pretrain_fsst_tables(head_only, ["s"], dt)
-    assert t_head != t_fwd
-    # binary columns order fine under the same hash-scatter
-    bin_df = fwd.select(F.encode("s", "UTF-8").alias("b"))
-    t_bin = pipeline.pretrain_fsst_tables(bin_df, ["b"], {"b": "binary"})
-    assert "b" in t_bin
 
 
 def test_bss_pipeline_autoselect_and_verify(spark):
