@@ -324,7 +324,7 @@ def _manifest_dtypes(spark, pipeline, path):
     meta = pipeline._manifest_meta(spark, path)
     if meta is None:
         raise ValueError(f"no table manifest at {path}/manifest")
-    dtypes = {c: dt for c, (_, dt) in meta[0].items()}
+    dtypes = {c: dt for c, (_, dt) in meta.columns.items()}
 
     def dtype_of(col: str) -> str:
         if col not in dtypes:

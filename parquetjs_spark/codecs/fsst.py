@@ -11,17 +11,14 @@ Construction is the paper's bottom-up iteration, simplified: encode a
 bounded sample with the current table, count adjacent-token merges and
 their byte gains, keep the top-255 candidates, repeat a few rounds.
 
-Encoding is greedy longest-match at each position, realized as a single
-compiled regex whose alternatives are the symbols sorted longest-first
-(leftmost alternation order == longest match at each position), with a
-final catch-all byte alternative → escape.  Decoding is vectorized:
-escape/literal/code positions are resolved from runs of 0xFF
-(NumPy run-length parity), then one fancy-indexed join.
+Encoding is greedy longest-match, vectorized in NumPy (compress): one
+parse cursor per fixed-size block advances in lockstep, a match never
+crosses its block, and a byte no symbol covers becomes an escape pair.
+Decoding is vectorized: escape/literal/code positions are resolved from
+runs of 0xFF (NumPy run-length parity), then one fancy-indexed join.
 """
 
 from __future__ import annotations
-
-import re
 
 import numpy as np
 import pandas as pd
@@ -35,56 +32,11 @@ _SINGLE = [bytes([i]) for i in range(256)]
 _SINGLE_ARR = np.array(_SINGLE, dtype=object)
 
 
-_TERM = object()  # trie terminal marker
-
-
-def _trie_regex(node: dict) -> bytes:
-    """Emit a trie-structured alternation.  Children are tried before the
-    node's own terminal (the trailing empty alternative), so regex
-    backtracking yields exactly greedy longest-match — at a per-position
-    cost of the trie depth (<= 8) instead of one try per symbol."""
-    branches = []
-    for byte, child in node.items():
-        if byte is _TERM:
-            continue
-        sub = _trie_regex(child)
-        branches.append(re.escape(bytes([byte])) + sub)
-    if not branches:
-        return b""
-    alt = b"|".join(branches)
-    if _TERM in node:
-        return b"(?:" + alt + b"|)"
-    return b"(?:" + alt + b")"
-
-
-def _build_pattern(symbols: list[bytes]) -> re.Pattern:
-    trie: dict = {}
-    for s in symbols:
-        node = trie
-        for b in s:
-            node = node.setdefault(b, {})
-        node[_TERM] = True
-    # top level: trie alternatives (longest-match), then catch-all byte
-    parts = []
-    for byte, child in trie.items():
-        if byte is _TERM:
-            continue
-        parts.append(re.escape(bytes([byte])) + _trie_regex(child))
-    parts.append(b"(?s:.)")  # catch-all single byte -> escape
-    return re.compile(b"|".join(parts))
-
-
-def _tokenize_regex(data: bytes, symbols: list[bytes]) -> list[bytes]:
-    pat = _build_pattern(symbols)
-    return [m.group(0) for m in pat.finditer(data)]
-
-
 def _tokenize(data: bytes, symbols: list[bytes]) -> list[bytes]:
     """Token stream of the greedy parse — derived from the VECTORIZED
-    encoder's output instead of a regex finditer walk (which paid
-    per-match interpreter cost and dominated ``train``).  The compressed
-    stream IS the tokenization: non-escape bytes are symbol codes,
-    escape pairs are literal byte tokens."""
+    encoder's output (a per-match Python walk would dominate
+    ``train``).  The compressed stream IS the tokenization: non-escape
+    bytes are symbol codes, escape pairs are literal byte tokens."""
     payload = compress(data, symbols)
     arr = np.frombuffer(payload, dtype=np.uint8)
     n = len(arr)

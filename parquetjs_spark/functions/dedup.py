@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..worker import drop_zip_finders
+
 # deterministic 64-bit mixing (same construction as sources/synthetic.py)
 _MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
 
@@ -132,6 +134,7 @@ def minhash_signatures(
     )
 
     def fn(batches) -> "Iterator":
+        drop_zip_finders()
         import pyarrow as pa
 
         salts = np.arange(num_hashes, dtype=np.uint64) * np.uint64(0x9E3779B9)
@@ -280,6 +283,7 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     )
 
     def fn(batches) -> "Iterator":
+        drop_zip_finders()
         import pyarrow as pa
 
         for rb in batches:

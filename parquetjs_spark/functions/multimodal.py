@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..worker import drop_zip_finders
+
 MEDIA_META_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -59,6 +61,7 @@ def extract_metadata(media: DataFrame) -> DataFrame:
     """Typed metadata per payload — real plumbing, no media decode needed."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             payloads = [b"" if p is None else bytes(p) for p in pdf["payload"]]
             yield pd.DataFrame(
@@ -391,6 +394,7 @@ def decode_images(media: DataFrame) -> DataFrame:
     shape every downstream vision featurizer consumes."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             hs, ws, px, ok = [], [], [], []
             for p in pdf["payload"]:
@@ -548,6 +552,7 @@ def probe_images(media: DataFrame) -> DataFrame:
     cheap first pass a 100 TB image corpus filters on."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             fmts, ws, hs, cs, dec = [], [], [], [], []
             for p in pdf["payload"]:
@@ -708,6 +713,7 @@ def resize_images(media: DataFrame, width: int = 64, height: int = 64) -> DataFr
     target = width * height
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             outs = []
             for p in pdf["payload"]:
@@ -753,6 +759,7 @@ def sample_frames(
     parallel."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             ids, idxs, frames = [], [], []
             for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
@@ -794,6 +801,7 @@ def fake_features(media: DataFrame, dim: int = 8) -> DataFrame:
     shape / signature a real encoder UDF would have."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             feats = []
             for p in pdf["payload"]:
@@ -839,6 +847,7 @@ def decode_audios(media: DataFrame) -> DataFrame:
     no-shuffle map shape as decode_images."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             ns, ch, sr, pcm, ok = [], [], [], [], []
             for p in pdf["payload"]:

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..worker import drop_zip_finders
+
 _SCORE_SCHEMA = T.StructType(
     [
         T.StructField("vec_id", T.LongType()),
@@ -51,6 +53,7 @@ def brute_force_topk(
     q = np.asarray(query_vec, dtype=np.float64)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         yield from _batch_scores(batches, q)
 
     scored = embeddings.select("vec_id", "embedding").mapInPandas(
@@ -92,6 +95,7 @@ def lsh_signatures(embeddings: DataFrame, n_planes: int = 16, seed: int = 42) ->
     )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         planes = None
         weights = (1 << np.arange(n_planes, dtype=np.uint64)).astype(np.uint64)
         for pdf in batches:
@@ -173,6 +177,7 @@ def _lloyd_partials(embeddings: DataFrame, cents: np.ndarray) -> DataFrame:
     )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
         acc = np.zeros((k, dim))
@@ -256,6 +261,7 @@ def ivf_assign(
     )
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             norms = np.linalg.norm(mat, axis=1, keepdims=True)

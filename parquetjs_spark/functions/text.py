@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..worker import drop_zip_finders
+
 
 def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace token count per document."""
@@ -133,6 +135,7 @@ def rolling_fingerprint(docs: DataFrame, window: int = 8) -> DataFrame:
     )
 
     def fn(batches) -> "Iterator":
+        drop_zip_finders()
         import pyarrow as pa
 
         from .dedup import _list_i64_parts

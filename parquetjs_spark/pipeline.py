@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from . import arrow_chunk
+from .worker import drop_zip_finders
 
 DEFAULT_CHUNK_ROWS = 4096  # /root/reference/lib/writer.js:26
 
@@ -580,6 +581,7 @@ def encode_columns(
     df, cols, dtypes, pretty = flatten_struct_columns(df, cols)
 
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_zip_finders()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
         seq = 0
@@ -637,6 +639,7 @@ def decode_column(
         pa_type = pa.timestamp("us", tz="UTC")
 
     def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_zip_finders()
         for rb in batches:
             # zero-copy views into the arrow buffer (no per-blob memcpy)
             for blob in arrow_chunk.binary_views(rb.column(0)):
@@ -759,9 +762,10 @@ def _assemble_row_group(group: pa.Table, layout: _Layout, specs: list | None = N
     decoded = _Chunks(group)
     absent = [c for c in layout.flat_names if c not in decoded.blobs]
     if absent:
+        group_id = (group.column("part_id")[0].as_py(), group.column("chunk_seq")[0].as_py())
         raise ValueError(
-            f"row group missing column chunks: {absent} "
-            "(partial manifest? decode from a complete blob table)"
+            f"row group {group_id} missing column chunks: {absent} "
+            "(a blob file is missing or damaged)"
         )
     match = _match_mask(decoded, specs) if specs else None
     if match is not None and not match.any():
@@ -793,6 +797,7 @@ def _decode_groups(blob_df: DataFrame, layout: _Layout, specs: list | None = Non
     (part_id, chunk_seq) regroups the chunks."""
 
     def assemble(group: pa.Table) -> pa.Table:
+        drop_zip_finders()
         return _assemble_row_group(group, layout, specs)
 
     pruned = blob_df.where(F.col("column").isin(layout.flat_names)).select(
@@ -895,15 +900,27 @@ _CHUNK_META = [
     "bloom",
 ]
 
+
+class _Manifest(NamedTuple):
+    """A table's manifest as the driver holds it: {column: (col_idx,
+    dtype)}, the chunk metadata table (None when Spark read the
+    manifest), and the table's local directory, which the driver reads
+    blob files from (None unless ``chunks`` is set)."""
+
+    columns: dict
+    chunks: pa.Table | None
+    local: str | None
+
+
 # per-table manifest, read once onto the driver with pyarrow — the
 # footer analogue (parquetjs lib/reader.js:264-282 readFooter): path ->
-# ({column: (col_idx, dtype)}, chunk metadata table or None above the
-# cap).  Tables from read_encoded resolve dtypes and prune row groups
-# from it with ZERO Spark jobs; read_encoded and write_encoded evict.
-_MANIFEST_CACHE: dict[str, tuple[dict, pa.Table | None] | None] = {}
+# _Manifest.  Tables from read_encoded resolve dtypes and prune row
+# groups from it with ZERO Spark jobs; read_encoded and write_encoded
+# evict.
+_MANIFEST_CACHE: dict[str, _Manifest | None] = {}
 
 
-def _manifest_meta(spark: SparkSession, path: str) -> tuple[dict, pa.Table | None] | None:
+def _manifest_meta(spark: SparkSession, path: str) -> _Manifest | None:
     """The _MANIFEST_CACHE entry of the table at ``path``, read once
     (_read_table_dir): with pyarrow on the driver for a local table up
     to _MANIFEST_DRIVER_ROWS rows, else with one tiny Spark job over the
@@ -912,8 +929,8 @@ def _manifest_meta(spark: SparkSession, path: str) -> tuple[dict, pa.Table | Non
     if path in _MANIFEST_CACHE:
         return _MANIFEST_CACHE[path]
 
-    def entry(rows, table=None):
-        return {r["column"]: (r["col_idx"], r["dtype"]) for r in rows}, table
+    def entry(rows, table=None, local=None):
+        return _Manifest({r["column"]: (r["col_idx"], r["dtype"]) for r in rows}, table, local)
 
     def spark_read(uri):
         return entry(_meta_rows_for(spark.read.parquet(uri)))
@@ -927,13 +944,14 @@ def _manifest_meta(spark: SparkSession, path: str) -> tuple[dict, pa.Table | Non
         if ds.count_rows() > _MANIFEST_DRIVER_ROWS:
             return spark_read(f"{path}/manifest")
         table = ds.to_table(columns=_CHUNK_META + ["col_idx", "dtype"])
-        return entry(table.group_by(["column", "col_idx", "dtype"]).aggregate([]).to_pylist(), table)
+        columns = table.group_by(["column", "col_idx", "dtype"]).aggregate([]).to_pylist()
+        return entry(columns, table, os.path.dirname(local))
 
     _MANIFEST_CACHE[path] = _read_table_dir(spark, path, "manifest", driver_read, spark_read, None)
     return _MANIFEST_CACHE[path]
 
 
-def _cached_meta(blob_df: DataFrame) -> tuple[dict, pa.Table | None] | None:
+def _cached_meta(blob_df: DataFrame) -> _Manifest | None:
     """The manifest cache entry of a df returned by read_encoded; None
     when the df has been transformed (the attribute deliberately does
     not survive user filters — a filtered table may hold fewer
@@ -948,7 +966,8 @@ def _chunk_meta(blob_df: DataFrame, columns: list[str]) -> pa.Table | None:
     cache (no job) for a table from read_encoded, else one job with
     ``data`` pruned; None above _MANIFEST_DRIVER_ROWS rows."""
     want = sorted(set(columns))
-    tbl = (_cached_meta(blob_df) or (None, None))[1]
+    cached = _cached_meta(blob_df)
+    tbl = None if cached is None else cached.chunks
     if tbl is not None:
         return tbl.filter(pc.is_in(tbl["column"], pa.array(want, pa.string())))
     rows = _ensure_stat_cols(blob_df).where(F.col("column").isin(want))
@@ -966,9 +985,9 @@ def _resolve_dtype(blob_df: DataFrame, column: str, dtype: str | None) -> str:
         return dtype
     cached = _cached_meta(blob_df)
     if cached is not None:
-        if column not in cached[0]:
+        if column not in cached.columns:
             raise ValueError(f"no chunks for column {column!r}: not in table")
-        return cached[0][column][1]
+        return cached.columns[column][1]
     drow = blob_df.where(F.col("column") == column).select("dtype").limit(1).collect()
     if not drow:
         raise ValueError(f"no chunks for column {column!r}: not in table")
@@ -1117,7 +1136,7 @@ def _meta_rows_for(blob_df: DataFrame) -> list:
     if cached is not None:
         return [
             {"column": c, "col_idx": ci, "dtype": dt}
-            for c, (ci, dt) in cached[0].items()
+            for c, (ci, dt) in cached.columns.items()
         ]
     if "col_idx" not in blob_df.columns:  # pre-col_idx blob table
         blob_df = blob_df.withColumn("col_idx", F.lit(None).cast("int"))
@@ -1178,15 +1197,16 @@ def _predicate_keepset(blob_df: DataFrame, specs: list) -> Column:
     return _keepset_filter(_kept_groups(blob_df, specs))
 
 
-def _read_kept_blobs(path: str, keep: set, names: list[str]) -> pa.Table:
+def _read_kept_blobs(local: str, keep: set, names: list[str]) -> pa.Table:
     """The blob rows of ``names`` in the ``keep`` row groups of the table
-    at ``path``, read on the driver — the readRowGroup analogue
-    (parquetjs lib/reader.js:217-235).  Hive partitioning keeps a
-    partition_by_column layout's ``column`` readable."""
+    in the local directory ``local``, read on the driver — the
+    readRowGroup analogue (parquetjs lib/reader.js:217-235).  Hive
+    partitioning keeps a partition_by_column layout's ``column``
+    readable."""
     import pyarrow.dataset as pads
 
     ds = pads.dataset(
-        f"{path}/blobs",
+        f"{local}/blobs",
         format="parquet",
         partitioning=pads.partitioning(pa.schema([("column", pa.string())]), flavor="hive"),
     )
@@ -1209,12 +1229,14 @@ def _scan_local(
 ) -> pa.Table | None:
     """The driver path: the kept row groups of a read_encoded table,
     read, reassembled and filtered on the driver, as ``layout.schema``
-    rows; None (scan in Spark) without the manifest cache, above
-    _LOCAL_SCAN_BYTES kept encoded bytes, or when the blob files cannot
-    be opened or read.  A decode error propagates."""
-    meta = (_cached_meta(blob_df) or (None, None))[1]
-    if keep is None or meta is None:
+    rows; None (scan in Spark) without a manifest read on the driver
+    (so only a local table takes this path) or above _LOCAL_SCAN_BYTES
+    kept encoded bytes.  Blob files that cannot be read raise one
+    ValueError naming the table; a decode error propagates."""
+    cached = _cached_meta(blob_df)
+    if keep is None or cached is None or cached.chunks is None:
         return None
+    meta = cached.chunks
     groups = pa.table({
         "part_id": pa.array([p for p, _ in keep], pa.int32()),
         "chunk_seq": pa.array([c for _, c in keep], pa.int64()),
@@ -1227,9 +1249,10 @@ def _scan_local(
     tables = []
     if keep:
         try:
-            rows = _read_kept_blobs(blob_df._pjs_meta_path, keep, layout.flat_names)
-        except (OSError, pa.ArrowException):
-            return None  # a filesystem pyarrow cannot reach: scan in Spark
+            rows = _read_kept_blobs(cached.local, keep, layout.flat_names)
+        except (OSError, pa.ArrowException) as e:
+            path = blob_df._pjs_meta_path
+            raise ValueError(f"unreadable table blobs {path}/blobs ({type(e).__name__})") from e
         pid = rows["part_id"].to_numpy()
         seq = rows["chunk_seq"].to_numpy()
         starts = np.flatnonzero(np.r_[True, (pid[1:] != pid[:-1]) | (seq[1:] != seq[:-1])])
@@ -1483,6 +1506,7 @@ def _rewrite_groups(blob_df: DataFrame, by: tuple, rewrite, **kw) -> DataFrame:
     # kw is bound in a plain annotated def: applyInArrow infers its eval
     # type from the signature, and a functools.partial fails that (pyspark 4.1)
     def fn(group: pa.Table) -> pa.Table:
+        drop_zip_finders()
         return rewrite(group, **kw)
 
     return blob_df.groupBy(*by).applyInArrow(fn, schema=blob_df.schema)
@@ -1698,6 +1722,7 @@ def verify_blobs(blob_df: DataFrame) -> DataFrame:
     (BASELINE.json:15). Returns one row per chunk with ok flag."""
 
     def verify_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        drop_zip_finders()
         for rb in batches:
             blobs = arrow_chunk.binary_views(rb.column("data"))
             shas = rb.column("sha256")

@@ -48,19 +48,6 @@ _FIXED_WIDTH = {
 }
 
 
-def plain_size(values: Sequence, dtype: str) -> int:
-    """Exact byte size of parquetjs PLAIN encoding for non-null values."""
-    n = len(values)
-    if dtype in _FIXED_WIDTH:
-        return _FIXED_WIDTH[dtype] * n
-    if dtype == "bool":
-        return (n + 7) // 8
-    if dtype in ("string", "binary"):
-        # 4-byte LE length prefix per value (plain.js:145-162)
-        return sum(4 + len(v) for v in _as_bytes(values))
-    raise ValueError(f"unsupported dtype: {dtype}")
-
-
 def plain_bytes(values: Sequence, dtype: str) -> bytes:
     """The actual PLAIN byte stream (needed as gzip input)."""
     if dtype in _FIXED_WIDTH:

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..worker import drop_zip_finders
+
 SEED = 42
 
 LANGS = [
@@ -173,6 +175,7 @@ def source_code_df(
     rng_df = spark.range(0, rows, numPartitions=partitions)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in batches:
             yield generate_batch(pdf["id"].to_numpy())
 

@@ -623,9 +623,10 @@ def test_append_across_writers_reads_as_one_manifest(
     )
     assert assert_manifest_is_blobs(out) == first + 4
     assert pipeline.read_metadata(spark, out) == {"owner": "a"}
-    meta, table = pipeline._manifest_meta(spark, out)
+    meta, table, local = pipeline._manifest_meta(spark, out)
     assert set(meta) == {"l_orderkey", "l_returnflag"}
     assert table is not None and table.num_rows == first + 4
+    assert local == out
 
 
 def test_write_encoded_runs_one_job(tmp_path, spark, assert_manifest_is_blobs):
@@ -1087,33 +1088,41 @@ def test_driver_scan_matches_spark_scan(tmp_path, spark, monkeypatch, case):
         assert sorted(map(repr, got)) == sorted(map(repr, want)), i
 
 
-def test_driver_scan_falls_back_only_on_read_errors(tmp_path, spark, monkeypatch):
-    """Blob files the driver cannot open or read send a scan to the
-    Spark path (one job, same rows); a chunk that fails to decode on the
-    driver raises there and never silently falls back."""
-    df = load_table(spark, SF, "region")
+def test_driver_scan_raises_on_unreadable_blobs(tmp_path, spark, monkeypatch):
+    """The driver path never falls back to Spark: a chunk that fails to
+    decode raises there, and a truncated blob file makes scan_eq raise
+    one ValueError naming the table, with the reader's error as its
+    cause -- both with no Spark job."""
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
     path = str(tmp_path / "t")
-    pipeline.write_encoded(pipeline.encode_columns(df), path)
+    pipeline.write_encoded(pipeline.encode_columns(df.repartition(2), chunk_rows=512), path)
+    files = sorted(f for f in os.listdir(f"{path}/blobs") if f.endswith(".parquet"))
+    assert len(files) == 2
+    victim = f"{path}/blobs/{files[0]}"
+    chunks = pq.read_table(victim, columns=["column", "data"]).to_pylist()
+    blob = next(r["data"] for r in chunks if r["column"] == "l_orderkey")
+    key = pipeline.arrow_chunk.decode_arrow_column(blob)[0][0].as_py()
     blobs = pipeline.read_encoded(spark, path)
-    lookup = lambda: pipeline.scan_eq(blobs, "r_regionkey", 2, columns=["r_name"]).collect()
+    lookup = lambda: pipeline.scan_eq(blobs, "l_orderkey", key, columns=["l_partkey"]).collect()
     want, jobs = _jobs_of(spark, "read_ok", lookup)
-    assert jobs == [] and len(want) == 1
-
-    def unreadable(*args):
-        raise OSError("no such filesystem")
-
-    with monkeypatch.context() as m:
-        m.setattr(pipeline, "_read_kept_blobs", unreadable)
-        got, jobs = _jobs_of(spark, "read_failed", lookup)
-    assert jobs and got == want
+    assert jobs == [] and want
+    tracker = spark.sparkContext.statusTracker()
 
     def corrupt(blob):
         raise ValueError("chunk n_nulls 9 exceeds n 3")
 
-    monkeypatch.setattr(pipeline.arrow_chunk, "decode_arrow_column", corrupt)
-    with pytest.raises(ValueError, match="exceeds n"):
-        _jobs_of(spark, "decode_failed", lookup)
-    assert list(spark.sparkContext.statusTracker().getJobIdsForGroup("decode_failed")) == []
+    with monkeypatch.context() as m:
+        m.setattr(pipeline.arrow_chunk, "decode_arrow_column", corrupt)
+        with pytest.raises(ValueError, match="exceeds n"):
+            _jobs_of(spark, "decode_failed", lookup)
+    assert list(tracker.getJobIdsForGroup("decode_failed")) == []
+
+    os.truncate(victim, os.path.getsize(victim) // 2)
+    with pytest.raises(ValueError, match=re.escape(f"{path}/blobs")) as e:
+        _jobs_of(spark, "read_failed", lookup)
+    assert isinstance(e.value.__cause__, (OSError, pa.ArrowException))
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(tracker.getJobIdsForGroup("read_failed")) == []
 
 
 def test_schema_ops_read_the_manifest(tmp_path, spark):
