@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from ..worker import drop_zip_finders
+from ..worker import drops_zip_finders
 
 # deterministic 64-bit mixing (same construction as sources/synthetic.py)
 _MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
@@ -133,8 +133,8 @@ def minhash_signatures(
         "doc_id", _shingle_hashes_col(shingle_k).alias("shash")
     )
 
+    @drops_zip_finders
     def fn(batches) -> "Iterator":
-        drop_zip_finders()
         import pyarrow as pa
 
         salts = np.arange(num_hashes, dtype=np.uint64) * np.uint64(0x9E3779B9)
@@ -282,8 +282,8 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
         ).alias("whash"),
     )
 
+    @drops_zip_finders
     def fn(batches) -> "Iterator":
-        drop_zip_finders()
         import pyarrow as pa
 
         for rb in batches:

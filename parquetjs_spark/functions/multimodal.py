@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from ..worker import drop_zip_finders
+from ..worker import drops_zip_finders
 
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -60,8 +60,8 @@ def as_media_table(docs: DataFrame) -> DataFrame:
 def extract_metadata(media: DataFrame) -> DataFrame:
     """Typed metadata per payload — real plumbing, no media decode needed."""
 
+    @drops_zip_finders
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         for pdf in batches:
             payloads = [b"" if p is None else bytes(p) for p in pdf["payload"]]
             yield pd.DataFrame(
@@ -393,8 +393,8 @@ def decode_images(media: DataFrame) -> DataFrame:
     narrow Arrow-batched map: no shuffle, embarrassingly parallel, the
     shape every downstream vision featurizer consumes."""
 
+    @drops_zip_finders
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         for pdf in batches:
             hs, ws, px, ok = [], [], [], []
             for p in pdf["payload"]:
@@ -551,8 +551,8 @@ def probe_images(media: DataFrame) -> DataFrame:
     like decode_images, but reads only header bytes per payload — the
     cheap first pass a 100 TB image corpus filters on."""
 
+    @drops_zip_finders
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         for pdf in batches:
             fmts, ws, hs, cs, dec = [], [], [], [], []
             for p in pdf["payload"]:
@@ -712,8 +712,8 @@ def resize_images(media: DataFrame, width: int = 64, height: int = 64) -> DataFr
     a compressed-format kernel is a one-function change."""
     target = width * height
 
+    @drops_zip_finders
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         for pdf in batches:
             outs = []
             for p in pdf["payload"]:
@@ -758,8 +758,8 @@ def sample_frames(
     shuffle — downstream per-frame features stay embarrassingly
     parallel."""
 
+    @drops_zip_finders
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         for pdf in batches:
             ids, idxs, frames = [], [], []
             for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
@@ -800,8 +800,8 @@ def fake_features(media: DataFrame, dim: int = 8) -> DataFrame:
     stand-in vector — all fixed-dim float32 through the exact batch
     shape / signature a real encoder UDF would have."""
 
+    @drops_zip_finders
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         for pdf in batches:
             feats = []
             for p in pdf["payload"]:
@@ -846,8 +846,8 @@ def decode_audios(media: DataFrame) -> DataFrame:
     otherwise — the distributed form of decode_audio, same narrow
     no-shuffle map shape as decode_images."""
 
+    @drops_zip_finders
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         for pdf in batches:
             ns, ch, sr, pcm, ok = [], [], [], [], []
             for p in pdf["payload"]:

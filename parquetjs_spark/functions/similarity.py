@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from ..worker import drop_zip_finders
+from ..worker import drops_zip_finders
 
 _SCORE_SCHEMA = T.StructType(
     [
@@ -52,8 +52,8 @@ def brute_force_topk(
     """Exact cosine top-k: vectorized scoring + TakeOrderedAndProject."""
     q = np.asarray(query_vec, dtype=np.float64)
 
+    @drops_zip_finders
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         yield from _batch_scores(batches, q)
 
     scored = embeddings.select("vec_id", "embedding").mapInPandas(
@@ -94,8 +94,8 @@ def lsh_signatures(embeddings: DataFrame, n_planes: int = 16, seed: int = 42) ->
         ]
     )
 
+    @drops_zip_finders
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         planes = None
         weights = (1 << np.arange(n_planes, dtype=np.uint64)).astype(np.uint64)
         for pdf in batches:
@@ -176,8 +176,8 @@ def _lloyd_partials(embeddings: DataFrame, cents: np.ndarray) -> DataFrame:
         ]
     )
 
+    @drops_zip_finders
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
         acc = np.zeros((k, dim))
@@ -260,8 +260,8 @@ def ivf_assign(
         ]
     )
 
+    @drops_zip_finders
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         for pdf in batches:
             mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             norms = np.linalg.norm(mat, axis=1, keepdims=True)

@@ -14,7 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from ..worker import drop_zip_finders
+from ..worker import drops_zip_finders
 
 
 def token_counts(docs: DataFrame) -> DataFrame:
@@ -134,8 +134,8 @@ def rolling_fingerprint(docs: DataFrame, window: int = 8) -> DataFrame:
         ).alias("th"),
     )
 
+    @drops_zip_finders
     def fn(batches) -> "Iterator":
-        drop_zip_finders()
         import pyarrow as pa
 
         from .dedup import _list_i64_parts

@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from . import arrow_chunk
-from .worker import drop_zip_finders
+from .worker import drop_zip_finders, drops_zip_finders
 
 DEFAULT_CHUNK_ROWS = 4096  # /root/reference/lib/writer.js:26
 
@@ -580,8 +580,8 @@ def encode_columns(
     cols = columns or df.columns
     df, cols, dtypes, pretty = flatten_struct_columns(df, cols)
 
+    @drops_zip_finders
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop_zip_finders()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
         seq = 0
@@ -638,8 +638,8 @@ def decode_column(
         # tz-aware Spark timestamps travel as UTC-instant arrow timestamps
         pa_type = pa.timestamp("us", tz="UTC")
 
+    @drops_zip_finders
     def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop_zip_finders()
         for rb in batches:
             # zero-copy views into the arrow buffer (no per-blob memcpy)
             for blob in arrow_chunk.binary_views(rb.column(0)):
@@ -653,15 +653,17 @@ def decode_column(
 
 
 class _Layout(NamedTuple):
-    """How decode_table reassembles row groups: the requested nodes,
-    the flat chunk names they need, and the Arrow-side output schema
-    (columns holding a repeated group travel as their flat list leaves
-    and are rebuilt by a JVM expression, _rebuild_expr)."""
+    """How decode_table and the scans reassemble row groups: the output
+    nodes by output name, the flat chunk names to read and decode (the
+    nodes' chunks, then any residual-only predicate chunks, which
+    _match_mask reads but no output carries), and the Arrow-side output
+    schema (columns holding a repeated group travel as their flat list
+    leaves and are rebuilt by a JVM expression, _rebuild_expr)."""
 
     nodes: dict
     flat_names: list
     pa_types: dict
-    plan: list  # (kind, column, flat leaves or None), kind in node/flats
+    plan: list  # (kind, output name, flat leaves or None), kind in node/flats
     schema: T.StructType
     ordered: bool
 
@@ -670,8 +672,13 @@ _ORDER_COLS = ["__pid", "__cseq", "__ridx"]
 
 
 def _row_group_layout(
-    meta_rows: list, columns: list[str] | None, ordered: bool = False
+    meta_rows: list, columns: list[str] | None, ordered: bool = False,
+    residual: list[str] = (), names: dict[str, str] | None = None,
 ) -> _Layout:
+    """The layout of ``columns`` (default: every column), each emitted
+    under ``names.get(column, column)``.  The ``residual`` chunks (a
+    scan's predicate columns) are read and decoded too, but emitted
+    only where an output column holds them."""
     if not meta_rows:
         raise ValueError("blob table has no chunks")
     meta_rows = sorted(
@@ -684,20 +691,21 @@ def _row_group_layout(
     if columns is None:
         columns = list(tree)
     flat_dtypes = {r["column"]: r["dtype"] for r in meta_rows}
-    nodes = {}
-    for c in columns:
+
+    def node_of(c: str):
         if c in tree:
-            nodes[c] = tree[c]
-        elif c in flat_dtypes:
+            return tree[c]
+        if c in flat_dtypes:
             # a dotted LEAF path ("meta.origin") requested directly:
             # decode just that chunk as a column under its flat name —
             # scan predicates on struct leaves project this way
-            nodes[c] = ("leaf", c, flat_dtypes[c])
-        else:
-            raise ValueError(f"no chunks for columns: [{c!r}]")
-    flat_names: list[str] = []
-    for c in columns:
-        flat_names.extend(_node_flat_names(nodes[c]))
+            return ("leaf", c, flat_dtypes[c])
+        raise ValueError(f"no chunks for columns: [{c!r}]")
+
+    outs = [(names or {}).get(c, c) for c in columns]
+    nodes = {out: node_of(c) for out, c in zip(outs, columns)}
+    flat_names = [n for c in outs for n in _node_flat_names(nodes[c])]
+    flat_names += [n for c in residual for n in _node_flat_names(node_of(c)) if n not in flat_names]
     pa_types = {}
     for name in flat_names:
         dt = flat_dtypes[name]
@@ -708,7 +716,7 @@ def _row_group_layout(
 
     plan: list[tuple[str, str, list[str] | None]] = []
     fields: list[T.StructField] = []
-    for c in columns:
+    for c in outs:
         if _has_liststruct(nodes[c]):
             fl = _node_flat_names(nodes[c])
             plan.append(("flats", c, fl))
@@ -754,11 +762,13 @@ class _Chunks(dict):
 def _assemble_row_group(group: pa.Table, layout: _Layout, specs: list | None = None) -> pa.Table:
     """The one row-group reassembly, shared by the Spark decode (one
     call per group inside the UDF) and the driver-local scan: decode
-    every chunk of ``group`` (rows of one (part_id, chunk_seq)) and zip
-    them positionally into ``layout.schema``.  ``specs`` is the exact
-    residual (_match_mask): the predicate columns decode first, a group
-    with no matching row decodes nothing else and yields an empty
-    table, and only matching rows are returned."""
+    the ``layout.flat_names`` chunks of ``group`` (rows of one
+    (part_id, chunk_seq)) and zip the output columns positionally into
+    ``layout.schema``.  ``specs`` is the exact residual (_match_mask):
+    the predicate columns decode first, a group with no matching row
+    decodes nothing else and yields an empty table, and only matching
+    rows are returned.  A predicate chunk no output column holds is
+    decoded for the mask and never emitted."""
     decoded = _Chunks(group)
     absent = [c for c in layout.flat_names if c not in decoded.blobs]
     if absent:
@@ -798,17 +808,21 @@ def _decode_groups(blob_df: DataFrame, layout: _Layout, specs: list | None = Non
 
     def assemble(group: pa.Table) -> pa.Table:
         drop_zip_finders()
-        return _assemble_row_group(group, layout, specs)
+        out = _assemble_row_group(group, layout, specs)
+        drop_zip_finders()
+        return out
 
     pruned = blob_df.where(F.col("column").isin(layout.flat_names)).select(
         "part_id", "chunk_seq", "column", "data"
     )
     if len(layout.flat_names) == 1:
 
+        @drops_zip_finders
         def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             for rb in batches:
                 for i in range(rb.num_rows):
-                    yield from assemble(pa.Table.from_batches([rb.slice(i, 1)])).to_batches()
+                    group = pa.Table.from_batches([rb.slice(i, 1)])
+                    yield from _assemble_row_group(group, layout, specs).to_batches()
 
         return pruned.mapInArrow(decode_fn, schema=layout.schema)
     return pruned.groupBy("part_id", "chunk_seq").applyInArrow(assemble, schema=layout.schema)
@@ -878,19 +892,6 @@ def roundtrip_table(
     return decode_table(blobs, cols)
 
 
-def _ensure_stat_cols(blob_df: DataFrame) -> DataFrame:
-    """Backfill pruning-metadata columns for blob tables written before
-    they existed (null = conservatively unprunable)."""
-    src = blob_df
-    backfill = (("stat_min", "string"), ("stat_max", "string"), ("bloom", "array<long>"))
-    for name, typ in backfill:
-        if name not in blob_df.columns:
-            blob_df = blob_df.withColumn(name, F.lit(None).cast(typ))
-    if blob_df is not src and hasattr(src, "_pjs_meta_path"):
-        blob_df._pjs_meta_path = src._pjs_meta_path
-    return blob_df
-
-
 # the manifest is read onto the driver only up to this many chunk rows
 # (a 100 TB table's manifest is ~25 M rows); above it, column metadata
 # comes from one distinct job and lookups apply no row-group filter
@@ -933,7 +934,9 @@ def _manifest_meta(spark: SparkSession, path: str) -> _Manifest | None:
         return _Manifest({r["column"]: (r["col_idx"], r["dtype"]) for r in rows}, table, local)
 
     def spark_read(uri):
-        return entry(_meta_rows_for(spark.read.parquet(uri)))
+        # the blob schema: no inference job, and a field an old table's
+        # manifest lacks reads as null (``data`` reads as null too)
+        return entry(_meta_rows_for(spark.read.schema(BLOB_SCHEMA).parquet(uri)))
 
     def driver_read(local):
         import pyarrow.dataset as pads
@@ -970,7 +973,7 @@ def _chunk_meta(blob_df: DataFrame, columns: list[str]) -> pa.Table | None:
     tbl = None if cached is None else cached.chunks
     if tbl is not None:
         return tbl.filter(pc.is_in(tbl["column"], pa.array(want, pa.string())))
-    rows = _ensure_stat_cols(blob_df).where(F.col("column").isin(want))
+    rows = blob_df.where(F.col("column").isin(want))
     tbl = rows.select(*_CHUNK_META).limit(_MANIFEST_DRIVER_ROWS + 1).toArrow()
     return tbl if tbl.num_rows <= _MANIFEST_DRIVER_ROWS else None
 
@@ -1138,8 +1141,6 @@ def _meta_rows_for(blob_df: DataFrame) -> list:
             {"column": c, "col_idx": ci, "dtype": dt}
             for c, (ci, dt) in cached.columns.items()
         ]
-    if "col_idx" not in blob_df.columns:  # pre-col_idx blob table
-        blob_df = blob_df.withColumn("col_idx", F.lit(None).cast("int"))
     return blob_df.select("column", "col_idx", "dtype").distinct().collect()
 
 
@@ -1151,11 +1152,12 @@ _KEEPSET_COLLECT_ROWS = 100_000
 
 # a scan whose kept row groups hold at most this many encoded bytes (of
 # the columns it decodes) reads and decodes them on the driver, with no
-# Spark job; above it the decode runs in Spark.  Measured on local[4]
-# (CHANGES.md): where every kept row matches, the driver path's p50
-# meets the Spark path's at ~1.1 MB on TPC-H lineitem and above 10 MB
-# on source text; a lookup that keeps one row stays faster on the
-# driver to 4.7 MB.  At the cap the decoded row groups stay well under
+# Spark job; above it the decode runs in Spark.  Measured on a 4-core
+# VM, local[4] (method in CHANGES.md): where every kept row matches,
+# the driver path's p50 meets the Spark path's at ~0.8 MB on TPC-H
+# lineitem and ~4 MB on source text; a lookup that keeps one row stays
+# faster on the driver to at least 2 MB (lineitem) and 9.8 MB (source,
+# 70 vs 158 ms).  At the cap the decoded row groups stay well under
 # Spark's 48 MB arrow.localRelationThreshold, so the result is a local
 # relation, and the driver holds at most ~10 MB more
 _LOCAL_SCAN_BYTES = 1 << 20
@@ -1272,19 +1274,24 @@ def _scan(
     specs: list,
     columns: list[str] | None = None,
     meta_rows: list | None = None,
+    names: dict[str, str] | None = None,
 ) -> DataFrame:
     """The one scan behind scan_table_where, scan_eq and scan_column:
-    decode the kept row groups of ``columns`` plus the predicate columns
-    (default: every column), keep the rows matching ``specs`` exactly,
-    project ``columns``.  Kept groups under _LOCAL_SCAN_BYTES decode on
-    the driver into a LocalRelation (no job); otherwise Spark decodes
-    them, applying the same residual inside the decode UDF."""
-    want = columns
-    if want is not None:
-        pred_cols = dict.fromkeys(c for c, _, _, _ in specs)
-        want = list(want) + [c for c in pred_cols if c not in want]
+    the rows of the kept row groups matching ``specs`` exactly, as
+    ``columns`` (default: every column), renamed by ``names``.  The
+    predicate columns are decoded for the residual but never leave the
+    decode: the layout reads them and emits only ``columns``, so the
+    result needs no projection after it.  Kept groups under
+    _LOCAL_SCAN_BYTES decode on the driver into a LocalRelation (no
+    job, one createDataFrame); otherwise Spark decodes them, applying
+    the same residual inside the decode UDF."""
+    if columns == []:
+        # a zero-column Arrow table carries no row count: emit the
+        # predicate columns and drop them in the JVM, which keeps it
+        return _scan(blob_df, specs, list(dict.fromkeys(s[0] for s in specs)), meta_rows).select()
     layout = _row_group_layout(
-        meta_rows if meta_rows is not None else _meta_rows_for(blob_df), want
+        meta_rows if meta_rows is not None else _meta_rows_for(blob_df), columns,
+        residual=[s[0] for s in specs], names=names,
     )
     keep = _kept_groups(blob_df, specs)
     local = _scan_local(blob_df, keep, layout, specs)
@@ -1292,10 +1299,7 @@ def _scan(
         decoded = blob_df.sparkSession.createDataFrame(local, schema=layout.schema)
     else:
         decoded = _decode_groups(blob_df.where(_keepset_filter(keep)), layout, specs)
-    out = _rebuild(decoded, layout)
-    if columns is not None:
-        out = out.select(*[F.col(f"`{c}`") for c in columns])
-    return out
+    return _rebuild(decoded, layout)
 
 
 def _scan_one(
@@ -1306,8 +1310,7 @@ def _scan_one(
     ``out_name``.  The spec's dtype is the only metadata it needs."""
     column, _, _, dtype = spec
     meta_rows = [{"column": column, "col_idx": 0, "dtype": dtype}]
-    out = _scan(blob_df, [spec], [column], meta_rows=meta_rows)
-    return out.toDF(out_name) if out_name else out
+    return _scan(blob_df, [spec], [column], meta_rows, {column: out_name or column})
 
 
 def scan_column(
@@ -1360,7 +1363,10 @@ def scan_eq(
 
     ``columns=None`` decodes just the predicate column (``dtype`` skips
     its resolution); a list reassembles whole row groups and is exactly
-    ``scan_table_where(eqs={column: value}, columns=columns)``.  Chunks
+    ``scan_table_where(eqs={column: value}, columns=columns)``: the
+    predicate column is decoded for the residual but never leaves the
+    decode unless ``columns`` names it, so a driver-path lookup is one
+    createDataFrame of the output columns.  Chunks
     without a bloom (old tables, unbloomable dtypes) stay
     conservatively unpruned.  A blob DataFrame not from read_encoded
     pays one metadata job up front (columns=None too): cache the frame,
@@ -1390,8 +1396,10 @@ def scan_table_where(
     residual predicate is applied exactly, in Arrow (_match_mask).
     Conjunction prunes multiplicatively: at 100 TB a date range keeping
     2% of groups and a key bloom keeping 0.1% leaves ~0.002% of chunks
-    to decode.  ``columns`` projects the output (predicate columns are
-    decoded for the residuals either way).
+    to decode.  ``columns`` is the output (default: every column); the
+    predicate columns are decoded for the residuals but never leave the
+    decode unless ``columns`` names them, and ``columns=[]`` keeps only
+    the matching row count.
 
     Where the kept groups of a read_encoded table hold at most
     _LOCAL_SCAN_BYTES encoded bytes, the driver reads and decodes them
@@ -1507,7 +1515,9 @@ def _rewrite_groups(blob_df: DataFrame, by: tuple, rewrite, **kw) -> DataFrame:
     # type from the signature, and a functools.partial fails that (pyspark 4.1)
     def fn(group: pa.Table) -> pa.Table:
         drop_zip_finders()
-        return rewrite(group, **kw)
+        out = rewrite(group, **kw)
+        drop_zip_finders()
+        return out
 
     return blob_df.groupBy(*by).applyInArrow(fn, schema=blob_df.schema)
 
@@ -1532,8 +1542,6 @@ def delete_where(
     At 100 TB a selective predicate rewrites the same ~fraction of
     chunks a scan would read, not the table.  Predicates and literals
     validate as in scan_table_where (ValueError before any job)."""
-    # rewritten chunks carry stats + bloom: old tables gain the columns
-    blob_df = _ensure_stat_cols(blob_df)
     specs = _predicate_specs(blob_df, ranges, eqs)
     keep = _predicate_keepset(blob_df, specs)
     rewritten = _rewrite_groups(
@@ -1589,7 +1597,6 @@ def update_where(
         c: None if v is None else _typed_value(c, v, dtype_of[c])
         for c, v in assignments.items()
     }
-    blob_df = _ensure_stat_cols(blob_df)
     specs = _predicate_specs(blob_df, ranges, eqs)
     set_cols = sorted(assignments)
     group_cols = sorted(set(set_cols) | {c for c, _, _, _ in specs})
@@ -1721,8 +1728,8 @@ def verify_blobs(blob_df: DataFrame) -> DataFrame:
     """Decode every chunk and re-hash — distributed bit-identity check
     (BASELINE.json:15). Returns one row per chunk with ok flag."""
 
+    @drops_zip_finders
     def verify_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop_zip_finders()
         for rb in batches:
             blobs = arrow_chunk.binary_views(rb.column("data"))
             shas = rb.column("sha256")
@@ -2041,7 +2048,12 @@ def read_sha_format(spark: SparkSession, path: str) -> int:
 
 
 def read_encoded(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(f"{path}/blobs")
+    """The blob table at ``path``, planned from the known blob schema:
+    no footer-inference job, a field an older table's files lack reads
+    as null (null = conservatively unprunable), an empty ``blobs/``
+    reads as no rows and a missing one raises PATH_NOT_FOUND.  A
+    partition_by_column layout reads ``column`` from its path."""
+    df = spark.read.schema(BLOB_SCHEMA).parquet(f"{path}/blobs")
     # remember the manifest sibling: scan/decode resolve dtypes and
     # prune from it with zero jobs on the blob table (_manifest_meta),
     # as it is on disk now
@@ -2063,8 +2075,6 @@ def union_encoded(a: DataFrame, b: DataFrame) -> DataFrame:
     # _meta_rows_for's distinct return duplicate meta rows and the
     # decode-tree ordering ambiguous for nested schemas
     key = ["column", "col_idx", "dtype"]
-    if "col_idx" not in a.columns or "col_idx" not in b.columns:
-        key = ["column", "dtype"]  # pre-col_idx blob tables
     meta_a, meta_b = (
         {tuple(r[k] for k in key) for r in _meta_rows_for(t)} for t in (a, b)
     )

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..worker import drop_zip_finders
+from ..worker import drops_zip_finders
 
 SEED = 42
 
@@ -174,8 +174,8 @@ def source_code_df(
     """Distributed deterministic source_code table of `rows` rows."""
     rng_df = spark.range(0, rows, numPartitions=partitions)
 
+    @drops_zip_finders
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        drop_zip_finders()
         for pdf in batches:
             yield generate_batch(pdf["id"].to_numpy())
 

@@ -1,7 +1,9 @@
-"""What every engine Arrow UDF body does first in its Python worker."""
+"""What every engine Arrow UDF body does in its Python worker, first
+and last."""
 
 from __future__ import annotations
 
+import functools
 import sys
 import zipimport
 
@@ -24,3 +26,22 @@ def drop_zip_finders() -> None:
     for path, finder in list(cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             cache.pop(path, None)
+
+
+def drops_zip_finders(body):
+    """Wrap ``body``, the generator of an engine Arrow UDF, so it calls
+    drop_zip_finders() when it starts and again when it finishes.  A
+    fresh worker's first task imports the modules the body needs after
+    the first drop, and each import caches its ``sys.path`` zip finders
+    again; the second drop leaves the worker's next task none to
+    re-read."""
+
+    @functools.wraps(body)
+    def run(*args):
+        drop_zip_finders()
+        try:
+            yield from body(*args)
+        finally:
+            drop_zip_finders()
+
+    return run

@@ -1125,6 +1125,132 @@ def test_driver_scan_raises_on_unreadable_blobs(tmp_path, spark, monkeypatch):
     assert list(tracker.getJobIdsForGroup("read_failed")) == []
 
 
+def _round_trips(fn):
+    """(fn's result, the Py4J gateway calls this thread sent while it
+    ran): py4j's finalizer thread, which releases Java objects, is not
+    the caller's cost and is not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    me, calls, send = threading.get_ident(), [0], ClientServerConnection.send_command
+
+    def counted(conn, *args, **kw):
+        calls[0] += threading.get_ident() == me
+        return send(conn, *args, **kw)
+
+    ClientServerConnection.send_command = counted
+    try:
+        return fn(), calls[0]
+    finally:
+        ClientServerConnection.send_command = send
+
+
+# Py4J calls of one driver-path lookup, scan_eq through collect: one
+# createDataFrame (21) and the collect (7) on pyspark 4.1.2
+_LOOKUP_ROUND_TRIPS = 28
+
+
+def test_lookup_round_trips_do_not_grow_with_columns(tmp_path, spark):
+    """A driver-path lookup is one createDataFrame of the output columns
+    and the caller's collect: the predicate column never leaves the
+    decode and no per-column projection follows, so 5 output columns
+    cost as many gateway round trips as 1, and no more than
+    _LOOKUP_ROUND_TRIPS."""
+    cols = ["l_partkey", "l_suppkey", "l_quantity", "l_returnflag", "l_shipdate"]
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", *cols)
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df.repartition(2), chunk_rows=512), path)
+    blobs = pipeline.read_encoded(spark, path)
+    key = df.first()["l_orderkey"]
+    want = df.where(F.col("l_orderkey") == key).count()
+    trips = {}
+    for out in (cols, cols[:1], cols):  # the first call warms the session
+        lookup = lambda: pipeline.scan_eq(blobs, "l_orderkey", key, columns=out).collect()
+        (rows, n), jobs = _jobs_of(spark, f"trips{len(out)}", lambda: _round_trips(lookup))
+        assert jobs == [] and len(rows) == want and rows[0].__fields__ == out
+        trips[len(out)] = n
+    assert trips[5] == trips[1], trips
+    assert trips[5] <= _LOOKUP_ROUND_TRIPS, trips
+
+
+def test_scan_to_no_columns_keeps_the_row_count(tmp_path, spark, monkeypatch):
+    """``columns=[]`` answers how many rows match: on the driver path
+    and on the Spark path (cap at 0) the result has no column and one
+    row per matching row, although a zero-column Arrow table carries
+    no row count."""
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df.repartition(2), chunk_rows=512), path)
+    blobs = pipeline.read_encoded(spark, path)
+    want = df.where(F.col("l_partkey") == 50).count()
+    assert want > 0
+    scan = lambda: pipeline.scan_table_where(blobs, eqs={"l_partkey": 50}, columns=[])
+    for cap, n_jobs in ((pipeline._LOCAL_SCAN_BYTES, 0), (0, 1)):
+        monkeypatch.setattr(pipeline, "_LOCAL_SCAN_BYTES", cap)
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            (out, rows), jobs = _jobs_of(spark, f"nocols{cap}", lambda: (d := scan(), d.collect()))
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+        assert out.columns == [] and len(rows) == want, cap
+        assert len(jobs) == n_jobs, (cap, jobs)
+
+
+def test_read_encoded_runs_no_job(tmp_path, spark, monkeypatch):
+    """read_encoded plans from the known blob schema: no footer-inference
+    job, on a plain and on a partition_by_column table (whose ``column``
+    still reads from its path); an empty ``blobs/`` reads as no rows and
+    a missing table still raises PATH_NOT_FOUND."""
+    from pyspark.errors import AnalysisException
+
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
+    for by_column in (False, True):
+        path = str(tmp_path / f"t{by_column}")
+        pipeline.write_encoded(
+            pipeline.encode_columns(df, chunk_rows=512), path, partition_by_column=by_column
+        )
+        blobs, jobs = _jobs_of(spark, f"read{by_column}", lambda: pipeline.read_encoded(spark, path))
+        assert jobs == [], by_column
+        assert set(blobs.columns) == set(pipeline.BLOB_SCHEMA.names)
+        cols = {r[0] for r in blobs.select("column").distinct().collect()}
+        assert cols == {"l_orderkey", "l_returnflag"}, by_column
+    empty = tmp_path / "empty"
+    (empty / "blobs").mkdir(parents=True)
+    assert pipeline.read_encoded(spark, str(empty)).count() == 0
+    with pytest.raises(AnalysisException) as e:
+        pipeline.read_encoded(spark, str(tmp_path / "missing"))
+    assert e.value.getCondition() == "PATH_NOT_FOUND"
+
+
+def test_older_table_without_stats_reads(tmp_path, spark):
+    """A table whose blob and manifest files predate ``col_idx``, the
+    zone maps and the blooms reads through read_encoded: the missing
+    fields read as null (unprunable), so decode, lookups, DELETE and
+    verify work on it unchanged."""
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df.repartition(2), chunk_rows=512), path)
+    old = ["col_idx", "stat_min", "stat_max", "bloom"]
+    for d in ("blobs", "manifest"):
+        for f in os.listdir(f"{path}/{d}"):
+            if f.endswith(".parquet"):
+                t = pq.read_table(f"{path}/{d}/{f}")
+                pq.write_table(t.drop_columns(old), f"{path}/{d}/{f}")
+                if os.path.exists(crc := f"{path}/{d}/.{f}.crc"):
+                    os.remove(crc)  # Spark's checksum of the file it wrote
+    blobs = pipeline.read_encoded(spark, path)
+    assert blobs.where(F.col("bloom").isNotNull() | F.col("col_idx").isNotNull()).count() == 0
+    assert sorted(map(tuple, pipeline.decode_table(blobs).collect())) == sorted(
+        map(tuple, df.collect())
+    )
+    want = df.where(F.col("l_partkey") == 50).count()
+    assert pipeline.scan_eq(blobs, "l_partkey", 50, columns=["l_orderkey"]).count() == want
+    kept = pipeline.delete_where(blobs, eqs={"l_partkey": 50})
+    assert pipeline.decode_table(kept).count() == df.count() - want
+    assert pipeline.verify_blobs(kept).where(~F.col("ok")).count() == 0
+
+
 def test_schema_ops_read_the_manifest(tmp_path, spark):
     """drop_columns, rename_column and the CLI's dtype resolver read the
     column set from the manifest of a read_encoded table: no Spark job
@@ -1347,9 +1473,7 @@ def test_scan_eq_null_lookup(spark):
         rows = pipeline.scan_eq(blobs, "props", None, columns=["event_id"])
         assert rows.count() == want and rows.columns == ["event_id"]
         # pruning actually bites: chunks with zero nulls are eliminated
-        stats = pipeline._ensure_stat_cols(blobs).where(
-            (F.col("column") == "props")
-        )
+        stats = blobs.where(F.col("column") == "props")
         total = stats.count()
         kept = stats.where(F.col("n_nulls") > 0).count()
         assert kept <= total

@@ -59,10 +59,11 @@ def test_drop_zip_finders_keeps_zip_imports(tmp_path):
 
 
 def test_engine_stage_leaves_no_zip_finders(spark, tmp_path, monkeypatch):
-    """After an engine stage (encode_columns), a later stage's tasks in
+    """After one engine stage (encode_columns), a later stage's tasks in
     the workers it used (matched by pid) find no zipimporter finder, so
     PySpark's per-task invalidate_caches() has no zip archive left to
-    re-read."""
+    re-read -- also in a fresh worker, whose first engine task imports
+    the engine after the body's first drop."""
 
     def worker_state(batches):
         # a plain (non-engine) Arrow UDF: this worker's pid and the
@@ -96,10 +97,10 @@ def test_engine_stage_leaves_no_zip_finders(spark, tmp_path, monkeypatch):
         with open(log) as f:
             return {int(line) for line in f}
 
-    # a worker's first task may import a new module after the helper ran,
-    # which caches the sys.path zip finders again; a second encode task
-    # in the same worker imports nothing new
-    warm = encode_pids(0) & encode_pids(1)
+    # a worker's first task imports modules after the helper's first
+    # drop, which caches the sys.path zip finders again; the drop when
+    # the body finishes removes them, so one encode task is enough
+    warm = encode_pids(0)
     # enough tasks to reach every idle worker, the encode's included
     probe = spark.range(0, 64, numPartitions=32).mapInArrow(worker_state, "pid long, zips long")
     seen = [(r.pid, r.zips) for r in probe.collect() if r.pid in warm]
