@@ -129,7 +129,8 @@ def _q_chunk_counts_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _load(spark, sf_dir, "lineitem")
     blobs = pipeline.encode_columns(df)
     return (
-        blobs.groupBy(F.col("column").alias("col_name"))
+        pipeline.chunk_view(blobs)
+        .groupBy(F.col("column").alias("col_name"))
         .agg(F.sum("n").alias("n_values"), F.sum("n_nulls").alias("n_nulls"))
         .orderBy("col_name")
     )
@@ -210,7 +211,7 @@ def _q_verify_all_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _load(spark, sf_dir, "lineitem")
     blobs = pipeline.encode_columns(df)
     report = pipeline.verify_blobs(blobs).join(
-        blobs.select("part_id", "chunk_seq", "column", "n"),
+        pipeline.chunk_view(blobs).select("part_id", "chunk_seq", "column", "n"),
         on=["part_id", "chunk_seq", "column"],
     )
     return report.agg(

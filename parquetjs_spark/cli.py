@@ -42,8 +42,6 @@ def _spark(args):
 
 
 def cmd_encode(args) -> int:
-    from pyspark.sql import functions as F
-
     from parquetjs_spark import codecs, pipeline
     from parquetjs_spark.codecs import compress as _comp
 
@@ -145,9 +143,9 @@ def cmd_encode(args) -> int:
     enc_kw = {"chunk_rows": args.chunk_rows, "codec": args.codec,
               "compression": args.compression}
     if args.resume_from:
-        # resume: drop chunks already committed in a previous run's manifest
+        # resume: drop row groups already committed in a previous run's manifest
+        already = _manifest(spark, pipeline, args.resume_from).num_rows
         done = pipeline.read_manifest(spark, args.resume_from)
-        already = done.count()
         blobs = pipeline.encode_columns(df, cols, **enc_kw)
         blobs = pipeline.pending_chunks(blobs, done)
         mode = "append"
@@ -155,14 +153,11 @@ def cmd_encode(args) -> int:
         blobs = pipeline.encode_columns(df, cols, **enc_kw)
         mode = "overwrite"
     metadata = dict(kv.split("=", 1) for kv in (args.meta or []))
-    pipeline.write_encoded(
-        blobs, args.output, mode=mode, metadata=metadata,
-        partition_by_column=args.partition_by_column,
-    )
+    pipeline.write_encoded(blobs, args.output, mode=mode, metadata=metadata)
     if args.resume_from:
         # the output manifest includes previously committed chunks when
         # resuming into the same dir — report only this run's delta
-        written = pipeline.read_manifest(spark, args.output).count()
+        written = _manifest(spark, pipeline, args.output).num_rows
         print(json.dumps({"resumed_from": args.resume_from,
                           "chunks_already_committed": already,
                           "chunks_encoded_this_run": max(0, written - already)}))
@@ -173,25 +168,12 @@ def cmd_encode(args) -> int:
 
 
 def cmd_decode(args) -> int:
-    from pyspark.sql import functions as F
-
     from parquetjs_spark import pipeline
 
     spark = _spark(args)
     blobs = pipeline.read_encoded(spark, args.input)
-    # dtype from the manifest (pure-metadata scan) instead of
-    # decode_column's limit(1) probe over the blob table
-    drow = (
-        pipeline.read_manifest(spark, args.input)
-        .where(F.col("column") == args.column)
-        .select("dtype")
-        .limit(1)
-        .collect()
-    )
-    if not drow:
-        print(f"error: no chunks for column {args.column}", file=sys.stderr)
-        return 2
-    out = pipeline.decode_column(blobs, args.column, dtype=drow[0]["dtype"])
+    _manifest_dtypes(spark, pipeline, args.input)(args.column)  # existence check
+    out = pipeline.decode_column(blobs, args.column)
     out.write.mode("overwrite").parquet(args.output)
     print(json.dumps({"rows": spark.read.parquet(args.output).count()}))
     return 0
@@ -335,6 +317,24 @@ def _manifest_dtypes(spark, pipeline, path):
     return dtype_of
 
 
+def _manifest(spark, pipeline, path):
+    """The table's manifest as an Arrow table, one row per column chunk:
+    the pipeline's manifest cache (no Spark job for a local table), else
+    one Spark read of ``manifest/``."""
+    meta = pipeline._manifest_meta(spark, path)
+    if meta is not None and meta.chunks is not None:
+        return meta.chunks
+    return pipeline.read_manifest(spark, path).toArrow()
+
+
+def _row_count(manifest) -> int:
+    """The table's row count from its manifest: every column of a
+    consistent table sums to it; max() keeps the number stable should
+    that invariant ever break."""
+    sums = manifest.group_by("column").aggregate([("n", "sum")])["n_sum"].to_pylist()
+    return max(sums, default=0)
+
+
 def cmd_where(args) -> int:
     """Compound-predicate scan: --range COL:LO..HI (repeatable, empty
     bound = open) + --eq COL=VALUE + --is-null COL -> one pruned decode."""
@@ -362,31 +362,22 @@ def _reject_in_place(args) -> bool:
     return False
 
 
-def _write_rewritten(spark, args, blobs, out_df) -> int | None:
-    """Shared tail of compact/delete/update/append: preserve the input's
-    --partition-by-column layout (auto-detected, flag overrides), carry
-    the user KV metadata, and surface executor-side failures as the
-    exit-2 contract.  Returns None on failure (error already printed),
-    else the output-manifest DataFrame (callers aggregate it once —
-    no redundant re-read job)."""
+def _write_rewritten(spark, args, out_df):
+    """Shared tail of compact/delete/update/append: carry the user KV
+    metadata, and surface executor-side failures as the exit-2
+    contract.  Returns None on failure (error already printed), else
+    the output manifest (_manifest)."""
     from pyspark.errors.exceptions.base import PySparkException
 
     from parquetjs_spark import pipeline
 
-    first_file = (blobs.inputFiles() or [""])[0]
-    part_by_col = (
-        getattr(args, "partition_by_column", False) or "/column=" in first_file
-    )
     try:
         meta = pipeline.read_metadata(spark, args.input)
-        pipeline.write_encoded(
-            out_df, args.output, mode="overwrite", metadata=meta,
-            partition_by_column=part_by_col,
-        )
-        return pipeline.read_manifest(spark, args.output)
+        pipeline.write_encoded(out_df, args.output, mode="overwrite", metadata=meta)
     except PySparkException as e:
         print(f"error: {args.cmd} failed during rewrite: {e}", file=sys.stderr)
         return None
+    return _manifest(spark, pipeline, args.output)
 
 
 def cmd_append(args) -> int:
@@ -395,8 +386,6 @@ def cmd_append(args) -> int:
     blob bytes pass through untouched, part_ids shift past the old
     maximum).  Column order follows the existing table's manifest so
     col_idx stays consistent across both halves."""
-    from pyspark.sql import functions as F
-
     from parquetjs_spark import pipeline
     from parquetjs_spark.sources.iceberg import load_source_table
 
@@ -404,18 +393,12 @@ def cmd_append(args) -> int:
         return 2
     spark = _spark(args)
     blobs = pipeline.read_encoded(spark, args.input)
-    man_cols = (
-        pipeline.read_manifest(spark, args.input)
-        .select("column", "col_idx")
-        .distinct()
-        .orderBy("col_idx")
-        .collect()
-    )
+    columns = pipeline._manifest_meta(spark, args.input).columns
     # top-level column order of the existing table (nested leaves and
     # @def chunks fold back to their top-level name)
     order = []
-    for r in man_cols:
-        top = r["column"].split(".", 1)[0].split("@", 1)[0]
+    for name in sorted(columns, key=lambda c: columns[c][0]):
+        top = name.split(".", 1)[0].split("@", 1)[0]
         if top not in order:
             order.append(top)
     try:
@@ -432,14 +415,10 @@ def cmd_append(args) -> int:
         src = src.repartition(args.partitions)
     new = pipeline.encode_columns(src, order, chunk_rows=args.chunk_rows)
     out = pipeline.union_encoded(blobs, new)
-    man = _write_rewritten(spark, args, blobs, out)
+    man = _write_rewritten(spark, args, out)
     if man is None:
         return 2
-    rows = man.groupBy("column").agg(F.sum("n").alias("rows")).collect()
-    print(json.dumps({
-        "rows_total": rows[0]["rows"] if rows else 0,
-        "chunks_total": man.count(),
-    }))
+    print(json.dumps({"rows_total": _row_count(man), "chunks_total": man.num_rows}))
     return 0
 
 
@@ -447,8 +426,6 @@ def cmd_delete(args) -> int:
     """Merge-on-write DELETE: rows matching the predicate conjunction
     are removed; only possibly-affected row groups re-encode, the rest
     pass through bit-identical (pipeline.delete_where)."""
-    from pyspark.sql import functions as F
-
     from parquetjs_spark import pipeline
 
     if _reject_in_place(args):
@@ -461,18 +438,12 @@ def cmd_delete(args) -> int:
         print("error: delete needs at least one --range/--eq/--is-null",
               file=sys.stderr)
         return 2
-    # deterministic row total (ADVICE r6 low): take MAX over per-column
-    # sums instead of an arbitrary row of an unordered collect — every
-    # column of a consistent table sums equal, and if that invariant
-    # ever breaks, max() at least reports a stable number
-    per_col = blobs.groupBy("column").agg(F.sum("n").alias("rows")).collect()
-    rows_before = max((r["rows"] for r in per_col), default=0)
+    rows_before = _row_count(_manifest(spark, pipeline, args.input))
     out = pipeline.delete_where(blobs, ranges=ranges, eqs=eqs)
-    man = _write_rewritten(spark, args, blobs, out)
+    man = _write_rewritten(spark, args, out)
     if man is None:
         return 2
-    after = man.groupBy("column").agg(F.sum("n").alias("rows")).collect()
-    rows_after = max((r["rows"] for r in after), default=0)
+    rows_after = _row_count(man)
     print(json.dumps({
         "rows_before": rows_before, "rows_after": rows_after,
         "rows_deleted": rows_before - rows_after,
@@ -511,10 +482,10 @@ def cmd_update(args) -> int:
     for col in args.set_null or []:
         assignments[col] = None
     out = pipeline.update_where(blobs, assignments, ranges=ranges, eqs=eqs)
-    man = _write_rewritten(spark, args, blobs, out)
+    man = _write_rewritten(spark, args, out)
     if man is None:
         return 2
-    print(json.dumps({"columns_set": sorted(assignments), "chunks": man.count()}))
+    print(json.dumps({"columns_set": sorted(assignments), "chunks": man.num_rows}))
     return 0
 
 
@@ -540,8 +511,6 @@ def cmd_stats(args) -> int:
 def cmd_meta(args) -> int:
     """Read the footer analogues without touching blob bytes: user KV
     metadata, sha-format marker, and a per-column manifest rollup."""
-    from pyspark.sql import functions as F
-
     from parquetjs_spark import pipeline
 
     spark = _spark(args)
@@ -549,19 +518,13 @@ def cmd_meta(args) -> int:
         "metadata": pipeline.read_metadata(spark, args.input),
         "sha_format": pipeline.read_sha_format(spark, args.input),
     }
-    man = (
-        pipeline.read_manifest(spark, args.input)
-        .groupBy("column", "dtype")
-        .agg(
-            F.count("*").alias("chunks"),
-            F.sum("n").alias("values"),
-            F.sum("n_nulls").alias("nulls"),
-            F.sum("encoded_bytes").alias("encoded_bytes"),
-        )
-        .orderBy("column")
-        .collect()
-    )
-    out["columns"] = [r.asDict() for r in man]
+    sums = [("n", "count"), ("n", "sum"), ("n_nulls", "sum"), ("encoded_bytes", "sum")]
+    man = _manifest(spark, pipeline, args.input).group_by(["column", "dtype"]).aggregate(sums)
+    out["columns"] = [
+        {"column": r["column"], "dtype": r["dtype"], "chunks": r["n_count"],
+         "values": r["n_sum"], "nulls": r["n_nulls_sum"], "encoded_bytes": r["encoded_bytes_sum"]}
+        for r in sorted(man.to_pylist(), key=lambda r: r["column"])
+    ]
     print(json.dumps(out))
     return 0
 
@@ -578,20 +541,18 @@ def cmd_compact(args) -> int:
         return 2
     spark = _spark(args)
     blobs = pipeline.read_encoded(spark, args.input)
-    before = blobs.count()
+    before = _manifest(spark, pipeline, args.input).num_rows
     out = pipeline.compact_chunks(
         blobs, min_rows=args.min_rows, target_rows=args.target_rows
     )
-    man = _write_rewritten(spark, args, blobs, out)
+    man = _write_rewritten(spark, args, out)
     if man is None:
         return 2
-    print(json.dumps({"chunks_before": before, "chunks_after": man.count()}))
+    print(json.dumps({"chunks_before": before, "chunks_after": man.num_rows}))
     return 0
 
 
 def cmd_verify(args) -> int:
-    from pyspark.sql import functions as F
-
     from parquetjs_spark import pipeline
 
     spark = _spark(args)
@@ -608,10 +569,9 @@ def cmd_verify(args) -> int:
                     "definition; re-encode to verify bit-identity",
         }))
         return 3
-    report = pipeline.verify_blobs(blobs)
-    bad = report.where(~F.col("ok")).count()
-    total = report.count()
-    print(json.dumps({"chunks": total, "mismatches": bad}))
+    counts = dict(pipeline.verify_blobs(blobs).groupBy("ok").count().collect())
+    bad = counts.get(False, 0)
+    print(json.dumps({"chunks": bad + counts.get(True, 0), "mismatches": bad}))
     return 0 if bad == 0 else 1
 
 
@@ -659,12 +619,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     pe.add_argument("--salt-buckets", type=int, default=16)
     pe.add_argument("--resume-from", default=None, help="prior output path (manifest)")
-    pe.add_argument(
-        "--partition-by-column",
-        action="store_true",
-        help="lay blobs out as one storage partition per column "
-        "(single-column decode/scan prunes other columns' files)",
-    )
     pe.add_argument(
         "--meta",
         action="append",
@@ -746,18 +700,12 @@ def main(argv: list[str] | None = None) -> int:
     pa_.add_argument("--output", required=True)
     pa_.add_argument("--chunk-rows", type=int, default=4096)
     pa_.add_argument("--partitions", type=int, default=None)
-    pa_.add_argument("--partition-by-column", action="store_true",
-                     help="write one storage partition per column "
-                     "(auto-detected from the input layout by default)")
     pa_.set_defaults(fn=cmd_append)
 
     pdel = sub.add_parser("delete")
     pdel.add_argument("--input", required=True)
     _pred_args(pdel)
     pdel.add_argument("--output", required=True)
-    pdel.add_argument("--partition-by-column", action="store_true",
-                      help="write one storage partition per column "
-                      "(auto-detected from the input layout by default)")
     pdel.set_defaults(fn=cmd_delete)
 
     pu = sub.add_parser("update")
@@ -769,9 +717,6 @@ def main(argv: list[str] | None = None) -> int:
     pu.add_argument("--set-null", action="append", default=None,
                     metavar="COL", help="null out this column on matching rows")
     pu.add_argument("--output", required=True)
-    pu.add_argument("--partition-by-column", action="store_true",
-                    help="write one storage partition per column "
-                    "(auto-detected from the input layout by default)")
     pu.set_defaults(fn=cmd_update)
 
     pc = sub.add_parser("compact")
@@ -781,9 +726,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="chunks under this row count are runts to merge")
     pc.add_argument("--target-rows", type=int, default=4096,
                     help="merged-chunk row target")
-    pc.add_argument("--partition-by-column", action="store_true",
-                    help="write one storage partition per column "
-                    "(auto-detected from the input layout by default)")
     pc.set_defaults(fn=cmd_compact)
 
     pv = sub.add_parser("verify")

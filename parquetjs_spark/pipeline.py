@@ -5,15 +5,20 @@ single-threaded write/read paths, SURVEY.md §3.4).
 Design for scale:
   * All value work happens JVM->Arrow->NumPy inside ``mapInArrow`` /
     ``applyInArrow`` (never per-row Python — BASELINE.json
-    input_hint); delete, update and compact share one Arrow rewrite
-    stage (_rewrite_groups) and one row builder (_reencoded).
+    input_hint); decode, verify, scans, delete and update are each one
+    narrow stage over whole row groups, and every rewrite builds its
+    rows with one row builder (_reencoded).
   * One encode task per partition; each task slices its Arrow batches
     into row-group-sized chunks (reference default 4096 rows,
     /root/reference/lib/writer.js:26) — chunk size bounds executor
     memory, so the same code holds at 100 TB with more partitions.
-  * The blob/manifest table is the unit of lineage: one row per
-    (partition, chunk, column) with codec, sizes, sha256 and timing —
-    a killed job resumes by anti-joining done chunks (north rule).
+  * The blob table is row-group-major, like a Parquet file: one row
+    per (partition, chunk) row group, with its column chunks' metadata
+    in ``chunks`` and one blob column per leaf (``c<col_idx>``), so
+    Parquet projection prunes columns and no stage regroups chunks.
+  * The manifest is the unit of lineage: one row per (partition,
+    chunk, column) with codec, sizes, sha256 and timing — a killed job
+    resumes by anti-joining done row groups (north rule).
   * A write is one Spark job, the blob write; on a ``file:`` table the
     driver commits ``manifest/`` and ``meta/`` itself, as the
     reference's ``close`` appends the footer (write_encoded).
@@ -38,6 +43,7 @@ from pyspark import TaskContext
 from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import arrow_chunk
 from .worker import drop_zip_finders, drops_zip_finders
@@ -448,29 +454,54 @@ def spark_type_of(dtype: str) -> T.DataType:
     return _LOGICAL_TO_SPARK[dtype]
 
 
-BLOB_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType()),
-        T.StructField("chunk_seq", T.LongType()),
-        T.StructField("column", T.StringType()),
-        T.StructField("col_idx", T.IntegerType()),
-        T.StructField("dtype", T.StringType()),
-        T.StructField("codec", T.StringType()),
-        T.StructField("compression", T.StringType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("n_nulls", T.LongType()),
-        T.StructField("content_bytes", T.LongType()),
-        T.StructField("encoded_bytes", T.LongType()),
-        T.StructField("sha256", T.StringType()),
-        T.StructField("stat_min", T.StringType()),
-        T.StructField("stat_max", T.StringType()),
-        T.StructField("bloom", T.ArrayType(T.LongType())),
-        T.StructField("wall_ms", T.DoubleType()),
-        T.StructField("data", T.BinaryType()),
-    ]
-)
+# the fields of one column chunk, in manifest order: the manifest is one
+# row per chunk, (part_id, chunk_seq) then these
+_CHUNK_FIELDS = [
+    T.StructField("column", T.StringType()),
+    T.StructField("col_idx", T.IntegerType()),
+    T.StructField("dtype", T.StringType()),
+    T.StructField("codec", T.StringType()),
+    T.StructField("compression", T.StringType()),
+    T.StructField("n", T.LongType()),
+    T.StructField("n_nulls", T.LongType()),
+    T.StructField("content_bytes", T.LongType()),
+    T.StructField("encoded_bytes", T.LongType()),
+    T.StructField("sha256", T.StringType()),
+    T.StructField("stat_min", T.StringType()),
+    T.StructField("stat_max", T.StringType()),
+    T.StructField("bloom", T.ArrayType(T.LongType())),
+    T.StructField("wall_ms", T.DoubleType()),
+]
+_GROUP_FIELDS = [
+    T.StructField("part_id", T.IntegerType()),
+    T.StructField("chunk_seq", T.LongType()),
+]
+MANIFEST_SCHEMA = T.StructType(_GROUP_FIELDS + _CHUNK_FIELDS)
+MANIFEST_COLUMNS = MANIFEST_SCHEMA.names
 
-MANIFEST_COLUMNS = [f.name for f in BLOB_SCHEMA.fields if f.name != "data"]
+
+def _data_col(col_idx: int) -> str:
+    """The blob column holding the chunks of leaf ``col_idx``."""
+    return f"c{col_idx}"
+
+
+def blob_schema(col_idxs: Iterable[int]) -> T.StructType:
+    """The blob table of the leaves ``col_idxs``: one row per row group,
+    (part_id, chunk_seq), its column chunks' manifest fields in col_idx
+    order (``chunks``), and one binary column of blob bytes per leaf."""
+    return T.StructType(
+        _GROUP_FIELDS
+        + [T.StructField("chunks", T.ArrayType(T.StructType(_CHUNK_FIELDS)))]
+        + [T.StructField(_data_col(i), T.BinaryType()) for i in sorted(col_idxs)]
+    )
+
+
+def _data_cols(schema: T.StructType) -> list[str]:
+    """The blob columns of a blob table, in col_idx order: the order of
+    every row's ``chunks``."""
+    names = [f.name for f in schema.fields if f.name not in ("part_id", "chunk_seq", "chunks")]
+    return sorted(names, key=lambda c: int(c[1:]))
+
 
 # canonical-sha definition version: bumped to 2 in round 3 when the
 # string/binary sha feed changed from the interleaved PLAIN stream to
@@ -478,32 +509,37 @@ MANIFEST_COLUMNS = [f.name for f in BLOB_SCHEMA.fields if f.name != "data"]
 # so verify can tell an old-format manifest apart from corruption.
 SHA_FORMAT_VERSION = 2
 _SHA_FORMAT_KEY = "parquetjs_spark.sha_format"
+# the blob layout, written to every table's meta KV like the sha format:
+# read_encoded refuses a table without it (the per-chunk layout, which
+# convert_encoded rewrites)
+BLOB_LAYOUT = "row_group"
+_LAYOUT_KEY = "parquetjs_spark.layout"
 
-_BLOB_PA_SCHEMA = pa.schema(
-    [
-        pa.field("part_id", pa.int32()),
-        pa.field("chunk_seq", pa.int64()),
-        pa.field("column", pa.string()),
-        pa.field("col_idx", pa.int32()),
-        pa.field("dtype", pa.string()),
-        pa.field("codec", pa.string()),
-        pa.field("compression", pa.string()),
-        pa.field("n", pa.int64()),
-        pa.field("n_nulls", pa.int64()),
-        pa.field("content_bytes", pa.int64()),
-        pa.field("encoded_bytes", pa.int64()),
-        pa.field("sha256", pa.string()),
-        pa.field("stat_min", pa.string()),
-        pa.field("stat_max", pa.string()),
-        pa.field("bloom", pa.list_(pa.int64())),
-        pa.field("wall_ms", pa.float64()),
-        pa.field("data", pa.binary()),
-    ]
-)
-# the manifest and meta/ files the driver writes: the names, types and
-# order Spark writes, so a table appended across both writers reads as one
-_MANIFEST_PA_SCHEMA = _BLOB_PA_SCHEMA.remove(_BLOB_PA_SCHEMA.get_field_index("data"))
+# the manifest files the driver writes: the names, types and order Spark
+# writes, so a table appended across both writers reads as one
+_MANIFEST_PA_SCHEMA = to_arrow_schema(MANIFEST_SCHEMA)
 _KV_PA_SCHEMA = pa.schema([pa.field("key", pa.string()), pa.field("value", pa.string())])
+
+
+def _flat_chunks(groups: pa.RecordBatch) -> pa.RecordBatch:
+    """The manifest rows of blob rows ``groups``: their ``chunks``
+    flattened, one row per column chunk under its (part_id, chunk_seq)."""
+    chunks = groups.column("chunks")
+    parents = pc.list_parent_indices(chunks)
+    flat = pc.list_flatten(chunks)
+    return pa.RecordBatch.from_arrays(
+        [groups.column("part_id").take(parents), groups.column("chunk_seq").take(parents)]
+        + [flat.field(f.name) for f in _CHUNK_FIELDS],
+        schema=_MANIFEST_PA_SCHEMA,
+    )
+
+
+def chunk_view(blob_df: DataFrame) -> DataFrame:
+    """The blob table as one row per column chunk, shaped like the
+    manifest (MANIFEST_COLUMNS): the one per-chunk view for code that
+    reads chunk metadata off blob rows."""
+    rows = blob_df.select("part_id", "chunk_seq", F.explode("chunks").alias("__chunk"))
+    return rows.select("part_id", "chunk_seq", "__chunk.*")
 
 
 # --------------------------------------------------------------------------
@@ -541,9 +577,9 @@ def _arrow_batch_slices(
             yield tbl.to_batches(max_chunksize=pending_rows)[0]
 
 
-def _encode_chunk(arr: pa.Array, dtype: str, **encode_kw) -> dict:
-    """Encode one chunk -> the blob-row fields the encode decides:
-    codec, sizes, sha256, bloom, zone map, wall_ms and data.  The
+def _encode_chunk(arr: pa.Array, dtype: str, **encode_kw) -> tuple[dict, bytes]:
+    """Encode one chunk -> the chunk fields the encode decides (codec,
+    sizes, sha256, bloom, zone map, wall_ms) and its blob bytes.  The
     first-pass encode and every rewrite (delete, update, compact) build
     their rows from it, so they cannot drift when a field is added."""
     t0 = time.perf_counter()
@@ -555,8 +591,7 @@ def _encode_chunk(arr: pa.Array, dtype: str, **encode_kw) -> dict:
     }
     fields["stat_min"], fields["stat_max"] = arrow_chunk._column_stats(arr, dtype)
     fields["wall_ms"] = (time.perf_counter() - t0) * 1000.0
-    fields["data"] = blob
-    return fields
+    return fields, blob
 
 
 def encode_columns(
@@ -566,11 +601,14 @@ def encode_columns(
     codec: str = "auto",
     compression: str = "auto",
 ) -> DataFrame:
-    """Encode the given columns into the blob/manifest DataFrame.
+    """Encode the given columns into the blob DataFrame.
 
-    One output row per (partition, chunk, column) — the analogue of a
-    Parquet column chunk + its ColumnMetaData
-    (/root/reference/lib/writer.js:424-477), as a queryable table.
+    One output row per (partition, chunk) row group — the analogue of a
+    Parquet row group (parquetjs lib/writer.js:482-515): its
+    column chunks' ColumnMetaData (writer.js:424-477) in ``chunks``, in
+    col_idx order, and each chunk's blob bytes in its own column
+    (blob_schema).  The manifest is the same metadata one row per chunk
+    (chunk_view).
 
     ``codec="auto"`` picks the smallest measured candidate per chunk;
     any other codec is forced on every chunk.  A task trains one FSST
@@ -579,35 +617,32 @@ def encode_columns(
     """
     cols = columns or df.columns
     df, cols, dtypes, pretty = flatten_struct_columns(df, cols)
+    idxs = range(len(cols))
+    schema = to_arrow_schema(blob_schema(idxs))
 
     @drops_zip_finders
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
-        seq = 0
         # per-column selector state: the decision cache and FSST tables
         fsst_states: dict[str, dict] = {c: {} for c in cols}
-        for rb in _arrow_batch_slices(batches, chunk_rows):
-            rows: dict[str, list] = {f.name: [] for f in BLOB_SCHEMA.fields}
+        for seq, rb in enumerate(_arrow_batch_slices(batches, chunk_rows)):
+            row = {"part_id": [part_id], "chunk_seq": [seq], "chunks": [[]]}
             for ci, c in enumerate(cols):
-                fields = _encode_chunk(
+                fields, blob = _encode_chunk(
                     rb.column(c),
                     dtypes[c],
                     codec=codec,
                     compression=compression,
                     fsst_state=fsst_states[c],
                 )
-                rows["part_id"].append(part_id)
-                rows["chunk_seq"].append(seq)
-                rows["column"].append(pretty[c])
-                rows["col_idx"].append(ci)
-                rows["dtype"].append(dtypes[c])
-                for f_, v in fields.items():
-                    rows[f_].append(v)
-            seq += 1
-            yield pa.RecordBatch.from_pydict(rows, schema=_BLOB_PA_SCHEMA)
+                row["chunks"][0].append(
+                    {"column": pretty[c], "col_idx": ci, "dtype": dtypes[c], **fields}
+                )
+                row[_data_col(ci)] = [blob]
+            yield pa.RecordBatch.from_pydict(row, schema=schema)
 
-    return df.mapInArrow(encode_fn, schema=BLOB_SCHEMA)
+    return df.mapInArrow(encode_fn, schema=blob_schema(idxs))
 
 
 # --------------------------------------------------------------------------
@@ -615,53 +650,18 @@ def encode_columns(
 # --------------------------------------------------------------------------
 
 
-def decode_column(
-    blob_df: DataFrame,
-    column: str,
-    out_name: str | None = None,
-    dtype: str | None = None,
-    out_type: T.DataType | None = None,
-) -> DataFrame:
-    """Decode one column's chunks back to a value DataFrame.
-
-    The scan is column-pruned twice: Catalyst prunes the blob table to
-    (data) after the filter, and the filter on ``column`` prunes chunks —
-    the analogue of the reference's getCursor(columnList)
-    (/root/reference/lib/reader.js:132-144, :227-229)."""
-    out_name = out_name or column
-    dtype = _resolve_dtype(blob_df, column, dtype)
-    out_schema = T.StructType(
-        [T.StructField(out_name, out_type or spark_type_of(dtype))]
-    )
-    pa_type = _pa_type_of(dtype)
-    if isinstance(out_type, T.TimestampType):
-        # tz-aware Spark timestamps travel as UTC-instant arrow timestamps
-        pa_type = pa.timestamp("us", tz="UTC")
-
-    @drops_zip_finders
-    def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            # zero-copy views into the arrow buffer (no per-blob memcpy)
-            for blob in arrow_chunk.binary_views(rb.column(0)):
-                arr, _ = arrow_chunk.decode_arrow_column(blob)
-                if arr.type != pa_type:
-                    arr = arr.cast(pa_type)
-                yield pa.RecordBatch.from_arrays([arr], names=[out_name])
-
-    rows = blob_df.where(F.col("column") == column).select("data")
-    return rows.mapInArrow(decode_fn, schema=out_schema)
-
-
 class _Layout(NamedTuple):
     """How decode_table and the scans reassemble row groups: the output
     nodes by output name, the flat chunk names to read and decode (the
     nodes' chunks, then any residual-only predicate chunks, which
-    _match_mask reads but no output carries), and the Arrow-side output
-    schema (columns holding a repeated group travel as their flat list
-    leaves and are rebuilt by a JVM expression, _rebuild_expr)."""
+    _match_mask reads but no output carries) with the blob column each
+    is read from (``sources``), and the Arrow-side output schema
+    (columns holding a repeated group travel as their flat list leaves
+    and are rebuilt by a JVM expression, _rebuild_expr)."""
 
     nodes: dict
     flat_names: list
+    sources: dict  # flat chunk name -> its blob column (c<col_idx>)
     pa_types: dict
     plan: list  # (kind, output name, flat leaves or None), kind in node/flats
     schema: T.StructType
@@ -681,10 +681,7 @@ def _row_group_layout(
     only where an output column holds them."""
     if not meta_rows:
         raise ValueError("blob table has no chunks")
-    meta_rows = sorted(
-        meta_rows,
-        key=lambda r: (r["col_idx"] if r["col_idx"] is not None else 0, r["column"]),
-    )
+    meta_rows = sorted(meta_rows, key=lambda r: r["col_idx"])
     # rebuild the nested shape from flat chunk names ("s.a", "s@def" —
     # reference nested groups, lib/schema.js:102-120)
     tree = dict(_unflatten_tree([(r["column"], r["dtype"]) for r in meta_rows]))
@@ -706,6 +703,7 @@ def _row_group_layout(
     nodes = {out: node_of(c) for out, c in zip(outs, columns)}
     flat_names = [n for c in outs for n in _node_flat_names(nodes[c])]
     flat_names += [n for c in residual for n in _node_flat_names(node_of(c)) if n not in flat_names]
+    sources = {r["column"]: _data_col(r["col_idx"]) for r in meta_rows if r["column"] in flat_names}
     pa_types = {}
     for name in flat_names:
         dt = flat_dtypes[name]
@@ -739,47 +737,66 @@ def _row_group_layout(
             T.StructField(name, typ)
             for name, typ in zip(_ORDER_COLS, (T.IntegerType(), T.LongType(), T.LongType()))
         ]
-    return _Layout(nodes, flat_names, pa_types, plan, T.StructType(fields), ordered)
+    return _Layout(nodes, flat_names, sources, pa_types, plan, T.StructType(fields), ordered)
 
 
 class _Chunks(dict):
-    """The decoded chunks of one row group, by column name.  A chunk
-    decodes on first access and at most once, so a reader that asks
-    for the predicate columns first (_match_mask) and stops when no row
-    matches never decodes the rest: the two-phase decode of VERDICT r6
-    #4, for scans and DML alike."""
+    """The decoded chunks of one row group, by column name, from its
+    blob bytes ``blobs`` ({column: blob}).  A chunk decodes on first
+    access and at most once, so a reader that asks for the predicate
+    columns first (_match_mask) and stops when no row matches never
+    decodes the rest: the two-phase decode of VERDICT r6 #4, for scans
+    and DML alike."""
 
-    def __init__(self, group: pa.Table):
+    def __init__(self, blobs: dict):
         super().__init__()
-        names = group.column("column").to_pylist()
-        self.blobs = dict(zip(names, arrow_chunk.binary_views(group.column("data"))))
+        self.blobs = blobs
 
     def __missing__(self, name: str) -> pa.Array:
         arr = self[name] = arrow_chunk.decode_arrow_column(self.blobs[name])[0]
         return arr
 
 
-def _assemble_row_group(group: pa.Table, layout: _Layout, specs: list | None = None) -> pa.Table:
+def _packed(blob_df: DataFrame, srcs: list[str], *exprs: str) -> DataFrame:
+    """(part_id, chunk_seq, ``exprs``, ``__blobs``) of ``blob_df``, its
+    blob columns ``srcs`` packed in that order into one array column:
+    the Arrow stage after it takes a few input columns instead of one
+    per leaf (planning a mapInArrow costs Py4J round trips per input
+    column, ~10 ms a call on an 11-column table)."""
+    return blob_df.selectExpr("part_id", "chunk_seq", *exprs, f"array({', '.join(srcs)}) AS __blobs")
+
+
+def _row_groups(rows, layout: _Layout) -> Iterator[tuple[dict, tuple]]:
+    """(blobs of ``layout.sources`` by chunk name, (part_id, chunk_seq))
+    of each blob row in ``rows``: a batch of _packed rows in Spark, or
+    the driver's table of blob columns."""
+    srcs = sorted(set(layout.sources.values()))
+    if "__blobs" in rows.column_names:
+        flat = arrow_chunk.binary_views(rows.column("__blobs").flatten())
+        views = {src: flat[j :: len(srcs)] for j, src in enumerate(srcs)}
+    else:
+        views = {src: arrow_chunk.binary_views(rows.column(src)) for src in srcs}
+    ids = zip(rows.column("part_id").to_pylist(), rows.column("chunk_seq").to_pylist())
+    for i, group_id in enumerate(ids):
+        yield {name: views[src][i] for name, src in layout.sources.items()}, group_id
+
+
+def _assemble_row_group(
+    blobs: dict, group_id: tuple, layout: _Layout, specs: list | None = None
+) -> pa.Table | None:
     """The one row-group reassembly, shared by the Spark decode (one
-    call per group inside the UDF) and the driver-local scan: decode
-    the ``layout.flat_names`` chunks of ``group`` (rows of one
-    (part_id, chunk_seq)) and zip the output columns positionally into
-    ``layout.schema``.  ``specs`` is the exact residual (_match_mask):
-    the predicate columns decode first, a group with no matching row
-    decodes nothing else and yields an empty table, and only matching
-    rows are returned.  A predicate chunk no output column holds is
-    decoded for the mask and never emitted."""
-    decoded = _Chunks(group)
-    absent = [c for c in layout.flat_names if c not in decoded.blobs]
-    if absent:
-        group_id = (group.column("part_id")[0].as_py(), group.column("chunk_seq")[0].as_py())
-        raise ValueError(
-            f"row group {group_id} missing column chunks: {absent} "
-            "(a blob file is missing or damaged)"
-        )
+    call per blob row inside the UDF) and the driver-local scan: decode
+    the ``layout.flat_names`` chunks of one row group (``blobs``, its
+    (part_id, chunk_seq) ``group_id``) and zip the output columns
+    positionally into ``layout.schema``.  ``specs`` is the exact
+    residual (_match_mask): the predicate columns decode first, a group
+    with no matching row decodes nothing else and yields None, and only
+    matching rows are returned.  A predicate chunk no output column
+    holds is decoded for the mask and never emitted."""
+    decoded = _Chunks(blobs)
     match = _match_mask(decoded, specs) if specs else None
     if match is not None and not match.any():
-        return pa.table({})  # Spark's empty grouped-map result
+        return None
     arrays = []
     for kind, c, fl in layout.plan:
         if kind == "node":
@@ -791,41 +808,28 @@ def _assemble_row_group(group: pa.Table, layout: _Layout, specs: list | None = N
                 arrays.append(a.cast(want_t) if a.type != want_t else a)
     if layout.ordered:
         n_rows = len(arrays[0]) if arrays else 0
-        pid = group.column("part_id")[0].as_py()
-        cseq = group.column("chunk_seq")[0].as_py()
-        arrays.append(pa.array(np.full(n_rows, pid, dtype=np.int32)))
-        arrays.append(pa.array(np.full(n_rows, cseq, dtype=np.int64)))
+        arrays.append(pa.array(np.full(n_rows, group_id[0], dtype=np.int32)))
+        arrays.append(pa.array(np.full(n_rows, group_id[1], dtype=np.int64)))
         arrays.append(pa.array(np.arange(n_rows, dtype=np.int64)))
     out = pa.Table.from_arrays(arrays, names=layout.schema.names)
     return out if match is None or match.all() else out.filter(pa.array(match))
 
 
-def _decode_groups(blob_df: DataFrame, layout: _Layout, specs: list | None = None) -> DataFrame:
-    """``layout.schema`` rows of every row group in ``blob_df``, in Spark.
-    A layout of one flat column has one blob row per row group, so it
-    decodes narrow (mapInArrow); otherwise one shuffle keyed by
-    (part_id, chunk_seq) regroups the chunks."""
+def _decode_rows(blob_df: DataFrame, layout: _Layout, specs: list | None = None) -> DataFrame:
+    """``layout.schema`` rows of every row group in ``blob_df``, in
+    Spark: one narrow stage, a blob row being a whole row group, that
+    reads only the blob columns the layout decodes (Parquet projection)."""
 
-    def assemble(group: pa.Table) -> pa.Table:
-        drop_zip_finders()
-        out = _assemble_row_group(group, layout, specs)
-        drop_zip_finders()
-        return out
+    @drops_zip_finders
+    def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            for blobs, group_id in _row_groups(rb, layout):
+                out = _assemble_row_group(blobs, group_id, layout, specs)
+                if out is not None:
+                    yield from out.to_batches()
 
-    pruned = blob_df.where(F.col("column").isin(layout.flat_names)).select(
-        "part_id", "chunk_seq", "column", "data"
-    )
-    if len(layout.flat_names) == 1:
-
-        @drops_zip_finders
-        def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for rb in batches:
-                for i in range(rb.num_rows):
-                    group = pa.Table.from_batches([rb.slice(i, 1)])
-                    yield from _assemble_row_group(group, layout, specs).to_batches()
-
-        return pruned.mapInArrow(decode_fn, schema=layout.schema)
-    return pruned.groupBy("part_id", "chunk_seq").applyInArrow(assemble, schema=layout.schema)
+    srcs = sorted(set(layout.sources.values()))
+    return _packed(blob_df, srcs).mapInArrow(decode_fn, schema=layout.schema)
 
 
 def _rebuild(decoded_df: DataFrame, layout: _Layout) -> DataFrame:
@@ -860,22 +864,46 @@ def decode_table(
     (/root/reference/lib/reader.js:51-67 ``ParquetCursor.next`` →
     /root/reference/lib/shred.js:157-245 ``materializeRecords``), but
     table-at-a-time: every column chunk of one (part_id, chunk_seq) row
-    group is decoded in a single grouped-Arrow task and zipped
-    positionally — no row-id join, no per-row Python.
+    group is one blob row, decoded in one task and zipped positionally
+    — no row-id join, no per-row Python.
 
-    Scale shape: one shuffle keyed by (part_id, chunk_seq).  Keys are
-    high-entropy and each group is one row group (≤ chunk_rows rows ×
-    k compressed column blobs), so group memory is bounded regardless of
-    total table size; at 100 TB the shuffle moves compressed bytes only.
-    Column pruning: pass ``columns`` to decode a projection — pruned
-    chunks never leave the scan (Catalyst pushes the IN filter down to
-    the blob parquet); a projection to one leaf chunk needs no
-    regrouping and decodes without the shuffle.
+    Scale shape: one narrow stage, no shuffle.  A blob row is a whole
+    row group (≤ chunk_rows rows × k compressed column blobs), so task
+    memory is bounded regardless of total table size, and any split of
+    the blob files decodes correctly.  Column pruning: pass ``columns``
+    to decode a projection — Parquet reads only the blob columns
+    (``c<col_idx>``) of their chunks, the analogue of the reference's
+    getCursor(columnList) (parquetjs lib/reader.js:132-144).
     """
     if meta_rows is None:
         meta_rows = _meta_rows_for(blob_df)
     layout = _row_group_layout(meta_rows, columns, ordered)
-    return _rebuild(_decode_groups(blob_df, layout), layout)
+    return _rebuild(_decode_rows(blob_df, layout), layout)
+
+
+def decode_column(
+    blob_df: DataFrame,
+    column: str,
+    out_name: str | None = None,
+    out_type: T.DataType | None = None,
+) -> DataFrame:
+    """Decode one column's chunks back to a value DataFrame: decode_table
+    projected to ``column``, emitted as ``out_name`` (default
+    ``column``) of Spark type ``out_type`` (default: the chunk dtype's)."""
+    return _decode_one(blob_df, _meta_rows_for(blob_df), column, out_name, out_type)
+
+
+def _decode_one(blob_df, meta_rows, column, out_name=None, out_type=None) -> DataFrame:
+    out_name = out_name or column
+    layout = _row_group_layout(meta_rows, [column], names={column: out_name})
+    if out_type is not None:
+        pa_types = dict(layout.pa_types)
+        if isinstance(out_type, T.TimestampType):
+            # tz-aware Spark timestamps travel as UTC-instant arrow timestamps
+            pa_types[column] = pa.timestamp("us", tz="UTC")
+        schema = T.StructType([T.StructField(out_name, out_type)])
+        layout = layout._replace(pa_types=pa_types, schema=schema)
+    return _rebuild(_decode_rows(blob_df, layout), layout)
 
 
 def roundtrip_table(
@@ -897,7 +925,7 @@ def roundtrip_table(
 # comes from one distinct job and lookups apply no row-group filter
 _MANIFEST_DRIVER_ROWS = 2_000_000
 _CHUNK_META = [
-    "part_id", "chunk_seq", "column", "n_nulls", "encoded_bytes", "stat_min", "stat_max",
+    "part_id", "chunk_seq", "column", "n", "n_nulls", "encoded_bytes", "stat_min", "stat_max",
     "bloom",
 ]
 
@@ -934,16 +962,14 @@ def _manifest_meta(spark: SparkSession, path: str) -> _Manifest | None:
         return _Manifest({r["column"]: (r["col_idx"], r["dtype"]) for r in rows}, table, local)
 
     def spark_read(uri):
-        # the blob schema: no inference job, and a field an old table's
-        # manifest lacks reads as null (``data`` reads as null too)
-        return entry(_meta_rows_for(spark.read.schema(BLOB_SCHEMA).parquet(uri)))
+        # the manifest schema: no inference job
+        rows = spark.read.schema(MANIFEST_SCHEMA).parquet(uri)
+        return entry(rows.select("column", "col_idx", "dtype").distinct().collect())
 
     def driver_read(local):
         import pyarrow.dataset as pads
 
-        # the blob schema fills a field an old table's files lack with
-        # nulls (null = conservatively unprunable)
-        ds = pads.dataset(local, format="parquet", schema=_BLOB_PA_SCHEMA)
+        ds = pads.dataset(local, format="parquet", schema=_MANIFEST_PA_SCHEMA)
         if ds.count_rows() > _MANIFEST_DRIVER_ROWS:
             return spark_read(f"{path}/manifest")
         table = ds.to_table(columns=_CHUNK_META + ["col_idx", "dtype"])
@@ -973,7 +999,7 @@ def _chunk_meta(blob_df: DataFrame, columns: list[str]) -> pa.Table | None:
     tbl = None if cached is None else cached.chunks
     if tbl is not None:
         return tbl.filter(pc.is_in(tbl["column"], pa.array(want, pa.string())))
-    rows = blob_df.where(F.col("column").isin(want))
+    rows = chunk_view(blob_df).where(F.col("column").isin(want))
     tbl = rows.select(*_CHUNK_META).limit(_MANIFEST_DRIVER_ROWS + 1).toArrow()
     return tbl if tbl.num_rows <= _MANIFEST_DRIVER_ROWS else None
 
@@ -982,19 +1008,14 @@ def _resolve_dtype(blob_df: DataFrame, column: str, dtype: str | None) -> str:
     """dtype is constant per column; callers that know it (manifest in
     hand, or the CLI's resolver) pass it and skip the probe.  When the
     table came from read_encoded, the manifest cache answers with no
-    Spark job at all; only a bare hand-built DataFrame pays the
-    limit-1 probe."""
+    Spark job at all; only a bare hand-built DataFrame pays
+    _meta_rows_for's limit-1 probe."""
     if dtype is not None:
         return dtype
-    cached = _cached_meta(blob_df)
-    if cached is not None:
-        if column not in cached.columns:
-            raise ValueError(f"no chunks for column {column!r}: not in table")
-        return cached.columns[column][1]
-    drow = blob_df.where(F.col("column") == column).select("dtype").limit(1).collect()
-    if not drow:
+    dtypes = {r["column"]: r["dtype"] for r in _meta_rows_for(blob_df)}
+    if column not in dtypes:
         raise ValueError(f"no chunks for column {column!r}: not in table")
-    return drow[0][0]
+    return dtypes[column]
 
 
 def _coerce_literal(value, dtype: str):
@@ -1131,17 +1152,20 @@ def _kept_chunks(meta: pa.Table, spec: tuple) -> pa.Table:
 
 def _meta_rows_for(blob_df: DataFrame) -> list:
     """(column, col_idx, dtype) rows for decode_table, resolved from the
-    manifest cache when available, else one tiny distinct job on the
-    UNPRUNED table.  Scan paths pass this into decode_table so an
-    empty pruned result still decodes to an empty, correctly-typed
-    DataFrame instead of 'blob table has no chunks'."""
+    manifest cache when available, else from the ``chunks`` of one blob
+    row of the UNPRUNED table (every row group holds every column), a
+    limit-1 job.  Scan paths pass this into decode_table so an empty
+    pruned result still decodes to an empty, correctly-typed DataFrame
+    instead of 'blob table has no chunks'."""
     cached = _cached_meta(blob_df)
     if cached is not None:
         return [
             {"column": c, "col_idx": ci, "dtype": dt}
             for c, (ci, dt) in cached.columns.items()
         ]
-    return blob_df.select("column", "col_idx", "dtype").distinct().collect()
+    keys = ("column", "col_idx", "dtype")
+    first = blob_df.select(*[F.col(f"chunks.{k}").alias(k) for k in keys]).limit(1).collect()
+    return [dict(zip(keys, r)) for r in zip(*first[0])] if first else []
 
 
 # at most this many kept row groups become the literal keep-set filter;
@@ -1193,32 +1217,19 @@ def _keepset_filter(keep: set[tuple[int, int]] | None) -> Column:
     return F.expr(f"part_id IN ({parts}) AND (part_id, chunk_seq) IN ({pairs})")
 
 
-def _predicate_keepset(blob_df: DataFrame, specs: list) -> Column:
-    """The keep-set of ``specs`` as a row-group filter: DML rewrites
-    ``where(keep)`` and passes ``where(~keep)`` through."""
-    return _keepset_filter(_kept_groups(blob_df, specs))
-
-
-def _read_kept_blobs(local: str, keep: set, names: list[str]) -> pa.Table:
-    """The blob rows of ``names`` in the ``keep`` row groups of the table
-    in the local directory ``local``, read on the driver — the
-    readRowGroup analogue (parquetjs lib/reader.js:217-235).  Hive
-    partitioning keeps a partition_by_column layout's ``column``
-    readable."""
+def _read_kept_blobs(local: str, keep: set, sources: list[str]) -> pa.Table:
+    """The blob rows of the ``keep`` row groups of the table in the local
+    directory ``local``, with only the blob columns ``sources``, read on
+    the driver — the readRowGroup analogue (parquetjs
+    lib/reader.js:217-235)."""
     import pyarrow.dataset as pads
 
-    ds = pads.dataset(
-        f"{local}/blobs",
-        format="parquet",
-        partitioning=pads.partitioning(pa.schema([("column", pa.string())]), flavor="hive"),
-    )
+    ds = pads.dataset(f"{local}/blobs", format="parquet")
     parts = sorted({p for p, _ in keep})
     seqs = sorted({c for _, c in keep})
     rows = ds.to_table(
-        columns=["part_id", "chunk_seq", "column", "data"],
-        filter=pc.field("part_id").isin(parts)
-        & pc.field("chunk_seq").isin(seqs)
-        & pc.field("column").isin(names),
+        columns=["part_id", "chunk_seq", *sources],
+        filter=pc.field("part_id").isin(parts) & pc.field("chunk_seq").isin(seqs),
     )
     exact = [g in keep for g in zip(rows["part_id"].to_pylist(), rows["chunk_seq"].to_pylist())]
     return rows.filter(pa.array(exact, pa.bool_())).sort_by(
@@ -1251,20 +1262,15 @@ def _scan_local(
     tables = []
     if keep:
         try:
-            rows = _read_kept_blobs(cached.local, keep, layout.flat_names)
+            rows = _read_kept_blobs(cached.local, keep, sorted(set(layout.sources.values())))
         except (OSError, pa.ArrowException) as e:
             path = blob_df._pjs_meta_path
             raise ValueError(f"unreadable table blobs {path}/blobs ({type(e).__name__})") from e
-        pid = rows["part_id"].to_numpy()
-        seq = rows["chunk_seq"].to_numpy()
-        starts = np.flatnonzero(np.r_[True, (pid[1:] != pid[:-1]) | (seq[1:] != seq[:-1])])
-        for a, b in zip(starts, np.r_[starts[1:], len(pid)]):
-            t = _assemble_row_group(rows.slice(a, b - a), layout, specs)
-            if t.num_rows:
+        for blobs, group_id in _row_groups(rows, layout):
+            t = _assemble_row_group(blobs, group_id, layout, specs)
+            if t is not None and t.num_rows:
                 tables.append(t)
     if not tables:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         return to_arrow_schema(layout.schema).empty_table()
     return pa.concat_tables(tables)
 
@@ -1273,7 +1279,6 @@ def _scan(
     blob_df: DataFrame,
     specs: list,
     columns: list[str] | None = None,
-    meta_rows: list | None = None,
     names: dict[str, str] | None = None,
 ) -> DataFrame:
     """The one scan behind scan_table_where, scan_eq and scan_column:
@@ -1288,17 +1293,16 @@ def _scan(
     if columns == []:
         # a zero-column Arrow table carries no row count: emit the
         # predicate columns and drop them in the JVM, which keeps it
-        return _scan(blob_df, specs, list(dict.fromkeys(s[0] for s in specs)), meta_rows).select()
+        return _scan(blob_df, specs, list(dict.fromkeys(s[0] for s in specs))).select()
     layout = _row_group_layout(
-        meta_rows if meta_rows is not None else _meta_rows_for(blob_df), columns,
-        residual=[s[0] for s in specs], names=names,
+        _meta_rows_for(blob_df), columns, residual=[s[0] for s in specs], names=names
     )
     keep = _kept_groups(blob_df, specs)
     local = _scan_local(blob_df, keep, layout, specs)
     if local is not None:
         decoded = blob_df.sparkSession.createDataFrame(local, schema=layout.schema)
     else:
-        decoded = _decode_groups(blob_df.where(_keepset_filter(keep)), layout, specs)
+        decoded = _decode_rows(blob_df.where(_keepset_filter(keep)), layout, specs)
     return _rebuild(decoded, layout)
 
 
@@ -1307,10 +1311,9 @@ def _scan_one(
 ) -> DataFrame:
     """The single-column scan behind scan_column and
     scan_eq(columns=None): _scan of the predicate column alone, named
-    ``out_name``.  The spec's dtype is the only metadata it needs."""
-    column, _, _, dtype = spec
-    meta_rows = [{"column": column, "col_idx": 0, "dtype": dtype}]
-    return _scan(blob_df, [spec], [column], meta_rows, {column: out_name or column})
+    ``out_name``."""
+    column = spec[0]
+    return _scan(blob_df, [spec], [column], {column: out_name or column})
 
 
 def scan_column(
@@ -1486,40 +1489,68 @@ def _match_mask(arrs: dict[str, pa.Array], specs: list) -> np.ndarray:
     return match
 
 
-def _reencoded(rows: pa.Table, arrays: list, codec: str, compression: str) -> pa.Table:
-    """The one row builder of every rewrite: ``rows`` with each field
-    _encode_chunk decides replaced by the encode of ``arrays[i]`` at the
-    row's own dtype.  part_id, chunk_seq, column, col_idx and dtype pass
-    through, and the rows keep the group's own Arrow schema."""
-    if not arrays:
-        return rows
-    encoded = [
-        _encode_chunk(a, dtype, codec=codec, compression=compression, fsst_state={})
-        for a, dtype in zip(arrays, rows.column("dtype").to_pylist())
-    ]
-    for i, field in enumerate(rows.schema):
-        if field.name in encoded[0]:
-            values = pa.array([e[field.name] for e in encoded], field.type)
-            rows = rows.set_column(i, field, values)
-    return rows
+def _row_chunks(row: pa.Table) -> tuple[list[dict], _Chunks]:
+    """The chunk fields (dicts, in col_idx order) and the on-demand
+    decoder of the one blob row ``row``."""
+    chunks = row.column("chunks")[0].as_py()
+    blobs = {
+        ch["column"]: arrow_chunk.binary_views(row.column(_data_col(ch["col_idx"])))[0]
+        for ch in chunks
+    }
+    return chunks, _Chunks(blobs)
 
 
-def _rewrite_groups(blob_df: DataFrame, by: tuple, rewrite, **kw) -> DataFrame:
-    """The one rewrite stage of delete, update and compact: each ``by``
-    group of blob rows goes through ``rewrite(group, **kw)``, a
-    module-level ``pa.Table -> pa.Table`` transform (so it also runs on
-    a captured group with no Spark), and comes back in ``blob_df``'s
-    schema."""
+def _reencoded(row: pa.Table, chunks: list[dict], arrays: dict, codec: str, compression: str) -> pa.Table:
+    """The one row builder of every rewrite: the blob row ``row``, whose
+    chunk fields are ``chunks`` (_row_chunks), with the chunk of each
+    column in ``arrays`` replaced by the encode of its array at the
+    chunk's own dtype.  part_id, chunk_seq, column, col_idx and dtype
+    pass through, and the row keeps its own Arrow schema."""
+    chunks = [dict(ch) for ch in chunks]
+    for ch in chunks:
+        if ch["column"] in arrays:
+            fields, blob = _encode_chunk(
+                arrays[ch["column"]], ch["dtype"], codec=codec, compression=compression,
+                fsst_state={},
+            )
+            ch.update(fields)
+            i = row.schema.get_field_index(_data_col(ch["col_idx"]))
+            row = row.set_column(i, row.schema.field(i), pa.array([blob], pa.binary()))
+    i = row.schema.get_field_index("chunks")
+    return row.set_column(i, row.schema.field(i), pa.array([chunks], row.schema.field(i).type))
 
-    # kw is bound in a plain annotated def: applyInArrow infers its eval
-    # type from the signature, and a functools.partial fails that (pyspark 4.1)
-    def fn(group: pa.Table) -> pa.Table:
-        drop_zip_finders()
-        out = rewrite(group, **kw)
-        drop_zip_finders()
-        return out
 
-    return blob_df.groupBy(*by).applyInArrow(fn, schema=blob_df.schema)
+def _rewrite_rows(blob_df: DataFrame, keep: set | None, rewrite, **kw) -> DataFrame:
+    """The one rewrite stage of delete and update: one narrow stage over
+    ``blob_df`` in which each blob row (a whole row group) of the
+    ``keep`` row groups (every row group when None) goes through
+    ``rewrite(row, **kw)``, a module-level transform of a one-row
+    ``pa.Table`` into 0 or 1 rows (so it also runs on a captured row
+    with no Spark), and every other row passes through untouched, all in
+    ``blob_df``'s schema.  It is one stage over ``blob_df`` rather than a
+    union of a filtered pass-through and a rewritten side because an
+    unstored blob frame numbers its row groups by the task that encodes
+    them, which a union would renumber."""
+    if keep is not None and len(keep) > _KEEPSET_COLLECT_ROWS:
+        keep = None
+
+    @drops_zip_finders
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            ids = zip(rb.column("part_id").to_pylist(), rb.column("chunk_seq").to_pylist())
+            hits = [i for i, g in enumerate(ids) if keep is None or g in keep]
+            if not hits:
+                yield rb
+                continue
+            rows = pa.Table.from_batches([rb])
+            parts, at = [], 0
+            for i in hits:
+                parts += [rows.slice(at, i - at), rewrite(rows.slice(i, 1), **kw)]
+                at = i + 1
+            parts.append(rows.slice(at))
+            yield from pa.concat_tables(parts).to_batches()
+
+    return blob_df.mapInArrow(fn, schema=blob_df.schema)
 
 
 def delete_where(
@@ -1536,35 +1567,34 @@ def delete_where(
     row groups whose zone maps / blooms / n_nulls prove they contain NO
     matching row pass through with their blob bytes untouched; only
     possibly-affected groups are decoded, masked exactly, and
-    re-encoded (all columns of a group together, so (part_id,
-    chunk_seq) row alignment survives for decode_table).  A group whose
-    rows all match disappears entirely — consistently across columns.
-    At 100 TB a selective predicate rewrites the same ~fraction of
-    chunks a scan would read, not the table.  Predicates and literals
-    validate as in scan_table_where (ValueError before any job)."""
+    re-encoded (all columns of a group together, in its one blob row,
+    so (part_id, chunk_seq) row alignment survives for decode_table).
+    A group whose rows all match disappears entirely.  One narrow stage
+    (_rewrite_rows), no shuffle.  At 100 TB a selective predicate
+    rewrites the same ~fraction of chunks a scan would read, not the
+    table.  Predicates and literals validate as in scan_table_where
+    (ValueError before any job)."""
     specs = _predicate_specs(blob_df, ranges, eqs)
-    keep = _predicate_keepset(blob_df, specs)
-    rewritten = _rewrite_groups(
-        blob_df.where(keep), ("part_id", "chunk_seq"), _delete_rewrite_group,
-        specs=specs, codec=codec, compression=compression,
+    return _rewrite_rows(
+        blob_df, _kept_groups(blob_df, specs), _delete_rewrite_row, specs=specs, codec=codec,
+        compression=compression,
     )
-    return blob_df.where(~keep).unionByName(rewritten)
 
 
-def _delete_rewrite_group(group: pa.Table, *, specs, codec, compression) -> pa.Table:
-    """One (part_id, chunk_seq) group of delete_where.  Module-level so
-    the decode-count contract is directly testable (see
-    tests/test_delete.py TestTwoPhaseDecode): a zone-map/bloom false
-    positive costs only the predicate columns' decodes."""
-    chunks = _Chunks(group)
-    match = _match_mask(chunks, specs)
+def _delete_rewrite_row(row: pa.Table, *, specs, codec, compression) -> pa.Table:
+    """One blob row of delete_where.  Module-level so the decode-count
+    contract is directly testable (see tests/test_delete.py
+    TestTwoPhaseDecode): a zone-map/bloom false positive costs only the
+    predicate columns' decodes."""
+    chunks, decoded = _row_chunks(row)
+    match = _match_mask(decoded, specs)
     if not match.any():
-        return group  # zone map over-approximated: nothing to delete
+        return row  # zone map over-approximated: nothing to delete
     if match.all():
-        return group.slice(0, 0)  # whole group deleted, all columns
+        return row.slice(0, 0)  # whole group deleted, all columns
     keep = pa.array(~match)
-    arrays = [chunks[c].filter(keep) for c in group.column("column").to_pylist()]
-    return _reencoded(group, arrays, codec, compression)
+    arrays = {ch["column"]: decoded[ch["column"]].filter(keep) for ch in chunks}
+    return _reencoded(row, chunks, arrays, codec, compression)
 
 
 def update_where(
@@ -1582,9 +1612,9 @@ def update_where(
     Cheaper than DELETE: row counts never change, so only the SET
     columns of possibly-affected row groups re-encode — every other
     column of every group, and every group the metadata walk proves
-    unaffected, passes through with its blob bytes untouched.
-    Predicates, literals and SET values validate as in
-    scan_table_where (ValueError before any job)."""
+    unaffected, passes through with its blob bytes untouched.  One
+    narrow stage, as for delete_where.  Predicates, literals and SET
+    values validate as in scan_table_where (ValueError before any job)."""
     if not assignments:
         raise ValueError("update_where needs at least one assignment")
     dtype_of = {r["column"]: r["dtype"] for r in _meta_rows_for(blob_df)}
@@ -1598,38 +1628,26 @@ def update_where(
         for c, v in assignments.items()
     }
     specs = _predicate_specs(blob_df, ranges, eqs)
-    set_cols = sorted(assignments)
-    group_cols = sorted(set(set_cols) | {c for c, _, _, _ in specs})
-    keep = _predicate_keepset(blob_df, specs)
-    in_keep = blob_df.where(keep)
-    passthrough = blob_df.where(~keep).unionByName(
-        in_keep.where(~F.col("column").isin(set_cols))
+    return _rewrite_rows(
+        blob_df, _kept_groups(blob_df, specs), _update_rewrite_row, specs=specs,
+        assignments=assignments, codec=codec, compression=compression,
     )
-    rewritten = _rewrite_groups(
-        in_keep.where(F.col("column").isin(group_cols)), ("part_id", "chunk_seq"),
-        _update_rewrite_group, specs=specs, assignments=assignments, codec=codec,
-        compression=compression,
-    )
-    return passthrough.unionByName(rewritten)
 
 
-def _update_rewrite_group(
-    group: pa.Table, *, specs, assignments, codec, compression
-) -> pa.Table:
-    """One (part_id, chunk_seq) group of update_where: its predicate
-    and SET chunks in, its SET chunks out.  A false positive decodes
-    only the predicate columns and returns the SET chunks untouched."""
-    chunks = _Chunks(group)
-    match = _match_mask(chunks, specs)
-    rows = group.filter(pa.array([c in assignments for c in group.column("column").to_pylist()]))
+def _update_rewrite_row(row: pa.Table, *, specs, assignments, codec, compression) -> pa.Table:
+    """One blob row of update_where: its SET chunks re-encode where a
+    row matches.  A false positive decodes only the predicate columns
+    and returns the row untouched."""
+    chunks, decoded = _row_chunks(row)
+    match = _match_mask(decoded, specs)
     if not match.any():
-        return rows  # over-approximated keep-set: nothing to change
+        return row  # over-approximated keep-set: nothing to change
     mask = pa.array(match)
-    arrays = [
-        pc.if_else(mask, pa.scalar(assignments[c], type=chunks[c].type), chunks[c])
-        for c in rows.column("column").to_pylist()
-    ]
-    return _reencoded(rows, arrays, codec, compression)
+    arrays = {
+        c: pc.if_else(mask, pa.scalar(v, type=decoded[c].type), decoded[c])
+        for c, v in assignments.items()
+    }
+    return _reencoded(row, chunks, arrays, codec, compression)
 
 
 def compact_chunks(
@@ -1639,79 +1657,109 @@ def compact_chunks(
     codec: str = "auto",
     compression: str = "auto",
 ) -> DataFrame:
-    """Selective runt-chunk compaction — the encoded-table analogue of
-    a small-files OPTIMIZE pass.
+    """Selective runt-row-group compaction — the encoded-table analogue
+    of a small-files OPTIMIZE pass.
 
-    Every encode task leaves a tail chunk of < chunk_rows rows; at
-    100 TB that is millions of runt chunks whose fixed per-chunk cost
+    Every encode task leaves a tail row group of < chunk_rows rows; at
+    100 TB that is millions of runts whose fixed per-chunk cost
     (manifest row, header, selector sample, zone-map probe) is paid on
     every scan.  This pass merges runts with their neighbors WITHIN a
-    storage partition and re-encodes only the merged groups:
+    storage partition and re-encodes only the merged row groups:
 
-      * detection is pure manifest metadata (one distinct over
-        (part_id, chunk_seq, n)); partitions with no runt pass through
-        with their blob bytes untouched — zero decode cost;
-      * bucket boundaries are a pure function of the partition's chunk
-        geometry (greedy accumulate to target_rows, trailing runt
-        merges backwards), so every column of a partition computes the
-        SAME buckets and (part_id, chunk_seq) row alignment survives
-        for decode_table;
+      * the driver picks the merge buckets from the manifest
+        (_chunk_meta, _runt_buckets); every row group outside them
+        passes through with its blob bytes untouched — zero decode cost;
+      * bucket boundaries are a pure function of the partition's row
+        group geometry (greedy accumulate to target_rows, trailing runt
+        merges backwards), and a bucket re-encodes every column of its
+        row groups together, so (part_id, chunk_seq) row alignment
+        survives for decode_table;
       * merged chunks re-enter the normal encode path (auto selector,
         fresh stats/sha/bloom), so verify_blobs and the scan pruning
         surfaces see no difference from a first-pass chunk.
 
-    One column of one partition is one group of the Arrow rewrite stage
-    (_rewrite_groups) — the same bound the original encode task held."""
-    geom = blob_df.select("part_id", "chunk_seq", "n").distinct()
-    counts = geom.groupBy("part_id").agg(
-        F.count("*").alias("n_chunks"), F.min("n").alias("min_n")
-    )
-    affected = counts.where(
-        (F.col("n_chunks") >= 2) & (F.col("min_n") < min_rows)
-    ).select("part_id")
-    # affected is manifest-sized; broadcast keeps both joins shuffle-free
-    passthrough = blob_df.join(F.broadcast(affected), "part_id", "left_anti")
-    todo = blob_df.join(F.broadcast(affected), "part_id", "left_semi")
-    compacted = _rewrite_groups(
-        todo, ("part_id", "column"), _compact_rewrite_group, min_rows=min_rows,
-        target_rows=target_rows, codec=codec, compression=compression,
-    )
-    return passthrough.unionByName(compacted)
+    Only the bucketed row groups are regrouped, by part_id, into one
+    Arrow stage (_compact_rewrite_group)."""
+    meta_rows = _meta_rows_for(blob_df)
+    if not meta_rows:
+        return blob_df
+    # every column of a row group holds its n rows: one column suffices
+    meta = _chunk_meta(blob_df, [meta_rows[0]["column"]])
+    if meta is None:
+        raise ValueError(f"compact_chunks: over {_MANIFEST_DRIVER_ROWS} row groups to plan")
+    buckets = _runt_buckets(meta, min_rows, target_rows)
+    todo = _keepset_filter({(p, s) for p, bs in buckets.items() for b in bs for s in b})
+
+    # kw is bound in a plain annotated def: applyInArrow infers its eval
+    # type from the signature, and a functools.partial fails that (pyspark 4.1)
+    def fn(group: pa.Table) -> pa.Table:
+        drop_zip_finders()
+        out = _compact_rewrite_group(group, buckets=buckets, codec=codec, compression=compression)
+        drop_zip_finders()
+        return out
+
+    compacted = blob_df.where(todo).groupBy("part_id").applyInArrow(fn, schema=blob_df.schema)
+    # the pass-through side first: an unstored blob frame numbers its row
+    # groups by the encoding task, and a union renumbers the tasks of
+    # every child but the first (the grouped side encodes in its own stage)
+    return blob_df.where(~todo).unionByName(compacted)
 
 
-def _compact_rewrite_group(
-    group: pa.Table, *, min_rows, target_rows, codec, compression
-) -> pa.Table:
-    """One (part_id, column) group of compact_chunks: each bucket of 2+
-    chunks re-encodes as one chunk under its first chunk's identity; a
-    singleton bucket passes through with its blob bytes untouched."""
-    group = group.sort_by("chunk_seq")
-    buckets: list[list[int]] = []
-    cur: list[int] = []
-    acc = 0
-    for i, nv in enumerate(group.column("n").to_pylist()):
-        cur.append(i)
-        acc += nv
-        if acc >= target_rows:
-            buckets.append(cur)
-            cur, acc = [], 0
-    if cur:
-        if acc < min_rows and buckets:
-            buckets[-1].extend(cur)
-        else:
-            buckets.append(cur)
-    merged = [b for b in buckets if len(b) > 1]
-    blobs = arrow_chunk.binary_views(group.column("data"))
-    arrays = [
-        pa.concat_arrays([arrow_chunk.decode_arrow_column(blobs[i])[0] for i in b])
-        for b in merged
-    ]
+def _runt_buckets(meta: pa.Table, min_rows: int, target_rows: int) -> dict[int, list[list[int]]]:
+    """The merge buckets of compact_chunks, from one column's chunk rows
+    (one per row group): {part_id: [[chunk_seq, ...], ...]}, each bucket
+    2+ row groups.  Only a partition with 2+ row groups and one under
+    ``min_rows`` rows is bucketed: in chunk_seq order, row groups
+    accumulate until ``target_rows``, and a trailing bucket under
+    ``min_rows`` merges into the one before it."""
+    geom: dict[int, list[tuple[int, int]]] = {}
+    for p, s, n in zip(*(meta[c].to_pylist() for c in ("part_id", "chunk_seq", "n"))):
+        geom.setdefault(p, []).append((s, n))
+    out = {}
+    for p, groups in geom.items():
+        groups.sort()
+        if len(groups) < 2 or min(n for _, n in groups) >= min_rows:
+            continue
+        buckets: list[list[int]] = []
+        cur: list[int] = []
+        acc = 0
+        for s, n in groups:
+            cur.append(s)
+            acc += n
+            if acc >= target_rows:
+                buckets.append(cur)
+                cur, acc = [], 0
+        if cur:
+            if acc < min_rows and buckets:
+                buckets[-1].extend(cur)
+            else:
+                buckets.append(cur)
+        if merged := [b for b in buckets if len(b) > 1]:
+            out[p] = merged
+    return out
+
+
+def _compact_rewrite_group(group: pa.Table, *, buckets, codec, compression) -> pa.Table:
+    """One part_id's blob rows of compact_chunks: each of its
+    ``buckets`` re-encodes as one row group under its first row group's
+    identity; any other row passes through with its blob bytes
+    untouched."""
+    if not group.num_rows:
+        return group
+    at = {s: i for i, s in enumerate(group.column("chunk_seq").to_pylist())}
+    merged = []
+    for bucket in buckets.get(group.column("part_id")[0].as_py(), []):
+        idx = [at.pop(s) for s in bucket]
+        rows = [_row_chunks(group.slice(i, 1)) for i in idx]
+        chunks = rows[0][0]
+        arrays = {
+            ch["column"]: pa.concat_arrays([decoded[ch["column"]] for _, decoded in rows])
+            for ch in chunks
+        }
+        merged.append(_reencoded(group.slice(idx[0], 1), chunks, arrays, codec, compression))
     # typed indices: take() of an empty untyped (null) array raises
-    singles = pa.array([b[0] for b in buckets if len(b) == 1], pa.int64())
-    firsts = pa.array([b[0] for b in merged], pa.int64())
-    return pa.concat_tables(
-        [group.take(singles), _reencoded(group.take(firsts), arrays, codec, compression)]
-    )
+    singles = group.take(pa.array(sorted(at.values()), pa.int64()))
+    return pa.concat_tables([singles, *merged])
 
 
 VERIFY_SCHEMA = T.StructType(
@@ -1726,30 +1774,42 @@ VERIFY_SCHEMA = T.StructType(
 
 def verify_blobs(blob_df: DataFrame) -> DataFrame:
     """Decode every chunk and re-hash — distributed bit-identity check
-    (BASELINE.json:15). Returns one row per chunk with ok flag."""
+    (BASELINE.json:15), one narrow stage over whole row groups.  Returns
+    one row per chunk with ok flag.  It reads each chunk's sha256 and
+    blob bytes; chunk names come from the manifest cache of a table
+    from read_encoded, else from the blob rows."""
+    srcs = _data_cols(blob_df.schema)
+    cached = _cached_meta(blob_df)
+    names = None
+    if cached is not None:
+        by_idx = {ci: c for c, (ci, _) in cached.columns.items()}
+        names = [by_idx[int(s[1:])] for s in srcs]
+    exprs = ["chunks.sha256 AS __sha"] + (["chunks.column AS __names"] if names is None else [])
 
     @drops_zip_finders
     def verify_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            blobs = arrow_chunk.binary_views(rb.column("data"))
-            shas = rb.column("sha256")
-            oks = [
-                arrow_chunk.verify_arrow(blobs[i], shas[i].as_py())
-                for i in range(rb.num_rows)
-            ]
+            # row-major: chunk j of row i at i * len(srcs) + j, in both lists
+            blobs = arrow_chunk.binary_views(rb.column("__blobs").flatten())
+            shas = rb.column("__sha").flatten().to_pylist()
+            oks = [arrow_chunk.verify_arrow(b, s) for b, s in zip(blobs, shas)]
+            parents = pa.array(np.repeat(np.arange(rb.num_rows), len(srcs)))
+            column = (
+                rb.column("__names").flatten()
+                if names is None
+                else pa.array(names * rb.num_rows, pa.string())
+            )
             yield pa.RecordBatch.from_arrays(
                 [
-                    rb.column("part_id"),
-                    rb.column("chunk_seq"),
-                    rb.column("column"),
+                    rb.column("part_id").take(parents),
+                    rb.column("chunk_seq").take(parents),
+                    column,
                     pa.array(oks, type=pa.bool_()),
                 ],
-                names=["part_id", "chunk_seq", "column", "ok"],
+                names=VERIFY_SCHEMA.names,
             )
 
-    return blob_df.select("part_id", "chunk_seq", "column", "sha256", "data").mapInArrow(
-        verify_fn, schema=VERIFY_SCHEMA
-    )
+    return _packed(blob_df, srcs, *exprs).mapInArrow(verify_fn, schema=VERIFY_SCHEMA)
 
 
 def roundtrip_column(
@@ -1766,9 +1826,8 @@ def roundtrip_column(
         compression=compression,
     )
     src_type = df.schema[column].dataType
-    return decode_column(
-        blobs, column, dtype=logical_dtype(src_type), out_type=src_type
-    )
+    meta_rows = [{"column": column, "col_idx": 0, "dtype": logical_dtype(src_type)}]
+    return _decode_one(blobs, meta_rows, column, out_type=src_type)
 
 
 # --------------------------------------------------------------------------
@@ -1870,21 +1929,16 @@ def _commit_local(directory: str, mode: str, batches: Iterable, schema: pa.Schem
     os.replace(tmp, os.path.join(directory, name))
 
 
-def _local_manifest(local: str, files: list[str]) -> Iterator[pa.RecordBatch]:
-    """The manifest rows of the blob ``files`` of the local table at
-    ``local``, streamed batch by batch; ``data`` is not in the dataset
-    schema, so Parquet reads only the metadata column chunks.  Hive
-    partitioning keeps a partition_by_column layout's ``column``."""
+def _local_manifest(files: list[str]) -> Iterator[pa.RecordBatch]:
+    """The manifest rows of the local blob ``files``, streamed batch by
+    batch: each batch's ``chunks`` flattened (_flat_chunks).  The blob
+    columns are not in the dataset schema, so Parquet reads only the
+    metadata column chunks."""
     import pyarrow.dataset as pads
 
-    ds = pads.dataset(
-        files,
-        format="parquet",
-        schema=_MANIFEST_PA_SCHEMA,
-        partitioning=pads.partitioning(pa.schema([("column", pa.string())]), flavor="hive"),
-        partition_base_dir=f"{local}/blobs",
-    )
-    return ds.to_batches(columns=MANIFEST_COLUMNS)
+    schema = to_arrow_schema(blob_schema([]))
+    for batch in pads.dataset(files, format="parquet", schema=schema).to_batches():
+        yield _flat_chunks(batch)
 
 
 _WRITE_MODES = ("overwrite", "append")
@@ -1895,7 +1949,6 @@ def write_encoded(
     path: str,
     mode: str = "overwrite",
     metadata: dict[str, str] | None = None,
-    partition_by_column: bool = False,
 ) -> None:
     """Persist blobs + a pure-metadata manifest (lineage) table.  This
     is the one writer of ``blobs/``, ``manifest/`` and ``meta/``.
@@ -1903,9 +1956,10 @@ def write_encoded(
     before a job runs.
 
     ``blob_df`` is evaluated once, by the one Spark job that writes the
-    blobs.  The manifest is then read back from the files that write
-    produced, with ``data`` pruned, so Parquet reads only their
-    metadata column chunks.  The manifest is therefore a projection of
+    blobs, one row per row group.  The manifest, one row per column
+    chunk, is then read back from the files that write produced, with
+    the blob columns pruned, so Parquet reads only their ``chunks``
+    column, and flattened.  The manifest is therefore a projection of
     the bytes on disk, the footer analogue (parquetjs
     lib/writer.js:520-569) but queryable: per-chunk codec, sizes,
     sha256, timing.  In append mode only the files this write added are
@@ -1914,31 +1968,22 @@ def write_encoded(
 
     ``metadata`` is user key/value footer metadata (``setMetadata``,
     /root/reference/lib/writer.js:147-149), stored as its own tiny
-    table, ``meta/``.
+    table, ``meta/``, with the engine's reserved keys: the sha format
+    and the blob layout.
 
     Where Spark resolves ``path`` to the ``file:`` scheme (_local_path),
     the driver commits ``manifest/`` and ``meta/`` itself with pyarrow,
     as parquetjs's ``close`` appends the footer in the same pass as the
     row groups (lib/writer.js:116-142): the write is one Spark job.  On
     any other scheme (``hdfs:``, ``s3a:``, ...) Spark reads the added
-    files back and writes both, two more jobs.
-
-    ``partition_by_column=True`` lays the blob table out as one storage
-    partition per encoded column.  decode_column/scan_* filter on
-    ``column``, so Catalyst partition-pruning then skips the other
-    columns' files entirely — at 100 TB a single-column decode reads
-    1/k of the storage instead of relying on parquet row-group stats.
-    The trade-off is one output file per (column, task) instead of one
-    per task; prefer it when k (columns) is small relative to the
-    desired file count."""
+    files back and writes both, two more jobs."""
     if mode not in _WRITE_MODES:
         raise ValueError(f"write_encoded: mode must be one of {_WRITE_MODES}, not {mode!r}")
     spark = blob_df.sparkSession
     local = _local_path(spark, path)
     blobs_dir = f"{path}/blobs"
-    # basePath keeps a partition_by_column layout's `column` field when
-    # individual files are read back; the schema skips footer inference
-    reader = spark.read.schema(blob_df.schema).option("basePath", blobs_dir)
+    # the schema skips footer inference when the files are read back
+    reader = spark.read.schema(blob_df.schema)
     # an append must not lose the first run's user KV: carry existing
     # rows forward, new values winning per key (read BEFORE the blob
     # write so a same-session overwrite can't read its own output)
@@ -1950,15 +1995,10 @@ def write_encoded(
             before = _blob_files(reader, blobs_dir)
         else:
             before = _local_files(f"{local}/blobs")
-    wr = blob_df.write.mode(mode)
-    if partition_by_column:
-        wr = wr.partitionBy("column")
-    wr.parquet(blobs_dir)
+    blob_df.write.mode(mode).parquet(blobs_dir)
     if local is not None:
         added = sorted(_local_files(f"{local}/blobs") - before)
-        _commit_local(
-            f"{local}/manifest", mode, _local_manifest(local, added), _MANIFEST_PA_SCHEMA
-        )
+        _commit_local(f"{local}/manifest", mode, _local_manifest(added), _MANIFEST_PA_SCHEMA)
     else:
         if mode != "append":
             written = reader.parquet(blobs_dir)
@@ -1968,7 +2008,7 @@ def write_encoded(
             # an empty append may add no file; limit(0) plans to an empty
             # relation, so the manifest write never re-runs the encode
             written = blob_df.limit(0)
-        written.select(*MANIFEST_COLUMNS).write.mode(mode).parquet(f"{path}/manifest")
+        chunk_view(written).write.mode(mode).parquet(f"{path}/manifest")
     # the manifest on disk just changed — a cached (col_idx, dtype) map
     # for this path is now stale and would silently drive decode with
     # the OLD schema after an overwrite-recast; drop it
@@ -1980,6 +2020,7 @@ def write_encoded(
     kv[_SHA_FORMAT_KEY] = str(SHA_FORMAT_VERSION)
     for k, v in (metadata or {}).items():
         kv[str(k)] = str(v)
+    kv[_LAYOUT_KEY] = BLOB_LAYOUT
     # KV table itself is always overwrite: a resume (mode="append")
     # must not stack duplicate rows — semantics are last-write-wins
     kv_table = pa.table({"key": list(kv), "value": list(kv.values())}, schema=_KV_PA_SCHEMA)
@@ -2048,18 +2089,96 @@ def read_sha_format(spark: SparkSession, path: str) -> int:
 
 
 def read_encoded(spark: SparkSession, path: str) -> DataFrame:
-    """The blob table at ``path``, planned from the known blob schema:
-    no footer-inference job, a field an older table's files lack reads
-    as null (null = conservatively unprunable), an empty ``blobs/``
-    reads as no rows and a missing one raises PATH_NOT_FOUND.  A
-    partition_by_column layout reads ``column`` from its path."""
-    df = spark.read.schema(BLOB_SCHEMA).parquet(f"{path}/blobs")
+    """The blob table at ``path``, planned from its manifest: no
+    footer-inference job, an empty ``blobs/`` reads as no rows and a
+    missing one raises PATH_NOT_FOUND.  A table in the per-chunk layout
+    raises ValueError (convert_encoded rewrites it).  On a local table
+    whose manifest the driver holds, the blob files' footers are checked
+    against it first (_check_blob_files), with no Spark job."""
+    kv = _read_kv(spark, path)
+    if kv and kv.get(_LAYOUT_KEY) != BLOB_LAYOUT:
+        raise ValueError(
+            f"table {path} has the per-chunk blob layout: rewrite it with "
+            f"convert_encoded(spark, {path!r}, <new path>)"
+        )
     # remember the manifest sibling: scan/decode resolve dtypes and
     # prune from it with zero jobs on the blob table (_manifest_meta),
     # as it is on disk now
     _MANIFEST_CACHE.pop(path, None)
+    meta = _manifest_meta(spark, path)
+    if meta is None:
+        try:
+            df = spark.read.parquet(f"{path}/blobs")
+        except AnalysisException as e:
+            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+                raise
+            df = spark.read.schema(blob_schema([])).parquet(f"{path}/blobs")
+    else:
+        if meta.chunks is not None:
+            _check_blob_files(path, meta)
+        idxs = [ci for ci, _ in meta.columns.values()]
+        df = spark.read.schema(blob_schema(idxs)).parquet(f"{path}/blobs")
     df._pjs_meta_path = path
     return df
+
+
+def _check_blob_files(path: str, meta: _Manifest) -> None:
+    """The blob files of the local table at ``path`` against its
+    manifest, on the driver: their Parquet footers' row counts (one row
+    per row group) must add up to the row groups the manifest lists.  A
+    footer that cannot be read raises one ValueError naming the file,
+    chained to the reader's error; a total that disagrees (a deleted
+    file, or the rows of a killed write that no manifest lists) raises
+    one naming the table."""
+    import pyarrow.parquet as pq
+
+    total = 0
+    for f in sorted(_local_files(f"{meta.local}/blobs")):
+        try:
+            total += pq.read_metadata(f).num_rows
+        except (OSError, pa.ArrowException) as e:
+            raise ValueError(f"unreadable table blob file {f} ({type(e).__name__})") from e
+    # every row group holds every column (appends may repeat an identity)
+    groups = meta.chunks.num_rows // max(len(meta.columns), 1)
+    if total != groups:
+        raise ValueError(
+            f"table blobs {path}/blobs hold {total} row groups, its manifest lists {groups}"
+        )
+
+
+# the per-chunk blob table written before the row-group layout, one row
+# per (part_id, chunk_seq, column); convert_encoded alone reads it
+_PER_CHUNK_SCHEMA = T.StructType(MANIFEST_SCHEMA.fields + [T.StructField("data", T.BinaryType())])
+
+
+def convert_encoded(spark: SparkSession, path: str, out_path: str) -> None:
+    """Rewrite the per-chunk table at ``path`` (one blob row per column
+    chunk, as written before the row-group layout) into the row-group
+    layout at ``out_path``: blob bytes and manifest fields unchanged,
+    its ``meta/`` key-values carried over (a table without a sha-format
+    key keeps format 1).  One shuffle regroups the chunks of each row
+    group.  A chunk without col_idx (a table older than col_idx) takes
+    its column's rank in name order."""
+    if (_local_path(spark, path) or path) == (_local_path(spark, out_path) or out_path):
+        raise ValueError("convert_encoded: out_path must differ from path")
+    kv = _read_kv(spark, path)
+    old = spark.read.schema(_PER_CHUNK_SCHEMA).parquet(f"{path}/blobs")
+    cols = old.select("column", "col_idx").distinct().collect()
+    names = sorted(r["column"] for r in cols)
+    idx_of = {r["column"]: names.index(r["column"]) if r["col_idx"] is None else r["col_idx"] for r in cols}
+    rank = F.create_map(*[F.lit(x) for c, i in idx_of.items() for x in (c, i)])
+    old = old.withColumn("col_idx", rank[F.col("column")]) if idx_of else old
+    chunk = F.struct(*[F.col(f.name) for f in _CHUNK_FIELDS])
+    in_order = F.array_sort(F.collect_list(F.struct(F.col("col_idx").alias("k"), chunk.alias("v"))))
+    rows = old.groupBy("part_id", "chunk_seq").agg(
+        F.transform(in_order, lambda e: e["v"]).alias("chunks"),
+        *[
+            F.first(F.when(F.col("col_idx") == i, F.col("data")), ignorenulls=True).alias(_data_col(i))
+            for i in sorted(set(idx_of.values()))
+        ],
+    )
+    metadata = {**kv, _SHA_FORMAT_KEY: kv.get(_SHA_FORMAT_KEY, "1")}
+    write_encoded(rows.select(*blob_schema(idx_of.values()).names), out_path, metadata=metadata)
 
 
 def union_encoded(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -2068,12 +2187,12 @@ def union_encoded(a: DataFrame, b: DataFrame) -> DataFrame:
     groups stay disjoint and decode_table sees one consistent table.
     Column sets and dtypes must match exactly — a blob table with
     half-present columns would decode ragged rows.  Metadata-only:
-    no blob bytes move or re-encode."""
+    no blob bytes move or re-encode, and tables from read_encoded plan
+    from their manifests with no Spark job."""
     # (column, col_idx, dtype): col_idx alignment is part of the check
     # (ADVICE r6 low) — two tables encoded with different column orders
     # would otherwise union into conflicting col_idx per column, making
-    # _meta_rows_for's distinct return duplicate meta rows and the
-    # decode-tree ordering ambiguous for nested schemas
+    # the decode-tree ordering ambiguous for nested schemas
     key = ["column", "col_idx", "dtype"]
     meta_a, meta_b = (
         {tuple(r[k] for k in key) for r in _meta_rows_for(t)} for t in (a, b)
@@ -2083,8 +2202,12 @@ def union_encoded(a: DataFrame, b: DataFrame) -> DataFrame:
             f"union_encoded: column/col_idx/dtype sets differ: "
             f"{sorted(meta_a ^ meta_b)}"
         )
-    off = (a.agg(F.max("part_id")).collect()[0][0] or 0) + 1
-    shifted = b.withColumn("part_id", (F.col("part_id") + off).cast("int"))
+    cached = _cached_meta(a)
+    if cached is not None and cached.chunks is not None:
+        top = pc.max(cached.chunks["part_id"]).as_py()
+    else:
+        top = a.agg(F.max("part_id")).collect()[0][0]
+    shifted = b.withColumn("part_id", (F.col("part_id") + (top or 0) + 1).cast("int"))
     return a.unionByName(shifted)
 
 
@@ -2107,21 +2230,24 @@ def _check_plain_name(op: str, name: str) -> None:
 
 def drop_columns(blob_df: DataFrame, columns: list[str]) -> DataFrame:
     """Schema evolution without rewrite: dropping a column of an
-    encoded table is a manifest filter — the remaining columns' blob
-    bytes are untouched.  Names address TOP-LEVEL columns; a struct
-    column drops with its whole subtree (leaves + validity chunks)."""
+    encoded table drops its blob columns and its chunks' metadata — the
+    remaining columns' blob bytes are untouched.  Names address
+    TOP-LEVEL columns; a struct column drops with its whole subtree
+    (leaves + validity chunks)."""
     for c in columns:
         _check_plain_name("drop_columns", c)
-    have = {r["column"] for r in _meta_rows_for(blob_df)}
-    tops = {_top_name(c) for c in have}
+    meta_rows = _meta_rows_for(blob_df)
+    tops = {_top_name(r["column"]) for r in meta_rows}
     missing = [c for c in columns if c not in tops]
     if missing:
         raise ValueError(f"drop_columns: not in table: {missing}")
     if not tops - set(columns):
         raise ValueError("drop_columns: cannot drop every column")
-    dropped = set(columns)
-    keep = [c for c in have if _top_name(c) not in dropped]
-    return blob_df.where(F.col("column").isin(keep))
+    gone = [r for r in meta_rows if _top_name(r["column"]) in set(columns)]
+    names = F.array(*[F.lit(r["column"]) for r in gone])
+    return blob_df.drop(*[_data_col(r["col_idx"]) for r in gone]).withColumn(
+        "chunks", F.filter("chunks", lambda ch: ~F.array_contains(names, ch["column"]))
+    )
 
 
 def rename_column(blob_df: DataFrame, old: str, new: str) -> DataFrame:
@@ -2132,23 +2258,24 @@ def rename_column(blob_df: DataFrame, old: str, new: str) -> DataFrame:
     and 'meta@def' -> 'info@def')."""
     _check_plain_name("rename_column", old)
     _check_plain_name("rename_column", new)
-    have = {r["column"] for r in _meta_rows_for(blob_df)}
-    tops = {_top_name(c) for c in have}
+    tops = {_top_name(r["column"]) for r in _meta_rows_for(blob_df)}
     if old not in tops:
         raise ValueError(f"rename_column: {old!r} not in table")
     if new in tops:
         raise ValueError(f"rename_column: {new!r} already exists")
-    suffix = F.expr(f"substring(column, {len(old) + 1})")
-    return blob_df.withColumn(
-        "column",
-        F.when(F.col("column") == old, F.lit(new))
-        .when(
-            F.col("column").startswith(old + ".")
-            | F.col("column").startswith(old + "@"),
-            F.concat(F.lit(new), suffix),
+
+    def renamed(ch):
+        name = ch["column"]
+        inside = name.startswith(old + ".") | name.startswith(old + "@")
+        suffix = name.substr(F.lit(len(old) + 1), F.length(name))
+        return ch.withField(
+            "column",
+            F.when(name == old, F.lit(new))
+            .when(inside, F.concat(F.lit(new), suffix))
+            .otherwise(name),
         )
-        .otherwise(F.col("column")),
-    )
+
+    return blob_df.withColumn("chunks", F.transform("chunks", renamed))
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
@@ -2156,19 +2283,23 @@ def read_manifest(spark: SparkSession, path: str) -> DataFrame:
 
 
 def pending_chunks(all_manifest: DataFrame, done_manifest: DataFrame) -> DataFrame:
-    """Resume-from-checkpoint: chunks not yet committed (north rule),
-    expressed as a broadcast-able anti-join on the chunk identity."""
-    keys = ["part_id", "chunk_seq", "column"]
+    """Resume-from-checkpoint: the rows of row groups not yet committed
+    (north rule), expressed as a broadcast-able anti-join on the row
+    group identity, the unit of resume: ``all_manifest`` may be a blob
+    table or a manifest, ``done_manifest`` a manifest."""
+    keys = ["part_id", "chunk_seq"]
     return all_manifest.join(
         F.broadcast(done_manifest.select(*keys).distinct()), on=keys, how="left_anti"
     )
 
 
 def encode_summary(blob_df: DataFrame) -> DataFrame:
-    """Per-column rollup of codec choices / sizes — partial aggregation
-    (map-side combine) happens automatically via groupBy."""
+    """Per-column rollup of codec choices / sizes over the per-chunk
+    view (chunk_view) — partial aggregation (map-side combine) happens
+    automatically via groupBy."""
     return (
-        blob_df.groupBy("column", "dtype", "codec", "compression")
+        chunk_view(blob_df)
+        .groupBy("column", "dtype", "codec", "compression")
         .agg(
             F.count("*").alias("chunks"),
             F.sum("n").alias("values"),

@@ -5,9 +5,9 @@ back to value rows as they land.
 
 ``readStream`` over the blobs directory + ``foreachBatch`` running the
 same vectorized decode stage per micro-batch; checkpointing gives
-exactly-once decode of each appended chunk, so an encode stream and a
-decode stream form a durable, resumable pipe whose unit of progress is
-the column chunk.
+exactly-once decode of each appended row group, so an encode stream and
+a decode stream form a durable, resumable pipe whose unit of progress
+is the row group.
 """
 
 from __future__ import annotations
@@ -24,20 +24,19 @@ def decode_stream(
     output_path: str,
     checkpoint_path: str,
     column: str,
-    dtype: str,
     trigger_once: bool = False,
 ) -> StreamingQuery:
     """Start a streaming decode of one column from ``encoded_path``/blobs.
 
-    ``dtype`` is required up front (streams can't probe): read it from
-    the manifest (``pipeline.read_manifest``) or the writer's schema."""
-    stream = (
-        spark.readStream.schema(pipeline.BLOB_SCHEMA)
-        .parquet(f"{encoded_path}/blobs")
-    )
+    The stream's schema and the column's metadata come from the table
+    as it is when the stream starts (``pipeline.read_encoded``), since
+    a stream cannot probe."""
+    table = pipeline.read_encoded(spark, encoded_path)
+    meta_rows = pipeline._meta_rows_for(table)
+    stream = spark.readStream.schema(table.schema).parquet(f"{encoded_path}/blobs")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = pipeline.decode_column(batch_df, column, dtype=dtype)
+        out = pipeline.decode_table(batch_df, [column], meta_rows=meta_rows)
         out.write.mode("append").parquet(output_path)
 
     writer = (

@@ -29,8 +29,8 @@ def encode_stream(
     Each micro-batch: encode -> ``pipeline.write_encoded(mode="append")``,
     which writes the batch's blobs once and appends the manifest read
     back from just the files it added, so a batch costs O(batch).
-    batch_id is folded into chunk_seq space, so chunk identity
-    (part_id, chunk_seq, column) stays unique across batches."""
+    batch_id is folded into chunk_seq space, so row group identity
+    (part_id, chunk_seq) stays unique across batches."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import functions as F

@@ -21,6 +21,22 @@ the last four both before and after one engine stage
 (``encode_columns`` over 8 x cores partitions, enough to reach every
 idle worker).
 
+Then, on each seed-1 encbench table (``lineitem`` and ``source``,
+written with ``encode_columns`` + ``write_encoded`` and opened with
+``read_encoded``), with AQE off and one shuffle partition per core as
+in the benchmark session, the per-job floor of the calls over it
+(``blobs`` in the output):
+
+* ``jvm_ms``: a JVM-only job over the blobs (the summed length of every
+  binary column);
+* ``noop_map_ms``: a no-op ``mapInArrow`` over the blobs;
+* ``noop_grouped_ms``: a no-op ``groupBy(part_id, chunk_seq).applyInArrow``;
+* ``decode_ms``: ``decode_table`` into the noop sink;
+* ``verify_ms``: ``verify_blobs`` into the noop sink.
+
+It uses only the public pipeline API, so it runs on any commit with
+the same figures.
+
 Usage: python scripts/stage_floor.py [--cores 4] [--tasks 4] [--runs 10] [--warmup 2]
 Prints ONE JSON line.
 """
@@ -32,6 +48,7 @@ import json
 import os
 import statistics
 import sys
+import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -39,6 +56,7 @@ sys.path.insert(0, ROOT)
 # the Python workers import the engine too
 os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
+from encbench import inputs  # noqa: E402
 from parquetjs_spark import pipeline  # noqa: E402
 from parquetjs_spark.sources.tables import get_spark  # noqa: E402
 
@@ -112,6 +130,57 @@ def _noop_stats(spark, tasks: int, runs: int, warmup: int) -> dict:
     }
 
 
+def _noop_batches(batches):
+    """A no-op Arrow UDF: the rows it saw."""
+    import pyarrow as pa
+
+    n = sum(b.num_rows for b in batches)
+    yield pa.RecordBatch.from_pydict({"n": [n]})
+
+
+def _noop_group(group):
+    """A no-op grouped Arrow UDF: the group's row count."""
+    import pyarrow as pa
+
+    return pa.table({"n": [group.num_rows]})
+
+
+def _blob_floor(spark, tables: dict, cores: int, runs: int, warmup: int) -> dict:
+    """Medians of the per-job calls over each table's blobs, in ms, in
+    the benchmark session's shuffle settings (AQE off, one shuffle
+    partition per core)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", str(cores))
+    out = {}
+    with tempfile.TemporaryDirectory() as tmp:
+        for name, (table, columns) in tables.items():
+            df = spark.createDataFrame(table).cache()
+            df.count()
+            path = os.path.join(tmp, name)
+            pipeline.write_encoded(pipeline.encode_columns(df, columns, codec="auto"), path)
+            blobs = pipeline.read_encoded(spark, path)
+            binary = [f.name for f in blobs.schema.fields if isinstance(f.dataType, T.BinaryType)]
+            noop = lambda d: d.write.format("noop").mode("overwrite").save()
+            calls = {
+                "jvm_ms": lambda: blobs.agg(*[F.sum(F.length(c)) for c in binary]).collect(),
+                "noop_map_ms": lambda: blobs.mapInArrow(_noop_batches, "n long").collect(),
+                "noop_grouped_ms": lambda: blobs.groupBy("part_id", "chunk_seq")
+                .applyInArrow(_noop_group, "n long")
+                .collect(),
+                "decode_ms": lambda: noop(pipeline.decode_table(blobs)),
+                "verify_ms": lambda: noop(pipeline.verify_blobs(blobs)),
+            }
+            out[name] = {
+                key: _median([_timed(fn)[0] for _ in range(warmup + runs)][warmup:])
+                for key, fn in calls.items()
+            }
+            df.unpersist()
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--cores", type=int, default=4)
@@ -129,6 +198,11 @@ def main() -> None:
         encode = pipeline.encode_columns(src, chunk_rows=1024).write.format("noop").mode("overwrite")
         engine_ms, _ = _timed(encode.save)
         after = _noop_stats(spark, args.tasks, args.runs, args.warmup)
+        tables = {
+            "lineitem": (inputs.lineitem_table(1, 150_000), inputs.LINEITEM_COLUMNS),
+            "source": (inputs.source_table(1, 32768), inputs.SOURCE_COLUMNS),
+        }
+        blobs = _blob_floor(spark, tables, args.cores, args.runs, args.warmup)
     finally:
         spark.stop()
     print(json.dumps({
@@ -140,6 +214,7 @@ def main() -> None:
         "engine_stage_ms": round(engine_ms, 2),
         "before": before,
         "after": after,
+        "blobs": blobs,
     }))
 
 

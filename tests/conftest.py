@@ -11,25 +11,35 @@ def spark():
 
 
 @pytest.fixture
-def assert_manifest_is_blobs(spark):
-    """Check that an encoded table's manifest equals its blob table
-    without ``data``, row for row, over every manifest field — wall_ms
-    included, so a manifest built by a second encode (which re-times
-    every chunk) fails it — and that its schema is the blob schema
-    without ``data``: the same names, types and order whichever writer
-    (Spark or the driver) committed it."""
-    from pyspark.sql import types as T
+def chunk_data():
+    """{(part_id, chunk_seq, column): blob bytes} of every column chunk
+    of a blob DataFrame."""
 
+    def data(blob_df) -> dict:
+        return {
+            (r["part_id"], r["chunk_seq"], ch["column"]): bytes(r[f"c{ch['col_idx']}"])
+            for r in blob_df.collect()
+            for ch in r["chunks"]
+        }
+
+    return data
+
+
+@pytest.fixture
+def assert_manifest_is_blobs(spark):
+    """Check that an encoded table's manifest equals its blob rows'
+    ``chunks`` flattened (pipeline.chunk_view), row for row, over every
+    manifest field — wall_ms included, so a manifest built by a second
+    encode (which re-times every chunk) fails it — and that its schema
+    is the manifest schema: the same names, types and order whichever
+    writer (Spark or the driver) committed it."""
     from parquetjs_spark import pipeline
 
-    want = T.StructType([f for f in pipeline.BLOB_SCHEMA.fields if f.name != "data"])
-
     def check(path: str) -> int:
-        cols = pipeline.MANIFEST_COLUMNS
         manifest = pipeline.read_manifest(spark, path)
-        assert manifest.schema == want
-        man = manifest.select(*cols).collect()
-        blobs = pipeline.read_encoded(spark, path).select(*cols).collect()
+        assert manifest.schema == pipeline.MANIFEST_SCHEMA
+        man = manifest.collect()
+        blobs = pipeline.chunk_view(pipeline.read_encoded(spark, path)).collect()
         assert sorted(map(repr, man)) == sorted(map(repr, blobs))
         return len(man)
 

@@ -40,20 +40,13 @@ class TestDeleteWhere:
         assert got == [i for i in range(6000) if not 1000 <= i <= 1999]
         assert pipeline.verify_blobs(out).where(~F.col("ok")).count() == 0
 
-    def test_unaffected_groups_bit_identical(self, spark, encoded):
+    def test_unaffected_groups_bit_identical(self, spark, encoded, chunk_data):
         df, blobs = encoded
         out = pipeline.delete_where(blobs, ranges={"rid": (0, 99)})
         # rows sorted by rid: groups past the first chunk are provably
         # unaffected and must carry their exact original bytes
-        orig = {
-            (r["part_id"], r["chunk_seq"], r["column"]): bytes(r["data"])
-            for r in blobs.collect()
-        }
-        changed = 0
-        for r in out.collect():
-            key = (r["part_id"], r["chunk_seq"], r["column"])
-            if bytes(r["data"]) != orig[key]:
-                changed += 1
+        orig = chunk_data(blobs)
+        changed = sum(data != orig[key] for key, data in chunk_data(out).items())
         # only the row groups overlapping rid<=99 re-encode: 1 group x 3 cols
         assert changed <= 3, changed
 
@@ -64,7 +57,8 @@ class TestDeleteWhere:
         # consistent n across its 3 columns
         out = pipeline.delete_where(blobs, ranges={"rid": (0, 1499)})
         geom = (
-            out.groupBy("part_id", "chunk_seq")
+            pipeline.chunk_view(out)
+            .groupBy("part_id", "chunk_seq")
             .agg(F.countDistinct("n").alias("d"), F.count("*").alias("c"))
         )
         assert geom.where((F.col("d") != 1) | (F.col("c") != 3)).count() == 0
@@ -107,17 +101,20 @@ class TestDeleteWhere:
 
 
 def test_dml_and_compact_plan_through_the_arrow_stage(spark, encoded):
-    """delete, update and compact rewrite through one grouped Arrow
-    stage; no pandas UDF is left in their plans."""
+    """delete and update rewrite whole row groups in one narrow Arrow
+    stage; compact regroups only its runt buckets, in one grouped Arrow
+    stage; no pandas UDF is left in their plans (that the narrow stages
+    shuffle nothing is pinned on a stored table, test_pipeline_spark
+    ::test_narrow_stages_run_one_job_without_exchange)."""
     _, blobs = encoded
-    for out in (
-        pipeline.delete_where(blobs, ranges={"rid": (1000, 1999)}),
-        pipeline.update_where(blobs, {"k": 0}, ranges={"rid": (1000, 1999)}),
-        pipeline.compact_chunks(blobs, min_rows=300, target_rows=2048),
+    for out, stage in (
+        (pipeline.delete_where(blobs, ranges={"rid": (1000, 1999)}), "MapInArrow"),
+        (pipeline.update_where(blobs, {"k": 0}, ranges={"rid": (1000, 1999)}), "MapInArrow"),
+        (pipeline.compact_chunks(blobs, min_rows=300, target_rows=2048), "FlatMapGroupsInArrow"),
     ):
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "FlatMapGroupsInArrow" in plan
-        assert "FlatMapGroupsInPandas" not in plan
+        assert stage in plan
+        assert "Pandas" not in plan
 
 
 def test_cli_delete_roundtrip(tmp_path, spark, capsys):
@@ -155,19 +152,13 @@ class TestUpdateWhere:
             assert r["k"] == want, (r["rid"], r["k"])
         assert pipeline.verify_blobs(out).where(~F.col("ok")).count() == 0
 
-    def test_only_set_columns_rewrite(self, spark, encoded):
+    def test_only_set_columns_rewrite(self, spark, encoded, chunk_data):
         df, blobs = encoded
         out = pipeline.update_where(
             blobs, {"k": 7}, ranges={"rid": (0, 99)}
         )
-        orig = {
-            (r["part_id"], r["chunk_seq"], r["column"]): bytes(r["data"])
-            for r in blobs.collect()
-        }
-        changed = [
-            k for r in out.collect()
-            if bytes(r["data"]) != orig[k := (r["part_id"], r["chunk_seq"], r["column"])]
-        ]
+        orig = chunk_data(blobs)
+        changed = [key for key, data in chunk_data(out).items() if data != orig[key]]
         # sorted rid: one affected group, and ONLY its k chunk rewrites
         assert len(changed) <= 1 and all(c[2] == "k" for c in changed), changed
         # row counts and alignment intact
@@ -335,7 +326,7 @@ class TestTwoPhaseDecode:
     """VERDICT r6 #4: on a zone-map false positive, delete_where and
     update_where decode only the predicate columns of the
     over-approximated group (the Arrow rewrite bodies are module-level,
-    so the decode count is observable on a captured group)."""
+    so the decode count is observable on a captured blob row)."""
 
     def _group(self, spark):
         df = (
@@ -374,9 +365,10 @@ class TestTwoPhaseDecode:
 
     def test_false_positive_group_decodes_pred_cols_only(self, spark, monkeypatch):
         group = self._group(spark)
-        assert sorted(group["column"].to_pylist()) == ["k", "rid", "s"]
+        assert group.num_rows == 1
+        assert sorted(ch["column"] for ch in group["chunks"][0].as_py()) == ["k", "rid", "s"]
         counted = self._count_decodes(monkeypatch)
-        out = pipeline._delete_rewrite_group(
+        out = pipeline._delete_rewrite_row(
             group, specs=self._false_positive_specs(), codec="auto",
             compression="auto",
         )
@@ -390,20 +382,19 @@ class TestTwoPhaseDecode:
         group = self._group(spark)
         counted = self._count_decodes(monkeypatch)
         specs = [("rid", "eq", 5, T.LongType())]
-        out = pipeline._delete_rewrite_group(
+        out = pipeline._delete_rewrite_row(
             group, specs=specs, codec="auto", compression="auto"
         )
         assert counted["n"] == 3  # pred chunk + the 2 remaining columns
-        assert sorted(out["n"].to_pylist()) == [1023, 1023, 1023]
+        assert sorted(ch["n"] for ch in out["chunks"][0].as_py()) == [1023, 1023, 1023]
 
     def test_update_false_positive_decodes_pred_cols_only(self, spark, monkeypatch):
         group = self._group(spark)
         counted = self._count_decodes(monkeypatch)
-        out = pipeline._update_rewrite_group(
+        out = pipeline._update_rewrite_row(
             group, specs=self._false_positive_specs(), assignments={"s": "x"},
             codec="auto", compression="auto",
         )
         # the SET chunk comes back as it went in, never decoded
         assert counted["n"] == 2
-        [want] = [r for r in group.to_pylist() if r["column"] == "s"]
-        assert out.to_pylist() == [want]
+        assert out.to_pylist() == group.to_pylist()

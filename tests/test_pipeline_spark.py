@@ -188,7 +188,7 @@ def test_struct_leaf_decode_and_projection(spark):
         proj = pipeline.decode_table(blobs, ["s"])
         assert proj.columns == ["s"]
         assert proj.count() == 100
-        leaf = pipeline.decode_column(blobs, "s.a", dtype="int64", out_name="a")
+        leaf = pipeline.decode_column(blobs, "s.a", out_name="a")
         assert sorted(r["a"] for r in leaf.collect()) == [i * 2 for i in range(100)]
     finally:
         blobs.unpersist()
@@ -336,14 +336,17 @@ def test_decode_table_missing_column_errors(spark):
 
 
 def test_manifest_write_resume(tmp_path, spark):
-    df = load_table(spark, SF, "region")
-    blobs = pipeline.encode_columns(df)
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
+    blobs = pipeline.encode_columns(df.repartition(2), chunk_rows=1024)
     pipeline.write_encoded(blobs, str(tmp_path / "enc"))
     manifest = pipeline.read_manifest(spark, str(tmp_path / "enc"))
     assert manifest.count() > 0
-    # resume: pretend half the chunks committed; pending = the rest
-    done = manifest.limit(manifest.count() // 2)
+    # resume: pretend half the row groups (the unit of resume)
+    # committed; pending = the chunks of the rest
+    groups = manifest.select("part_id", "chunk_seq").distinct().orderBy("part_id", "chunk_seq")
+    done = manifest.join(groups.limit(groups.count() // 2), ["part_id", "chunk_seq"])
     pending = pipeline.pending_chunks(manifest, done)
+    assert 0 < done.count() < manifest.count()
     assert pending.count() == manifest.count() - done.count()
     # re-read blobs and verify
     blobs2 = pipeline.read_encoded(spark, str(tmp_path / "enc"))
@@ -409,8 +412,9 @@ def test_scan_column_stat_pruning(spark):
         )
         assert got == want and len(got) > 0
         # the pruning filter must eliminate most chunks on sorted data
-        total = blobs.where(F.col("column") == "l_orderkey").count()
-        kept = blobs.where(
+        chunks = pipeline.chunk_view(blobs)
+        total = chunks.where(F.col("column") == "l_orderkey").count()
+        kept = chunks.where(
             (F.col("column") == "l_orderkey")
             & (F.col("stat_max").cast("bigint") >= 100)
             & (F.col("stat_min").cast("bigint") <= 400)
@@ -433,7 +437,7 @@ def test_scan_column_string_and_null_stats(spark):
         # unorderable dtypes carry null stats and stay scannable
         emb = load_table(spark, SF, "embeddings").select("embedding")
         eb = pipeline.encode_columns(emb, chunk_rows=128)
-        stats = eb.select("stat_min", "stat_max").distinct().collect()
+        stats = pipeline.chunk_view(eb).select("stat_min", "stat_max").distinct().collect()
         assert all(r["stat_min"] is None and r["stat_max"] is None for r in stats)
     finally:
         blobs.unpersist()
@@ -522,7 +526,9 @@ def test_scan_eq_bloom_pruned(spark):
         # pruning power: most chunk blooms reject a value that is not in
         # the table at all (l_partkey is unsorted -> zone maps are
         # useless here; the bloom is what prunes)
-        manifest = blobs.where(F.col("column") == "l_partkey").select("bloom").collect()
+        manifest = (
+            pipeline.chunk_view(blobs).where(F.col("column") == "l_partkey").select("bloom").collect()
+        )
         absent = 10_000_000_007
         rejected = sum(
             0 if bloomlib.might_contain(r["bloom"], absent, "int64") else 1
@@ -532,22 +538,6 @@ def test_scan_eq_bloom_pruned(spark):
         assert pipeline.scan_eq(blobs, "l_partkey", absent).count() == 0
     finally:
         blobs.unpersist()
-
-
-def test_write_encoded_partitioned_by_column(spark, tmp_path):
-    """Storage-level layout: one partition dir per encoded column, so a
-    single-column decode prunes the other columns' files entirely."""
-    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
-    blobs = pipeline.encode_columns(df)
-    out = str(tmp_path / "enc")
-    pipeline.write_encoded(blobs, out, partition_by_column=True)
-    dirs = {d for d in os.listdir(f"{out}/blobs") if d.startswith("column=")}
-    assert dirs == {"column=l_orderkey", "column=l_returnflag"}
-    back = pipeline.read_encoded(spark, out)
-    dec = pipeline.decode_column(back, "l_orderkey", dtype="int64")
-    got = sorted(r[0] for r in dec.collect())
-    want = sorted(r[0] for r in df.select("l_orderkey").collect())
-    assert got == want
 
 
 @contextlib.contextmanager
@@ -565,9 +555,8 @@ def _both_writers(monkeypatch):
     return (("driver", contextlib.nullcontext()), ("spark", _spark_writer(monkeypatch)))
 
 
-@pytest.mark.parametrize("partition_by_column", [False, True])
 def test_manifest_is_blob_table_without_data(
-    spark, tmp_path, assert_manifest_is_blobs, monkeypatch, partition_by_column
+    spark, tmp_path, assert_manifest_is_blobs, monkeypatch
 ):
     """write_encoded encodes once: the manifest is read back from the
     blob files it wrote, never produced by a second encode — by the
@@ -577,8 +566,7 @@ def test_manifest_is_blob_table_without_data(
         out = str(tmp_path / writer)
         with ctx:
             pipeline.write_encoded(
-                pipeline.encode_columns(df.repartition(3), chunk_rows=200), out,
-                partition_by_column=partition_by_column,
+                pipeline.encode_columns(df.repartition(3), chunk_rows=200), out
             )
         assert assert_manifest_is_blobs(out) > 6, writer
 
@@ -631,20 +619,18 @@ def test_append_across_writers_reads_as_one_manifest(
 
 def test_write_encoded_runs_one_job(tmp_path, spark, assert_manifest_is_blobs):
     """On a local table the blob write is the only Spark job of
-    encode_columns + write_encoded — overwrite, append,
-    partition_by_column and a forced-FSST encode alike: the driver
+    encode_columns + write_encoded — overwrite, append and a
+    forced-FSST encode alike: the driver
     commits manifest/ and meta/, and reads meta/ back with no job (so an
     append, KV read included, is one job), and each task trains its own
     FSST tables.  AQE is off, as in the benchmark session (it runs each
     shuffle stage as a job of its own)."""
     lineitem = load_table(spark, SF, "lineitem")
     df = lineitem.select("l_orderkey", "l_returnflag")
-    path, by_column = str(tmp_path / "t"), str(tmp_path / "by_column")
-    fsst = str(tmp_path / "fsst")
+    path, fsst = str(tmp_path / "t"), str(tmp_path / "fsst")
     writes = (
         ("overwrite", df, path, {}, {}),
         ("append", df, path, {"mode": "append"}, {}),
-        ("partition_by_column", df, by_column, {"partition_by_column": True}, {}),
         ("fsst", lineitem.select("l_returnflag", "l_linestatus"), fsst, {}, {"codec": "FSST"}),
     )
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -660,7 +646,7 @@ def test_write_encoded_runs_one_job(tmp_path, spark, assert_manifest_is_blobs):
             assert len(jobs) == 1, (name, jobs)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-    for out in (path, by_column, fsst):
+    for out in (path, fsst):
         assert assert_manifest_is_blobs(out) > 0
     codecs = pq.read_table(f"{fsst}/manifest", columns=["codec"])["codec"]
     assert set(codecs.to_pylist()) == {"FSST"}
@@ -993,6 +979,133 @@ def test_lookup_runs_no_job(tmp_path, spark, monkeypatch):
     assert jobs == []
 
 
+def test_narrow_stages_run_one_job_without_exchange(tmp_path, spark, monkeypatch):
+    """On a table from read_encoded, decode_table, verify_blobs, a
+    Spark-path scan, delete_where and update_where are each one narrow
+    stage over whole row groups: no Exchange in their executed plans,
+    and one job each, the DML's write_encoded included.  compact_chunks
+    (which regroups only its runt buckets) and union_encoded are one job
+    each with their write_encoded.  AQE is off, as in the benchmark
+    session (it runs each shuffle stage as a job of its own)."""
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df.repartition(4), chunk_rows=512), path)
+    blobs = pipeline.read_encoded(spark, path)
+    monkeypatch.setattr(pipeline, "_LOCAL_SCAN_BYTES", 0)
+    narrow = {
+        "decode": (lambda: pipeline.decode_table(blobs), "collect"),
+        "verify": (lambda: pipeline.verify_blobs(blobs), "collect"),
+        "scan": (lambda: pipeline.scan_eq(blobs, "l_partkey", 50, columns=["l_quantity"]), "collect"),
+        "delete": (lambda: pipeline.delete_where(blobs, eqs={"l_partkey": 50}), "write"),
+        "update": (
+            lambda: pipeline.update_where(blobs, {"l_quantity": 1.0}, eqs={"l_partkey": 50}),
+            "write",
+        ),
+    }
+    rewrites = {
+        "compact": lambda: pipeline.compact_chunks(blobs, min_rows=500, target_rows=1024),
+        "union": lambda: pipeline.union_encoded(blobs, blobs),
+    }
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for name, (build, action) in narrow.items():
+            out = build()
+            assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString(), name
+            if action == "collect":
+                _, jobs = _jobs_of(spark, name, lambda: build().collect())
+            else:
+                _, jobs = _jobs_of(
+                    spark, name, lambda: pipeline.write_encoded(build(), str(tmp_path / name))
+                )
+            assert len(jobs) == 1, (name, jobs)
+        for name, build in rewrites.items():
+            _, jobs = _jobs_of(
+                spark, name, lambda: pipeline.write_encoded(build(), str(tmp_path / name))
+            )
+            assert len(jobs) == 1, (name, jobs)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    union = pipeline.read_encoded(spark, str(tmp_path / "union"))
+    assert pipeline.decode_table(union).count() == 2 * df.count()
+
+
+def test_narrow_stages_are_split_safe(tmp_path, spark, monkeypatch):
+    """A blob row is a whole row group, so the narrow stages read the
+    blob files in any split: with each file rewritten as several Parquet
+    row groups and read in many small splits, decode, verify, a
+    Spark-path scan and delete give the same answers as on the unsplit
+    table."""
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
+    path, split = str(tmp_path / "t"), str(tmp_path / "split")
+    pipeline.write_encoded(pipeline.encode_columns(df.repartition(2), chunk_rows=256), path)
+    shutil.copytree(path, split)
+    files = [f for f in os.listdir(f"{split}/blobs") if f.endswith(".parquet")]
+    for f in files:
+        pq.write_table(pq.read_table(f"{split}/blobs/{f}"), f"{split}/blobs/{f}", row_group_size=2)
+        if os.path.exists(crc := f"{split}/blobs/.{f}.crc"):
+            os.remove(crc)  # Spark's checksum of the file it wrote
+    monkeypatch.setattr(pipeline, "_LOCAL_SCAN_BYTES", 0)
+
+    def answers(p):
+        blobs = pipeline.read_encoded(spark, p)
+        rows = lambda d: sorted(map(tuple, d.collect()))
+        return (
+            blobs.rdd.getNumPartitions(),
+            rows(pipeline.decode_table(blobs)),
+            rows(pipeline.verify_blobs(blobs)),
+            rows(pipeline.scan_eq(blobs, "l_partkey", 50, columns=["l_orderkey"])),
+            rows(pipeline.decode_table(pipeline.delete_where(blobs, ranges={"l_orderkey": (1, 3000)}))),
+        )
+
+    parts, *want = answers(path)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    try:
+        split_parts, *got = answers(split)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert split_parts > 2 * len(files) >= 2 * parts
+    assert all(w for w in want)
+    assert got == want
+
+
+@pytest.mark.parametrize("damage", ["deleted", "truncated", "unlisted"])
+def test_read_encoded_checks_blob_files_against_the_manifest(tmp_path, spark, capsys, damage):
+    """On a local table, read_encoded checks the blob files' Parquet
+    footers against the manifest with pyarrow, running no Spark job: a
+    deleted blob file, a truncated one, or a file no manifest lists (a
+    killed write's rows) raises one ValueError naming the file or the
+    table, chained to the reader's error where there is one, and the
+    CLI exits 2.  No read returns fewer rows."""
+    from parquetjs_spark import cli
+
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df.repartition(2), chunk_rows=512), path)
+    assert pipeline.decode_table(pipeline.read_encoded(spark, path)).count() == df.count()
+    files = sorted(f for f in os.listdir(f"{path}/blobs") if f.endswith(".parquet"))
+    victim = f"{path}/blobs/{files[0]}"
+    named = f"{path}/blobs"
+    if damage == "deleted":
+        os.remove(victim)
+    elif damage == "truncated":
+        os.truncate(victim, os.path.getsize(victim) // 2)
+        named = victim
+    else:
+        shutil.copy(victim, f"{path}/blobs/part-killed.parquet")
+    tracker = spark.sparkContext.statusTracker()
+    with pytest.raises(ValueError, match=re.escape(named)) as e:
+        _jobs_of(spark, f"footers_{damage}", lambda: pipeline.read_encoded(spark, path))
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(tracker.getJobIdsForGroup(f"footers_{damage}")) == []
+    if damage == "truncated":
+        assert isinstance(e.value.__cause__, (OSError, pa.ArrowException))
+    capsys.readouterr()
+    for cmd in (["verify", "--input", path], ["where", "--input", path, "--eq", "l_partkey=50",
+                                               "--output", str(tmp_path / "w")]):
+        assert cli.main(cmd) == 2, cmd
+        assert named in capsys.readouterr().err
+
+
 def _nested_rows():
     """id, a struct with a nested struct (null groups included), a list
     (null, empty and null-element lists) and a list of structs."""
@@ -1044,34 +1157,29 @@ def test_dml_on_nested_tables(spark, nested_blobs, op):
         assert out.select("part_id", "chunk_seq").distinct().count() == 6
 
 
-@pytest.mark.parametrize("case", ["struct", "list", "partition_by_column"])
+@pytest.mark.parametrize("case", ["struct", "list"])
 def test_driver_scan_matches_spark_scan(tmp_path, spark, monkeypatch, case):
     """A read_encoded scan under _LOCAL_SCAN_BYTES reassembles its row
-    groups on the driver (no Spark job) — nested structs, lists, lists
-    of structs, and a partition_by_column layout included — into the
-    same rows and schema as the Spark path (cap at 0)."""
+    groups on the driver (no Spark job) — nested structs, lists and
+    lists of structs included — into the same rows and schema as the
+    Spark path (cap at 0)."""
     rows, schema = _nested_rows()
     df = spark.createDataFrame(rows, schema).repartition(3)
     path = str(tmp_path / "t")
-    pipeline.write_encoded(
-        pipeline.encode_columns(df, chunk_rows=64), path,
-        partition_by_column=case == "partition_by_column",
-    )
+    pipeline.write_encoded(pipeline.encode_columns(df, chunk_rows=64), path)
     blobs = pipeline.read_encoded(spark, path)
     scans = {
         "struct": [
             lambda: pipeline.scan_table_where(blobs, eqs={"st.a": 12}, columns=["id", "st"]),
             lambda: pipeline.scan_eq(blobs, "st.inner.c", 30.0, columns=["st"]),
             lambda: pipeline.scan_table_where(blobs, eqs={"st.b": None}, ranges={"id": (0, 90)}),
+            lambda: pipeline.scan_eq(blobs, "st.a", None),
         ],
         "list": [
             lambda: pipeline.scan_eq(blobs, "id", 77, columns=["li", "ast"]),
             lambda: pipeline.scan_table_where(blobs, ranges={"id": (100, 140)}),
-        ],
-        "partition_by_column": [
             lambda: pipeline.scan_eq(blobs, "id", 77, columns=["st", "li"]),
             lambda: pipeline.scan_column(blobs, "id", 10, 20, out_name="rid"),
-            lambda: pipeline.scan_eq(blobs, "st.a", None),
         ],
     }[case]
     for i, scan in enumerate(scans):
@@ -1099,8 +1207,7 @@ def test_driver_scan_raises_on_unreadable_blobs(tmp_path, spark, monkeypatch):
     files = sorted(f for f in os.listdir(f"{path}/blobs") if f.endswith(".parquet"))
     assert len(files) == 2
     victim = f"{path}/blobs/{files[0]}"
-    chunks = pq.read_table(victim, columns=["column", "data"]).to_pylist()
-    blob = next(r["data"] for r in chunks if r["column"] == "l_orderkey")
+    blob = pq.read_table(victim, columns=["c0"])["c0"][0].as_py()  # l_orderkey
     key = pipeline.arrow_chunk.decode_arrow_column(blob)[0][0].as_py()
     blobs = pipeline.read_encoded(spark, path)
     lookup = lambda: pipeline.scan_eq(blobs, "l_orderkey", key, columns=["l_partkey"]).collect()
@@ -1198,23 +1305,19 @@ def test_scan_to_no_columns_keeps_the_row_count(tmp_path, spark, monkeypatch):
 
 
 def test_read_encoded_runs_no_job(tmp_path, spark, monkeypatch):
-    """read_encoded plans from the known blob schema: no footer-inference
-    job, on a plain and on a partition_by_column table (whose ``column``
-    still reads from its path); an empty ``blobs/`` reads as no rows and
+    """read_encoded plans from the manifest: no footer-inference job,
+    one blob column per leaf; an empty ``blobs/`` reads as no rows and
     a missing table still raises PATH_NOT_FOUND."""
     from pyspark.errors import AnalysisException
 
     df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
-    for by_column in (False, True):
-        path = str(tmp_path / f"t{by_column}")
-        pipeline.write_encoded(
-            pipeline.encode_columns(df, chunk_rows=512), path, partition_by_column=by_column
-        )
-        blobs, jobs = _jobs_of(spark, f"read{by_column}", lambda: pipeline.read_encoded(spark, path))
-        assert jobs == [], by_column
-        assert set(blobs.columns) == set(pipeline.BLOB_SCHEMA.names)
-        cols = {r[0] for r in blobs.select("column").distinct().collect()}
-        assert cols == {"l_orderkey", "l_returnflag"}, by_column
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df, chunk_rows=512), path)
+    blobs, jobs = _jobs_of(spark, "read", lambda: pipeline.read_encoded(spark, path))
+    assert jobs == []
+    assert blobs.schema == pipeline.blob_schema([0, 1])
+    cols = {r[0] for r in pipeline.chunk_view(blobs).select("column").distinct().collect()}
+    assert cols == {"l_orderkey", "l_returnflag"}
     empty = tmp_path / "empty"
     (empty / "blobs").mkdir(parents=True)
     assert pipeline.read_encoded(spark, str(empty)).count() == 0
@@ -1223,24 +1326,76 @@ def test_read_encoded_runs_no_job(tmp_path, spark, monkeypatch):
     assert e.value.getCondition() == "PATH_NOT_FOUND"
 
 
+def _per_chunk_table(src: str, dst: str, drop=()) -> None:
+    """Write the table at ``src`` to ``dst`` in the per-chunk layout
+    (one blob row per column chunk, ``data`` holding its bytes) that
+    predates row groups, without the fields ``drop``."""
+    man = pq.read_table(f"{src}/manifest")
+    data = {
+        (r["part_id"], r["chunk_seq"], ch["column"]): r[f"c{ch['col_idx']}"]
+        for f in os.listdir(f"{src}/blobs") if f.endswith(".parquet")
+        for r in pq.read_table(f"{src}/blobs/{f}").to_pylist()
+        for ch in r["chunks"]
+    }
+    keys = zip(*(man[c].to_pylist() for c in ("part_id", "chunk_seq", "column")))
+    rows = man.append_column("data", pa.array([data[k] for k in keys], pa.binary()))
+    for d, t in (("blobs", rows), ("manifest", rows.drop_columns(["data"]))):
+        os.makedirs(f"{dst}/{d}")
+        pq.write_table(t.drop_columns(list(drop)), f"{dst}/{d}/part-0.parquet")
+    os.makedirs(f"{dst}/meta")
+    kv = {"key": ["owner", "parquetjs_spark.sha_format"], "value": ["a", "2"]}
+    pq.write_table(pa.table(kv), f"{dst}/meta/part-0.parquet")
+
+
+def test_per_chunk_table_converts(tmp_path, spark, chunk_data):
+    """read_encoded refuses a table in the per-chunk layout with one
+    ValueError naming it; convert_encoded rewrites it into row groups
+    with the same manifest rows (wall_ms included), the same blob bytes
+    and the same user metadata, which then decodes, looks up, deletes
+    and verifies."""
+    df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey", "l_returnflag")
+    new, old, conv = (str(tmp_path / d) for d in ("new", "old", "conv"))
+    pipeline.write_encoded(pipeline.encode_columns(df.repartition(2), chunk_rows=512), new)
+    _per_chunk_table(new, old)
+    with pytest.raises(ValueError, match=re.escape(old)):
+        pipeline.read_encoded(spark, old)
+    pipeline.convert_encoded(spark, old, conv)
+    view = lambda p: sorted(map(repr, pipeline.chunk_view(pipeline.read_encoded(spark, p)).collect()))
+    assert view(conv) == view(new)
+    data = lambda p: chunk_data(pipeline.read_encoded(spark, p))
+    assert data(conv) == data(new)
+    assert pipeline.read_metadata(spark, conv) == {"owner": "a"}
+    assert pipeline.read_sha_format(spark, conv) == pipeline.SHA_FORMAT_VERSION
+    blobs = pipeline.read_encoded(spark, conv)
+    assert sorted(map(tuple, pipeline.decode_table(blobs).collect())) == sorted(
+        map(tuple, df.collect())
+    )
+    want = df.where(F.col("l_partkey") == 50).count()
+    assert pipeline.scan_eq(blobs, "l_partkey", 50, columns=["l_orderkey"]).count() == want
+    kept = pipeline.delete_where(blobs, eqs={"l_partkey": 50})
+    assert pipeline.decode_table(kept).count() == df.count() - want
+    assert pipeline.verify_blobs(kept).where(~F.col("ok")).count() == 0
+    with pytest.raises(ValueError, match="must differ"):
+        pipeline.convert_encoded(spark, old, old)
+
+
 def test_older_table_without_stats_reads(tmp_path, spark):
-    """A table whose blob and manifest files predate ``col_idx``, the
-    zone maps and the blooms reads through read_encoded: the missing
-    fields read as null (unprunable), so decode, lookups, DELETE and
-    verify work on it unchanged."""
+    """A per-chunk table whose files also predate ``col_idx``, the zone
+    maps and the blooms converts and then reads through read_encoded:
+    col_idx follows the column names' order, the missing stats stay
+    null (unprunable), so decode, lookups, DELETE and verify work on it
+    unchanged."""
     df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
-    path = str(tmp_path / "t")
-    pipeline.write_encoded(pipeline.encode_columns(df.repartition(2), chunk_rows=512), path)
-    old = ["col_idx", "stat_min", "stat_max", "bloom"]
-    for d in ("blobs", "manifest"):
-        for f in os.listdir(f"{path}/{d}"):
-            if f.endswith(".parquet"):
-                t = pq.read_table(f"{path}/{d}/{f}")
-                pq.write_table(t.drop_columns(old), f"{path}/{d}/{f}")
-                if os.path.exists(crc := f"{path}/{d}/.{f}.crc"):
-                    os.remove(crc)  # Spark's checksum of the file it wrote
-    blobs = pipeline.read_encoded(spark, path)
-    assert blobs.where(F.col("bloom").isNotNull() | F.col("col_idx").isNotNull()).count() == 0
+    new, old, conv = (str(tmp_path / d) for d in ("new", "old", "conv"))
+    pipeline.write_encoded(pipeline.encode_columns(df.repartition(2), chunk_rows=512), new)
+    _per_chunk_table(new, old, drop=["col_idx", "stat_min", "stat_max", "bloom"])
+    pipeline.convert_encoded(spark, old, conv)
+    blobs = pipeline.read_encoded(spark, conv)
+    chunks = pipeline.chunk_view(blobs)
+    assert chunks.where(F.col("bloom").isNotNull() | F.col("stat_min").isNotNull()).count() == 0
+    assert {tuple(r) for r in chunks.select("column", "col_idx").distinct().collect()} == {
+        ("l_orderkey", 0), ("l_partkey", 1),
+    }
     assert sorted(map(tuple, pipeline.decode_table(blobs).collect())) == sorted(
         map(tuple, df.collect())
     )
@@ -1370,7 +1525,7 @@ def test_clustered_layout_prunes_harder(spark):
         return row["chunks_kept"]
 
     try:
-        total = blobs_un.where(F.col("column") == "l_orderkey").count()
+        total = pipeline.chunk_view(blobs_un).where(F.col("column") == "l_orderkey").count()
         k_un, k_cl = kept_chunks(blobs_un), kept_chunks(blobs_cl)
         # unclustered chunks span ~the full key range: nothing prunes;
         # clustered chunks are narrow: only the overlapping few survive
@@ -1473,7 +1628,7 @@ def test_scan_eq_null_lookup(spark):
         rows = pipeline.scan_eq(blobs, "props", None, columns=["event_id"])
         assert rows.count() == want and rows.columns == ["event_id"]
         # pruning actually bites: chunks with zero nulls are eliminated
-        stats = blobs.where(F.col("column") == "props")
+        stats = pipeline.chunk_view(blobs).where(F.col("column") == "props")
         total = stats.count()
         kept = stats.where(F.col("n_nulls") > 0).count()
         assert kept <= total
@@ -1557,17 +1712,14 @@ def test_verify_detects_corruption(spark):
     df = load_table(spark, SF, "lineitem").select("l_orderkey", "l_returnflag")
     blobs = pipeline.encode_columns(df, chunk_rows=512).cache()
     try:
-        target = blobs.select("part_id", "chunk_seq", "column").first()
-        hit = (
-            (F.col("part_id") == target[0])
-            & (F.col("chunk_seq") == target[1])
-            & (F.col("column") == target[2])
-        )
-        n_chunks = blobs.count()
+        chunks = pipeline.chunk_view(blobs)
+        target = chunks.select("part_id", "chunk_seq", "column", "col_idx").first()
+        hit = (F.col("part_id") == target[0]) & (F.col("chunk_seq") == target[1])
+        n_chunks = chunks.count()
         # framing destruction: drop the blob's first 8 bytes
+        data = f"c{target[3]}"
         torn = blobs.withColumn(
-            "data",
-            F.when(hit, F.expr("substring(data, 9)")).otherwise(F.col("data")),
+            data, F.when(hit, F.expr(f"substring({data}, 9)")).otherwise(F.col(data))
         )
         report = pipeline.verify_blobs(torn)
         bad = report.where(~F.col("ok")).collect()
@@ -1654,7 +1806,7 @@ def _brute_count(arr, ranges, eqs) -> int:
 
 
 @pytest.mark.parametrize("dtype", list(_RANDOMIZED_K))
-def test_scan_randomized_consistency(tmp_path, spark, dtype):
+def test_scan_randomized_consistency(tmp_path, spark, dtype, chunk_data):
     """Seeded randomized probes over a column with negatives, boundary
     values and NULLs (NaN rows too for float64), per dtype: scan_eq
     (both paths) / scan_column / scan_table_where always equal a
@@ -1691,10 +1843,9 @@ def test_scan_randomized_consistency(tmp_path, spark, dtype):
     total = len(vals)
     src = pa.array(vals, pipeline._pa_type_of(dtype))
     k_chunks = {
-        (r["part_id"], r["chunk_seq"]): arrow_chunk.decode_arrow_column(
-            bytes(r["data"])
-        )[0]
-        for r in blobs.where(F.col("column") == "k").collect()
+        (p, s): arrow_chunk.decode_arrow_column(blob)[0]
+        for (p, s, c), blob in chunk_data(blobs).items()
+        if c == "k"
     }
     meta = pipeline._chunk_meta(blobs, ["k"])
     path = str(tmp_path / "t")
@@ -1856,10 +2007,12 @@ def test_bss_pipeline_autoselect_and_verify(spark):
     )
     blobs = pipeline.encode_columns(df, ["x"], chunk_rows=4096).cache()
     try:
-        codecs_used = {r["codec"] for r in blobs.select("codec").distinct().collect()}
+        codecs_used = {
+            r["codec"] for r in pipeline.chunk_view(blobs).select("codec").distinct().collect()
+        }
         assert "BYTE_STREAM_SPLIT" in codecs_used
         assert pipeline.verify_blobs(blobs).where(~F.col("ok")).count() == 0
-        out = pipeline.decode_column(blobs, "x", dtype="float64")
+        out = pipeline.decode_column(blobs, "x")
         got = sorted(r["x"] for r in out.collect())
         assert got == sorted(walk)  # exact: bytes moved, never rounded
     finally:
@@ -1916,7 +2069,9 @@ def test_incr_pipeline_autoselect_and_verify(spark):
     ).coalesce(1)
     blobs = pipeline.encode_columns(df, ["path"], chunk_rows=4096).cache()
     try:
-        codecs_used = {r["codec"] for r in blobs.select("codec").distinct().collect()}
+        codecs_used = {
+            r["codec"] for r in pipeline.chunk_view(blobs).select("codec").distinct().collect()
+        }
         assert "INCREMENTAL" in codecs_used
         assert pipeline.verify_blobs(blobs).where(~F.col("ok")).count() == 0
         got = sorted(
@@ -1924,12 +2079,12 @@ def test_incr_pipeline_autoselect_and_verify(spark):
         )
         assert got == paths
         auto_bytes = sum(
-            r["b"] for r in blobs.selectExpr("octet_length(data) b").collect()
+            r["b"] for r in blobs.selectExpr("octet_length(c0) b").collect()
         )
     finally:
         blobs.unpersist()
     plain_blobs = pipeline.encode_columns(df, ["path"], codec="PLAIN", chunk_rows=4096)
     plain_bytes = sum(
-        r["b"] for r in plain_blobs.selectExpr("octet_length(data) b").collect()
+        r["b"] for r in plain_blobs.selectExpr("octet_length(c0) b").collect()
     )
     assert auto_bytes < plain_bytes

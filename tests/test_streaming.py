@@ -82,7 +82,7 @@ def test_stream_decode_follows_encode(tmp_path, spark):
     q1.awaitTermination(120)
     q2 = decode_stream(
         spark, str(enc_dir), str(dec_dir), str(tmp_path / "ck_d"),
-        column="text", dtype="string", trigger_once=True,
+        column="text", trigger_once=True,
     )
     q2.awaitTermination(120)
     got = sorted(r[0] for r in spark.read.parquet(str(dec_dir)).collect())
@@ -91,7 +91,7 @@ def test_stream_decode_follows_encode(tmp_path, spark):
     # restart with the same checkpoint: no new files -> no duplicates
     q3 = decode_stream(
         spark, str(enc_dir), str(dec_dir), str(tmp_path / "ck_d"),
-        column="text", dtype="string", trigger_once=True,
+        column="text", trigger_once=True,
     )
     q3.awaitTermination(120)
     assert spark.read.parquet(str(dec_dir)).count() == len(want)

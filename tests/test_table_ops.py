@@ -34,16 +34,15 @@ class TestUnionEncoded:
         assert got == list(range(3500))
         assert pipeline.verify_blobs(u).where(~F.col("ok")).count() == 0
 
-    def test_part_ids_disjoint_and_bytes_untouched(self, spark, two_batches):
+    def test_part_ids_disjoint_and_bytes_untouched(self, spark, two_batches, chunk_data):
         a, b = two_batches
         u = pipeline.union_encoded(a, b)
         pa_max = a.agg(F.max("part_id")).collect()[0][0]
         b_shifted = u.join(a.select("part_id").distinct(), "part_id", "left_anti")
         assert b_shifted.agg(F.min("part_id")).collect()[0][0] > pa_max
         # b's blob bytes pass through identically (only part_id changed)
-        assert sorted(bytes(r["data"]) for r in b.collect()) == sorted(
-            bytes(r["data"]) for r in b_shifted.collect()
-        )
+        data = lambda t: sorted(chunk_data(t).values())
+        assert data(b) == data(b_shifted)
 
     def test_union_rejects_schema_mismatch(self, spark, two_batches):
         a, _ = two_batches
@@ -74,7 +73,7 @@ class TestSchemaEvolution:
     def test_drop_column(self, spark, two_batches):
         a, _ = two_batches
         out = pipeline.drop_columns(a, ["s"])
-        assert out.select("column").distinct().count() == 2
+        assert pipeline.chunk_view(out).select("column").distinct().count() == 2
         back = pipeline.decode_table(out, ["rid", "k"])
         assert back.count() == 2000
         with pytest.raises(ValueError, match="not in table"):
@@ -85,7 +84,7 @@ class TestSchemaEvolution:
     def test_rename_column(self, spark, two_batches):
         a, _ = two_batches
         out = pipeline.rename_column(a, "s", "text")
-        cols = {r["column"] for r in out.select("column").distinct().collect()}
+        cols = {r["column"] for r in pipeline.chunk_view(out).select("column").distinct().collect()}
         assert cols == {"rid", "k", "text"}
         back = pipeline.decode_table(out, ["rid", "text"])
         row = back.where(F.col("rid") == 7).collect()[0]
@@ -109,20 +108,20 @@ class TestSchemaEvolution:
         )
         blobs = pipeline.encode_columns(df, chunk_rows=32).cache()
         try:
-            names = {r["column"] for r in blobs.select("column").distinct().collect()}
-            assert any("." in c for c in names), names  # shredded leaves
+            names = lambda t: {
+                r["column"] for r in pipeline.chunk_view(t).select("column").distinct().collect()
+            }
+            assert any("." in c for c in names(blobs)), names(blobs)  # shredded leaves
             # rename carries every subtree chunk
             ren = pipeline.rename_column(blobs, "meta", "info")
-            rnames = {r["column"] for r in ren.select("column").distinct().collect()}
-            assert {c.split(".")[0].split("@")[0] for c in rnames} == {"rid", "info"}
+            assert {c.split(".")[0].split("@")[0] for c in names(ren)} == {"rid", "info"}
             back = pipeline.decode_table(ren, ["rid", "info"])
             assert back.where(F.col("info.a") == 1).count() > 0
             # drop removes the whole subtree
             dropped = pipeline.drop_columns(blobs, ["meta"])
-            dnames = {r["column"] for r in dropped.select("column").distinct().collect()}
-            assert all(not c.startswith("meta") for c in dnames)
+            assert all(not c.startswith("meta") for c in names(dropped))
             # structural names rejected outright
-            leaf = next(c for c in names if "." in c)
+            leaf = next(c for c in names(blobs) if "." in c)
             with pytest.raises(ValueError, match="nested/structural"):
                 pipeline.drop_columns(blobs, [leaf])
             with pytest.raises(ValueError, match="nested/structural"):
