@@ -119,35 +119,6 @@ def decode_fixed_len_byte_array(
     return [b[i * type_length : (i + 1) * type_length] for i in range(count)]
 
 
-# --- dispatch (plain.js:211-275) --------------------------------------------
-
-
-def encode_values(ptype: str, values, opts: dict | None = None) -> bytes:
-    opts = opts or {}
-    if ptype == "BOOLEAN":
-        return encode_boolean(np.asarray(values))
-    if ptype in _NUMERIC_DTYPES:
-        return encode_numeric(ptype, np.asarray(values))
-    if ptype == "BYTE_ARRAY":
-        return encode_byte_array(list(values))
-    if ptype == "FIXED_LEN_BYTE_ARRAY":
-        return encode_fixed_len_byte_array(list(values), opts["typeLength"])
-    raise ValueError(f"unsupported type: {ptype}")
-
-
-def decode_values(ptype: str, buf, count: int, opts: dict | None = None):
-    opts = opts or {}
-    if ptype == "BOOLEAN":
-        return decode_boolean(buf, count)
-    if ptype in _NUMERIC_DTYPES:
-        return decode_numeric(ptype, buf, count)
-    if ptype == "BYTE_ARRAY":
-        return decode_byte_array(buf, count)
-    if ptype == "FIXED_LEN_BYTE_ARRAY":
-        return decode_fixed_len_byte_array(buf, count, opts["typeLength"])
-    raise ValueError(f"unsupported type: {ptype}")
-
-
 def encode_int96(vals: "np.ndarray") -> bytes:
     """PLAIN INT96 (/root/reference/lib/codec/plain.js:70-103 parity):
     each value is 12 bytes — the two's-complement int64 little-endian in

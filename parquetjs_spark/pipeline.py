@@ -3,11 +3,13 @@
 single-threaded write/read paths, SURVEY.md §3.4).
 
 Design for scale:
-  * All value work happens JVM->Arrow->NumPy inside ``mapInArrow`` /
+  * All value work happens in Arrow and NumPy inside ``mapInArrow`` /
     ``applyInArrow`` (never per-row Python — BASELINE.json
-    input_hint); decode, verify, scans, delete and update are each one
-    narrow stage over whole row groups, and every rewrite builds its
-    rows with one row builder (_reencoded).
+    input_hint — and no JVM expression): the encode task shreds nested
+    columns into their leaves (_shred) and the decode task reassembles
+    them (_assemble_node); decode, verify, scans, delete and update are
+    each one narrow stage over whole row groups, and every rewrite
+    builds its rows with one row builder (_reencoded).
   * One encode task per partition; each task slices its Arrow batches
     into row-group-sized chunks (reference default 4096 rows,
     /root/reference/lib/writer.js:26) — chunk size bounds executor
@@ -33,6 +35,7 @@ import os
 import shutil
 import time
 import uuid
+from collections import Counter
 from typing import Iterable, Iterator, NamedTuple
 
 import numpy as np
@@ -43,7 +46,7 @@ from pyspark import TaskContext
 from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from . import arrow_chunk
 from .worker import drop_zip_finders, drops_zip_finders
@@ -109,10 +112,12 @@ def logical_dtype(spark_type: T.DataType) -> str:
         return "string"
     if isinstance(spark_type, T.ArrayType):
         if isinstance(spark_type.elementType, T.StructType):
+            # encode_columns shreds a repeated group into its leaves
+            # (_shred) where it is a column or a struct field; an array
+            # of them has no leaf form
             raise ValueError(
-                "array<struct> must go through flatten_struct_columns "
-                "(encode_columns does this); it cannot ride a single "
-                "leaf chunk"
+                f"unsupported Spark type: {spark_type.simpleString()} (array<struct> "
+                "is encoded only as a column or a struct field)"
             )
         elem = logical_dtype(spark_type.elementType)
         # nested arrays (rLevelMax > 1, e.g. array<array<float>> token
@@ -134,18 +139,24 @@ def logical_dtype(spark_type: T.DataType) -> str:
 
 
 # --------------------------------------------------------------------------
-# nested groups (struct columns): Dremel shredding, degenerate form
+# nested groups: Dremel shredding, in Arrow
 # --------------------------------------------------------------------------
 #
 # The reference supports arbitrarily nested groups
-# (/root/reference/lib/schema.js:102-120; shred recursion
-# /root/reference/lib/shred.js:75-135).  Our engine shreds a StructType
-# column into one chunked leaf per primitive path ("s.a.b") plus one
-# synthetic bool leaf per struct node ("s@def", true = group present) —
-# the struct-level slice of the definition levels.  Leaves under a null
-# group encode null; decode_table rebuilds the StructArray from the
-# leaves and the @def mask.  "." and "@def" are therefore reserved in
-# encoded column names (they would break Spark field access anyway).
+# (parquetjs lib/schema.js:102-120) and shreds a record in one
+# recursion (shredRecord, lib/shred.js:28-135).  Our
+# engine shreds each Arrow chunk of a column in one recursion too
+# (_shred, inside the encode UDF): a StructType column becomes one
+# chunked leaf per primitive path ("s.a.b") plus one synthetic bool
+# leaf per struct node ("s@def", true = group present) — the
+# struct-level slice of the definition levels; a repeated group
+# (array<struct>) adds one list level to every leaf below it, and its
+# struct nodes carry "@edef" validity lists instead.  Leaves under a
+# null group encode null.  The decode rebuilds every column in Arrow
+# from its leaves and validity chunks (_assemble_node), the
+# materializeRecords analogue (lib/shred.js:157-245).  "." and "@def"
+# are therefore reserved in encoded column names (they would break
+# Spark field access anyway).
 
 STRUCT_DEF_SUFFIX = "@def"
 # repeated groups (array<struct>): per-node element-validity list chunk.
@@ -159,85 +170,37 @@ def _is_arrstruct(dt: T.DataType) -> bool:
     return isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StructType)
 
 
-def _flatten_exprs(path: str, col, dt: T.DataType, out: list) -> None:
+def _shred(path: str, dt: T.DataType, arr: pa.Array, depth: int = 0) -> list:
+    """The leaves of ``arr``, a value array of Spark type ``dt`` named
+    ``path`` inside ``depth`` repeated groups, in col_idx order:
+    [(chunk name, Arrow array, dtype)].  A flat column is its own one
+    leaf."""
     if isinstance(dt, T.StructType):
-        out.append((path + STRUCT_DEF_SUFFIX, col.isNotNull(), "bool"))
-        for f in dt.fields:
-            _flatten_exprs(f"{path}.{f.name}", col.getField(f.name), f.dataType, out)
-    elif _is_arrstruct(dt):
-        _flatten_arrstruct(path, col, dt.elementType, out, lambda x: x)
-    else:
-        out.append((path, col, logical_dtype(dt)))
+        suffix = LIST_STRUCT_DEF_SUFFIX if depth else STRUCT_DEF_SUFFIX
+        leaves = [(path + suffix, pc.is_valid(arr), "bool")]
+        # flatten() ANDs the group's validity into each field
+        for f, child in zip(dt.fields, arr.flatten()):
+            leaves += _shred(f"{path}.{f.name}", f.dataType, child, depth)
+        return leaves
+    if _is_arrstruct(dt):
+        # one repetition level: shred the element structs, then give
+        # each of their leaves this level's list shape
+        lens, elems, valid = arrow_chunk._split_list(arr)
+        return [
+            (name, arrow_chunk._list_from_lens(lens, leaf, valid), "list_" + dtype)
+            for name, leaf, dtype in _shred(path, dt.elementType, elems, depth + 1)
+        ]
+    dtype = logical_dtype(dt)
+    if depth and dtype not in _LIST_ELEMS and not dtype.startswith("list_"):
+        raise ValueError(f"unsupported array<struct> field type: {dtype}")
+    return [(path, arr, dtype)]
 
 
-def _flatten_arrstruct(path: str, col, st: T.StructType, out: list, extract) -> None:
-    """Shred array<struct> into parallel list leaves sharing the array
-    shape + one list<bool> element-validity chunk per struct node.
-    Arbitrary nesting (struct inside, array<struct> inside — the
-    reference's recursive repeated groups, lib/shred.js:75-135) recurses
-    through _flatten_repeated; each repetition level adds one ``list_``
-    wrapper to the leaf dtypes and one nested F.transform to the
-    extraction expressions."""
-    _flatten_repeated(
-        path, st, out, extract, lambda fn: F.transform(col, fn), "list_"
-    )
-
-
-def _flatten_repeated(
-    path: str, st: T.StructType, out: list, extract, lift, prefix: str
-) -> None:
-    """Shred one repeated-group level.  ``lift`` maps an element-level
-    expression builder (element -> Column) to the full column expression
-    at the current repetition depth (nested F.transform per level);
-    ``prefix`` is the matching stack of ``list_`` wrappers."""
-    out.append(
-        (
-            path + LIST_STRUCT_DEF_SUFFIX,
-            lift(lambda x: extract(x).isNotNull()),
-            prefix + "bool",
-        )
-    )
-    for f in st.fields:
-        sub = (lambda g, name: (lambda x: g(x).getField(name)))(extract, f.name)
-        fpath = f"{path}.{f.name}"
-        if isinstance(f.dataType, T.StructType):
-            # plain struct inside the group: fields stay at this depth
-            _flatten_repeated(fpath, f.dataType, out, sub, lift, prefix)
-        elif _is_arrstruct(f.dataType):
-            # repeated group inside the group: one more transform level,
-            # one more list_ wrapper; a null inner array propagates as a
-            # null inner list through every leaf (transform(null) = null)
-            inner_lift = (
-                lambda L, g: (lambda fn: L(lambda x: F.transform(g(x), fn)))
-            )(lift, sub)
-            _flatten_repeated(
-                fpath,
-                f.dataType.elementType,
-                out,
-                lambda x: x,
-                inner_lift,
-                prefix + "list_",
-            )
-        else:
-            # scalar field -> parallel list leaf; array field (incl.
-            # nested arrays) -> list-of-list leaf (rLevelMax > 1 rides
-            # the nested-list chunk wire)
-            elem = logical_dtype(f.dataType)
-            if elem not in _LIST_ELEMS and not elem.startswith("list_"):
-                raise ValueError(
-                    f"unsupported array<struct> field type: {elem}"
-                )
-            out.append((fpath, lift(sub), prefix + elem))
-
-
-def flatten_struct_columns(df: DataFrame, cols: list[str]):
-    """-> (flat_df, flat_cols, dtypes, pretty).
-
-    ``flat_cols`` are opaque Spark-safe aliases ("_c0"...) because dotted
-    names break column resolution inside Spark's own mapInArrow plumbing;
-    ``pretty`` maps them to the dotted chunk names recorded in the
-    manifest.  No-op (same df, identity mapping) when no column is a
-    struct."""
+def _encode_plan(df: DataFrame, cols: list[str]):
+    """-> (df projected to ``cols``, {column: Spark type}, the leaves'
+    (chunk name, dtype) in col_idx order).  The leaves come from _shred
+    over an empty array of each column's type, so an unsupported shape
+    raises ValueError here, before any job runs."""
     for c in cols:
         # reserved chunk-name syntax: "." separates struct-leaf paths,
         # @def/@edef are validity chunks.  A literal source column using
@@ -251,32 +214,20 @@ def flatten_struct_columns(df: DataFrame, cols: list[str]):
                 "('.', '@def', '@edef' — struct shredding, SURVEY.md); "
                 "rename the source column before encoding"
             )
-    if not any(
-        isinstance(df.schema[c].dataType, T.StructType)
-        or _is_arrstruct(df.schema[c].dataType)
-        for c in cols
-    ):
-        if list(cols) != df.columns:
-            # explicit projection (guide §4.1): mapInArrow is opaque to
-            # Catalyst, so without this the encode stage ships EVERY
-            # column of df across the Python boundary to encode a subset
-            df = df.select(*[F.col(f"`{c}`") for c in cols])
-        return (
-            df,
-            list(cols),
-            {c: logical_dtype(df.schema[c].dataType) for c in cols},
-            {c: c for c in cols},
-        )
-    exprs: list = []
-    for c in cols:
-        _flatten_exprs(c, F.col(f"`{c}`"), df.schema[c].dataType, exprs)
-    safe = [f"_c{i}" for i in range(len(exprs))]
-    flat_df = df.select(
-        *[col.alias(s) for s, (_, col, _) in zip(safe, exprs)]
-    )
-    dtypes = {s: dt for s, (_, _, dt) in zip(safe, exprs)}
-    pretty = {s: name for s, (name, _, _) in zip(safe, exprs)}
-    return flat_df, safe, dtypes, pretty
+    if list(cols) != df.columns:
+        # explicit projection (guide §4.1): mapInArrow is opaque to
+        # Catalyst, so without this the encode stage ships EVERY
+        # column of df across the Python boundary to encode a subset
+        df = df.select(*[F.col(f"`{c}`") for c in cols])
+    types = {c: df.schema[c].dataType for c in cols}
+    leaves = []
+    for c, dt in types.items():
+        try:
+            empty = pa.array([], to_arrow_type(dt))
+        except PySparkException as e:  # no Arrow form: Spark cannot hand it to the UDF
+            raise ValueError(f"unsupported Spark type: {dt}") from e
+        leaves += [(name, dtype) for name, _, dtype in _shred(c, dt, empty)]
+    return df, types, leaves
 
 
 def _unflatten_tree(ordered: list[tuple[str, str]]):
@@ -285,8 +236,9 @@ def _unflatten_tree(ordered: list[tuple[str, str]]):
     Returns list of (out_name, node); node is ("leaf", flat_name, dtype),
     ("struct", def_name, [(field_name, node), ...]), or
     ("liststruct", edef_name, [(field_name, node), ...]) for repeated
-    groups (array<struct>); inside a liststruct subtree nested struct
-    nodes are liststruct too (their fields are parallel list leaves)."""
+    groups (array<struct>); inside a liststruct subtree a plain struct
+    is a struct node whose validity chunk is its @edef, and only a
+    repeated group one level deeper is a liststruct."""
     roots: list[tuple[str, dict]] = []
     by_name: dict[str, dict] = {}
 
@@ -349,49 +301,6 @@ def _unflatten_tree(ordered: list[tuple[str, str]]):
     return [(name, finish(name, node)) for name, node in roots]
 
 
-def _has_liststruct(node) -> bool:
-    if node[0] == "leaf":
-        return False
-    return node[0] == "liststruct" or any(
-        _has_liststruct(ch) for _, ch in node[2]
-    )
-
-
-def _rebuild_expr(node, colref, _depth: int = 0):
-    """Spark Column expression rebuilding a (list)struct tree from its
-    decoded flat leaf columns — pure JVM (struct/when/arrays_zip/
-    transform), no Python in the rebuild.  ``colref`` maps a flat leaf
-    name to its value Column AT THE CURRENT repetition depth; each
-    liststruct boundary zips its subtree's (equally-shaped) lists and
-    recurses one transform deeper, so nested repeated groups
-    (array<struct<..., array<struct<...>>>>) rebuild to any depth."""
-    kind = node[0]
-    if kind == "leaf":
-        return colref(node[1])
-    if kind == "struct":
-        children = [
-            _rebuild_expr(ch, colref, _depth).alias(f) for f, ch in node[2]
-        ]
-        st = F.struct(*children)
-        return F.when(colref(node[1]), st) if node[1] else st
-    # liststruct: zip every flat list leaf + every @edef of the subtree
-    # (they all share this level's array shape by construction), then
-    # build each element from the zipped struct; inner liststructs
-    # re-enter this branch with the element-level accessor
-    flats: list[str] = _node_flat_names(node)
-    tok = {f: f"z{_depth}_{i}" for i, f in enumerate(flats)}
-    zipped = F.arrays_zip(*[colref(f).alias(tok[f]) for f in flats])
-
-    def element(x):
-        get = lambda name: x[tok[name]]
-        children = [
-            _rebuild_expr(ch, get, _depth + 1).alias(f) for f, ch in node[2]
-        ]
-        return F.when(get(node[1]), F.struct(*children))
-
-    return F.transform(zipped, element)
-
-
 def _node_spark_type(node, depth: int = 0) -> T.DataType:
     """Spark type of the rebuilt column.  ``depth`` counts enclosing
     repetition levels: a leaf chunk inside d repeated groups stores
@@ -430,10 +339,23 @@ def _node_flat_names(node) -> list[str]:
 
 
 def _assemble_node(node, decoded: dict, pa_types: dict) -> pa.Array:
+    """The Arrow column of ``node`` from its decoded chunks ``decoded``
+    ({chunk name: array}, cast to ``pa_types``): the one reassembly of
+    nested columns, struct and repeated groups alike."""
     if node[0] == "leaf":
         arr = decoded[node[1]]
         want = pa_types[node[1]]
         return arr.cast(want) if arr.type != want else arr
+    if node[0] == "liststruct":
+        # one repetition level: the element structs from every chunk of
+        # the subtree flattened one list level, masked by the @edef
+        # values, then given the @edef list's shape
+        lens, _, valid = arrow_chunk._split_list(decoded[node[1]])
+        names = _node_flat_names(node)
+        elems = {n: arrow_chunk._split_list(decoded[n])[1] for n in names}
+        types = {n: pa_types[n].value_type for n in names}
+        struct = _assemble_node(("struct", *node[1:]), elems, types)
+        return arrow_chunk._list_from_lens(lens, struct, valid)
     children = [(f, _assemble_node(ch, decoded, pa_types)) for f, ch in node[2]]
     mask = None
     if node[1] is not None:
@@ -612,33 +534,31 @@ def encode_columns(
 
     ``codec="auto"`` picks the smallest measured candidate per chunk;
     any other codec is forced on every chunk.  A task trains one FSST
-    symbol table per column, from the first chunk it encodes with FSST,
+    symbol table per leaf, from the first chunk it encodes with FSST,
     and reuses it for the rest of its chunks.
+
+    Nested columns shred into their leaves inside the encode task
+    (_shred); an unsupported shape raises ValueError here, before any
+    job runs.
     """
-    cols = columns or df.columns
-    df, cols, dtypes, pretty = flatten_struct_columns(df, cols)
-    idxs = range(len(cols))
+    df, types, leaves = _encode_plan(df, columns or df.columns)
+    idxs = range(len(leaves))
     schema = to_arrow_schema(blob_schema(idxs))
 
     @drops_zip_finders
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else 0
-        # per-column selector state: the decision cache and FSST tables
-        fsst_states: dict[str, dict] = {c: {} for c in cols}
+        # per-leaf selector state: the decision cache and FSST tables
+        fsst_states = [{} for _ in leaves]
         for seq, rb in enumerate(_arrow_batch_slices(batches, chunk_rows)):
             row = {"part_id": [part_id], "chunk_seq": [seq], "chunks": [[]]}
-            for ci, c in enumerate(cols):
+            shredded = [leaf for c, dt in types.items() for leaf in _shred(c, dt, rb.column(c))]
+            for ci, (name, arr, dtype) in enumerate(shredded):
                 fields, blob = _encode_chunk(
-                    rb.column(c),
-                    dtypes[c],
-                    codec=codec,
-                    compression=compression,
-                    fsst_state=fsst_states[c],
+                    arr, dtype, codec=codec, compression=compression, fsst_state=fsst_states[ci]
                 )
-                row["chunks"][0].append(
-                    {"column": pretty[c], "col_idx": ci, "dtype": dtypes[c], **fields}
-                )
+                row["chunks"][0].append({"column": name, "col_idx": ci, "dtype": dtype, **fields})
                 row[_data_col(ci)] = [blob]
             yield pa.RecordBatch.from_pydict(row, schema=schema)
 
@@ -655,15 +575,13 @@ class _Layout(NamedTuple):
     nodes by output name, the flat chunk names to read and decode (the
     nodes' chunks, then any residual-only predicate chunks, which
     _match_mask reads but no output carries) with the blob column each
-    is read from (``sources``), and the Arrow-side output schema
-    (columns holding a repeated group travel as their flat list leaves
-    and are rebuilt by a JVM expression, _rebuild_expr)."""
+    is read from (``sources``), and the output schema: every column,
+    nested ones included, leaves the reassembly final."""
 
     nodes: dict
     flat_names: list
     sources: dict  # flat chunk name -> its blob column (c<col_idx>)
     pa_types: dict
-    plan: list  # (kind, output name, flat leaves or None), kind in node/flats
     schema: T.StructType
     ordered: bool
 
@@ -676,9 +594,10 @@ def _row_group_layout(
     residual: list[str] = (), names: dict[str, str] | None = None,
 ) -> _Layout:
     """The layout of ``columns`` (default: every column), each emitted
-    under ``names.get(column, column)``.  The ``residual`` chunks (a
-    scan's predicate columns) are read and decoded too, but emitted
-    only where an output column holds them."""
+    under ``names.get(column, column)`` with its source Spark type,
+    nested columns whole.  The ``residual`` chunks (a scan's predicate
+    columns) are read and decoded too, but emitted only where an output
+    column holds them."""
     if not meta_rows:
         raise ValueError("blob table has no chunks")
     meta_rows = sorted(meta_rows, key=lambda r: r["col_idx"])
@@ -704,30 +623,8 @@ def _row_group_layout(
     flat_names = [n for c in outs for n in _node_flat_names(nodes[c])]
     flat_names += [n for c in residual for n in _node_flat_names(node_of(c)) if n not in flat_names]
     sources = {r["column"]: _data_col(r["col_idx"]) for r in meta_rows if r["column"] in flat_names}
-    pa_types = {}
-    for name in flat_names:
-        dt = flat_dtypes[name]
-        if name.endswith(STRUCT_DEF_SUFFIX):
-            pa_types[name] = pa.bool_()
-        else:
-            pa_types[name] = _pa_type_of(dt)
-
-    plan: list[tuple[str, str, list[str] | None]] = []
-    fields: list[T.StructField] = []
-    for c in outs:
-        if _has_liststruct(nodes[c]):
-            fl = _node_flat_names(nodes[c])
-            plan.append(("flats", c, fl))
-            for name in fl:
-                ft = (
-                    T.BooleanType()
-                    if name.endswith(STRUCT_DEF_SUFFIX)
-                    else spark_type_of(flat_dtypes[name])
-                )
-                fields.append(T.StructField(name, ft))
-        else:
-            plan.append(("node", c, None))
-            fields.append(T.StructField(c, _node_spark_type(nodes[c])))
+    pa_types = {name: _pa_type_of(flat_dtypes[name]) for name in flat_names}
+    fields = [T.StructField(c, _node_spark_type(node)) for c, node in nodes.items()]
     if ordered:
         # write-order read-back (the reference cursor's iteration order):
         # each group emits its identity + row index, the final global
@@ -737,7 +634,7 @@ def _row_group_layout(
             T.StructField(name, typ)
             for name, typ in zip(_ORDER_COLS, (T.IntegerType(), T.LongType(), T.LongType()))
         ]
-    return _Layout(nodes, flat_names, sources, pa_types, plan, T.StructType(fields), ordered)
+    return _Layout(nodes, flat_names, sources, pa_types, T.StructType(fields), ordered)
 
 
 class _Chunks(dict):
@@ -797,15 +694,7 @@ def _assemble_row_group(
     match = _match_mask(decoded, specs) if specs else None
     if match is not None and not match.any():
         return None
-    arrays = []
-    for kind, c, fl in layout.plan:
-        if kind == "node":
-            arrays.append(_assemble_node(layout.nodes[c], decoded, layout.pa_types))
-        else:
-            for name in fl:
-                a = decoded[name]
-                want_t = layout.pa_types[name]
-                arrays.append(a.cast(want_t) if a.type != want_t else a)
+    arrays = [_assemble_node(node, decoded, layout.pa_types) for node in layout.nodes.values()]
     if layout.ordered:
         n_rows = len(arrays[0]) if arrays else 0
         arrays.append(pa.array(np.full(n_rows, group_id[0], dtype=np.int32)))
@@ -833,24 +722,11 @@ def _decode_rows(blob_df: DataFrame, layout: _Layout, specs: list | None = None)
 
 
 def _rebuild(decoded_df: DataFrame, layout: _Layout) -> DataFrame:
-    """The JVM half of decode: rebuild repeated-group columns from their
-    flat leaves (_rebuild_expr) and, for ``ordered``, sort by write
-    order.  Over a driver-local LocalRelation the projection folds on
-    the driver: no job."""
-    out = decoded_df
-    if any(kind == "flats" for kind, _, _ in layout.plan):
-
-        def colref(name: str):
-            return F.col(f"`{name}`")
-
-        exprs = [
-            F.col(f"`{c}`") if kind == "node" else _rebuild_expr(layout.nodes[c], colref).alias(c)
-            for kind, c, _ in layout.plan
-        ]
-        out = out.select(*exprs, *(_ORDER_COLS if layout.ordered else []))
+    """The JVM half of decode: for ``ordered``, the sort by write
+    order; otherwise the decoded rows as they are."""
     if layout.ordered:
-        out = out.orderBy(*_ORDER_COLS).drop(*_ORDER_COLS)
-    return out
+        return decoded_df.orderBy(*_ORDER_COLS).drop(*_ORDER_COLS)
+    return decoded_df
 
 
 def decode_table(
@@ -865,7 +741,10 @@ def decode_table(
     /root/reference/lib/shred.js:157-245 ``materializeRecords``), but
     table-at-a-time: every column chunk of one (part_id, chunk_seq) row
     group is one blob row, decoded in one task and zipped positionally
-    — no row-id join, no per-row Python.
+    — no row-id join, no per-row Python.  Struct and repeated-group
+    columns are rebuilt from their leaves in the same task
+    (_assemble_node), so every column leaves it final; ``ordered`` adds
+    the one JVM step, a sort by write order.
 
     Scale shape: one narrow stage, no shuffle.  A blob row is a whole
     row group (≤ chunk_rows rows × k compressed column blobs), so task
@@ -1688,6 +1567,13 @@ def compact_chunks(
     if meta is None:
         raise ValueError(f"compact_chunks: over {_MANIFEST_DRIVER_ROWS} row groups to plan")
     buckets = _runt_buckets(meta, min_rows, target_rows)
+    ids = Counter(zip(meta["part_id"].to_pylist(), meta["chunk_seq"].to_pylist()))
+    if repeated := sorted(g for g, k in ids.items() if k > 1 and g[0] in buckets):
+        raise ValueError(
+            f"compact_chunks: row groups (part_id, chunk_seq) {repeated} occur more than once "
+            "(an append of a fresh encode_columns frame reuses the table's identities); add "
+            "new rows with union_encoded, which keeps them disjoint"
+        )
     todo = _keepset_filter({(p, s) for p, bs in buckets.items() for b in bs for s in b})
 
     # kw is bound in a plain annotated def: applyInArrow infers its eval
@@ -1953,7 +1839,11 @@ def write_encoded(
     """Persist blobs + a pure-metadata manifest (lineage) table.  This
     is the one writer of ``blobs/``, ``manifest/`` and ``meta/``.
     ``mode`` is "overwrite" or "append"; any other raises ValueError
-    before a job runs.
+    before a job runs.  A fresh encode_columns frame numbers its row
+    groups from (0, 0) again, so appending one reuses the first write's
+    (part_id, chunk_seq) identities: reads stay right, but
+    compact_chunks refuses such a table; union_encoded keeps new rows
+    disjoint.
 
     ``blob_df`` is evaluated once, by the one Spark job that writes the
     blobs, one row per row group.  The manifest, one row per column

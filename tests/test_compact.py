@@ -109,6 +109,33 @@ class TestCompact:
         assert pipeline.decode_column(out, "x").count() == 100
 
 
+def test_compact_refuses_repeated_row_groups(tmp_path, spark):
+    """An append of a fresh encode_columns frame reuses the first
+    write's (part_id, chunk_seq) identities.  compact_chunks refuses to
+    bucket a partition that repeats one: one ValueError on the driver,
+    naming the identities, before any job; a repeated partition with no
+    runt still passes through."""
+    frame = lambda n: spark.range(n).select(F.col("id").alias("x")).repartition(2)
+    runts, whole = str(tmp_path / "runts"), str(tmp_path / "whole")
+    for path, n in ((runts, 200), (whole, 256)):  # [64, 36] / [64, 64] per partition
+        for mode in ("overwrite", "append"):
+            pipeline.write_encoded(pipeline.encode_columns(frame(n), chunk_rows=64), path, mode=mode)
+    sc = spark.sparkContext
+    sc.setJobGroup("compact_repeated", "compact_repeated")
+    try:
+        with pytest.raises(ValueError, match="union_encoded") as e:
+            pipeline.compact_chunks(
+                pipeline.read_encoded(spark, runts), min_rows=60, target_rows=128
+            )
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("compact_repeated")) == []
+    assert "[(0, 0), (0, 1), (1, 0), (1, 1)]" in str(e.value)
+    out = pipeline.compact_chunks(pipeline.read_encoded(spark, whole), min_rows=60, target_rows=128)
+    assert sorted(r[0] for r in pipeline.decode_table(out).collect()) == sorted(2 * list(range(256)))
+
+
 def test_cli_compact_roundtrip(tmp_path, spark, capsys):
     src = str(tmp_path / "src.parquet")
     enc = str(tmp_path / "enc")
