@@ -116,7 +116,7 @@ def _q_scan_eq_partkey(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     df = _load(spark, sf_dir, "lineitem").select("l_partkey")
     blobs = pipeline.encode_columns(df)
-    return pipeline.scan_eq(blobs, "l_partkey", 50, dtype="int64")
+    return pipeline.scan_eq(blobs, "l_partkey", 50)
 
 
 def _q_chunk_counts_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -344,7 +344,7 @@ def _q_scan_orderkey_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("l_orderkey")
     )
     blobs = pipeline.encode_columns(df)
-    return pipeline.scan_column(blobs, "l_orderkey", lo=100, hi=5000, dtype="int64")
+    return pipeline.scan_column(blobs, "l_orderkey", lo=100, hi=5000)
 
 
 def _q_scan_table_range(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -188,9 +188,10 @@ _PTYPE = {
 }
 
 def codec_supports(codec: str, dtype: str) -> bool:
-    """Static codec/dtype compatibility — used by the CLI to reject a
-    type-incompatible forced --codec with a clean exit 2 before the job
-    starts, instead of a raw executor traceback mid-encode.  Mirrors
+    """Static codec/dtype compatibility — used by encode_columns to
+    reject a forced codec that cannot encode one of its leaves with one
+    ValueError before any job starts, instead of a raw executor
+    traceback mid-encode (the CLI exits 2 on it).  Mirrors
     the ``_encode_values`` and ``arrow_chunk._encode_string_block``
     dispatch: list dtypes check their leaf
     element, decimals ride the int64 unscaled path.  Data-dependent

@@ -42,35 +42,19 @@ def _spark(args):
 
 
 def cmd_encode(args) -> int:
-    from parquetjs_spark import codecs, pipeline
-    from parquetjs_spark.codecs import compress as _comp
+    from parquetjs_spark import pipeline
 
     from parquetjs_spark.sources.iceberg import load_source_table
 
-    # validate forced codec/compression BEFORE spinning up the job —
-    # a typo'd flag otherwise surfaces as a raw executor-side traceback
-    # mid-encode, inconsistent with the clean exit-2 predicate checks
     def _norm(v):
         v = (v or "auto")
         return "auto" if v.lower() == "auto" else v.upper()
 
     args.codec = _norm(args.codec)
     args.compression = _norm(args.compression)
-    if args.codec != "auto" and args.codec not in codecs.CODEC_IDS:
-        print(
-            f"error: unknown --codec {args.codec!r} "
-            f"(choose from auto, {', '.join(sorted(codecs.CODEC_IDS))})",
-            file=sys.stderr,
-        )
-        return 2
-    avail = _comp.available()
-    if args.compression != "auto" and args.compression not in avail:
-        print(
-            f"error: unknown --compression {args.compression!r} "
-            f"(choose from auto, {', '.join(avail)})",
-            file=sys.stderr,
-        )
-        return 2
+    # the engine's check of an unknown forced codec/compression, before
+    # the input is opened (encode_columns checks the leaves too)
+    pipeline._check_forced(args.codec, args.compression, [])
 
     spark = _spark(args)
     try:
@@ -98,27 +82,6 @@ def cmd_encode(args) -> int:
             file=sys.stderr,
         )
         return 2
-    if args.codec != "auto":
-        from parquetjs_spark import chunk as chunklib
-
-        bad = []
-        for f_ in df.schema.fields:
-            if cols is not None and f_.name not in cols:
-                continue
-            try:
-                dt = pipeline.logical_dtype(f_.dataType)
-            except ValueError:
-                continue  # nested shapes validate per-leaf at encode time
-            if not chunklib.codec_supports(args.codec, dt):
-                bad.append(f"{f_.name} ({dt})")
-        if bad:
-            print(
-                f"error: --codec {args.codec} is incompatible with "
-                f"column(s) {', '.join(bad)}; select compatible columns "
-                "with --columns or use --codec auto",
-                file=sys.stderr,
-            )
-            return 2
     if zorder_cols:
         from pyspark.errors.exceptions.base import PySparkException
 
@@ -202,11 +165,11 @@ def cmd_scan(args) -> int:
     dtype = _manifest_dtypes(spark, pipeline, args.input)(args.column)
     if args.eq is not None:
         val = _typed_literal(dtype, args.eq)
-        out = pipeline.scan_eq(blobs, args.column, val, dtype=dtype)
+        out = pipeline.scan_eq(blobs, args.column, val)
     else:
         lo = None if args.min is None else _typed_literal(dtype, args.min)
         hi = None if args.max is None else _typed_literal(dtype, args.max)
-        out = pipeline.scan_column(blobs, args.column, lo=lo, hi=hi, dtype=dtype)
+        out = pipeline.scan_column(blobs, args.column, lo=lo, hi=hi)
     out.write.mode("overwrite").parquet(args.output)
     print(json.dumps({"rows": spark.read.parquet(args.output).count()}))
     return 0
@@ -532,9 +495,6 @@ def cmd_meta(args) -> int:
 def cmd_compact(args) -> int:
     from parquetjs_spark import pipeline
 
-    if args.min_rows > args.target_rows:
-        print("error: --min-rows must be <= --target-rows", file=sys.stderr)
-        return 2
     # in-place compaction would overwrite the table mid-read (and a
     # path-normalization near-miss could destroy the input outright)
     if _reject_in_place(args):

@@ -49,6 +49,8 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from . import arrow_chunk
+from .chunk import codec_supports
+from .codecs import CODEC_IDS, compress
 from .worker import drop_zip_finders, drops_zip_finders
 
 DEFAULT_CHUNK_ROWS = 4096  # /root/reference/lib/writer.js:26
@@ -516,6 +518,26 @@ def _encode_chunk(arr: pa.Array, dtype: str, **encode_kw) -> tuple[dict, bytes]:
     return fields, blob
 
 
+def _check_forced(codec: str, compression: str, leaves: list) -> None:
+    """A forced ``codec`` and ``compression`` checked on the driver: an
+    unknown name, or a codec that cannot encode one of the (chunk name,
+    dtype) ``leaves`` (validity and list leaves included), raises one
+    ValueError naming them."""
+    if codec != "auto" and codec not in CODEC_IDS:
+        raise ValueError(f"unknown codec {codec!r} (choose from auto, {', '.join(sorted(CODEC_IDS))})")
+    if compression != "auto" and compression not in compress.available():
+        choices = ", ".join(compress.available())
+        raise ValueError(f"unknown compression {compression!r} (choose from auto, {choices})")
+    if codec == "auto":
+        return
+    bad = [f"{name} ({dtype})" for name, dtype in leaves if not codec_supports(codec, dtype)]
+    if bad:
+        raise ValueError(
+            f"codec {codec} cannot encode leaves {', '.join(bad)}; encode other columns or "
+            "use codec auto"
+        )
+
+
 def encode_columns(
     df: DataFrame,
     columns: list[str] | None = None,
@@ -538,10 +560,12 @@ def encode_columns(
     and reuses it for the rest of its chunks.
 
     Nested columns shred into their leaves inside the encode task
-    (_shred); an unsupported shape raises ValueError here, before any
-    job runs.
+    (_shred).  An unsupported shape, an unknown forced codec or
+    compression, and a forced codec that cannot encode one of the
+    leaves raise ValueError here, before any job runs (_check_forced).
     """
     df, types, leaves = _encode_plan(df, columns or df.columns)
+    _check_forced(codec, compression, leaves)
     idxs = range(len(leaves))
     schema = to_arrow_schema(blob_schema(idxs))
 
@@ -590,14 +614,12 @@ _ORDER_COLS = ["__pid", "__cseq", "__ridx"]
 
 
 def _row_group_layout(
-    meta_rows: list, columns: list[str] | None, ordered: bool = False,
-    residual: list[str] = (), names: dict[str, str] | None = None,
+    meta_rows: list, columns: list[str] | None, ordered: bool = False, residual: list[str] = ()
 ) -> _Layout:
     """The layout of ``columns`` (default: every column), each emitted
-    under ``names.get(column, column)`` with its source Spark type,
-    nested columns whole.  The ``residual`` chunks (a scan's predicate
-    columns) are read and decoded too, but emitted only where an output
-    column holds them."""
+    with its source Spark type, nested columns whole.  The ``residual``
+    chunks (a scan's predicate columns) are read and decoded too, but
+    emitted only where an output column holds them."""
     if not meta_rows:
         raise ValueError("blob table has no chunks")
     meta_rows = sorted(meta_rows, key=lambda r: r["col_idx"])
@@ -618,9 +640,8 @@ def _row_group_layout(
             return ("leaf", c, flat_dtypes[c])
         raise ValueError(f"no chunks for columns: [{c!r}]")
 
-    outs = [(names or {}).get(c, c) for c in columns]
-    nodes = {out: node_of(c) for out, c in zip(outs, columns)}
-    flat_names = [n for c in outs for n in _node_flat_names(nodes[c])]
+    nodes = {c: node_of(c) for c in columns}
+    flat_names = [n for c in columns for n in _node_flat_names(nodes[c])]
     flat_names += [n for c in residual for n in _node_flat_names(node_of(c)) if n not in flat_names]
     sources = {r["column"]: _data_col(r["col_idx"]) for r in meta_rows if r["column"] in flat_names}
     pa_types = {name: _pa_type_of(flat_dtypes[name]) for name in flat_names}
@@ -760,29 +781,11 @@ def decode_table(
     return _rebuild(_decode_rows(blob_df, layout), layout)
 
 
-def decode_column(
-    blob_df: DataFrame,
-    column: str,
-    out_name: str | None = None,
-    out_type: T.DataType | None = None,
-) -> DataFrame:
-    """Decode one column's chunks back to a value DataFrame: decode_table
-    projected to ``column``, emitted as ``out_name`` (default
-    ``column``) of Spark type ``out_type`` (default: the chunk dtype's)."""
-    return _decode_one(blob_df, _meta_rows_for(blob_df), column, out_name, out_type)
-
-
-def _decode_one(blob_df, meta_rows, column, out_name=None, out_type=None) -> DataFrame:
-    out_name = out_name or column
-    layout = _row_group_layout(meta_rows, [column], names={column: out_name})
-    if out_type is not None:
-        pa_types = dict(layout.pa_types)
-        if isinstance(out_type, T.TimestampType):
-            # tz-aware Spark timestamps travel as UTC-instant arrow timestamps
-            pa_types[column] = pa.timestamp("us", tz="UTC")
-        schema = T.StructType([T.StructField(out_name, out_type)])
-        layout = layout._replace(pa_types=pa_types, schema=schema)
-    return _rebuild(_decode_rows(blob_df, layout), layout)
+def decode_column(blob_df: DataFrame, column: str) -> DataFrame:
+    """Decode one column's chunks back to a value DataFrame:
+    decode_table projected to ``column`` (a dotted struct leaf path
+    decodes that leaf under its flat name)."""
+    return decode_table(blob_df, [column])
 
 
 def roundtrip_table(
@@ -883,20 +886,6 @@ def _chunk_meta(blob_df: DataFrame, columns: list[str]) -> pa.Table | None:
     return tbl if tbl.num_rows <= _MANIFEST_DRIVER_ROWS else None
 
 
-def _resolve_dtype(blob_df: DataFrame, column: str, dtype: str | None) -> str:
-    """dtype is constant per column; callers that know it (manifest in
-    hand, or the CLI's resolver) pass it and skip the probe.  When the
-    table came from read_encoded, the manifest cache answers with no
-    Spark job at all; only a bare hand-built DataFrame pays
-    _meta_rows_for's limit-1 probe."""
-    if dtype is not None:
-        return dtype
-    dtypes = {r["column"]: r["dtype"] for r in _meta_rows_for(blob_df)}
-    if column not in dtypes:
-        raise ValueError(f"no chunks for column {column!r}: not in table")
-    return dtypes[column]
-
-
 def _coerce_literal(value, dtype: str):
     """The one literal coercion (predicates, SET values, CLI checks):
     for date/timestamp columns, ISO strings (a trailing 'Z' included,
@@ -954,19 +943,23 @@ def _typed_value(column: str, value, dtype: str):
     return typed
 
 
+def _dtypes(meta_rows: list) -> dict[str, str]:
+    """{column: dtype} of _meta_rows_for's rows."""
+    return {r["column"]: r["dtype"] for r in meta_rows}
+
+
 def _predicate_specs(
-    blob_df: DataFrame,
+    dtypes: dict[str, str],
     ranges: dict[str, tuple] | None = None,
     eqs: dict | None = None,
-    dtype: str | None = None,
 ) -> list[tuple]:
     """The one predicate spec: the ``ranges`` (column -> (lo, hi),
     either bound may be None) / ``eqs`` (column -> value, None = IS
     NULL) conjunction as validated (column, kind, typed value, dtype)
     tuples, kind in range/eq/isnull (a range's value is (lo, hi)).
-    Each dtype resolves once (``dtype`` is the single-column callers'
-    hint) and each literal converts once, so a bad literal fails here
-    before any Spark job runs."""
+    Dtypes come from the call's one resolution, ``dtypes`` ({column:
+    dtype}, _dtypes), and each literal converts once, so an unknown
+    column or a bad literal fails here before any Spark job runs."""
     ranges = dict(ranges or {})
     eqs = dict(eqs or {})
     if not ranges and not eqs:
@@ -979,7 +972,9 @@ def _predicate_specs(
     ]
     specs = []
     for col, kind, value in preds:
-        dt = _resolve_dtype(blob_df, col, dtype)
+        if col not in dtypes:
+            raise ValueError(f"no chunks for column {col!r}: not in table")
+        dt = dtypes[col]
         if kind == "range":
             value = tuple(
                 None if v is None else _typed_value(col, v, dt) for v in value
@@ -1030,12 +1025,13 @@ def _kept_chunks(meta: pa.Table, spec: tuple) -> pa.Table:
 
 
 def _meta_rows_for(blob_df: DataFrame) -> list:
-    """(column, col_idx, dtype) rows for decode_table, resolved from the
+    """(column, col_idx, dtype) rows of the table, resolved from the
     manifest cache when available, else from the ``chunks`` of one blob
     row of the UNPRUNED table (every row group holds every column), a
-    limit-1 job.  Scan paths pass this into decode_table so an empty
-    pruned result still decodes to an empty, correctly-typed DataFrame
-    instead of 'blob table has no chunks'."""
+    limit-1 job.  Each public call resolves them once and derives its
+    predicate dtypes (_dtypes) and layout from the same rows, so an
+    empty pruned result still decodes to an empty, correctly-typed
+    DataFrame instead of 'blob table has no chunks'."""
     cached = _cached_meta(blob_df)
     if cached is not None:
         return [
@@ -1154,15 +1150,11 @@ def _scan_local(
     return pa.concat_tables(tables)
 
 
-def _scan(
-    blob_df: DataFrame,
-    specs: list,
-    columns: list[str] | None = None,
-    names: dict[str, str] | None = None,
-) -> DataFrame:
+def _scan(blob_df: DataFrame, meta_rows: list, specs: list, columns: list[str] | None) -> DataFrame:
     """The one scan behind scan_table_where, scan_eq and scan_column:
     the rows of the kept row groups matching ``specs`` exactly, as
-    ``columns`` (default: every column), renamed by ``names``.  The
+    ``columns`` (default: every column) of the table whose
+    (column, col_idx, dtype) rows are ``meta_rows``.  The
     predicate columns are decoded for the residual but never leave the
     decode: the layout reads them and emits only ``columns``, so the
     result needs no projection after it.  Kept groups under
@@ -1172,10 +1164,8 @@ def _scan(
     if columns == []:
         # a zero-column Arrow table carries no row count: emit the
         # predicate columns and drop them in the JVM, which keeps it
-        return _scan(blob_df, specs, list(dict.fromkeys(s[0] for s in specs))).select()
-    layout = _row_group_layout(
-        _meta_rows_for(blob_df), columns, residual=[s[0] for s in specs], names=names
-    )
+        return _scan(blob_df, meta_rows, specs, list(dict.fromkeys(s[0] for s in specs))).select()
+    layout = _row_group_layout(meta_rows, columns, residual=[s[0] for s in specs])
     keep = _kept_groups(blob_df, specs)
     local = _scan_local(blob_df, keep, layout, specs)
     if local is not None:
@@ -1185,24 +1175,7 @@ def _scan(
     return _rebuild(decoded, layout)
 
 
-def _scan_one(
-    blob_df: DataFrame, spec: tuple, out_name: str | None = None
-) -> DataFrame:
-    """The single-column scan behind scan_column and
-    scan_eq(columns=None): _scan of the predicate column alone, named
-    ``out_name``."""
-    column = spec[0]
-    return _scan(blob_df, [spec], [column], {column: out_name or column})
-
-
-def scan_column(
-    blob_df: DataFrame,
-    column: str,
-    lo=None,
-    hi=None,
-    dtype: str | None = None,
-    out_name: str | None = None,
-) -> DataFrame:
+def scan_column(blob_df: DataFrame, column: str, lo=None, hi=None) -> DataFrame:
     """Stat-pruned range scan: zone maps over the manifest's per-chunk
     min/max (the Statistics struct Parquet defines,
     /root/reference/parquet.thrift:201-214 — declared by the reference,
@@ -1213,20 +1186,15 @@ def scan_column(
     every chunk and touching only the ones a range-predicate query
     needs (clustered/sorted data prunes hardest — same math as Parquet
     row-group skipping).  As for scan_table_where, a small kept set of a
-    read_encoded table decodes on the driver with no Spark job.  A blob
-    DataFrame not from read_encoded pays one metadata job up front:
-    cache the frame, or write it first."""
-    (spec,) = _predicate_specs(blob_df, ranges={column: (lo, hi)}, dtype=dtype)
-    return _scan_one(blob_df, spec, out_name)
+    read_encoded table decodes on the driver with no Spark job.  It is
+    exactly ``scan_table_where(ranges={column: (lo, hi)},
+    columns=[column])``, so a blob DataFrame not from read_encoded pays
+    the same metadata jobs up front: cache the frame, or write it
+    first."""
+    return scan_table_where(blob_df, ranges={column: (lo, hi)}, columns=[column])
 
 
-def scan_eq(
-    blob_df: DataFrame,
-    column: str,
-    value,
-    columns: list[str] | None = None,
-    dtype: str | None = None,
-) -> DataFrame:
+def scan_eq(blob_df: DataFrame, column: str, value, columns: list[str] | None = None) -> DataFrame:
     """Bloom + zone-map pruned equality scan (point lookup).
 
     Parquet declares bloom filters / index pages; the reference never
@@ -1243,20 +1211,17 @@ def scan_eq(
     per hash).  ``value=None`` is an IS NULL lookup pruned by the
     n_nulls stat.
 
-    ``columns=None`` decodes just the predicate column (``dtype`` skips
-    its resolution); a list reassembles whole row groups and is exactly
-    ``scan_table_where(eqs={column: value}, columns=columns)``: the
-    predicate column is decoded for the residual but never leaves the
-    decode unless ``columns`` names it, so a driver-path lookup is one
-    createDataFrame of the output columns.  Chunks
+    It is exactly ``scan_table_where(eqs={column: value},
+    columns=columns)``, ``columns=None`` meaning just the predicate
+    column: the predicate column is decoded for the residual but never
+    leaves the decode unless ``columns`` names it, so a driver-path
+    lookup is one createDataFrame of the output columns.  Chunks
     without a bloom (old tables, unbloomable dtypes) stay
     conservatively unpruned.  A blob DataFrame not from read_encoded
-    pays one metadata job up front (columns=None too): cache the frame,
-    or write it first."""
-    if columns is not None:
-        return scan_table_where(blob_df, eqs={column: value}, columns=columns)
-    (spec,) = _predicate_specs(blob_df, eqs={column: value}, dtype=dtype)
-    return _scan_one(blob_df, spec)
+    pays the same metadata jobs up front as scan_table_where: cache the
+    frame, or write it first."""
+    out = [column] if columns is None else columns
+    return scan_table_where(blob_df, eqs={column: value}, columns=out)
 
 
 def scan_table_where(
@@ -1288,9 +1253,11 @@ def scan_table_where(
     itself and the result is a local relation: no Spark job.  Otherwise
     (and for a transformed or hand-built blob DataFrame) the kept groups
     reach the blob scan as a literal filter and decode in one Spark
-    job.  As for scan_eq, a blob DataFrame not from read_encoded pays
-    one metadata job up front."""
-    return _scan(blob_df, _predicate_specs(blob_df, ranges, eqs), columns)
+    job.  A blob DataFrame not from read_encoded pays two metadata jobs
+    up front, however many predicates: the one (column, col_idx, dtype)
+    resolution (_meta_rows_for) and the chunk metadata (_chunk_meta)."""
+    meta_rows = _meta_rows_for(blob_df)
+    return _scan(blob_df, meta_rows, _predicate_specs(_dtypes(meta_rows), ranges, eqs), columns)
 
 
 def scan_stats(
@@ -1306,7 +1273,7 @@ def scan_stats(
     the scans use, in Arrow on the driver: no Spark job on a table from
     read_encoded.  Returns one row per predicate (column, kind,
     chunks_total, chunks_kept), kind "range" or "eq" (IS NULL included)."""
-    specs = _predicate_specs(blob_df, ranges, eqs)
+    specs = _predicate_specs(_dtypes(_meta_rows_for(blob_df)), ranges, eqs)
     meta = _chunk_meta(blob_df, [s[0] for s in specs])
     if meta is None:
         raise ValueError(f"scan_stats: over {_MANIFEST_DRIVER_ROWS} chunks to count")
@@ -1379,19 +1346,17 @@ def _row_chunks(row: pa.Table) -> tuple[list[dict], _Chunks]:
     return chunks, _Chunks(blobs)
 
 
-def _reencoded(row: pa.Table, chunks: list[dict], arrays: dict, codec: str, compression: str) -> pa.Table:
+def _reencoded(row: pa.Table, chunks: list[dict], arrays: dict) -> pa.Table:
     """The one row builder of every rewrite: the blob row ``row``, whose
     chunk fields are ``chunks`` (_row_chunks), with the chunk of each
     column in ``arrays`` replaced by the encode of its array at the
-    chunk's own dtype.  part_id, chunk_seq, column, col_idx and dtype
-    pass through, and the row keeps its own Arrow schema."""
+    chunk's own dtype, through the auto selector.  part_id, chunk_seq,
+    column, col_idx and dtype pass through, and the row keeps its own
+    Arrow schema."""
     chunks = [dict(ch) for ch in chunks]
     for ch in chunks:
         if ch["column"] in arrays:
-            fields, blob = _encode_chunk(
-                arrays[ch["column"]], ch["dtype"], codec=codec, compression=compression,
-                fsst_state={},
-            )
+            fields, blob = _encode_chunk(arrays[ch["column"]], ch["dtype"], fsst_state={})
             ch.update(fields)
             i = row.schema.get_field_index(_data_col(ch["col_idx"]))
             row = row.set_column(i, row.schema.field(i), pa.array([blob], pa.binary()))
@@ -1433,11 +1398,7 @@ def _rewrite_rows(blob_df: DataFrame, keep: set | None, rewrite, **kw) -> DataFr
 
 
 def delete_where(
-    blob_df: DataFrame,
-    ranges: dict[str, tuple] | None = None,
-    eqs: dict | None = None,
-    codec: str = "auto",
-    compression: str = "auto",
+    blob_df: DataFrame, ranges: dict[str, tuple] | None = None, eqs: dict | None = None
 ) -> DataFrame:
     """DELETE rows matching the predicate conjunction — merge-on-write
     DML over immutable chunks.
@@ -1451,16 +1412,15 @@ def delete_where(
     A group whose rows all match disappears entirely.  One narrow stage
     (_rewrite_rows), no shuffle.  At 100 TB a selective predicate
     rewrites the same ~fraction of chunks a scan would read, not the
-    table.  Predicates and literals validate as in scan_table_where
-    (ValueError before any job)."""
-    specs = _predicate_specs(blob_df, ranges, eqs)
-    return _rewrite_rows(
-        blob_df, _kept_groups(blob_df, specs), _delete_rewrite_row, specs=specs, codec=codec,
-        compression=compression,
-    )
+    table.  Re-encoded chunks go through the auto selector, as a
+    first-pass chunk does.  Predicates and literals validate as in
+    scan_table_where (ValueError before any job), from one
+    (column, col_idx, dtype) resolution however many predicates."""
+    specs = _predicate_specs(_dtypes(_meta_rows_for(blob_df)), ranges, eqs)
+    return _rewrite_rows(blob_df, _kept_groups(blob_df, specs), _delete_rewrite_row, specs=specs)
 
 
-def _delete_rewrite_row(row: pa.Table, *, specs, codec, compression) -> pa.Table:
+def _delete_rewrite_row(row: pa.Table, *, specs) -> pa.Table:
     """One blob row of delete_where.  Module-level so the decode-count
     contract is directly testable (see tests/test_delete.py
     TestTwoPhaseDecode): a zone-map/bloom false positive costs only the
@@ -1473,7 +1433,7 @@ def _delete_rewrite_row(row: pa.Table, *, specs, codec, compression) -> pa.Table
         return row.slice(0, 0)  # whole group deleted, all columns
     keep = pa.array(~match)
     arrays = {ch["column"]: decoded[ch["column"]].filter(keep) for ch in chunks}
-    return _reencoded(row, chunks, arrays, codec, compression)
+    return _reencoded(row, chunks, arrays)
 
 
 def update_where(
@@ -1481,8 +1441,6 @@ def update_where(
     assignments: dict,
     ranges: dict[str, tuple] | None = None,
     eqs: dict | None = None,
-    codec: str = "auto",
-    compression: str = "auto",
 ) -> DataFrame:
     """Merge-on-write UPDATE: ``SET col = literal`` (or NULL) on rows
     matching the predicate conjunction — the redaction/scrub shape a
@@ -1496,7 +1454,7 @@ def update_where(
     values validate as in scan_table_where (ValueError before any job)."""
     if not assignments:
         raise ValueError("update_where needs at least one assignment")
-    dtype_of = {r["column"]: r["dtype"] for r in _meta_rows_for(blob_df)}
+    dtype_of = _dtypes(_meta_rows_for(blob_df))
     missing = sorted((set(assignments) | set(ranges or {}) | set(eqs or {})) - set(dtype_of))
     if missing:
         raise ValueError(f"update_where: column(s) {missing} not in table")
@@ -1506,14 +1464,14 @@ def update_where(
         c: None if v is None else _typed_value(c, v, dtype_of[c])
         for c, v in assignments.items()
     }
-    specs = _predicate_specs(blob_df, ranges, eqs)
+    specs = _predicate_specs(dtype_of, ranges, eqs)
     return _rewrite_rows(
         blob_df, _kept_groups(blob_df, specs), _update_rewrite_row, specs=specs,
-        assignments=assignments, codec=codec, compression=compression,
+        assignments=assignments,
     )
 
 
-def _update_rewrite_row(row: pa.Table, *, specs, assignments, codec, compression) -> pa.Table:
+def _update_rewrite_row(row: pa.Table, *, specs, assignments) -> pa.Table:
     """One blob row of update_where: its SET chunks re-encode where a
     row matches.  A false positive decodes only the predicate columns
     and returns the row untouched."""
@@ -1526,15 +1484,11 @@ def _update_rewrite_row(row: pa.Table, *, specs, assignments, codec, compression
         c: pc.if_else(mask, pa.scalar(v, type=decoded[c].type), decoded[c])
         for c, v in assignments.items()
     }
-    return _reencoded(row, chunks, arrays, codec, compression)
+    return _reencoded(row, chunks, arrays)
 
 
 def compact_chunks(
-    blob_df: DataFrame,
-    min_rows: int = 1024,
-    target_rows: int = DEFAULT_CHUNK_ROWS,
-    codec: str = "auto",
-    compression: str = "auto",
+    blob_df: DataFrame, min_rows: int = 1024, target_rows: int = DEFAULT_CHUNK_ROWS
 ) -> DataFrame:
     """Selective runt-row-group compaction — the encoded-table analogue
     of a small-files OPTIMIZE pass.
@@ -1558,7 +1512,14 @@ def compact_chunks(
         surfaces see no difference from a first-pass chunk.
 
     Only the bucketed row groups are regrouped, by part_id, into one
-    Arrow stage (_compact_rewrite_group)."""
+    Arrow stage (_compact_rewrite_group).  ``min_rows`` over
+    ``target_rows``, or either under 1, raises ValueError before any
+    job runs."""
+    if not 1 <= min_rows <= target_rows:
+        raise ValueError(
+            f"compact_chunks: need 1 <= min_rows <= target_rows, got min_rows={min_rows}, "
+            f"target_rows={target_rows}"
+        )
     meta_rows = _meta_rows_for(blob_df)
     if not meta_rows:
         return blob_df
@@ -1580,7 +1541,7 @@ def compact_chunks(
     # type from the signature, and a functools.partial fails that (pyspark 4.1)
     def fn(group: pa.Table) -> pa.Table:
         drop_zip_finders()
-        out = _compact_rewrite_group(group, buckets=buckets, codec=codec, compression=compression)
+        out = _compact_rewrite_group(group, buckets=buckets)
         drop_zip_finders()
         return out
 
@@ -1625,7 +1586,7 @@ def _runt_buckets(meta: pa.Table, min_rows: int, target_rows: int) -> dict[int, 
     return out
 
 
-def _compact_rewrite_group(group: pa.Table, *, buckets, codec, compression) -> pa.Table:
+def _compact_rewrite_group(group: pa.Table, *, buckets) -> pa.Table:
     """One part_id's blob rows of compact_chunks: each of its
     ``buckets`` re-encodes as one row group under its first row group's
     identity; any other row passes through with its blob bytes
@@ -1642,7 +1603,7 @@ def _compact_rewrite_group(group: pa.Table, *, buckets, codec, compression) -> p
             ch["column"]: pa.concat_arrays([decoded[ch["column"]] for _, decoded in rows])
             for ch in chunks
         }
-        merged.append(_reencoded(group.slice(idx[0], 1), chunks, arrays, codec, compression))
+        merged.append(_reencoded(group.slice(idx[0], 1), chunks, arrays))
     # typed indices: take() of an empty untyped (null) array raises
     singles = group.take(pa.array(sorted(at.values()), pa.int64()))
     return pa.concat_tables([singles, *merged])
@@ -1713,7 +1674,14 @@ def roundtrip_column(
     )
     src_type = df.schema[column].dataType
     meta_rows = [{"column": column, "col_idx": 0, "dtype": logical_dtype(src_type)}]
-    return _decode_one(blobs, meta_rows, column, out_type=src_type)
+    # decoded as the source's own Spark type, not the chunk dtype's
+    layout = _row_group_layout(meta_rows, [column])
+    pa_types = dict(layout.pa_types)
+    if isinstance(src_type, T.TimestampType):
+        # tz-aware Spark timestamps travel as UTC-instant arrow timestamps
+        pa_types[column] = pa.timestamp("us", tz="UTC")
+    schema = T.StructType([T.StructField(column, src_type)])
+    return _decode_rows(blobs, layout._replace(pa_types=pa_types, schema=schema))
 
 
 # --------------------------------------------------------------------------

@@ -6,9 +6,13 @@ class or function).  Blank lines, comment-only lines and docstring lines
 are therefore left out; a string literal spanning several lines counts
 each of its lines.
 
+It also counts each file's knobs: the parameters with a default value
+of its public top-level functions (names not starting with '_'),
+keyword-only ones included.
+
 Usage: python scripts/code_lines.py [DIR]   (default: parquetjs_spark/)
-Prints ONE JSON line: {"dir": ..., "total": N, "files": {path: N, ...}}
-with paths relative to DIR, sorted.
+Prints ONE JSON line: {"dir": ..., "total": N, "files": {path: N, ...},
+"knobs": {path: N, ...}} with paths relative to DIR, sorted.
 """
 
 from __future__ import annotations
@@ -43,17 +47,29 @@ def code_lines(source: str) -> int:
     return len(lines - _docstring_lines(ast.parse(source)))
 
 
+def knobs(source: str) -> int:
+    """Defaulted parameters of the public top-level functions."""
+    n = 0
+    for node in ast.parse(source).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not node.name.startswith("_"):
+            n += len(node.args.defaults) + sum(d is not None for d in node.args.kw_defaults)
+    return n
+
+
 def main(argv: list[str]) -> int:
     root = argv[1] if len(argv) > 1 else "parquetjs_spark/"
-    files = {}
+    files, knob_counts = {}, {}
     for d, _, names in os.walk(root):
         for name in names:
             if name.endswith(".py"):
                 path = os.path.join(d, name)
                 with open(path, encoding="utf-8") as f:
-                    files[os.path.relpath(path, root)] = code_lines(f.read())
+                    source = f.read()
+                rel = os.path.relpath(path, root)
+                files[rel], knob_counts[rel] = code_lines(source), knobs(source)
     files = dict(sorted(files.items()))
-    print(json.dumps({"dir": root, "total": sum(files.values()), "files": files}))
+    knob_counts = dict(sorted(knob_counts.items()))
+    print(json.dumps({"dir": root, "total": sum(files.values()), "files": files, "knobs": knob_counts}))
     return 0
 
 

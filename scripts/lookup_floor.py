@@ -13,8 +13,9 @@ on distinct keys.  It reports medians per lookup of:
 * ``round_trips``: Py4J gateway calls (``send_command``) from
   ``scan_eq`` through ``collect``, and the share of them in each phase
   below (``round_trips_by_phase``);
-* ``prune_ms``: predicate resolution and the driver keep-set
-  (``_predicate_specs``, ``_kept_groups``);
+* ``prune_ms``: the call's one column resolution, the predicate specs
+  and the driver keep-set (``_meta_rows_for``, ``_predicate_specs``,
+  ``_kept_groups``);
 * ``read_ms``: reading the kept blob rows with pyarrow (``_read_kept_blobs``);
 * ``decode_ms``: row-group reassembly and the residual (``_assemble_row_group``);
 * ``create_df_ms``: the ``createDataFrame`` of the decoded rows;
@@ -65,7 +66,9 @@ WORKLOADS = {
     ),
 }
 PHASES = {
-    "prune": [(pipeline, "_predicate_specs"), (pipeline, "_kept_groups")],
+    "prune": [
+        (pipeline, "_meta_rows_for"), (pipeline, "_predicate_specs"), (pipeline, "_kept_groups")
+    ],
     "read": [(pipeline, "_read_kept_blobs")],
     "decode": [(pipeline, "_assemble_row_group")],
     "create_df": [(SparkSession, "createDataFrame")],

@@ -196,13 +196,13 @@ def test_encode_rejects_unknown_codec_and_compression(tmp_path, capsys):
         "--output", str(tmp_path / "o"), "--codec", "ZSTD1",
     ])
     assert rc == 2
-    assert "unknown --codec" in capsys.readouterr().err
+    assert "unknown codec" in capsys.readouterr().err
     rc = cli.main([
         "encode", "--input", str(tmp_path / "never-read"),
         "--output", str(tmp_path / "o"), "--compression", "ZST",
     ])
     assert rc == 2
-    assert "unknown --compression" in capsys.readouterr().err
+    assert "unknown compression" in capsys.readouterr().err
 
 
 def test_encode_rejects_type_incompatible_forced_codec(tmp_path, spark, capsys):
@@ -225,6 +225,23 @@ def test_encode_rejects_type_incompatible_forced_codec(tmp_path, spark, capsys):
         "--columns", "x", "--codec", "byte_stream_split",  # case-insensitive
     ])
     assert rc == 0
+
+
+def test_encode_rejects_forced_codec_on_nested_leaf(tmp_path, spark, capsys):
+    """A forced codec is checked against every leaf a nested column
+    shreds into: FSST on a struct<x: string> column exits 2 naming its
+    bool validity leaf, before any encode job."""
+    src = str(tmp_path / "nested.parquet")
+    spark.createDataFrame(
+        [(i, ("s%d" % i,)) for i in range(64)], "rid long, s struct<x: string>"
+    ).write.parquet(src)
+    rc = cli.main([
+        "encode", "--input", src, "--output", str(tmp_path / "o"),
+        "--columns", "s", "--codec", "fsst",
+    ])
+    assert rc == 2
+    err = capsys.readouterr().err
+    assert "s@def (bool)" in err and "s.x" not in err
 
 
 def test_eq_timestamp_z_suffix(encoded_events, tmp_path, capsys):

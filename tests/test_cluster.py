@@ -224,9 +224,7 @@ class TestZorderPruning:
         want = int(
             ((a >= rngs["a"][0]) & (a <= rngs["a"][1])).sum()
         )
-        got = pipeline.scan_column(
-            zo, "a", lo=rngs["a"][0], hi=rngs["a"][1], dtype="int64"
-        ).count()
+        got = pipeline.scan_column(zo, "a", lo=rngs["a"][0], hi=rngs["a"][1]).count()
         assert got == want
 
     def test_zorder_sort_roundtrip_content(self, spark):

@@ -368,10 +368,7 @@ class TestTwoPhaseDecode:
         assert group.num_rows == 1
         assert sorted(ch["column"] for ch in group["chunks"][0].as_py()) == ["k", "rid", "s"]
         counted = self._count_decodes(monkeypatch)
-        out = pipeline._delete_rewrite_row(
-            group, specs=self._false_positive_specs(), codec="auto",
-            compression="auto",
-        )
+        out = pipeline._delete_rewrite_row(group, specs=self._false_positive_specs())
         # untouched pass-through, after decoding ONLY the 2 pred chunks
         assert out is group
         assert counted["n"] == 2
@@ -382,9 +379,7 @@ class TestTwoPhaseDecode:
         group = self._group(spark)
         counted = self._count_decodes(monkeypatch)
         specs = [("rid", "eq", 5, T.LongType())]
-        out = pipeline._delete_rewrite_row(
-            group, specs=specs, codec="auto", compression="auto"
-        )
+        out = pipeline._delete_rewrite_row(group, specs=specs)
         assert counted["n"] == 3  # pred chunk + the 2 remaining columns
         assert sorted(ch["n"] for ch in out["chunks"][0].as_py()) == [1023, 1023, 1023]
 
@@ -392,8 +387,7 @@ class TestTwoPhaseDecode:
         group = self._group(spark)
         counted = self._count_decodes(monkeypatch)
         out = pipeline._update_rewrite_row(
-            group, specs=self._false_positive_specs(), assignments={"s": "x"},
-            codec="auto", compression="auto",
+            group, specs=self._false_positive_specs(), assignments={"s": "x"}
         )
         # the SET chunk comes back as it went in, never decoded
         assert counted["n"] == 2

@@ -188,8 +188,8 @@ def test_struct_leaf_decode_and_projection(spark):
         proj = pipeline.decode_table(blobs, ["s"])
         assert proj.columns == ["s"]
         assert proj.count() == 100
-        leaf = pipeline.decode_column(blobs, "s.a", out_name="a")
-        assert sorted(r["a"] for r in leaf.collect()) == [i * 2 for i in range(100)]
+        leaf = pipeline.decode_column(blobs, "s.a")
+        assert sorted(r["s.a"] for r in leaf.collect()) == [i * 2 for i in range(100)]
     finally:
         blobs.unpersist()
 
@@ -925,6 +925,78 @@ def _jobs_of(spark, group, fn):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_column_metadata_resolves_once_per_call(spark):
+    """Each scan and DML call resolves its table's (column, col_idx,
+    dtype) rows once and derives its predicate dtypes and its layout
+    from them: on a cached hand-built frame, three predicates run as
+    many Spark jobs as one, and a scan_eq runs the metadata probe, the
+    chunk-metadata read and the decode, three jobs, with no dtype given.
+    AQE is off, as in the benchmark session."""
+    df = spark.range(3000).select(
+        F.col("id").alias("a"),
+        (F.col("id") % 7).alias("b"),
+        (F.col("id") % 11).alias("c"),
+        F.col("id").cast("string").alias("d"),
+    )
+    blobs = pipeline.encode_columns(df.repartition(2), chunk_rows=512).cache()
+    one, three = {"a": 100}, {"a": 100, "b": 2, "c": 1}  # row 100 matches both
+    calls = {
+        "scan": lambda eqs: pipeline.scan_table_where(blobs, eqs=eqs, columns=["d"]).collect(),
+        "delete": lambda eqs: pipeline.delete_where(blobs, eqs=eqs).count(),
+        "stats": lambda eqs: pipeline.scan_stats(blobs, eqs=eqs).collect(),
+    }
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        blobs.count()
+        for name, call in calls.items():
+            got1, jobs1 = _jobs_of(spark, f"{name}_1", lambda: call(one))
+            got3, jobs3 = _jobs_of(spark, f"{name}_3", lambda: call(three))
+            assert len(jobs3) == len(jobs1), (name, jobs1, jobs3)
+            if name == "scan":
+                assert got1 == got3 and [r["d"] for r in got1] == ["100"]
+        rows, jobs = _jobs_of(spark, "scan_eq", lambda: pipeline.scan_eq(blobs, "a", 100).collect())
+        assert [r["a"] for r in rows] == [100]
+        assert len(jobs) == 3, jobs
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        blobs.unpersist()
+
+
+def test_bad_arguments_raise_before_any_job(spark):
+    """A forced codec or compression the engine cannot honour, and a
+    compact_chunks row-bound pair that cannot hold, raise one ValueError
+    on the driver with no Spark job.  A forced codec is checked against
+    every leaf encode_columns derives, a struct's validity leaf
+    included."""
+    df = spark.createDataFrame([(1, ("a",)), (2, None)], "id long, s struct<x: string>")
+    blobs = pipeline.encode_columns(df.select("id"))
+    bad = {
+        "leaf": (lambda: pipeline.encode_columns(df, codec="FSST"), ["id (int64)", "s@def (bool)"]),
+        "codec": (lambda: pipeline.encode_columns(df, codec="ZSTD"), ["unknown codec 'ZSTD'"]),
+        "compression": (
+            lambda: pipeline.encode_columns(df, compression="NOPE"),
+            ["unknown compression 'NOPE'"],
+        ),
+        "min_over_target": (
+            lambda: pipeline.compact_chunks(blobs, min_rows=600, target_rows=512),
+            ["min_rows <= target_rows"],
+        ),
+        "min_zero": (lambda: pipeline.compact_chunks(blobs, min_rows=0), ["1 <= min_rows"]),
+    }
+    msgs = {}
+    for name, (call, words) in bad.items():
+
+        def attempt():
+            with pytest.raises(ValueError) as err:
+                call()
+            return str(err.value)
+
+        msgs[name], jobs = _jobs_of(spark, f"bad_{name}", attempt)
+        assert jobs == [], name
+        assert all(w in msgs[name] for w in words), (name, msgs[name])
+    assert "s.x" not in msgs["leaf"]  # FSST encodes the string leaf
+
+
 def test_lookup_runs_no_job(tmp_path, spark, monkeypatch):
     """On a table from read_encoded, pruning is decided on the driver
     from the manifest: a scan_eq with columns whose kept row groups are
@@ -943,7 +1015,8 @@ def test_lookup_runs_no_job(tmp_path, spark, monkeypatch):
     assert want > 0
     # the cap counts the kept row groups' encoded bytes of the decoded
     # columns, not the table's
-    kept = pipeline._kept_groups(blobs, pipeline._predicate_specs(blobs, eqs={"l_partkey": 50}))
+    specs = pipeline._predicate_specs({"l_partkey": "int64"}, eqs={"l_partkey": 50})
+    kept = pipeline._kept_groups(blobs, specs)
     man = pq.read_table(f"{path}/manifest").to_pylist()
     assert len(kept) < len({(r["part_id"], r["chunk_seq"]) for r in man})
     kept_bytes = sum(
@@ -1179,7 +1252,7 @@ def test_driver_scan_matches_spark_scan(tmp_path, spark, monkeypatch, case):
             lambda: pipeline.scan_eq(blobs, "id", 77, columns=["li", "ast"]),
             lambda: pipeline.scan_table_where(blobs, ranges={"id": (100, 140)}),
             lambda: pipeline.scan_eq(blobs, "id", 77, columns=["st", "li"]),
-            lambda: pipeline.scan_column(blobs, "id", 10, 20, out_name="rid"),
+            lambda: pipeline.scan_column(blobs, "id", 10, 20),
         ],
     }[case]
     for i, scan in enumerate(scans):
@@ -1848,6 +1921,7 @@ def test_scan_randomized_consistency(tmp_path, spark, dtype, chunk_data):
         if c == "k"
     }
     meta = pipeline._chunk_meta(blobs, ["k"])
+    dtypes = pipeline._dtypes(pipeline._meta_rows_for(blobs))
     path = str(tmp_path / "t")
     pipeline.write_encoded(blobs, path)
     local = pipeline.read_encoded(spark, path)
@@ -1868,7 +1942,7 @@ def test_scan_randomized_consistency(tmp_path, spark, dtype, chunk_data):
         return len(want)
 
     def check(ranges, eqs, want, delete=False):
-        (spec,) = pipeline._predicate_specs(blobs, ranges, eqs)
+        (spec,) = pipeline._predicate_specs(dtypes, ranges, eqs)
         kept = pipeline._kept_chunks(meta, spec)
         kept = set(zip(kept["part_id"].to_pylist(), kept["chunk_seq"].to_pylist()))
         holding = {g for g, arr in k_chunks.items() if _brute_count(arr, ranges, eqs)}
