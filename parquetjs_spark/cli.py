@@ -135,7 +135,7 @@ def cmd_decode(args) -> int:
 
     spark = _spark(args)
     blobs = pipeline.read_encoded(spark, args.input)
-    _manifest_dtypes(spark, pipeline, args.input)(args.column)  # existence check
+    _dtypes_of(pipeline, blobs)(args.column)  # existence check
     out = pipeline.decode_column(blobs, args.column)
     out.write.mode("overwrite").parquet(args.output)
     print(json.dumps({"rows": spark.read.parquet(args.output).count()}))
@@ -162,7 +162,7 @@ def cmd_scan(args) -> int:
     blobs = pipeline.read_encoded(spark, args.input)
     # dtype and literals resolve exactly as in `where`: a bad literal
     # exits 2 before any scan job runs
-    dtype = _manifest_dtypes(spark, pipeline, args.input)(args.column)
+    dtype = _dtypes_of(pipeline, blobs)(args.column)
     if args.eq is not None:
         val = _typed_literal(dtype, args.eq)
         out = pipeline.scan_eq(blobs, args.column, val)
@@ -263,13 +263,10 @@ def _parse_predicates(args, dtype_of):
     return ranges, eqs
 
 
-def _manifest_dtypes(spark, pipeline, path):
-    # the pipeline's manifest cache: no Spark job for a local table, and
-    # the scan that follows reads the same cached manifest
-    meta = pipeline._manifest_meta(spark, path)
-    if meta is None:
-        raise ValueError(f"no table manifest at {path}/manifest")
-    dtypes = {c: dt for c, (_, dt) in meta.columns.items()}
+def _dtypes_of(pipeline, blobs):
+    # the blob frame's column map (pipeline._meta_rows_for): no Spark
+    # job, and the call that follows resolves the same rows
+    dtypes = pipeline._dtypes(pipeline._meta_rows_for(blobs))
 
     def dtype_of(col: str) -> str:
         if col not in dtypes:
@@ -305,7 +302,7 @@ def cmd_where(args) -> int:
 
     spark = _spark(args)
     blobs = pipeline.read_encoded(spark, args.input)
-    dtype_of = _manifest_dtypes(spark, pipeline, args.input)
+    dtype_of = _dtypes_of(pipeline, blobs)
     ranges, eqs = _parse_predicates(args, dtype_of)
     cols = args.columns.split(",") if args.columns else None
     out = pipeline.scan_table_where(blobs, ranges=ranges, eqs=eqs, columns=cols)
@@ -356,14 +353,10 @@ def cmd_append(args) -> int:
         return 2
     spark = _spark(args)
     blobs = pipeline.read_encoded(spark, args.input)
-    columns = pipeline._manifest_meta(spark, args.input).columns
     # top-level column order of the existing table (nested leaves and
     # @def chunks fold back to their top-level name)
-    order = []
-    for name in sorted(columns, key=lambda c: columns[c][0]):
-        top = name.split(".", 1)[0].split("@", 1)[0]
-        if top not in order:
-            order.append(top)
+    leaves = pipeline._meta_rows_for(blobs)
+    order = list(dict.fromkeys(pipeline._top_name(r["column"]) for r in leaves))
     try:
         src = load_source_table(spark, args.source)
     except RuntimeError as e:
@@ -395,7 +388,7 @@ def cmd_delete(args) -> int:
         return 2
     spark = _spark(args)
     blobs = pipeline.read_encoded(spark, args.input)
-    dtype_of = _manifest_dtypes(spark, pipeline, args.input)
+    dtype_of = _dtypes_of(pipeline, blobs)
     ranges, eqs = _parse_predicates(args, dtype_of)
     if not ranges and not eqs:
         print("error: delete needs at least one --range/--eq/--is-null",
@@ -428,7 +421,7 @@ def cmd_update(args) -> int:
         return 2
     spark = _spark(args)
     blobs = pipeline.read_encoded(spark, args.input)
-    dtype_of = _manifest_dtypes(spark, pipeline, args.input)
+    dtype_of = _dtypes_of(pipeline, blobs)
     ranges, eqs = _parse_predicates(args, dtype_of)
     if not ranges and not eqs:
         print("error: update needs at least one --range/--eq/--is-null",
@@ -460,7 +453,7 @@ def cmd_stats(args) -> int:
 
     spark = _spark(args)
     blobs = pipeline.read_encoded(spark, args.input)
-    dtype_of = _manifest_dtypes(spark, pipeline, args.input)
+    dtype_of = _dtypes_of(pipeline, blobs)
     ranges, eqs = _parse_predicates(args, dtype_of)
     if not ranges and not eqs:
         print("error: stats needs at least one --range/--eq/--is-null",

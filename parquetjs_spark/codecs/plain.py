@@ -6,8 +6,7 @@ Byte-format parity (verified by golden tests pinned from
   BOOLEAN               1 bit/value LSB-first within byte        (plain.js:5-28)
   INT32 / INT64         little-endian fixed-width arrays         (plain.js:30-68)
   FLOAT / DOUBLE        IEEE-754 little-endian arrays            (plain.js:105-143)
-  BYTE_ARRAY            4-byte LE length prefix per value        (plain.js:145-175)
-  FIXED_LEN_BYTE_ARRAY  raw concatenation, strict typeLength     (plain.js:179-209)
+  BYTE_ARRAY            4-byte LE length prefix per value        (plain.js:145-162)
 
 Deliberate deviations (documented per SURVEY.md §7.3):
   * INT64 is true 64-bit (the reference is 53-bit-limited via int53,
@@ -82,41 +81,6 @@ def encode_byte_array(values: list[bytes]) -> bytes:
     mask[idx.reshape(-1)] = False
     out[mask] = pay
     return out.tobytes()
-
-
-def decode_byte_array(buf: bytes | memoryview, count: int) -> list[bytes]:
-    """Inverse of encode_byte_array (plain.js:164-175), offset walk vectorized
-    by cumulative-sum fixpoint: offsets depend on lengths which we can only
-    read after knowing offsets — resolved with a short Python loop over
-    *values* would be O(n); instead we do the standard two-phase scan:
-    read the length at each position as we discover it.  Lengths are
-    variable so a data-dependent scan is unavoidable; we keep it cheap by
-    slicing a memoryview (no copies).
-    """
-    b = bytes(buf) if not isinstance(buf, bytes) else buf
-    out: list[bytes] = []
-    pos = 0
-    ifb = int.from_bytes
-    for _ in range(count):  # data-dependent offsets: inherently sequential
-        ln = ifb(b[pos : pos + 4], "little")
-        pos += 4
-        out.append(b[pos : pos + ln])
-        pos += ln
-    return out
-
-
-def encode_fixed_len_byte_array(values: list[bytes], type_length: int) -> bytes:
-    for v in values:
-        if len(v) != type_length:
-            raise ValueError(f"invalid value for FIXED_LEN_BYTE_ARRAY: {v!r}")
-    return b"".join(values)
-
-
-def decode_fixed_len_byte_array(
-    buf: bytes | memoryview, count: int, type_length: int
-) -> list[bytes]:
-    b = bytes(buf[: count * type_length])
-    return [b[i * type_length : (i + 1) * type_length] for i in range(count)]
 
 
 def encode_int96(vals: "np.ndarray") -> bytes:

@@ -13,8 +13,10 @@ dictionary page inside DICT_RLE chunks) use a split layout instead:
 Decode is then two vectorized steps (unpack lengths, cumsum offsets) —
 no per-value work — and the lengths pack to ~1 byte/value for typical
 strings vs the reference's fixed 4.  ``plain.encode_byte_array`` (the
-reference-parity interleaved format) remains the canonical sha-256
-definition and the size-model comparator; this module is the wire.
+reference-parity interleaved format) remains the size-model comparator;
+this module is the wire.  The canonical sha-256 feed of a string chunk
+is neither: it is payload ++ ``|`` ++ int64-LE lengths
+(``arrow_chunk._sha_update_values``).
 """
 
 from __future__ import annotations

@@ -409,22 +409,58 @@ def _data_col(col_idx: int) -> str:
     return f"c{col_idx}"
 
 
-def blob_schema(col_idxs: Iterable[int]) -> T.StructType:
-    """The blob table of the leaves ``col_idxs``: one row per row group,
-    (part_id, chunk_seq), its column chunks' manifest fields in col_idx
-    order (``chunks``), and one binary column of blob bytes per leaf."""
+def blob_schema(leaves: Iterable[dict]) -> T.StructType:
+    """The blob table of ``leaves``, (column, col_idx, dtype) rows: one
+    row per row group, (part_id, chunk_seq), its column chunks' manifest
+    fields in col_idx order (``chunks``), and one binary column of blob
+    bytes per leaf, ``c<col_idx>``.  Each blob column's field metadata
+    is its leaf's {column, dtype}: the schema carries the table's column
+    map, as a Parquet footer carries the file's schema (parquetjs
+    lib/writer.js:520-569), and _meta_rows_for reads it back."""
     return T.StructType(
         _GROUP_FIELDS
         + [T.StructField("chunks", T.ArrayType(T.StructType(_CHUNK_FIELDS)))]
-        + [T.StructField(_data_col(i), T.BinaryType()) for i in sorted(col_idxs)]
+        + [
+            T.StructField(
+                _data_col(r["col_idx"]), T.BinaryType(),
+                metadata={"column": r["column"], "dtype": r["dtype"]},
+            )
+            for r in sorted(leaves, key=lambda r: r["col_idx"])
+        ]
     )
 
 
-def _data_cols(schema: T.StructType) -> list[str]:
-    """The blob columns of a blob table, in col_idx order: the order of
-    every row's ``chunks``."""
-    names = [f.name for f in schema.fields if f.name not in ("part_id", "chunk_seq", "chunks")]
-    return sorted(names, key=lambda c: int(c[1:]))
+def _with_map(blob_df: DataFrame, leaves: list[dict]) -> DataFrame:
+    """``blob_df`` with the column map of ``leaves`` on its blob columns,
+    as blob_schema puts it: one projection, whose aliases a Parquet
+    write keeps (``DataFrame.to`` shows the map but the write drops it)."""
+    meta = {_data_col(r["col_idx"]): {"column": r["column"], "dtype": r["dtype"]} for r in leaves}
+    return blob_df.select(
+        *[F.col(c).alias(c, metadata=meta[c]) if c in meta else F.col(c) for c in blob_df.columns]
+    )
+
+
+def _meta_rows_for(blob_df: DataFrame) -> list[dict]:
+    """(column, col_idx, dtype) rows of the blob frame, in col_idx
+    order: the column map blob_schema puts on its blob columns, read off
+    the frame's schema (which PySpark caches per DataFrame), so no call
+    runs a job to find its columns, an empty frame included.  Each
+    public call resolves them once and derives its predicate dtypes
+    (_dtypes) and layout from the same rows.  A blob column without the
+    map (a blob directory read with a schema of its own) raises
+    ValueError."""
+    rows = []
+    for f in blob_df.schema.fields:
+        if f.name in ("part_id", "chunk_seq", "chunks"):
+            continue
+        if "column" not in f.metadata or "dtype" not in f.metadata:
+            raise ValueError(
+                f"blob column {f.name} carries no column map in its schema: open the "
+                "table with read_encoded(spark, path)"
+            )
+        md = f.metadata
+        rows.append({"column": md["column"], "col_idx": int(f.name[1:]), "dtype": md["dtype"]})
+    return sorted(rows, key=lambda r: r["col_idx"])
 
 
 # canonical-sha definition version: bumped to 2 in round 3 when the
@@ -566,8 +602,8 @@ def encode_columns(
     """
     df, types, leaves = _encode_plan(df, columns or df.columns)
     _check_forced(codec, compression, leaves)
-    idxs = range(len(leaves))
-    schema = to_arrow_schema(blob_schema(idxs))
+    out = blob_schema({"column": n, "col_idx": i, "dtype": dt} for i, (n, dt) in enumerate(leaves))
+    schema = to_arrow_schema(out)
 
     @drops_zip_finders
     def encode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -586,7 +622,7 @@ def encode_columns(
                 row[_data_col(ci)] = [blob]
             yield pa.RecordBatch.from_pydict(row, schema=schema)
 
-    return df.mapInArrow(encode_fn, schema=blob_schema(idxs))
+    return df.mapInArrow(encode_fn, schema=out)
 
 
 # --------------------------------------------------------------------------
@@ -619,10 +655,10 @@ def _row_group_layout(
     """The layout of ``columns`` (default: every column), each emitted
     with its source Spark type, nested columns whole.  The ``residual``
     chunks (a scan's predicate columns) are read and decoded too, but
-    emitted only where an output column holds them."""
+    emitted only where an output column holds them.  ``meta_rows`` are
+    _meta_rows_for's, in col_idx order."""
     if not meta_rows:
         raise ValueError("blob table has no chunks")
-    meta_rows = sorted(meta_rows, key=lambda r: r["col_idx"])
     # rebuild the nested shape from flat chunk names ("s.a", "s@def" —
     # reference nested groups, lib/schema.js:102-120)
     tree = dict(_unflatten_tree([(r["column"], r["dtype"]) for r in meta_rows]))
@@ -751,10 +787,7 @@ def _rebuild(decoded_df: DataFrame, layout: _Layout) -> DataFrame:
 
 
 def decode_table(
-    blob_df: DataFrame,
-    columns: list[str] | None = None,
-    meta_rows: list | None = None,
-    ordered: bool = False,
+    blob_df: DataFrame, columns: list[str] | None = None, ordered: bool = False
 ) -> DataFrame:
     """Reassemble the original multi-column DataFrame from the blob table —
     the cursor/materializeRecords analogue
@@ -773,11 +806,11 @@ def decode_table(
     the blob files decodes correctly.  Column pruning: pass ``columns``
     to decode a projection — Parquet reads only the blob columns
     (``c<col_idx>``) of their chunks, the analogue of the reference's
-    getCursor(columnList) (parquetjs lib/reader.js:132-144).
+    getCursor(columnList) (parquetjs lib/reader.js:132-144).  The
+    columns come from the frame's schema (_meta_rows_for), so planning
+    runs no job and an empty frame decodes to an empty, typed one.
     """
-    if meta_rows is None:
-        meta_rows = _meta_rows_for(blob_df)
-    layout = _row_group_layout(meta_rows, columns, ordered)
+    layout = _row_group_layout(_meta_rows_for(blob_df), columns, ordered)
     return _rebuild(_decode_rows(blob_df, layout), layout)
 
 
@@ -814,9 +847,10 @@ _CHUNK_META = [
 
 class _Manifest(NamedTuple):
     """A table's manifest as the driver holds it: {column: (col_idx,
-    dtype)}, the chunk metadata table (None when Spark read the
-    manifest), and the table's local directory, which the driver reads
-    blob files from (None unless ``chunks`` is set)."""
+    dtype)}, which read_encoded's blob_schema is built from, the chunk
+    metadata table (None when Spark read the manifest), and the table's
+    local directory, which the driver reads blob files from (None unless
+    ``chunks`` is set)."""
 
     columns: dict
     chunks: pa.Table | None
@@ -825,9 +859,8 @@ class _Manifest(NamedTuple):
 
 # per-table manifest, read once onto the driver with pyarrow — the
 # footer analogue (parquetjs lib/reader.js:264-282 readFooter): path ->
-# _Manifest.  Tables from read_encoded resolve dtypes and prune row
-# groups from it with ZERO Spark jobs; read_encoded and write_encoded
-# evict.
+# _Manifest.  Tables from read_encoded prune row groups from it with
+# ZERO Spark jobs; read_encoded and write_encoded evict.
 _MANIFEST_CACHE: dict[str, _Manifest | None] = {}
 
 
@@ -1024,25 +1057,6 @@ def _kept_chunks(meta: pa.Table, spec: tuple) -> pa.Table:
     return rows.filter(pa.array(keep))
 
 
-def _meta_rows_for(blob_df: DataFrame) -> list:
-    """(column, col_idx, dtype) rows of the table, resolved from the
-    manifest cache when available, else from the ``chunks`` of one blob
-    row of the UNPRUNED table (every row group holds every column), a
-    limit-1 job.  Each public call resolves them once and derives its
-    predicate dtypes (_dtypes) and layout from the same rows, so an
-    empty pruned result still decodes to an empty, correctly-typed
-    DataFrame instead of 'blob table has no chunks'."""
-    cached = _cached_meta(blob_df)
-    if cached is not None:
-        return [
-            {"column": c, "col_idx": ci, "dtype": dt}
-            for c, (ci, dt) in cached.columns.items()
-        ]
-    keys = ("column", "col_idx", "dtype")
-    first = blob_df.select(*[F.col(f"chunks.{k}").alias(k) for k in keys]).limit(1).collect()
-    return [dict(zip(keys, r)) for r in zip(*first[0])] if first else []
-
-
 # at most this many kept row groups become the literal keep-set filter;
 # above it (an unselective predicate over a huge table) scans and DML
 # apply no row-group filter, which stays exact (the residual and the
@@ -1092,22 +1106,31 @@ def _keepset_filter(keep: set[tuple[int, int]] | None) -> Column:
     return F.expr(f"part_id IN ({parts}) AND (part_id, chunk_seq) IN ({pairs})")
 
 
-def _read_kept_blobs(local: str, keep: set, sources: list[str]) -> pa.Table:
-    """The blob rows of the ``keep`` row groups of the table in the local
-    directory ``local``, with only the blob columns ``sources``, read on
-    the driver — the readRowGroup analogue (parquetjs
-    lib/reader.js:217-235)."""
+def _read_kept_blobs(path: str, local: str, keep: set, sources: list[str]) -> pa.Table:
+    """The blob rows of the ``keep`` row groups of the table at ``path``
+    (in the local directory ``local``), with only the blob columns
+    ``sources``, read on the driver — the readRowGroup analogue
+    (parquetjs lib/reader.js:217-235).  Blob files that cannot be read,
+    and a kept row group that no blob file holds (a file removed since
+    read_encoded), raise one ValueError naming the table."""
     import pyarrow.dataset as pads
 
-    ds = pads.dataset(f"{local}/blobs", format="parquet")
     parts = sorted({p for p, _ in keep})
     seqs = sorted({c for _, c in keep})
-    rows = ds.to_table(
-        columns=["part_id", "chunk_seq", *sources],
-        filter=pc.field("part_id").isin(parts) & pc.field("chunk_seq").isin(seqs),
-    )
-    exact = [g in keep for g in zip(rows["part_id"].to_pylist(), rows["chunk_seq"].to_pylist())]
-    return rows.filter(pa.array(exact, pa.bool_())).sort_by(
+    try:
+        rows = pads.dataset(f"{local}/blobs", format="parquet").to_table(
+            columns=["part_id", "chunk_seq", *sources],
+            filter=pc.field("part_id").isin(parts) & pc.field("chunk_seq").isin(seqs),
+        )
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(f"unreadable table blobs {path}/blobs ({type(e).__name__})") from e
+    ids = list(zip(rows["part_id"].to_pylist(), rows["chunk_seq"].to_pylist()))
+    if missing := sorted(keep - set(ids)):
+        raise ValueError(
+            f"table blobs {path}/blobs lack {len(missing)} row groups its manifest lists, "
+            f"(part_id, chunk_seq) {missing[:8]}"
+        )
+    return rows.filter(pa.array([g in keep for g in ids], pa.bool_())).sort_by(
         [("part_id", "ascending"), ("chunk_seq", "ascending")]
     )
 
@@ -1119,8 +1142,9 @@ def _scan_local(
     read, reassembled and filtered on the driver, as ``layout.schema``
     rows; None (scan in Spark) without a manifest read on the driver
     (so only a local table takes this path) or above _LOCAL_SCAN_BYTES
-    kept encoded bytes.  Blob files that cannot be read raise one
-    ValueError naming the table; a decode error propagates."""
+    kept encoded bytes.  Blob files that cannot be read, or that lack a
+    kept row group, raise one ValueError naming the table
+    (_read_kept_blobs); a decode error propagates."""
     cached = _cached_meta(blob_df)
     if keep is None or cached is None or cached.chunks is None:
         return None
@@ -1136,11 +1160,8 @@ def _scan_local(
         return None
     tables = []
     if keep:
-        try:
-            rows = _read_kept_blobs(cached.local, keep, sorted(set(layout.sources.values())))
-        except (OSError, pa.ArrowException) as e:
-            path = blob_df._pjs_meta_path
-            raise ValueError(f"unreadable table blobs {path}/blobs ({type(e).__name__})") from e
+        srcs = sorted(set(layout.sources.values()))
+        rows = _read_kept_blobs(blob_df._pjs_meta_path, cached.local, keep, srcs)
         for blobs, group_id in _row_groups(rows, layout):
             t = _assemble_row_group(blobs, group_id, layout, specs)
             if t is not None and t.num_rows:
@@ -1189,8 +1210,7 @@ def scan_column(blob_df: DataFrame, column: str, lo=None, hi=None) -> DataFrame:
     read_encoded table decodes on the driver with no Spark job.  It is
     exactly ``scan_table_where(ranges={column: (lo, hi)},
     columns=[column])``, so a blob DataFrame not from read_encoded pays
-    the same metadata jobs up front: cache the frame, or write it
-    first."""
+    the same chunk-metadata job up front."""
     return scan_table_where(blob_df, ranges={column: (lo, hi)}, columns=[column])
 
 
@@ -1218,8 +1238,7 @@ def scan_eq(blob_df: DataFrame, column: str, value, columns: list[str] | None = 
     lookup is one createDataFrame of the output columns.  Chunks
     without a bloom (old tables, unbloomable dtypes) stay
     conservatively unpruned.  A blob DataFrame not from read_encoded
-    pays the same metadata jobs up front as scan_table_where: cache the
-    frame, or write it first."""
+    pays the same chunk-metadata job up front as scan_table_where."""
     out = [column] if columns is None else columns
     return scan_table_where(blob_df, eqs={column: value}, columns=out)
 
@@ -1253,9 +1272,10 @@ def scan_table_where(
     itself and the result is a local relation: no Spark job.  Otherwise
     (and for a transformed or hand-built blob DataFrame) the kept groups
     reach the blob scan as a literal filter and decode in one Spark
-    job.  A blob DataFrame not from read_encoded pays two metadata jobs
-    up front, however many predicates: the one (column, col_idx, dtype)
-    resolution (_meta_rows_for) and the chunk metadata (_chunk_meta)."""
+    job.  Columns and dtypes come from the frame's schema
+    (_meta_rows_for, no job); a blob DataFrame not from read_encoded
+    pays one metadata job up front, however many predicates: the chunk
+    metadata (_chunk_meta)."""
     meta_rows = _meta_rows_for(blob_df)
     return _scan(blob_df, meta_rows, _predicate_specs(_dtypes(meta_rows), ranges, eqs), columns)
 
@@ -1623,15 +1643,11 @@ def verify_blobs(blob_df: DataFrame) -> DataFrame:
     """Decode every chunk and re-hash — distributed bit-identity check
     (BASELINE.json:15), one narrow stage over whole row groups.  Returns
     one row per chunk with ok flag.  It reads each chunk's sha256 and
-    blob bytes; chunk names come from the manifest cache of a table
-    from read_encoded, else from the blob rows."""
-    srcs = _data_cols(blob_df.schema)
-    cached = _cached_meta(blob_df)
-    names = None
-    if cached is not None:
-        by_idx = {ci: c for c, (ci, _) in cached.columns.items()}
-        names = [by_idx[int(s[1:])] for s in srcs]
-    exprs = ["chunks.sha256 AS __sha"] + (["chunks.column AS __names"] if names is None else [])
+    blob bytes; chunk names come from the frame's schema
+    (_meta_rows_for)."""
+    leaves = _meta_rows_for(blob_df)
+    srcs = [_data_col(r["col_idx"]) for r in leaves]
+    names = [r["column"] for r in leaves]
 
     @drops_zip_finders
     def verify_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -1641,22 +1657,17 @@ def verify_blobs(blob_df: DataFrame) -> DataFrame:
             shas = rb.column("__sha").flatten().to_pylist()
             oks = [arrow_chunk.verify_arrow(b, s) for b, s in zip(blobs, shas)]
             parents = pa.array(np.repeat(np.arange(rb.num_rows), len(srcs)))
-            column = (
-                rb.column("__names").flatten()
-                if names is None
-                else pa.array(names * rb.num_rows, pa.string())
-            )
             yield pa.RecordBatch.from_arrays(
                 [
                     rb.column("part_id").take(parents),
                     rb.column("chunk_seq").take(parents),
-                    column,
+                    pa.array(names * rb.num_rows, pa.string()),
                     pa.array(oks, type=pa.bool_()),
                 ],
                 names=VERIFY_SCHEMA.names,
             )
 
-    return _packed(blob_df, srcs, *exprs).mapInArrow(verify_fn, schema=VERIFY_SCHEMA)
+    return _packed(blob_df, srcs, "chunks.sha256 AS __sha").mapInArrow(verify_fn, schema=VERIFY_SCHEMA)
 
 
 def roundtrip_column(
@@ -1673,9 +1684,8 @@ def roundtrip_column(
         compression=compression,
     )
     src_type = df.schema[column].dataType
-    meta_rows = [{"column": column, "col_idx": 0, "dtype": logical_dtype(src_type)}]
     # decoded as the source's own Spark type, not the chunk dtype's
-    layout = _row_group_layout(meta_rows, [column])
+    layout = _row_group_layout(_meta_rows_for(blobs), [column])
     pa_types = dict(layout.pa_types)
     if isinstance(src_type, T.TimestampType):
         # tz-aware Spark timestamps travel as UTC-instant arrow timestamps
@@ -1959,9 +1969,9 @@ def read_encoded(spark: SparkSession, path: str) -> DataFrame:
             f"table {path} has the per-chunk blob layout: rewrite it with "
             f"convert_encoded(spark, {path!r}, <new path>)"
         )
-    # remember the manifest sibling: scan/decode resolve dtypes and
-    # prune from it with zero jobs on the blob table (_manifest_meta),
-    # as it is on disk now
+    # remember the manifest sibling: scans prune from it with zero jobs
+    # on the blob table (_manifest_meta), as it is on disk now, and the
+    # schema carries its column map (blob_schema)
     _MANIFEST_CACHE.pop(path, None)
     meta = _manifest_meta(spark, path)
     if meta is None:
@@ -1974,8 +1984,8 @@ def read_encoded(spark: SparkSession, path: str) -> DataFrame:
     else:
         if meta.chunks is not None:
             _check_blob_files(path, meta)
-        idxs = [ci for ci, _ in meta.columns.values()]
-        df = spark.read.schema(blob_schema(idxs)).parquet(f"{path}/blobs")
+        leaves = ({"column": c, "col_idx": ci, "dtype": dt} for c, (ci, dt) in meta.columns.items())
+        df = spark.read.schema(blob_schema(leaves)).parquet(f"{path}/blobs")
     df._pjs_meta_path = path
     return df
 
@@ -2021,9 +2031,12 @@ def convert_encoded(spark: SparkSession, path: str, out_path: str) -> None:
         raise ValueError("convert_encoded: out_path must differ from path")
     kv = _read_kv(spark, path)
     old = spark.read.schema(_PER_CHUNK_SCHEMA).parquet(f"{path}/blobs")
-    cols = old.select("column", "col_idx").distinct().collect()
-    names = sorted(r["column"] for r in cols)
-    idx_of = {r["column"]: names.index(r["column"]) if r["col_idx"] is None else r["col_idx"] for r in cols}
+    leaves = [r.asDict() for r in old.select("column", "col_idx", "dtype").distinct().collect()]
+    names = sorted(r["column"] for r in leaves)
+    for r in leaves:
+        if r["col_idx"] is None:
+            r["col_idx"] = names.index(r["column"])
+    idx_of = {r["column"]: r["col_idx"] for r in leaves}
     rank = F.create_map(*[F.lit(x) for c, i in idx_of.items() for x in (c, i)])
     old = old.withColumn("col_idx", rank[F.col("column")]) if idx_of else old
     chunk = F.struct(*[F.col(f.name) for f in _CHUNK_FIELDS])
@@ -2036,7 +2049,7 @@ def convert_encoded(spark: SparkSession, path: str, out_path: str) -> None:
         ],
     )
     metadata = {**kv, _SHA_FORMAT_KEY: kv.get(_SHA_FORMAT_KEY, "1")}
-    write_encoded(rows.select(*blob_schema(idx_of.values()).names), out_path, metadata=metadata)
+    write_encoded(_with_map(rows, leaves), out_path, metadata=metadata)
 
 
 def union_encoded(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -2045,8 +2058,10 @@ def union_encoded(a: DataFrame, b: DataFrame) -> DataFrame:
     groups stay disjoint and decode_table sees one consistent table.
     Column sets and dtypes must match exactly — a blob table with
     half-present columns would decode ragged rows.  Metadata-only:
-    no blob bytes move or re-encode, and tables from read_encoded plan
-    from their manifests with no Spark job."""
+    no blob bytes move or re-encode.  The column maps compare from the
+    two schemas (_meta_rows_for), so planning runs no job over ``b``;
+    a's maximum part_id comes from its manifest when ``a`` is from
+    read_encoded, else from one job over ``a``."""
     # (column, col_idx, dtype): col_idx alignment is part of the check
     # (ADVICE r6 low) — two tables encoded with different column orders
     # would otherwise union into conflicting col_idx per column, making
@@ -2113,27 +2128,25 @@ def rename_column(blob_df: DataFrame, old: str, new: str) -> DataFrame:
     on the manifest rows; blob bytes (and their shas) are untouched.
     Renames TOP-LEVEL columns; a struct column renames with its whole
     subtree ('meta' -> 'info' carries 'meta.origin' -> 'info.origin'
-    and 'meta@def' -> 'info@def')."""
+    and 'meta@def' -> 'info@def').  The rows' ``chunks`` and the blob
+    columns' column map (blob_schema) rename together."""
     _check_plain_name("rename_column", old)
     _check_plain_name("rename_column", new)
-    tops = {_top_name(r["column"]) for r in _meta_rows_for(blob_df)}
+    leaves = _meta_rows_for(blob_df)
+    tops = {_top_name(r["column"]) for r in leaves}
     if old not in tops:
         raise ValueError(f"rename_column: {old!r} not in table")
     if new in tops:
         raise ValueError(f"rename_column: {new!r} already exists")
+    for r in leaves:
+        if _top_name(r["column"]) == old:
+            r["column"] = new + r["column"][len(old) :]
+    names = F.create_map(*[F.lit(x) for r in leaves for x in (r["col_idx"], r["column"])])
 
     def renamed(ch):
-        name = ch["column"]
-        inside = name.startswith(old + ".") | name.startswith(old + "@")
-        suffix = name.substr(F.lit(len(old) + 1), F.length(name))
-        return ch.withField(
-            "column",
-            F.when(name == old, F.lit(new))
-            .when(inside, F.concat(F.lit(new), suffix))
-            .otherwise(name),
-        )
+        return ch.withField("column", names[ch["col_idx"]])
 
-    return blob_df.withColumn("chunks", F.transform("chunks", renamed))
+    return _with_map(blob_df.withColumn("chunks", F.transform("chunks", renamed)), leaves)
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:

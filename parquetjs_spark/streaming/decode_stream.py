@@ -28,15 +28,14 @@ def decode_stream(
 ) -> StreamingQuery:
     """Start a streaming decode of one column from ``encoded_path``/blobs.
 
-    The stream's schema and the column's metadata come from the table
-    as it is when the stream starts (``pipeline.read_encoded``), since
-    a stream cannot probe."""
+    The stream's schema comes from the table as it is when the stream
+    starts (``pipeline.read_encoded``), and with it the column map that
+    each micro-batch decodes by (``pipeline.blob_schema``)."""
     table = pipeline.read_encoded(spark, encoded_path)
-    meta_rows = pipeline._meta_rows_for(table)
     stream = spark.readStream.schema(table.schema).parquet(f"{encoded_path}/blobs")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = pipeline.decode_table(batch_df, [column], meta_rows=meta_rows)
+        out = pipeline.decode_table(batch_df, [column])
         out.write.mode("append").parquet(output_path)
 
     writer = (

@@ -45,15 +45,6 @@ def test_byte_array_golden():
     buf = plain.encode_byte_array(vals)
     expect = b"".join(len(v).to_bytes(4, "little") + v for v in vals)
     assert buf == expect
-    assert plain.decode_byte_array(buf, len(vals)) == vals
-
-
-def test_fixed_len_byte_array():
-    vals = [b"FNORD", b"ABCDE"]
-    buf = plain.encode_fixed_len_byte_array(vals, 5)
-    assert buf == b"FNORDABCDE"
-    out = plain.decode_fixed_len_byte_array(buf, 2, 5)
-    assert out == vals
 
 
 def test_boolean_non_multiple_of_8():

@@ -927,11 +927,15 @@ def _jobs_of(spark, group, fn):
 
 def test_column_metadata_resolves_once_per_call(spark):
     """Each scan and DML call resolves its table's (column, col_idx,
-    dtype) rows once and derives its predicate dtypes and its layout
-    from them: on a cached hand-built frame, three predicates run as
-    many Spark jobs as one, and a scan_eq runs the metadata probe, the
-    chunk-metadata read and the decode, three jobs, with no dtype given.
-    AQE is off, as in the benchmark session."""
+    dtype) rows once, from the frame's schema, and derives its predicate
+    dtypes and its layout from them: on a cached hand-built frame, three
+    predicates run as many Spark jobs as one, the resolution itself runs
+    none, a scan_eq runs the chunk-metadata read and the decode, two
+    jobs, with no dtype given, and decode_table(f).count() runs as many
+    jobs as f.count().  Planning union_encoded with a fresh frame runs
+    one job, the maximum part_id of the cached side, and none over the
+    fresh frame, whose every evaluation would fail.  AQE is off, as in
+    the benchmark session."""
     df = spark.range(3000).select(
         F.col("id").alias("a"),
         (F.col("id") % 7).alias("b"),
@@ -956,10 +960,129 @@ def test_column_metadata_resolves_once_per_call(spark):
                 assert got1 == got3 and [r["d"] for r in got1] == ["100"]
         rows, jobs = _jobs_of(spark, "scan_eq", lambda: pipeline.scan_eq(blobs, "a", 100).collect())
         assert [r["a"] for r in rows] == [100]
-        assert len(jobs) == 3, jobs
+        assert len(jobs) == 2, jobs
+        leaves, jobs = _jobs_of(spark, "meta_rows", lambda: pipeline._meta_rows_for(blobs))
+        assert [(r["column"], r["col_idx"], r["dtype"]) for r in leaves] == [
+            ("a", 0, "int64"), ("b", 1, "int64"), ("c", 2, "int64"), ("d", 3, "string"),
+        ]
+        assert jobs == []
+        n, jobs = _jobs_of(spark, "decode_count", lambda: pipeline.decode_table(blobs).count())
+        _, own = _jobs_of(spark, "own_count", blobs.count)
+        assert n == 3000 and len(jobs) == len(own), (jobs, own)
+        poison = F.raise_error(F.lit("the fresh frame was evaluated")).cast("long").alias("a")
+        fresh = pipeline.encode_columns(df.select(poison, "b", "c", "d"), chunk_rows=512)
+        both, jobs = _jobs_of(spark, "union_plan", lambda: pipeline.union_encoded(blobs, fresh))
+        assert len(jobs) == 1, jobs
+        assert pipeline._meta_rows_for(both) == leaves
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         blobs.unpersist()
+
+
+def test_empty_frame_decodes_typed(spark):
+    """An encode of no rows still carries its column map, so it decodes,
+    and scan_eq answers, with no rows and the input's columns and types,
+    nested ones included."""
+    df = spark.createDataFrame([], "a long, s string, st struct<x: int, y: array<string>>")
+    blobs = pipeline.encode_columns(df)
+    out = pipeline.decode_table(blobs)
+    assert out.schema == df.schema and out.collect() == []
+    hit = pipeline.scan_eq(blobs, "a", 1, columns=df.columns)
+    assert hit.schema == df.schema and hit.collect() == []
+
+
+def test_column_map_survives_table_ops(tmp_path, spark):
+    """The (column, col_idx, dtype) map in the blob schema agrees with
+    the rows' ``chunks`` after drop_columns, rename_column of a nested
+    subtree, union_encoded, delete, update and compact, and after each
+    result's write_encoded -> read_encoded: in the read-back schema and
+    in the blob files' own footers."""
+    rows = [(i, f"s{i % 3}", None if i % 5 == 0 else (i, [str(i)])) for i in range(300)]
+    df = spark.createDataFrame(rows, "k long, s string, meta struct<origin: long, tags: array<string>>")
+    blobs = pipeline.encode_columns(df.repartition(2), chunk_rows=64).cache()
+
+    def leaves(frame):
+        return [(r["column"], r["col_idx"], r["dtype"]) for r in pipeline._meta_rows_for(frame)]
+
+    want = leaves(blobs)
+    assert [c for c, _, _ in want] == ["k", "s", "meta@def", "meta.origin", "meta.tags"]
+    renamed = [("info" + c[4:] if c.startswith("meta") else c, i, d) for c, i, d in want]
+    frames = {
+        "drop": (pipeline.drop_columns(blobs, ["meta"]), want[:2]),
+        "rename": (pipeline.rename_column(blobs, "meta", "info"), renamed),
+        "union": (pipeline.union_encoded(blobs, pipeline.encode_columns(df, chunk_rows=64)), want),
+        "delete": (pipeline.delete_where(blobs, eqs={"k": 7}), want),
+        "update": (pipeline.update_where(blobs, {"s": "x"}, eqs={"k": 7}), want),
+        "compact": (pipeline.compact_chunks(blobs, min_rows=64, target_rows=256), want),
+    }
+    try:
+        for name, (frame, expect) in frames.items():
+            assert leaves(frame) == expect, name
+            in_rows = pipeline.chunk_view(frame).select("column", "col_idx", "dtype").distinct()
+            assert sorted(map(tuple, in_rows.collect())) == sorted(expect), name
+            path = str(tmp_path / name)
+            pipeline.write_encoded(frame, path)
+            assert leaves(pipeline.read_encoded(spark, path)) == expect, name
+            assert leaves(spark.read.parquet(f"{path}/blobs")) == expect, name
+        assert pipeline.decode_table(frames["rename"][0]).columns == ["k", "s", "info"]
+    finally:
+        blobs.unpersist()
+
+
+def test_frame_without_column_map_raises(tmp_path, spark):
+    """A blob directory read with a schema that carries no column map
+    raises one ValueError pointing to read_encoded, on every call that
+    needs the map, before any job runs; read_encoded of the same
+    directory reads."""
+    from pyspark.sql import types as T
+
+    df = load_table(spark, SF, "region")
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df), path)
+    unmapped = [T.StructField(f"c{i}", T.BinaryType()) for i in range(len(df.columns))]
+    raw = spark.read.schema(T.StructType(pipeline.blob_schema([]).fields + unmapped)).parquet(
+        f"{path}/blobs"
+    )
+    calls = {
+        "decode": lambda: pipeline.decode_table(raw),
+        "scan": lambda: pipeline.scan_eq(raw, "r_regionkey", 1),
+        "verify": lambda: pipeline.verify_blobs(raw),
+        "union": lambda: pipeline.union_encoded(raw, raw),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError, match="read_encoded") as e:
+            _jobs_of(spark, f"unmapped_{name}", call)
+        assert "c0" in str(e.value), name
+    assert pipeline.decode_table(pipeline.read_encoded(spark, path)).count() == df.count()
+
+
+def test_driver_scan_raises_on_vanished_blob_file(tmp_path, spark):
+    """A blob file removed after read_encoded never makes a driver-path
+    scan come back short: scan_column and scan_eq raise one ValueError
+    naming the table and a row group its manifest lists, with no Spark
+    job."""
+    df = spark.range(4000).select(F.col("id").alias("k"), (F.col("id") % 13).alias("v"))
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df.repartition(4), chunk_rows=512), path)
+    blobs = pipeline.read_encoded(spark, path)
+    assert pipeline.scan_column(blobs, "k", 0, 4000).count() == 4000
+    files = sorted(f for f in os.listdir(f"{path}/blobs") if f.endswith(".parquet"))
+    assert len(files) == 4
+    victim = f"{path}/blobs/{files[0]}"
+    lost = pq.read_table(victim, columns=["part_id", "chunk_seq", "c0"])
+    key = pipeline.arrow_chunk.decode_arrow_column(lost["c0"][0].as_py())[0][0].as_py()
+    group = (lost["part_id"][0].as_py(), lost["chunk_seq"][0].as_py())
+    os.remove(victim)
+    scans = {
+        "range": lambda: pipeline.scan_column(blobs, "k", 0, 4000).count(),
+        "eq": lambda: pipeline.scan_eq(blobs, "k", key).collect(),
+    }
+    for name, scan in scans.items():
+        with pytest.raises(ValueError, match=re.escape(f"{path}/blobs")) as e:
+            _jobs_of(spark, f"vanished_{name}", scan)
+        assert str(group) in str(e.value), name
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(spark.sparkContext.statusTracker().getJobIdsForGroup(f"vanished_{name}")) == []
 
 
 def test_bad_arguments_raise_before_any_job(spark):
@@ -1388,7 +1511,12 @@ def test_read_encoded_runs_no_job(tmp_path, spark, monkeypatch):
     pipeline.write_encoded(pipeline.encode_columns(df, chunk_rows=512), path)
     blobs, jobs = _jobs_of(spark, "read", lambda: pipeline.read_encoded(spark, path))
     assert jobs == []
-    assert blobs.schema == pipeline.blob_schema([0, 1])
+    assert blobs.schema == pipeline.blob_schema(
+        [
+            {"column": "l_orderkey", "col_idx": 0, "dtype": "int64"},
+            {"column": "l_returnflag", "col_idx": 1, "dtype": "string"},
+        ]
+    )
     cols = {r[0] for r in pipeline.chunk_view(blobs).select("column").distinct().collect()}
     assert cols == {"l_orderkey", "l_returnflag"}
     empty = tmp_path / "empty"
@@ -1437,6 +1565,9 @@ def test_per_chunk_table_converts(tmp_path, spark, chunk_data):
     assert view(conv) == view(new)
     data = lambda p: chunk_data(pipeline.read_encoded(spark, p))
     assert data(conv) == data(new)
+    # the converted blob files' footers carry the column map themselves
+    mapped = pipeline._meta_rows_for(spark.read.parquet(f"{conv}/blobs"))
+    assert mapped == pipeline._meta_rows_for(pipeline.read_encoded(spark, new))
     assert pipeline.read_metadata(spark, conv) == {"owner": "a"}
     assert pipeline.read_sha_format(spark, conv) == pipeline.SHA_FORMAT_VERSION
     blobs = pipeline.read_encoded(spark, conv)
@@ -1481,7 +1612,7 @@ def test_older_table_without_stats_reads(tmp_path, spark):
 
 def test_schema_ops_read_the_manifest(tmp_path, spark):
     """drop_columns, rename_column and the CLI's dtype resolver read the
-    column set from the manifest of a read_encoded table: no Spark job
+    column set from the schema of a read_encoded table: no Spark job
     (each used to run its own distinct job)."""
     from parquetjs_spark import cli
 
@@ -1494,7 +1625,7 @@ def test_schema_ops_read_the_manifest(tmp_path, spark):
         lambda: (
             pipeline.drop_columns(blobs, ["r_name"]),
             pipeline.rename_column(blobs, "r_name", "name"),
-            cli._manifest_dtypes(spark, pipeline, path)("r_regionkey"),
+            cli._dtypes_of(pipeline, blobs)("r_regionkey"),
         ),
     )
     assert jobs == []
@@ -1789,11 +1920,12 @@ def test_verify_detects_corruption(spark):
         target = chunks.select("part_id", "chunk_seq", "column", "col_idx").first()
         hit = (F.col("part_id") == target[0]) & (F.col("chunk_seq") == target[1])
         n_chunks = chunks.count()
-        # framing destruction: drop the blob's first 8 bytes
+        # framing destruction: drop the blob's first 8 bytes (the
+        # replaced blob column keeps its column map, blob_schema)
         data = f"c{target[3]}"
         torn = blobs.withColumn(
             data, F.when(hit, F.expr(f"substring({data}, 9)")).otherwise(F.col(data))
-        )
+        ).withMetadata(data, blobs.schema[data].metadata)
         report = pipeline.verify_blobs(torn)
         bad = report.where(~F.col("ok")).collect()
         assert len(bad) == 1
