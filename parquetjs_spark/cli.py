@@ -343,8 +343,9 @@ def _write_rewritten(spark, args, out_df):
 def cmd_append(args) -> int:
     """Incremental ingest: encode NEW source rows and union them into
     an existing encoded table (pipeline.union_encoded — the existing
-    blob bytes pass through untouched, part_ids shift past the old
-    maximum).  Column order follows the existing table's manifest so
+    blob bytes pass through untouched, and the new row groups take
+    identities disjoint from the table's, by the rule every append
+    follows).  Column order follows the existing table's manifest so
     col_idx stays consistent across both halves."""
     from parquetjs_spark import pipeline
     from parquetjs_spark.sources.iceberg import load_source_table

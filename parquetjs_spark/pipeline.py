@@ -447,8 +447,8 @@ def _meta_rows_for(blob_df: DataFrame) -> list[dict]:
     runs a job to find its columns, an empty frame included.  Each
     public call resolves them once and derives its predicate dtypes
     (_dtypes) and layout from the same rows.  A blob column without the
-    map (a blob directory read with a schema of its own) raises
-    ValueError."""
+    map (a blob directory read with a schema of its own, or a column
+    replaced by withColumn) raises ValueError naming both fixes."""
     rows = []
     for f in blob_df.schema.fields:
         if f.name in ("part_id", "chunk_seq", "chunks"):
@@ -456,7 +456,8 @@ def _meta_rows_for(blob_df: DataFrame) -> list[dict]:
         if "column" not in f.metadata or "dtype" not in f.metadata:
             raise ValueError(
                 f"blob column {f.name} carries no column map in its schema: open the "
-                "table with read_encoded(spark, path)"
+                "table with read_encoded(spark, path), or after withColumn restore it with "
+                f".withMetadata({f.name!r}, blobs.schema[{f.name!r}].metadata)"
             )
         md = f.metadata
         rows.append({"column": md["column"], "col_idx": int(f.name[1:]), "dtype": md["dtype"]})
@@ -1552,8 +1553,8 @@ def compact_chunks(
     if repeated := sorted(g for g, k in ids.items() if k > 1 and g[0] in buckets):
         raise ValueError(
             f"compact_chunks: row groups (part_id, chunk_seq) {repeated} occur more than once "
-            "(an append of a fresh encode_columns frame reuses the table's identities); add "
-            "new rows with union_encoded, which keeps them disjoint"
+            "(a raw unionByName, or an append written before appends took fresh identities); "
+            "combine tables with union_encoded, which keeps them disjoint"
         )
     todo = _keepset_filter({(p, s) for p, bs in buckets.items() for b in bs for s in b})
 
@@ -1805,6 +1806,30 @@ def _local_manifest(files: list[str]) -> Iterator[pa.RecordBatch]:
         yield _flat_chunks(batch)
 
 
+def _disjoint_ids(blob_df: DataFrame, committed) -> DataFrame:
+    """``blob_df`` with row-group identities disjoint from the
+    ``committed`` ones: the one identity rule, as a Parquet writer fixes
+    a row group's ordinal when it closes the file (parquetjs
+    lib/writer.js:520-569).  ``committed`` holds (part_id, chunk_seq)
+    rows: an Arrow table on the driver (no job) or a Spark frame (one
+    aggregate job).  A row group whose part_id has nothing committed
+    keeps its identity, so a resume, whose rows are pending_chunks rows
+    of partitions no task committed, keeps its own; every other one
+    moves to the next chunk_seq generation, ``chunk_seq + (g << 32)``
+    with ``g`` one past the committed maximum's ``max >> 32``.  Kept
+    and moved rows never share a part_id and every moved one is above
+    the committed maximum, so no identity repeats, and write order
+    within a part_id survives."""
+    if isinstance(committed, DataFrame):
+        committed = committed.groupBy("part_id").agg(F.max("chunk_seq").alias("chunk_seq")).toArrow()
+    if not committed.num_rows:
+        return blob_df
+    moved = F.col("part_id").isin(pc.unique(committed["part_id"]).to_pylist())
+    gen = ((pc.max(committed["chunk_seq"]).as_py() >> 32) + 1) << 32
+    seq = F.col("chunk_seq")
+    return blob_df.withColumn("chunk_seq", F.when(moved, seq + gen).otherwise(seq))
+
+
 _WRITE_MODES = ("overwrite", "append")
 
 
@@ -1817,11 +1842,11 @@ def write_encoded(
     """Persist blobs + a pure-metadata manifest (lineage) table.  This
     is the one writer of ``blobs/``, ``manifest/`` and ``meta/``.
     ``mode`` is "overwrite" or "append"; any other raises ValueError
-    before a job runs.  A fresh encode_columns frame numbers its row
-    groups from (0, 0) again, so appending one reuses the first write's
-    (part_id, chunk_seq) identities: reads stay right, but
-    compact_chunks refuses such a table; union_encoded keeps new rows
-    disjoint.
+    before a job runs.  An overwrite stores the frame's (part_id,
+    chunk_seq) identities as they are; an append first makes them
+    disjoint from those its ``manifest/`` lists at write time
+    (_disjoint_ids), read on the driver for a ``file:`` table (no job),
+    else with one aggregate job.
 
     ``blob_df`` is evaluated once, by the one Spark job that writes the
     blobs, one row per row group.  The manifest, one row per column
@@ -1832,7 +1857,7 @@ def write_encoded(
     lib/writer.js:520-569) but queryable: per-chunk codec, sizes,
     sha256, timing.  In append mode only the files this write added are
     read back (a listing taken before and after the write), so a
-    streaming micro-batch costs O(batch), not O(table).
+    streaming micro-batch's manifest costs O(batch), not O(table).
 
     ``metadata`` is user key/value footer metadata (``setMetadata``,
     /root/reference/lib/writer.js:147-149), stored as its own tiny
@@ -1859,6 +1884,17 @@ def write_encoded(
     before: set[str] = set()
     if mode == "append":
         kv.update(read_metadata(spark, path))
+
+        def driver_ids(local_dir):
+            import pyarrow.dataset as pads
+
+            ds = pads.dataset(local_dir, format="parquet", schema=_MANIFEST_PA_SCHEMA)
+            return _disjoint_ids(blob_df, ds.to_table(columns=["part_id", "chunk_seq"]))
+
+        def spark_ids(uri):
+            return _disjoint_ids(blob_df, spark.read.schema(MANIFEST_SCHEMA).parquet(uri))
+
+        blob_df = _read_table_dir(spark, path, "manifest", driver_ids, spark_ids, blob_df)
         if local is None:
             before = _blob_files(reader, blobs_dir)
         else:
@@ -2006,7 +2042,8 @@ def _check_blob_files(path: str, meta: _Manifest) -> None:
             total += pq.read_metadata(f).num_rows
         except (OSError, pa.ArrowException) as e:
             raise ValueError(f"unreadable table blob file {f} ({type(e).__name__})") from e
-    # every row group holds every column (appends may repeat an identity)
+    # every row group holds every column: count rows, not identities, so
+    # a table written before appends took fresh identities counts right
     groups = meta.chunks.num_rows // max(len(meta.columns), 1)
     if total != groups:
         raise ValueError(
@@ -2054,13 +2091,13 @@ def convert_encoded(spark: SparkSession, path: str, out_path: str) -> None:
 
 def union_encoded(a: DataFrame, b: DataFrame) -> DataFrame:
     """Concatenate two encoded tables (incremental-ingest composition):
-    b's part_ids shift past a's maximum so (part_id, chunk_seq) row
-    groups stay disjoint and decode_table sees one consistent table.
+    b's row groups take identities disjoint from a's (_disjoint_ids, the
+    rule an append follows), so decode_table sees one consistent table.
     Column sets and dtypes must match exactly — a blob table with
     half-present columns would decode ragged rows.  Metadata-only:
     no blob bytes move or re-encode.  The column maps compare from the
     two schemas (_meta_rows_for), so planning runs no job over ``b``;
-    a's maximum part_id comes from its manifest when ``a`` is from
+    a's identities come from its manifest when ``a`` is from
     read_encoded, else from one job over ``a``."""
     # (column, col_idx, dtype): col_idx alignment is part of the check
     # (ADVICE r6 low) — two tables encoded with different column orders
@@ -2076,12 +2113,8 @@ def union_encoded(a: DataFrame, b: DataFrame) -> DataFrame:
             f"{sorted(meta_a ^ meta_b)}"
         )
     cached = _cached_meta(a)
-    if cached is not None and cached.chunks is not None:
-        top = pc.max(cached.chunks["part_id"]).as_py()
-    else:
-        top = a.agg(F.max("part_id")).collect()[0][0]
-    shifted = b.withColumn("part_id", (F.col("part_id") + (top or 0) + 1).cast("int"))
-    return a.unionByName(shifted)
+    committed = a if cached is None or cached.chunks is None else cached.chunks
+    return a.unionByName(_disjoint_ids(b, committed))
 
 
 def _top_name(chunk_name: str) -> str:
@@ -2157,7 +2190,10 @@ def pending_chunks(all_manifest: DataFrame, done_manifest: DataFrame) -> DataFra
     """Resume-from-checkpoint: the rows of row groups not yet committed
     (north rule), expressed as a broadcast-able anti-join on the row
     group identity, the unit of resume: ``all_manifest`` may be a blob
-    table or a manifest, ``done_manifest`` a manifest."""
+    table or a manifest, ``done_manifest`` a manifest.  Identities are
+    unique within a table (_disjoint_ids), and a task commits its
+    partition whole, so an append of these rows keeps their identities
+    and a second resume finds nothing pending."""
     keys = ["part_id", "chunk_seq"]
     return all_manifest.join(
         F.broadcast(done_manifest.select(*keys).distinct()), on=keys, how="left_anti"

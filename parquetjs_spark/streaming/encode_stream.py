@@ -28,19 +28,14 @@ def encode_stream(
 
     Each micro-batch: encode -> ``pipeline.write_encoded(mode="append")``,
     which writes the batch's blobs once and appends the manifest read
-    back from just the files it added, so a batch costs O(batch).
-    batch_id is folded into chunk_seq space, so row group identity
-    (part_id, chunk_seq) stays unique across batches."""
+    back from just the files it added.  The append gives the batch's
+    row groups identities (part_id, chunk_seq) disjoint from those
+    already committed (a part_id the table holds moves to the next
+    chunk_seq generation), which reads the manifest's two identity
+    columns: O(table) on the driver, no Spark job on ``file:``."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         blobs = pipeline.encode_columns(batch_df, columns, chunk_rows=chunk_rows)
-        # namespace chunk ids by micro-batch for cross-batch uniqueness
-        blobs = blobs.withColumn(
-            "chunk_seq",
-            (F.lit(int(batch_id)) * F.lit(1 << 32) + F.col("chunk_seq")).cast("long"),
-        )
         pipeline.write_encoded(blobs, output_path, mode="append")
 
     writer = (

@@ -32,7 +32,9 @@ def assert_manifest_is_blobs(spark):
     manifest field — wall_ms included, so a manifest built by a second
     encode (which re-times every chunk) fails it — and that its schema
     is the manifest schema: the same names, types and order whichever
-    writer (Spark or the driver) committed it."""
+    writer (Spark or the driver) committed it — and that each (part_id,
+    chunk_seq, column) occurs once, so every row group has its own
+    identity."""
     from parquetjs_spark import pipeline
 
     def check(path: str) -> int:
@@ -41,6 +43,8 @@ def assert_manifest_is_blobs(spark):
         man = manifest.collect()
         blobs = pipeline.chunk_view(pipeline.read_encoded(spark, path)).collect()
         assert sorted(map(repr, man)) == sorted(map(repr, blobs))
+        keys = [(r["part_id"], r["chunk_seq"], r["column"]) for r in man]
+        assert len(set(keys)) == len(keys), "a (part_id, chunk_seq, column) repeats"
         return len(man)
 
     return check

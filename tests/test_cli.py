@@ -353,3 +353,32 @@ def test_truncated_manifest_exits_2(tmp_path, spark, capsys):
     assert cli.main(argv) == 2
     err = capsys.readouterr().err
     assert err.startswith("error: ") and f"{enc}/manifest" in err
+
+
+def test_encode_resume_keeps_identities_and_is_idempotent(tmp_path, spark, capsys):
+    """``encode --resume-from`` into the table it resumes: a table that
+    holds partition 0 of a 2-partition encode gains exactly partition
+    1's row groups, under the identities a full encode gives them, and
+    a second resume encodes nothing; decode returns each source row
+    once."""
+    src, full, part0 = (str(tmp_path / d) for d in ("src.parquet", "full", "part0"))
+    rows = [(i, f"k{i % 7}") for i in range(600)]
+    spark.createDataFrame(rows, "rid long, k string").coalesce(1).write.parquet(src)
+    enc = ["encode", "--input", src, "--chunk-rows", "64", "--partitions", "2"]
+    assert cli.main(enc + ["--output", full]) == 0
+    pipeline.write_encoded(
+        pipeline.read_encoded(spark, full).where(F.col("part_id") == 0), part0
+    )
+    capsys.readouterr()
+    runs = []
+    for _ in range(2):
+        assert cli.main(enc + ["--output", part0, "--resume-from", part0]) == 0
+        runs += [r for r in _parse_lines(capsys) if "resumed_from" in r]
+    assert runs[0]["chunks_encoded_this_run"] > 0
+    assert runs[1]["chunks_encoded_this_run"] == 0
+    ids = lambda p: sorted(
+        map(tuple, pipeline.read_manifest(spark, p).select("part_id", "chunk_seq", "column").collect())
+    )
+    assert ids(part0) == ids(full)
+    back = pipeline.decode_table(pipeline.read_encoded(spark, part0))
+    assert sorted(map(tuple, back.collect())) == rows

@@ -110,16 +110,28 @@ class TestCompact:
 
 
 def test_compact_refuses_repeated_row_groups(tmp_path, spark):
-    """An append of a fresh encode_columns frame reuses the first
-    write's (part_id, chunk_seq) identities.  compact_chunks refuses to
-    bucket a partition that repeats one: one ValueError on the driver,
-    naming the identities, before any job; a repeated partition with no
-    runt still passes through."""
+    """Appends take fresh (part_id, chunk_seq) identities, so compact
+    merges the runts of an overwrite + append table.  A raw
+    ``unionByName`` of a table with itself repeats every identity (as do
+    appends written before the identity rule): compact_chunks refuses to
+    bucket a partition that repeats one, with one ValueError on the
+    driver naming the identities, before any job; a repeated partition
+    with no runt still passes through."""
     frame = lambda n: spark.range(n).select(F.col("id").alias("x")).repartition(2)
+    appended = str(tmp_path / "appended")
+    for mode in ("overwrite", "append"):  # [64, 36] per partition and write
+        pipeline.write_encoded(pipeline.encode_columns(frame(200), chunk_rows=64), appended, mode=mode)
+    blobs = pipeline.read_encoded(spark, appended)
+    out = pipeline.compact_chunks(blobs, min_rows=60, target_rows=128)
+    assert out.count() < blobs.count() == 8
+    assert sorted(r[0] for r in pipeline.decode_table(out).collect()) == sorted(2 * list(range(200)))
+
     runts, whole = str(tmp_path / "runts"), str(tmp_path / "whole")
     for path, n in ((runts, 200), (whole, 256)):  # [64, 36] / [64, 64] per partition
-        for mode in ("overwrite", "append"):
-            pipeline.write_encoded(pipeline.encode_columns(frame(n), chunk_rows=64), path, mode=mode)
+        once = str(tmp_path / f"once_{n}")
+        pipeline.write_encoded(pipeline.encode_columns(frame(n), chunk_rows=64), once)
+        f = pipeline.read_encoded(spark, once)
+        pipeline.write_encoded(f.unionByName(f), path)
     sc = spark.sparkContext
     sc.setJobGroup("compact_repeated", "compact_repeated")
     try:

@@ -656,6 +656,46 @@ def test_write_encoded_runs_one_job(tmp_path, spark, assert_manifest_is_blobs):
         assert (got, jobs) == (want, [])
 
 
+@pytest.mark.parametrize("writer", ["driver", "spark"])
+def test_append_takes_fresh_row_group_identities(tmp_path, spark, monkeypatch, writer):
+    """An append of a fresh encode_columns frame gives its row groups
+    identities disjoint from the table's, so every identity-keyed read
+    sees each row group once: the resume anti-join counts pending rows
+    right, an ordered decode keeps the two writes apart, and a
+    driver-path scan whose blob file vanished raises instead of
+    returning the other write's copy of the same identities."""
+    if writer == "spark":
+        monkeypatch.setattr(pipeline, "_local_path", lambda spark, path: None)
+    path = str(tmp_path / "t")
+    frame = pipeline.encode_columns(
+        spark.range(300).select(F.col("id").alias("x")).repartition(2), chunk_rows=64
+    )
+    for mode in ("overwrite", "append"):
+        pipeline.write_encoded(frame, path, mode=mode)
+    man = pipeline.read_manifest(spark, path)
+    ids = man.select("part_id", "chunk_seq").distinct().count()
+    assert (man.count(), ids) == (12, 12)
+    done = man.orderBy("part_id", "chunk_seq").limit(5)
+    assert pipeline.pending_chunks(man, done).count() == 7
+
+    src = [(i, f"s{i}") for i in range(500)]
+    one = str(tmp_path / "one")
+    blobs = pipeline.encode_columns(
+        spark.createDataFrame(src, "k long, s string").coalesce(1), chunk_rows=64
+    )
+    for mode in ("overwrite", "append"):
+        pipeline.write_encoded(blobs, one, mode=mode)
+    back = pipeline.decode_table(pipeline.read_encoded(spark, one), ordered=True)
+    assert [tuple(r) for r in back.collect()] == src + src
+
+    if writer == "driver":
+        table = pipeline.read_encoded(spark, path)
+        victim = sorted(f for f in os.listdir(f"{path}/blobs") if f.endswith(".parquet"))[0]
+        os.remove(f"{path}/blobs/{victim}")
+        with pytest.raises(ValueError, match=re.escape(f"{path}/blobs lack")):
+            pipeline.scan_column(table, "x", 0, 1000).count()
+
+
 def test_local_path_follows_the_qualified_scheme(spark, tmp_path):
     """Which tables the driver commits is decided from the scheme Spark
     resolves the path to, never the bare string: a path without a
@@ -1053,7 +1093,15 @@ def test_frame_without_column_map_raises(tmp_path, spark):
         with pytest.raises(ValueError, match="read_encoded") as e:
             _jobs_of(spark, f"unmapped_{name}", call)
         assert "c0" in str(e.value), name
-    assert pipeline.decode_table(pipeline.read_encoded(spark, path)).count() == df.count()
+    blobs = pipeline.read_encoded(spark, path)
+    assert pipeline.decode_table(blobs).count() == df.count()
+    # an expression over a blob column drops its field metadata
+    replaced = blobs.withColumn("c0", F.when(F.lit(True), F.col("c0")))
+    fix = ".withMetadata('c0', blobs.schema['c0'].metadata)"
+    with pytest.raises(ValueError, match=re.escape(fix)):
+        pipeline.decode_table(replaced)
+    restored = replaced.withMetadata("c0", blobs.schema["c0"].metadata)
+    assert pipeline.decode_table(restored).count() == df.count()
 
 
 def test_driver_scan_raises_on_vanished_blob_file(tmp_path, spark):

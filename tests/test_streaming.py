@@ -43,16 +43,18 @@ def test_stream_encode_roundtrip(tmp_path, spark):
 def test_stream_manifest_is_blob_table_without_data(
     tmp_path, spark, assert_manifest_is_blobs
 ):
-    """Each micro-batch appends through write_encoded: after two
-    batches on a growing input directory the manifest still equals the
-    blob table without data, with no row duplicated or missing."""
+    """Each micro-batch appends through write_encoded: after each of
+    three batches on a growing input directory the manifest still
+    equals the blob table without data, with no row duplicated or
+    missing, and every row group has its own (part_id, chunk_seq): the
+    append's identity rule alone keeps the batches apart."""
     src_dir, out_dir, ck_dir = (str(tmp_path / d) for d in ("in", "out", "ck"))
     df = load_table(spark, SF, "events").select("event_type", "value")
-    halves = df.randomSplit([0.5, 0.5], seed=7)
+    thirds = df.randomSplit([1.0, 1.0, 1.0], seed=7)
     rows = 0
-    for half in halves:
-        half.write.mode("append").parquet(src_dir)
-        rows += half.count()
+    for third in thirds:
+        third.write.mode("append").parquet(src_dir)
+        rows += third.count()
         stream = spark.readStream.schema(df.schema).parquet(src_dir)
         encode_stream(
             stream, out_dir, ck_dir, chunk_rows=256, trigger_once=True
@@ -61,6 +63,10 @@ def test_stream_manifest_is_blob_table_without_data(
     manifest = pipeline.read_manifest(spark, out_dir)
     got = manifest.where(F.col("column") == "value").agg(F.sum("n")).first()[0]
     assert got == rows
+    blobs = pipeline.read_encoded(spark, out_dir)
+    gens = blobs.select("part_id", F.shiftright("chunk_seq", 32).alias("g")).distinct()
+    assert {r["g"] for r in gens.collect()} == {0, 1, 2}
+    assert blobs.select("part_id", "chunk_seq").distinct().count() == blobs.count()
 
 
 def test_stream_decode_follows_encode(tmp_path, spark):

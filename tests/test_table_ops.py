@@ -37,12 +37,13 @@ class TestUnionEncoded:
     def test_part_ids_disjoint_and_bytes_untouched(self, spark, two_batches, chunk_data):
         a, b = two_batches
         u = pipeline.union_encoded(a, b)
-        pa_max = a.agg(F.max("part_id")).collect()[0][0]
-        b_shifted = u.join(a.select("part_id").distinct(), "part_id", "left_anti")
-        assert b_shifted.agg(F.min("part_id")).collect()[0][0] > pa_max
-        # b's blob bytes pass through identically (only part_id changed)
+        ids = lambda t: {tuple(r) for r in t.select("part_id", "chunk_seq").collect()}
+        b_moved = u.join(a.select("part_id", "chunk_seq"), ["part_id", "chunk_seq"], "left_anti")
+        assert ids(a).isdisjoint(ids(b_moved))
+        assert len(ids(u)) == u.count() == a.count() + b.count()
+        # b's blob bytes pass through identically (only chunk_seq changed)
         data = lambda t: sorted(chunk_data(t).values())
-        assert data(b) == data(b_shifted)
+        assert data(b) == data(b_moved)
 
     def test_union_rejects_schema_mismatch(self, spark, two_batches):
         a, _ = two_batches
