@@ -41,7 +41,8 @@ from typing import Iterable, Iterator, NamedTuple
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from py4j.protocol import Py4JJavaError
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark import TaskContext
 from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -479,7 +480,10 @@ _LAYOUT_KEY = "parquetjs_spark.layout"
 # the manifest files the driver writes: the names, types and order Spark
 # writes, so a table appended across both writers reads as one
 _MANIFEST_PA_SCHEMA = to_arrow_schema(MANIFEST_SCHEMA)
-_KV_PA_SCHEMA = pa.schema([pa.field("key", pa.string()), pa.field("value", pa.string())])
+_KV_SCHEMA = T.StructType(
+    [T.StructField("key", T.StringType()), T.StructField("value", T.StringType())]
+)
+_KV_PA_SCHEMA = to_arrow_schema(_KV_SCHEMA)
 
 
 def _flat_chunks(groups: pa.RecordBatch) -> pa.RecordBatch:
@@ -809,9 +813,13 @@ def decode_table(
     (``c<col_idx>``) of their chunks, the analogue of the reference's
     getCursor(columnList) (parquetjs lib/reader.js:132-144).  The
     columns come from the frame's schema (_meta_rows_for), so planning
-    runs no job and an empty frame decodes to an empty, typed one.
+    runs no job and an empty frame decodes to an empty, typed one.  On
+    a local read_encoded table a blob file removed or resized since
+    read_encoded raises one ValueError at plan time
+    (_check_blob_listing).
     """
     layout = _row_group_layout(_meta_rows_for(blob_df), columns, ordered)
+    _check_blob_listing(blob_df)
     return _rebuild(_decode_rows(blob_df, layout), layout)
 
 
@@ -1172,6 +1180,79 @@ def _scan_local(
     return pa.concat_tables(tables)
 
 
+class _Handoff(NamedTuple):
+    """The JVM handles a driver-built frame needs, resolved once per
+    session: its SQLConf and the bound PythonSQLUtils members (a
+    JavaClass attribute lookup is a reflection round trip each time),
+    plus the private PySpark helpers createDataFrame uses."""
+
+    jconf: object
+    read_stream: object  # PythonSQLUtils.readArrowStreamFromFile
+    to_df: object  # PythonSQLUtils.toDataFrame
+    localize: object  # pyspark.sql.pandas.types._check_arrow_table_timestamps_localize
+    serializer: object  # pyspark.sql.pandas.serializers.ArrowStreamSerializer
+
+
+def _handoff(spark: SparkSession) -> _Handoff | None:
+    """The session's _Handoff, resolved on first use and kept on the
+    session; None (and for good) when this PySpark lacks one of them."""
+    try:
+        return spark._pjs_handoff
+    except AttributeError:
+        pass
+    try:
+        from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+        from pyspark.sql.pandas.types import _check_arrow_table_timestamps_localize
+
+        utils = spark._jvm.PythonSQLUtils
+        if not isinstance(utils, JavaClass):  # py4j resolves an unknown name to a package
+            raise AttributeError("PythonSQLUtils")
+        handles = _Handoff(
+            spark._jsparkSession.sessionState().conf(),
+            utils.readArrowStreamFromFile,
+            utils.toDataFrame,
+            _check_arrow_table_timestamps_localize,
+            ArrowStreamSerializer(),
+        )
+    except (ImportError, AttributeError, Py4JError):
+        handles = None
+    spark._pjs_handoff = handles
+    return handles
+
+
+def _local_frame(spark: SparkSession, table: pa.Table, schema: T.StructType) -> DataFrame:
+    """``table`` as a DataFrame of ``schema`` (a LocalRelation, no job):
+    what ``spark.createDataFrame(table, schema=schema)`` builds,
+    following PySpark 4.1.2's _create_from_arrow_table, in 4 Py4J round
+    trips instead of 21 — the two runtime confs it reads each call, the
+    Arrow stream read and toDataFrame.  Falls back to createDataFrame
+    when _handoff finds no handles."""
+    h = _handoff(spark)
+    if h is None:
+        return spark.createDataFrame(table, schema=schema)
+    if SparkSession._activeSession is not spark:
+        # what createDataFrame does first, on every call
+        SparkSession._activeSession = spark
+        SparkSession._get_j_spark_session_class(spark._jvm).setActiveSession(spark._jsparkSession)
+    schema_json = schema.json()
+    if '"timestamp"' in schema_json:
+        # a TimestampType somewhere (or a field named so: one conf read
+        # more); layouts emit timestamps as TimestampNTZType
+        table = h.localize(table, schema, True, h.jconf.sessionLocalTimeZone())
+    large = h.jconf.arrowUseLargeVarTypes()
+    arrow_schema = to_arrow_schema(
+        schema, error_on_duplicated_field_names_in_struct=True, prefers_large_types=large
+    )
+    table = table.cast(arrow_schema)
+    batches = table.to_batches(max_chunksize=h.jconf.arrowMaxRecordsPerBatch())
+    jiter = spark.sparkContext._serialize_to_jvm(
+        batches, h.serializer, h.read_stream, lambda: spark._jvm.ArrowIteratorServer()
+    )
+    df = DataFrame(h.to_df(jiter, schema_json, spark._jsparkSession), spark)
+    df._schema = schema
+    return df
+
+
 def _scan(blob_df: DataFrame, meta_rows: list, specs: list, columns: list[str] | None) -> DataFrame:
     """The one scan behind scan_table_where, scan_eq and scan_column:
     the rows of the kept row groups matching ``specs`` exactly, as
@@ -1181,8 +1262,9 @@ def _scan(blob_df: DataFrame, meta_rows: list, specs: list, columns: list[str] |
     decode: the layout reads them and emits only ``columns``, so the
     result needs no projection after it.  Kept groups under
     _LOCAL_SCAN_BYTES decode on the driver into a LocalRelation (no
-    job, one createDataFrame); otherwise Spark decodes them, applying
-    the same residual inside the decode UDF."""
+    job; _local_frame hands the rows over in 4 Py4J round trips);
+    otherwise Spark decodes them, applying the same residual inside the
+    decode UDF."""
     if columns == []:
         # a zero-column Arrow table carries no row count: emit the
         # predicate columns and drop them in the JVM, which keeps it
@@ -1191,7 +1273,7 @@ def _scan(blob_df: DataFrame, meta_rows: list, specs: list, columns: list[str] |
     keep = _kept_groups(blob_df, specs)
     local = _scan_local(blob_df, keep, layout, specs)
     if local is not None:
-        decoded = blob_df.sparkSession.createDataFrame(local, schema=layout.schema)
+        decoded = _local_frame(blob_df.sparkSession, local, layout.schema)
     else:
         decoded = _decode_rows(blob_df.where(_keepset_filter(keep)), layout, specs)
     return _rebuild(decoded, layout)
@@ -1236,10 +1318,11 @@ def scan_eq(blob_df: DataFrame, column: str, value, columns: list[str] | None = 
     columns=columns)``, ``columns=None`` meaning just the predicate
     column: the predicate column is decoded for the residual but never
     leaves the decode unless ``columns`` names it, so a driver-path
-    lookup is one createDataFrame of the output columns.  Chunks
-    without a bloom (old tables, unbloomable dtypes) stay
-    conservatively unpruned.  A blob DataFrame not from read_encoded
-    pays the same chunk-metadata job up front as scan_table_where."""
+    lookup hands only the output columns to the JVM (_local_frame: 4
+    Py4J round trips).  Chunks without a bloom (old tables, unbloomable
+    dtypes) stay conservatively unpruned.  A blob DataFrame not from
+    read_encoded pays the same chunk-metadata job up front as
+    scan_table_where."""
     out = [column] if columns is None else columns
     return scan_table_where(blob_df, eqs={column: value}, columns=out)
 
@@ -1270,15 +1353,23 @@ def scan_table_where(
 
     Where the kept groups of a read_encoded table hold at most
     _LOCAL_SCAN_BYTES encoded bytes, the driver reads and decodes them
-    itself and the result is a local relation: no Spark job.  Otherwise
-    (and for a transformed or hand-built blob DataFrame) the kept groups
-    reach the blob scan as a literal filter and decode in one Spark
-    job.  Columns and dtypes come from the frame's schema
+    itself and the result is a local relation (_local_frame): no Spark
+    job.  Otherwise (and for a transformed or hand-built blob DataFrame)
+    the kept groups reach the blob scan as a literal filter and decode
+    in one Spark job.  Columns and dtypes come from the frame's schema
     (_meta_rows_for, no job); a blob DataFrame not from read_encoded
     pays one metadata job up front, however many predicates: the chunk
     metadata (_chunk_meta)."""
     meta_rows = _meta_rows_for(blob_df)
     return _scan(blob_df, meta_rows, _predicate_specs(_dtypes(meta_rows), ranges, eqs), columns)
+
+
+_STATS_SCHEMA = T.StructType([
+    T.StructField("column", T.StringType()),
+    T.StructField("kind", T.StringType()),
+    T.StructField("chunks_total", T.LongType()),
+    T.StructField("chunks_kept", T.LongType()),
+])
 
 
 def scan_stats(
@@ -1300,14 +1391,13 @@ def scan_stats(
         raise ValueError(f"scan_stats: over {_MANIFEST_DRIVER_ROWS} chunks to count")
     total = [meta.filter(pc.equal(meta["column"], s[0])).num_rows for s in specs]
     kept = [_kept_chunks(meta, s).num_rows for s in specs]
-    return blob_df.sparkSession.createDataFrame(
-        pa.table({
-            "column": [s[0] for s in specs],
-            "kind": ["range" if s[1] == "range" else "eq" for s in specs],
-            "chunks_total": pa.array(total, pa.int64()),
-            "chunks_kept": pa.array(kept, pa.int64()),
-        })
-    )
+    rows = pa.table({
+        "column": [s[0] for s in specs],
+        "kind": ["range" if s[1] == "range" else "eq" for s in specs],
+        "chunks_total": pa.array(total, pa.int64()),
+        "chunks_kept": pa.array(kept, pa.int64()),
+    })
+    return _local_frame(blob_df.sparkSession, rows, _STATS_SCHEMA)
 
 
 def _compare(arr, op: str, value) -> np.ndarray:
@@ -1645,8 +1735,10 @@ def verify_blobs(blob_df: DataFrame) -> DataFrame:
     (BASELINE.json:15), one narrow stage over whole row groups.  Returns
     one row per chunk with ok flag.  It reads each chunk's sha256 and
     blob bytes; chunk names come from the frame's schema
-    (_meta_rows_for)."""
+    (_meta_rows_for).  A blob file removed or resized since
+    read_encoded raises as in decode_table (_check_blob_listing)."""
     leaves = _meta_rows_for(blob_df)
+    _check_blob_listing(blob_df)
     srcs = [_data_col(r["col_idx"]) for r in leaves]
     names = [r["column"] for r in leaves]
 
@@ -1933,7 +2025,7 @@ def write_encoded(
     else:
         # built from Arrow: a list of tuples would launch a Python-worker
         # job just to ship these few rows to the JVM
-        mdf = spark.createDataFrame(kv_table)
+        mdf = _local_frame(spark, kv_table, _KV_SCHEMA)
         mdf.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
@@ -2018,26 +2110,43 @@ def read_encoded(spark: SparkSession, path: str) -> DataFrame:
                 raise
             df = spark.read.schema(blob_schema([])).parquet(f"{path}/blobs")
     else:
-        if meta.chunks is not None:
-            _check_blob_files(path, meta)
+        listing = None if meta.chunks is None else (meta.local, _check_blob_files(path, meta))
         leaves = ({"column": c, "col_idx": ci, "dtype": dt} for c, (ci, dt) in meta.columns.items())
         df = spark.read.schema(blob_schema(leaves)).parquet(f"{path}/blobs")
+        # the files Spark planned this frame with, for _check_blob_listing
+        df._pjs_blob_files = listing
     df._pjs_meta_path = path
     return df
 
 
-def _check_blob_files(path: str, meta: _Manifest) -> None:
+def _blob_sizes(local: str) -> dict[str, int]:
+    """{name: size} of the blob files of the local table directory
+    ``local`` (none without ``blobs/``), skipping the names Spark skips
+    (_local_files)."""
+    try:
+        with os.scandir(f"{local}/blobs") as entries:
+            return {
+                e.name: e.stat().st_size for e in entries if e.name[0] not in "._" and e.is_file()
+            }
+    except FileNotFoundError:
+        return {}
+
+
+def _check_blob_files(path: str, meta: _Manifest) -> dict[str, int]:
     """The blob files of the local table at ``path`` against its
     manifest, on the driver: their Parquet footers' row counts (one row
     per row group) must add up to the row groups the manifest lists.  A
     footer that cannot be read raises one ValueError naming the file,
     chained to the reader's error; a total that disagrees (a deleted
     file, or the rows of a killed write that no manifest lists) raises
-    one naming the table."""
+    one naming the table.  Returns the files' {name: size}, which
+    decode_table and verify_blobs check again (_check_blob_listing)."""
     import pyarrow.parquet as pq
 
+    files = _blob_sizes(meta.local)
     total = 0
-    for f in sorted(_local_files(f"{meta.local}/blobs")):
+    for name in sorted(files):
+        f = f"{meta.local}/blobs/{name}"
         try:
             total += pq.read_metadata(f).num_rows
         except (OSError, pa.ArrowException) as e:
@@ -2048,6 +2157,25 @@ def _check_blob_files(path: str, meta: _Manifest) -> None:
     if total != groups:
         raise ValueError(
             f"table blobs {path}/blobs hold {total} row groups, its manifest lists {groups}"
+        )
+    return files
+
+
+def _check_blob_listing(blob_df: DataFrame) -> None:
+    """A read_encoded frame's blob files, listed again at plan time
+    against the ones read_encoded checked: a file gone or resized since
+    raises one ValueError naming the table and the file, where Spark
+    would fail the action with FAILED_READ_FILE.  Only frames of a local
+    table whose manifest the driver holds are checked; a file removed
+    after this check still fails inside Spark."""
+    local, files = getattr(blob_df, "_pjs_blob_files", None) or (None, None)
+    if files is None:
+        return
+    now = _blob_sizes(local)
+    if changed := sorted(n for n, size in files.items() if now.get(n) != size):
+        raise ValueError(
+            f"table blobs {blob_df._pjs_meta_path}/blobs changed since read_encoded: "
+            f"{len(changed)} files missing or resized, {changed[:4]}"
         )
 
 

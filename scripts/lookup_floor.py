@@ -3,7 +3,7 @@
 A ``scan_eq`` with ``columns`` on a ``read_encoded`` table whose kept row
 groups hold at most ``pipeline._LOCAL_SCAN_BYTES`` encoded bytes runs no
 Spark job: the driver prunes, reads, decodes and filters the row groups
-itself and hands the rows to the JVM with one ``createDataFrame``.  This
+itself and hands the rows to the JVM in one ``pipeline._local_frame``.  This
 script encodes one seeded encbench table (``encbench/inputs.py``, the
 benchmark's session and columns) into a temporary directory, reads it
 back with ``read_encoded`` and runs ``--warmup`` then ``--runs`` lookups
@@ -18,7 +18,9 @@ on distinct keys.  It reports medians per lookup of:
   ``_kept_groups``);
 * ``read_ms``: reading the kept blob rows with pyarrow (``_read_kept_blobs``);
 * ``decode_ms``: row-group reassembly and the residual (``_assemble_row_group``);
-* ``create_df_ms``: the ``createDataFrame`` of the decoded rows;
+* ``handoff_ms``: handing the decoded rows to the JVM (``_local_frame``:
+  4 round trips on pyspark 4.1.2, or ``createDataFrame`` where it
+  falls back);
 * ``collect_ms``: the caller's ``collect``;
 * ``other_ms``: the rest of the lookup (layout, plan building);
 * ``total_ms``: the whole lookup, as encbench's ``lookup`` phase times it.
@@ -50,7 +52,6 @@ os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("P
 
 import numpy as np  # noqa: E402
 from py4j import clientserver  # noqa: E402
-from pyspark.sql import SparkSession  # noqa: E402
 
 from encbench import inputs, sparkstats  # noqa: E402
 from parquetjs_spark import pipeline  # noqa: E402
@@ -71,7 +72,7 @@ PHASES = {
     ],
     "read": [(pipeline, "_read_kept_blobs")],
     "decode": [(pipeline, "_assemble_row_group")],
-    "create_df": [(SparkSession, "createDataFrame")],
+    "handoff": [(pipeline, "_local_frame")],
 }
 
 

@@ -1133,6 +1133,37 @@ def test_driver_scan_raises_on_vanished_blob_file(tmp_path, spark):
         assert list(spark.sparkContext.statusTracker().getJobIdsForGroup(f"vanished_{name}")) == []
 
 
+def test_decode_and_verify_raise_on_vanished_blob_file(tmp_path, spark):
+    """A blob file removed or resized after read_encoded makes
+    decode_table and verify_blobs raise one ValueError naming the table
+    and the file when they are called, with no Spark job, instead of a
+    FAILED_READ_FILE error from the action."""
+    df = spark.range(4000).select(F.col("id").alias("k"), (F.col("id") % 13).alias("v"))
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df.repartition(4), chunk_rows=512), path)
+    files = sorted(f for f in os.listdir(f"{path}/blobs") if f.endswith(".parquet"))
+    assert len(files) == 4
+    calls = {"decode": pipeline.decode_table, "verify": pipeline.verify_blobs}
+    for damage, victim in (("resized", files[1]), ("removed", files[0])):
+        blobs = pipeline.read_encoded(spark, path)
+        assert pipeline.decode_table(blobs).count() == 4000
+        target = f"{path}/blobs/{victim}"
+        shutil.copy(target, tmp_path / "saved")
+        if damage == "removed":
+            os.remove(target)
+        else:
+            with open(target, "ab") as f:
+                f.write(b"\0")
+        for name, call in calls.items():
+            with pytest.raises(ValueError, match=re.escape(f"{path}/blobs")) as e:
+                _jobs_of(spark, f"gone_{damage}_{name}", lambda: call(blobs).count())
+            assert victim in str(e.value), (damage, name)
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            tracker = spark.sparkContext.statusTracker()
+            assert list(tracker.getJobIdsForGroup(f"gone_{damage}_{name}")) == []
+        shutil.copy(tmp_path / "saved", target)
+
+
 def test_bad_arguments_raise_before_any_job(spark):
     """A forced codec or compression the engine cannot honour, and a
     compact_chunks row-bound pair that cannot hold, raise one ValueError
@@ -1366,6 +1397,57 @@ def _nested_rows():
     return rows, schema
 
 
+# every flat dtype a layout emits, by source type: (name, SQL over id),
+# each column null where id % 11 is its own residue
+_FLAT_COLUMNS = [
+    ("i8", "CAST(id % 100 AS TINYINT)"),
+    ("i16", "CAST(id * 3 AS SMALLINT)"),
+    ("i32", "CAST(id * 7 AS INT)"),
+    ("f32", "CAST(id / 3 AS FLOAT)"),
+    ("f64", "id / 7.0D"),
+    ("flag", "id % 3 = 0"),
+    ("s", "concat('s', id % 50)"),
+    ("bin", "CAST(concat('b', id) AS BINARY)"),
+    ("d", "date_add(DATE'2000-01-01', CAST(id AS INT))"),
+    ("ts", "timestamp_micros(1600000000000000 + id * 1000003)"),
+    ("ntz", "CAST(timestamp_micros(1600000000000000 - id * 999) AS TIMESTAMP_NTZ)"),
+    ("dur", "make_dt_interval(0, 1, 2, CAST(id % 60 AS DECIMAL(8,6)))"),
+    ("tt", "make_time(CAST(id % 24 AS INT), 30, CAST(id % 60 AS DECIMAL(8,6)))"),
+]
+
+
+@contextlib.contextmanager
+def _session_confs(spark, confs: dict):
+    """The session with ``confs`` set, each restored on exit."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+
+
+@pytest.fixture
+def time_type(spark):
+    """TimeType columns enabled (config-gated in this Spark build)."""
+    with _session_confs(spark, {"spark.sql.timeType.enabled": "true"}):
+        yield
+
+
+def _flat_frame(spark):
+    """600 rows: ``id`` (int64, never null) and _FLAT_COLUMNS; the
+    caller enables TimeType (the time_type fixture)."""
+    return spark.range(600).select(
+        "id",
+        *(
+            F.expr(f"IF(id % 11 = {k + 1}, NULL, {sql})").alias(name)
+            for k, (name, sql) in enumerate(_FLAT_COLUMNS)
+        ),
+    ).repartition(3)
+
+
 @pytest.fixture(scope="module")
 def nested_blobs(spark):
     rows, schema = _nested_rows()
@@ -1401,17 +1483,21 @@ def test_dml_on_nested_tables(spark, nested_blobs, op):
         assert out.select("part_id", "chunk_seq").distinct().count() == 6
 
 
-@pytest.mark.parametrize("case", ["struct", "list"])
-def test_driver_scan_matches_spark_scan(tmp_path, spark, monkeypatch, case):
+@pytest.mark.parametrize("case", ["struct", "list", "flat"])
+def test_driver_scan_matches_spark_scan(tmp_path, spark, monkeypatch, time_type, case):
     """A read_encoded scan under _LOCAL_SCAN_BYTES reassembles its row
     groups on the driver (no Spark job) — nested structs, lists and
-    lists of structs included — into the same rows and schema as the
-    Spark path (cap at 0)."""
-    rows, schema = _nested_rows()
-    df = spark.createDataFrame(rows, schema).repartition(3)
+    lists of structs included, and every flat dtype with nulls — into
+    the same rows and schema as the Spark path (cap at 0), an empty
+    result and ``columns=[]`` included."""
+    if case == "flat":
+        df = _flat_frame(spark)
+    else:
+        df = spark.createDataFrame(*_nested_rows()).repartition(3)
     path = str(tmp_path / "t")
     pipeline.write_encoded(pipeline.encode_columns(df, chunk_rows=64), path)
     blobs = pipeline.read_encoded(spark, path)
+    flat = [name for name, _ in _FLAT_COLUMNS]
     scans = {
         "struct": [
             lambda: pipeline.scan_table_where(blobs, eqs={"st.a": 12}, columns=["id", "st"]),
@@ -1425,7 +1511,19 @@ def test_driver_scan_matches_spark_scan(tmp_path, spark, monkeypatch, case):
             lambda: pipeline.scan_eq(blobs, "id", 77, columns=["st", "li"]),
             lambda: pipeline.scan_column(blobs, "id", 10, 20),
         ],
+        "flat": [
+            lambda: pipeline.scan_eq(blobs, "id", 77, columns=flat),
+            lambda: pipeline.scan_table_where(blobs, ranges={"id": (100, 140)}),
+            lambda: pipeline.scan_eq(blobs, "s", "s7", columns=["ts", "ntz", "dur", "tt", "bin"]),
+            lambda: pipeline.scan_eq(blobs, "i32", None, columns=["id", *flat]),
+            lambda: pipeline.scan_table_where(
+                blobs, eqs={"d": datetime.date(2000, 3, 1)}, columns=[]
+            ),
+            # zone maps keep the row groups holding ids 0-3; no row matches
+            lambda: pipeline.scan_eq(blobs, "f64", 0.5, columns=flat),
+        ],
     }[case]
+    empty = {"flat": [5]}.get(case, [])
     for i, scan in enumerate(scans):
         (local, got), jobs = _jobs_of(spark, f"{case}{i}", lambda: (d := scan(), d.collect()))
         assert jobs == [], i
@@ -1435,7 +1533,7 @@ def test_driver_scan_matches_spark_scan(tmp_path, spark, monkeypatch, case):
                 spark, f"{case}{i}_spark", lambda: (d := scan(), d.collect())
             )
         assert jobs, i
-        assert 0 < len(got) < len(rows), i
+        assert (len(got) == 0) == (i in empty) and len(got) < 600, i
         assert local.schema == in_spark.schema, i
         assert sorted(map(repr, got)) == sorted(map(repr, want)), i
 
@@ -1497,13 +1595,14 @@ def _round_trips(fn):
         ClientServerConnection.send_command = send
 
 
-# Py4J calls of one driver-path lookup, scan_eq through collect: one
-# createDataFrame (21) and the collect (7) on pyspark 4.1.2
-_LOOKUP_ROUND_TRIPS = 28
+# Py4J calls of one driver-path lookup, scan_eq through collect, on
+# pyspark 4.1.2: the hand-off of the decoded rows (_local_frame: two
+# conf reads, the Arrow stream read, toDataFrame) and the collect (7)
+_LOOKUP_ROUND_TRIPS = 11
 
 
 def test_lookup_round_trips_do_not_grow_with_columns(tmp_path, spark):
-    """A driver-path lookup is one createDataFrame of the output columns
+    """A driver-path lookup is one hand-off of the output columns
     and the caller's collect: the predicate column never leaves the
     decode and no per-column projection follows, so 5 output columns
     cost as many gateway round trips as 1, and no more than
@@ -1523,6 +1622,95 @@ def test_lookup_round_trips_do_not_grow_with_columns(tmp_path, spark):
         trips[len(out)] = n
     assert trips[5] == trips[1], trips
     assert trips[5] <= _LOOKUP_ROUND_TRIPS, trips
+
+
+def _lookup_table(spark, tmp_path):
+    """A read_encoded lineitem table and a driver-path lookup of it:
+    () -> (the scan's frame, its rows)."""
+    df = load_table(spark, SF, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_returnflag", "l_shipdate", "l_linestatus"
+    )
+    path = str(tmp_path / "t")
+    pipeline.write_encoded(pipeline.encode_columns(df.repartition(2), chunk_rows=512), path)
+    blobs = pipeline.read_encoded(spark, path)
+
+    def lookup():
+        d = pipeline.scan_table_where(
+            blobs, ranges={"l_orderkey": (1, 40)},
+            columns=["l_partkey", "l_returnflag", "l_shipdate", "l_linestatus"],
+        )
+        return d, d.collect()
+
+    return lookup
+
+
+def test_driver_frame_reads_arrow_confs_each_call(tmp_path, spark):
+    """The hand-off reads the session's Arrow batch size and large-type
+    confs on every call: set between two driver-path lookups, they give
+    the same rows and schema, with no Spark job."""
+    lookup = _lookup_table(spark, tmp_path)
+    (before, want), jobs = _jobs_of(spark, "confs_before", lookup)
+    assert jobs == [] and len(want) > 1
+    confs = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "1",
+        "spark.sql.execution.arrow.useLargeVarTypes": "true",
+    }
+    with _session_confs(spark, confs):
+        (after, got), jobs = _jobs_of(spark, "confs_after", lookup)
+    assert jobs == []
+    assert after.schema == before.schema
+    assert got == want
+
+
+def test_driver_frame_falls_back_to_create_dataframe(tmp_path, spark, monkeypatch):
+    """Where this PySpark lacks a handle the hand-off needs, it builds
+    its frames with createDataFrame, decided once per session: a lookup
+    and scan_stats give the same rows and schemas either way.  Both
+    ways localise a TimestampType column to the session time zone, as
+    createDataFrame does (a zone other than the process's, so a
+    conversion that skips it reads different instants)."""
+    from pyspark.sql import SparkSession, types as T
+
+    lookup = _lookup_table(spark, tmp_path)
+    blobs = pipeline.read_encoded(spark, str(tmp_path / "t"))
+    stats = lambda: (d := pipeline.scan_stats(blobs, eqs={"l_partkey": 50}), d.collect())
+    ts = datetime.datetime(2020, 5, 17, 13, 45, 6, 789012)
+    table = pa.table({
+        "at": pa.array([ts, None], pa.timestamp("us")),
+        "s": pa.array([{"at": ts, "n": "x"}, None]),
+    })
+    schema = T.StructType([
+        T.StructField("at", T.TimestampType()),
+        T.StructField("s", T.StructType([
+            T.StructField("at", T.TimestampType()), T.StructField("n", T.StringType())
+        ])),
+    ])
+
+    def frame():
+        with _session_confs(spark, {"spark.sql.session.timeZone": "America/Los_Angeles"}):
+            d = pipeline._local_frame(spark, table, schema)
+            return d, d.collect()
+
+    calls = [lookup, stats, frame]
+    want = [call() for call in calls]
+    assert pipeline._handoff(spark) is not None
+    with _session_confs(spark, {"spark.sql.session.timeZone": "America/Los_Angeles"}):
+        assert want[2][1] == spark.createDataFrame(table, schema=schema).collect()
+    create = SparkSession.createDataFrame
+    created = []
+    with monkeypatch.context() as m:
+        m.delattr(spark, "_pjs_handoff")  # resolve again: PythonSQLUtils is not a class
+        m.setattr(pipeline, "JavaClass", type("Missing", (), {}))
+        m.setattr(
+            SparkSession, "createDataFrame",
+            lambda *a, **kw: created.append(1) or create(*a, **kw),
+        )
+        got = [call() for call in calls]
+        assert pipeline._handoff(spark) is None
+    assert len(created) == len(calls)
+    for (d_want, rows_want), (d_got, rows_got) in zip(want, got):
+        assert d_got.schema == d_want.schema
+        assert rows_got == rows_want
 
 
 def test_scan_to_no_columns_keeps_the_row_count(tmp_path, spark, monkeypatch):
